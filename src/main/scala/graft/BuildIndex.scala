@@ -4,8 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.config.Yaml
-import graft.operators.{LanguageModel, QualityModel, Sampling, Search,
-  Similarity, Tfidf}
+import graft.operators.{Codec, LanguageModel, QualityModel, Sampling,
+  Search, Similarity, Tfidf}
 
 /** Config-driven index/fit builds — the job-surface half of the
   * retrieval and curation stores (r16 verdict #5, completed r18): the
@@ -409,59 +409,7 @@ object BuildIndex {
         Array.tabulate(dim)(i => stats.getDouble(3 + 2 * i + 1)))
     }
 
-    def cents(): Seq[Array[Double]] = Similarity.seedCentroids(
-      input, idCol, vecCol, intOpt("num_lists").getOrElse(16))
-    // the optional raw-vector refine twin, same centroids: the other
-    // half of the persisted two-stage retrieval pair
-    def rawTwin(cs: Seq[Array[Double]]): Option[String] =
-      Yaml.str(c, "raw_store").map { rp =>
-        Similarity.writeIvfAssignments(input, idCol, vecCol, cs, rp)
-        Similarity.writeCentroids(spark, rp, cs)
-        rp
-      }
-
     val raw: Option[String] = kind match {
-      case "ivf" =>
-        val cs = cents()
-        Similarity.writeIvfAssignments(input, idCol, vecCol, cs, store)
-        Similarity.writeCentroids(spark, store, cs)
-        None
-      case "ivfsq" =>
-        val cs = cents()
-        val (mins, maxs) = sqGrid()
-        Similarity.writeIvfSqCodes(input, idCol, vecCol, cs, store,
-          mins, maxs)
-        Similarity.writeCentroids(spark, store, cs)
-        Similarity.writeSqTrainParams(spark, store, mins, maxs)
-        rawTwin(cs)
-      case "ivfpq" =>
-        val cs = cents()
-        val m = intOpt("pq_m").getOrElse(4)
-        val numCodes = intOpt("pq_codes").getOrElse(8)
-        val dsub = intOpt("pq_dsub").getOrElse(16)
-        val seed = Similarity.seedPqCodebooks(input, idCol, vecCol,
-          m = m, k = numCodes, dsub = dsub)
-        // returns the codebook the store was actually built with
-        // (trained when train_iterations > 0)
-        val cb = Similarity.writeIvfPqAssignments(input, idCol, vecCol,
-          cs, seed, store, m = m, numCodes = numCodes, dsub = dsub,
-          trainIterations = intOpt("train_iterations").getOrElse(0))
-        Similarity.writeCentroids(spark, store, cs)
-        Similarity.writePqCodebook(spark, store, cb, m, numCodes, dsub)
-        rawTwin(cs)
-      case "sq" =>
-        val (mins, maxs) = sqGrid()
-        Similarity.writeSqCodes(input, idCol, vecCol, store, mins, maxs)
-        Similarity.writeSqTrainParams(spark, store, mins, maxs)
-        None
-      case "binary" =>
-        Similarity.writeSignBits(input, idCol, vecCol, store, dim)
-        None
-      case "ivf_binary" =>
-        val cs = cents()
-        Similarity.writeIvfBinary(input, idCol, vecCol, cs, store, dim)
-        Similarity.writeCentroids(spark, store, cs)
-        rawTwin(cs)
       case "lsh" =>
         Similarity.writeLshBuckets(input, idCol, vecCol, store,
           planes = intOpt("planes").getOrElse(6), dim = dim)
@@ -473,6 +421,44 @@ object BuildIndex {
           planes = intOpt("planes").getOrElse(8),
           tables = intOpt("tables").getOrElse(8), dim = dim)
         None
+      case _ =>
+        // one codec selection + one write: the codec carries the store's
+        // encodings, `_meta` kind/keys and `_train` artifacts
+        val coarse =
+          if (kind == "sq" || kind == "binary") None
+          else Some(Similarity.seedCentroids(input, idCol, vecCol,
+            intOpt("num_lists").getOrElse(16)))
+        val codec: Codec = kind match {
+          case "ivf" => Codec.Flat
+          case "sq" | "ivfsq" =>
+            val (mins, maxs) = sqGrid()
+            Codec.Sq8(mins, maxs)
+          case "binary" | "ivf_binary" => Codec.Sign(dim)
+          case "ivfpq" =>
+            val m = intOpt("pq_m").getOrElse(4)
+            val numCodes = intOpt("pq_codes").getOrElse(8)
+            val dsub = intOpt("pq_dsub").getOrElse(16)
+            val seed = Similarity.seedPqCodebooks(input, idCol, vecCol,
+              m = m, k = numCodes, dsub = dsub)
+            // the store is encoded with, and `_train` records, the
+            // TRAINED codebook when train_iterations > 0
+            val iters = intOpt("train_iterations").getOrElse(0)
+            val cb =
+              if (iters > 0) Similarity.refinePqCodebooksDistributed(input,
+                idCol, vecCol, seed, m, numCodes, dsub, iters)
+              else seed
+            Codec.Pq(cb, m, numCodes, dsub)
+        }
+        Similarity.writeStore(input, idCol, vecCol, codec, coarse, store)
+        Similarity.writeTrain(spark, store, codec, coarse)
+        // the optional raw-vector refine twin, same centroids: the other
+        // half of the persisted two-stage retrieval pair (raw_store is
+        // refused up front for kinds without one)
+        for (cs <- coarse; rp <- Yaml.str(c, "raw_store")) yield {
+          Similarity.writeStore(input, idCol, vecCol, Codec.Flat, Some(cs), rp)
+          Similarity.writeTrain(spark, rp, Codec.Flat, Some(cs))
+          rp
+        }
     }
     BuildReport(kind, store, rows, raw)
   }

@@ -79,18 +79,6 @@ final case class DataContract(
   def fieldNames: Seq[String] = fields.map(_.name)
   def requiredFields: Seq[ContractField] = fields.filter(_.required)
 
-  /** Declared StructType. Nullability rule per parquet_writer.py:74-84:
-    * strict ⇒ nullable = !required; warn ⇒ everything nullable.
-    */
-  def structType(mode: ValidationMode): StructType =
-    StructType(fields.map { f =>
-      val nullable = mode match {
-        case ValidationMode.Strict => !f.required
-        case ValidationMode.Warn   => true
-      }
-      StructField(f.name, f.sparkType, nullable)
-    })
-
   /** All-string landing schema used by CSV-ish sources before coercion
     * (reference reads every CSV column as str, csv_extractor.py:152-222).
     */

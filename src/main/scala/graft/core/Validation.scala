@@ -93,24 +93,6 @@ object Validation {
     (requiredPredicate(contract, raw) +: (noMismatch ++ notCorrupt)).reduce(_ && _)
   }
 
-  /** Strict-mode projection: only declared schema fields, declared order
-    * (parquet_writer.py:287-353).
-    */
-  def projectStrict(df: DataFrame, contract: DataContract): DataFrame = {
-    val present = df.columns.toSet
-    df.select(contract.fieldNames.filter(present.contains).map(col): _*)
-  }
-
-  /** Warn-mode projection: declared fields + any extra observed columns
-    * appended as strings, in sorted name order (parquet_writer.py:200-285).
-    */
-  def projectWarn(df: DataFrame, contract: DataContract): DataFrame = {
-    val declared = contract.fieldNames
-    val extras = df.columns.filterNot(declared.contains).sorted
-    df.select(declared.filter(df.columns.contains).map(col) ++
-      extras.map(c => col(c).cast(StringType).as(c)): _*)
-  }
-
   /** Error-summary aggregate expressions (T4): one count per
     * (error_type, field), computed in the same job via observe(). A
     * configured `corruptCol` adds a `corrupt_record:` counter so

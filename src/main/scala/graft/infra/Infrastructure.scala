@@ -40,9 +40,7 @@ object JavaHttpProbe extends HttpProbe {
   }
 }
 
-final case class InfrastructureReport(errors: Seq[String], warnings: Seq[String]) {
-  def isHealthy: Boolean = errors.isEmpty
-}
+final case class InfrastructureReport(errors: Seq[String], warnings: Seq[String])
 
 object Infrastructure {
 

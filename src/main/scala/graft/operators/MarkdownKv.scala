@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import java.sql.Timestamp
 
@@ -376,12 +376,6 @@ object MarkdownKv {
   /** doc_id fallback chain (cli.py:868-878). */
   val DocIdFields: Seq[String] = Seq("businessentityid", "productid", "customerid",
     "salesorderid", "addressid", "productcategoryid", "id", "doc_id")
-
-  def docIdColumn(df: DataFrame): Column = {
-    val present = DocIdFields.filter(df.columns.contains)
-    if (present.isEmpty) lit("unknown")
-    else coalesce(present.map(c => col(c).cast("string")) :+ lit("unknown"): _*)
-  }
 
   /** M1: record → `{doc_id, markdown_kv_content}` (mode "string",
     * cli.py:884-890). Row order of fields = column order. One

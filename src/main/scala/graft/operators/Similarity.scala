@@ -7,12 +7,24 @@ import org.apache.spark.sql.functions._
 /** Similarity search over embedding columns (array<float>).
   *
   * Two paths, mirroring what a 100 TB training-data pipeline needs:
-  *  - brute-force cosine top-k with a broadcast query set — the exact
-  *    baseline; corpus is streamed, never shuffled, so it scales with
-  *    executors for any corpus size (the query set must stay broadcast-
-  *    small).
+  *  - broadcast-query top-k scans — exact brute force and the
+  *    compressed/IVF indexes; the corpus is streamed, never shuffled, so
+  *    it scales with executors for any corpus size (the query set must
+  *    stay broadcast-small).
   *  - random-hyperplane LSH bucketing — the scale path for large query
   *    sets: one shuffle on the bucket key, bucket-local top-k.
+  *
+  * Where the decisions live: every ranked vector family (raw, SQ8, PQ,
+  * PQ-residual, sign bits; flat or IVF; in memory or from a store) runs
+  * through ONE IVF core in this file (the "IVF core" section: corpus
+  * encode, probe builder, scoring tail, list-partitioned store write and
+  * append, stage-from-store, raw-store refine). Per-family choices —
+  * encodings, score column and direction, null contract, `_meta` kind
+  * strings and keys, `_train` artifacts — live in [[Codec]]
+  * (Codec.scala). The store layout — (id, payload) parquet rows,
+  * partitioned by `list` under a coarse quantizer, `_meta_params`
+  * sidecar via [[graft.core.StoreMeta]], `_train/` artifacts — is
+  * decided once, in [[writeStore]] / [[stageFromStore]].
   *
   * All arithmetic accumulates sequentially in double (floats widened per
   * element) so results are bit-reproducible across runs and engines.
@@ -52,7 +64,9 @@ object Similarity {
 
   /** Exact brute-force top-k: broadcast the (small) query set against the
     * corpus, rank by cosine desc with id tiebreak. Self-pairs excluded.
-    * Returns (query_id, neighbor_id, rank, sim).
+    * Norms are precomputed per row (not per pair) — same bits, |c|+|q|
+    * instead of |c|×|q| norm evaluations. The [[Codec.Flat]] codec with
+    * no coarse quantizer. Returns (query_id, neighbor_id, rank, sim).
     */
   def bruteForceTopK(
       corpus: DataFrame,
@@ -60,27 +74,21 @@ object Similarity {
       idCol: String,
       vecCol: String,
       k: Int
-  ): DataFrame = {
-    // norms precomputed per row (not per pair) — same bits, |c|+|q|
-    // instead of |c|×|q| norm evaluations
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-      norm(col(vecCol)).as("qn"))
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
-      norm(col(vecCol)).as("cn"))
-    val scored = c
-      .join(broadcast(q), col("query_id") =!= col("neighbor_id"))
-      // zero-NORM rows drop before scoring: 0/0 is the one case ANSI
-      // division throws on (a zero corpus vector killed the probe); a
-      // NULL dot (the documented over-length/length-mismatch contract)
-      // stays a null sim and ranks as before
-      .filter(col("qn") =!= 0.0 && col("cn") =!= 0.0)
-      .withColumn("sim", dotDouble(col("qv"), col("cv")) / (col("qn") * col("cn")))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("sim").desc, col("neighbor_id"))
+  ): DataFrame =
+    codecTopK(corpus, queries, idCol, vecCol, k, Codec.Flat, None, 0)
+
+  /** The per-query top-k every ranked path here ends in: `score` in the
+    * given direction, ties to the lower `neighbor_id`; returns
+    * (query_id, neighbor_id, rank, score).
+    */
+  private def rankTopK(scored: DataFrame, score: String, ascending: Boolean,
+      k: Int): DataFrame = {
+    val w = Window.partitionBy("query_id").orderBy(
+      if (ascending) col(score).asc else col(score).desc, col("neighbor_id"))
     scored
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "sim")
+      .select("query_id", "neighbor_id", "rank", score)
   }
 
   /** Deterministic Rademacher (±1) sign vector of hyperplane j, computed
@@ -567,23 +575,6 @@ object Similarity {
     dotDouble(vec, lit(c)) / lit(math.sqrt(s))
   }
 
-  /** IVF (inverted-file) ANN — the centroid-partitioned scale path that
-    * complements LSH: every corpus vector is assigned to its nearest
-    * coarse centroid ("list") MAP-SIDE (the centroids ride along as
-    * array literals, like the LSH plane signs — no stored index join);
-    * a query probes only its `nprobe` nearest lists, so exact scoring
-    * touches ~nprobe/numLists of the corpus instead of all of it.
-    *
-    * Scale shape: assignment and scoring are one broadcast join (probe
-    * lists are |queries|×nprobe rows); the corpus is never shuffled —
-    * only the scored candidates move into the per-query top-k window.
-    * Literal centroids hold to a few hundred lists; a production-size
-    * quantizer (10k+ lists) would persist the assignment column and
-    * range-partition by it — same plan from there on.
-    *
-    * Ties (equal centroid score) resolve to the LOWER list id on both
-    * the assignment and the probe side.
-    */
   /** (−score, list) structs for every centroid — negated so `least` /
     * `array_sort` pick the BEST-cosine list with ties to the lower id.
     */
@@ -599,12 +590,11 @@ object Similarity {
   private def bestListStruct(cols: Seq[Column]): Column =
     if (cols.sizeIs == 1) cols.head else least(cols: _*)
 
-  /** The probed-list explosion every IVF-family probe builder shares:
-    * `vec`'s `nprobe` best-scored list structs, exploded to one row per
-    * (query row, probed list). Single-sources the probe contract —
-    * lists order by (−score, list id), the [[scoredListStructs]]
-    * struct order — so a tie-break change can never drift between the
-    * seven probe sites.
+  /** The probed-list explosion of the IVF core's one probe builder
+    * ([[probeFrame]]): `vec`'s `nprobe` best-scored list structs,
+    * exploded to one row per (query row, probed list). Lists order by
+    * (−score, list id), the [[scoredListStructs]] struct order, the
+    * same tie-break as the corpus-side [[listAssignment]].
     */
   private def explodedProbe(vec: Column, centroids: Seq[Array[Double]],
       nprobe: Int): Column =
@@ -673,6 +663,238 @@ object Similarity {
       dim = centroids.head.length)
   }
 
+  // ------------------------------------------------------------- IVF core
+  //
+  // One path for every vector codec ([[Codec]]: raw, SQ8, PQ, sign bits)
+  // under an optional coarse quantizer — `centroids = None` scans the
+  // whole corpus, `Some` partitions it into IVF lists. There is one
+  // corpus encode, one probe builder, one scoring tail, one store write
+  // (overwrite and append), one stage-from-store and one raw-store
+  // refine; each public ANN entry point is a codec construction plus one
+  // call in here. Codec decisions (encodings, score, null contract,
+  // `_meta` kind and keys, `_train` artifacts) live in Codec.scala.
+
+  private def requireNprobe(centroids: Seq[Array[Double]], nprobe: Int): Unit =
+    require(nprobe >= 1 && nprobe <= centroids.size,
+      s"nprobe must be in [1, ${centroids.size}]: $nprobe")
+
+  /** `_meta` kind and keys of a store: the coarse geometry (list count +
+    * centroid fingerprint) in front of the codec's own keys. A probe
+    * presenting other centroids refuses instead of silently pruning to
+    * the wrong lists.
+    */
+  private def storeMeta(codec: Codec, centroids: Option[Seq[Array[Double]]])
+      : (String, Map[String, Any]) =
+    centroids.fold((codec.flatKind, codec.metaKeys)) { cs =>
+      (codec.ivfKind, Map[String, Any]("numLists" -> cs.size,
+        "centroids_md5" -> vectorSetFingerprint(cs)) ++ codec.metaKeys)
+    }
+
+  private def requireStore(spark: org.apache.spark.sql.SparkSession,
+      storePath: String, codec: Codec,
+      centroids: Option[Seq[Array[Double]]]): Unit = {
+    val (kind, keys) = storeMeta(codec, centroids)
+    graft.core.StoreMeta.requireIfPresent(spark, storePath, kind, keys)
+  }
+
+  /** Encoded corpus rows: (`idAs`, list, payload…) under a coarse
+    * quantizer, else (`idAs`, payload…). Assignment and encode are
+    * map-side — zero shuffles; a residual codec encodes
+    * `v − centroid(list)`.
+    */
+  private def corpusFrame(df: DataFrame, idCol: String, vecCol: String,
+      codec: Codec, centroids: Option[Seq[Array[Double]]],
+      idAs: String): DataFrame = {
+    val kept = codec.encodable(col(vecCol)).fold(df)(c => df.filter(c))
+    centroids match {
+      case None =>
+        kept.select(col(idCol).as(idAs) +: codec.corpus(col(vecCol)): _*)
+      case Some(cs) =>
+        val v =
+          if (codec.residual) residualCol(col("__v"), col("list"), cs)
+          else col("__v")
+        kept.select(col(idCol).as(idAs), col(vecCol).as("__v"),
+            listAssignment(col(vecCol), cs).as("list"))
+          .select(col(idAs) +: col("list") +: codec.corpus(v): _*)
+    }
+  }
+
+  /** The query side: (query_id, payload…) for a flat scan; under a
+    * coarse quantizer one row per (query, probed list) —
+    * (query_id, payload…, list), with a residual codec's payload
+    * computed per probe row (one LUT per probed list).
+    */
+  private def probeFrame(queries: DataFrame, idCol: String, vecCol: String,
+      codec: Codec, centroids: Option[Seq[Array[Double]]],
+      nprobe: Int): DataFrame = {
+    val kept =
+      codec.encodable(col(vecCol)).fold(queries)(c => queries.filter(c))
+    centroids match {
+      case None =>
+        kept.select(col(idCol).as("query_id") +: codec.query(col(vecCol)): _*)
+      case Some(cs) =>
+        val pre =
+          if (codec.residual) Seq(col(vecCol).as("qv"))
+          else codec.query(col(vecCol))
+        val probes = kept
+          .select((col(idCol).as("query_id") +: pre) :+
+            explodedProbe(col(vecCol), cs, nprobe).as("__p"): _*)
+          .withColumn("list", col("__p").getField("l"))
+          .drop("__p")
+        if (!codec.residual) probes
+        else probes.select(col("query_id") +: col("list") +:
+          codec.query(residualCol(col("qv"), col("list"), cs)): _*)
+    }
+  }
+
+  /** The scoring tail: broadcast the (small) query side against the
+    * encoded corpus — on the list key under a coarse quantizer, else
+    * every query against every corpus row — drop self-pairs, score,
+    * apply the codec's null contract, rank. The corpus is never
+    * shuffled; only scored candidates move into the per-query window.
+    */
+  private def scoredTopK(enc: DataFrame, probes: DataFrame, codec: Codec,
+      k: Int, listed: Boolean): DataFrame = {
+    val pairs =
+      if (listed)
+        enc.join(broadcast(probes), Seq("list"))
+          .filter(col("query_id") =!= col("neighbor_id"))
+      else {
+        val q = probes // no lists: every query row is its own probe
+        enc.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
+      }
+    val scored = codec.pairFilter.fold(pairs)(c => pairs.filter(c))
+      .withColumn(codec.score, codec.scoreExpr)
+    val kept =
+      if (codec.dropNullScore) scored.filter(col(codec.score).isNotNull)
+      else scored
+    rankTopK(kept, codec.score, codec.ascending, k)
+  }
+
+  /** In-memory top-k of any codec, flat or IVF. */
+  private[operators] def codecTopK(corpus: DataFrame, queries: DataFrame,
+      idCol: String, vecCol: String, k: Int, codec: Codec,
+      centroids: Option[Seq[Array[Double]]], nprobe: Int): DataFrame = {
+    centroids.foreach(requireNprobe(_, nprobe))
+    scoredTopK(corpusFrame(corpus, idCol, vecCol, codec, centroids,
+        "neighbor_id"),
+      probeFrame(queries, idCol, vecCol, codec, centroids, nprobe),
+      codec, k, centroids.isDefined)
+  }
+
+  /** The one store write of any codec, overwrite or append: (id,
+    * payload…) rows, PARTITIONED BY list under a coarse quantizer.
+    * Every list-partitioned write repartitions on the list first:
+    * encoding is map-side, so WITHOUT it every input task holds rows of
+    * every list and the dynamic-partition write fans out tasks × lists
+    * files — 4M files per build at 1000 executors × 4096 lists. One
+    * build-time shuffle bounds the file count by the list count, which
+    * is also exactly the file set a probed-list scan then opens
+    * (SimilaritySpec pins the bound). An append reads, lists and
+    * rewrites nothing: the first write stamps `_meta`, later appends
+    * REQUIRE the same parameters (appending under other centroids or
+    * another grid would put rows where probes never look, or re-grid
+    * codes already on disk).
+    */
+  private[graft] def writeStore(df: DataFrame, idCol: String,
+      vecCol: String, codec: Codec, centroids: Option[Seq[Array[Double]]],
+      storePath: String, append: Boolean = false): Unit = {
+    val (kind, keys) = storeMeta(codec, centroids)
+    if (append)
+      graft.core.StoreMeta.writeOrRequire(df.sparkSession, storePath, kind,
+        keys)
+    val enc = corpusFrame(df, idCol, vecCol, codec, centroids, "id")
+    val mode = if (append) "append" else "overwrite"
+    if (centroids.isEmpty) enc.write.mode(mode).parquet(storePath)
+    else enc.repartition(col("list")) // file count bounded by lists, not tasks × lists
+      .write.mode(mode).partitionBy("list").parquet(storePath)
+    // AFTER the data write: overwrite mode wipes the store root first
+    if (!append)
+      graft.core.StoreMeta.overwrite(df.sparkSession, storePath, kind, keys)
+  }
+
+  /** The `_train` artifacts a separate probing process needs: the
+    * coarse centroids, then the codec's own (SQ grid, PQ codebook).
+    */
+  private[graft] def writeTrain(spark: org.apache.spark.sql.SparkSession,
+      storePath: String, codec: Codec,
+      centroids: Option[Seq[Array[Double]]]): Unit = {
+    centroids.foreach(writeCentroids(spark, storePath, _))
+    codec.writeTrain(spark, storePath)
+  }
+
+  /** Probe a stored index of any codec: the top-k plus the probed-list
+    * set it pruned to (empty for a flat store), so a two-stage refine
+    * prunes the raw store to the SAME partition union without re-running
+    * the probe-discovery job. The union is driver-small by construction
+    * (≤ |queries| × nprobe ids), so inlining it as a literal IN pushes
+    * the pruning into the file index — on a 10k-list index a 10-query
+    * probe touches ~40 partition directories and never lists the rest.
+    * Codes, floats and norms round-trip parquet exactly, so a store
+    * probe is bit-identical to the in-memory path.
+    */
+  private[operators] def stageFromStore(
+      spark: org.apache.spark.sql.SparkSession, storePath: String,
+      queries: DataFrame, idCol: String, vecCol: String, k: Int,
+      codec: Codec, centroids: Option[Seq[Array[Double]]],
+      nprobe: Int): (DataFrame, Seq[Int]) = {
+    centroids.foreach(requireNprobe(_, nprobe))
+    requireStore(spark, storePath, codec, centroids)
+    val probes = probeFrame(queries, idCol, vecCol, codec, centroids, nprobe)
+    val probedLists =
+      if (centroids.isEmpty) Nil
+      else probes.select("list").distinct()
+        .collect().map(_.getInt(0)).sorted.toSeq
+    val payload = codec.payload.map(col)
+    val stored = spark.read.parquet(storePath)
+    val enc =
+      if (centroids.isEmpty)
+        stored.select(col("id").as("neighbor_id") +: payload: _*)
+      else stored.filter(col("list").isInCollection(probedLists))
+        .select(col("id").as("neighbor_id") +: col("list") +: payload: _*)
+    (scoredTopK(enc, probes, codec, k, centroids.isDefined), probedLists)
+  }
+
+  /** Fully-PERSISTED two-stage retrieval over any codec: the compressed
+    * store answers the top-(k·factor) shortlist and the raw-vector store
+    * ([[writeIvfAssignments]]) the exact refine, BOTH scans pruned to the
+    * probed lists — every shortlist member came from a probed list, so
+    * neither store is read beyond the probed partitions. One definition,
+    * so the raw-store contract (meta keys, list pruning) cannot drift
+    * between the PQ / SQ / binary compositions.
+    */
+  private def rerankFromStores(spark: org.apache.spark.sql.SparkSession,
+      storePath: String, rawStorePath: String, queries: DataFrame,
+      idCol: String, vecCol: String, k: Int, codec: Codec,
+      centroids: Seq[Array[Double]], nprobe: Int, factor: Int): DataFrame = {
+    require(factor >= 1, s"refine factor must be >= 1: $factor")
+    val (shortlist, probedLists) = stageFromStore(spark, storePath, queries,
+      idCol, vecCol, k * factor, codec, Some(centroids), nprobe)
+    requireStore(spark, rawStorePath, Codec.Flat, Some(centroids))
+    val rawPruned = spark.read.parquet(rawStorePath)
+      .filter(col("list").isInCollection(probedLists))
+      .select(col("id").as(idCol), col("v").as(vecCol))
+    rerankExact(shortlist, rawPruned, queries, idCol, vecCol, k)
+  }
+
+  /** IVF (inverted-file) ANN — the centroid-partitioned scale path that
+    * complements LSH: every corpus vector is assigned to its nearest
+    * coarse centroid ("list") MAP-SIDE (the centroids ride along as
+    * array literals, like the LSH plane signs — no stored index join);
+    * a query probes only its `nprobe` nearest lists, so exact scoring
+    * touches ~nprobe/numLists of the corpus instead of all of it.
+    *
+    * Scale shape: assignment and scoring are one broadcast join (probe
+    * lists are |queries|×nprobe rows); the corpus is never shuffled —
+    * only the scored candidates move into the per-query top-k window.
+    * Literal centroids hold to a few hundred lists; a production-size
+    * quantizer (10k+ lists) would persist the assignment column and
+    * range-partition by it — same plan from there on.
+    *
+    * Ties (equal centroid score) resolve to the LOWER list id on both
+    * the assignment and the probe side. Scores by exact cosine: the
+    * [[Codec.Flat]] codec under the coarse lists.
+    */
   def ivfTopK(
       corpus: DataFrame,
       queries: DataFrame,
@@ -681,36 +903,9 @@ object Similarity {
       k: Int,
       centroids: Seq[Array[Double]],
       nprobe: Int
-  ): DataFrame = {
-    require(nprobe >= 1 && nprobe <= centroids.size,
-      s"nprobe must be in [1, ${centroids.size}]: $nprobe")
-    val assigned = corpus
-      .select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
-        norm(col(vecCol)).as("cn"))
-      .withColumn("list",
-        bestListStruct(scoredListStructs(col("cv"), centroids)).getField("l"))
-    val probes = queries
-      .select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-        norm(col(vecCol)).as("qn"))
-      .withColumn("__p", explodedProbe(col("qv"), centroids, nprobe))
-      .withColumn("list", col("__p").getField("l"))
-      .drop("__p")
-    val scored = assigned
-      .join(broadcast(probes), Seq("list"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      // zero-NORM rows drop before scoring: 0/0 is the one case ANSI
-      // division throws on (a zero corpus vector killed the probe); a
-      // NULL dot (the documented over-length/length-mismatch contract)
-      // stays a null sim and ranks as before
-      .filter(col("qn") =!= 0.0 && col("cn") =!= 0.0)
-      .withColumn("sim", dotDouble(col("qv"), col("cv")) / (col("qn") * col("cn")))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    scored
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "sim")
-  }
+  ): DataFrame =
+    codecTopK(corpus, queries, idCol, vecCol, k, Codec.Flat, Some(centroids),
+      nprobe)
 
   /** The persisted-assignment IVF index — the production shape past a
     * few hundred lists, where [[ivfTopK]]'s literal-centroid expressions
@@ -737,60 +932,24 @@ object Similarity {
     md.digest().map("%02x".format(_)).mkString
   }
 
-  /** Persist the IVF assignments partitioned by coarse list. Every
-    * persisted-index writer here repartitions on the partition column
-    * first: assignment/encoding is map-side, so WITHOUT it every input
-    * task holds rows of every list and the dynamic-partition write fans
-    * out tasks × lists files — 4M files per build at 1000 executors ×
-    * 4096 lists. One build-time shuffle bounds the file count by the
-    * list count, which is also exactly the file set a probed-list scan
-    * then opens. (Same decision as the BM25 store writes; SearchSpec /
-    * SimilaritySpec pin the bound.)
+  /** Persist the IVF assignments partitioned by coarse list: (id, v, cn)
+    * rows with the norm precomputed — the raw-vector store, also the
+    * refine half of every persisted two-stage pair.
     */
   def writeIvfAssignments(df: DataFrame, idCol: String, vecCol: String,
-      centroids: Seq[Array[Double]], storePath: String): Unit = {
-    df.select(col(idCol).as("id"), col(vecCol).as("v"))
-      .withColumn("cn", norm(col("v")))
-      .withColumn("list",
-        bestListStruct(scoredListStructs(col("v"), centroids)).getField("l"))
-      .repartition(col("list")) // file count bounded by lists, not tasks × lists
-      .write.mode("overwrite").partitionBy("list").parquet(storePath)
-    // AFTER the data write: overwrite mode wipes the store root first
-    graft.core.StoreMeta.overwrite(df.sparkSession, storePath, "ivf", Map(
-      "numLists" -> centroids.size,
-      "centroids_md5" -> vectorSetFingerprint(centroids)))
-  }
+      centroids: Seq[Array[Double]], storePath: String): Unit =
+    writeStore(df, idCol, vecCol, Codec.Flat, Some(centroids), storePath)
 
-  /** Append one batch's raw (id, v, norm, list) rows to an IVF
-    * raw-vector store — the refine half of the persisted two-stage
-    * pair, under the same append-only contract as [[appendIvfSqCodes]]:
-    * no read, list, or rewrite of existing data; the first write stamps
-    * `_meta`, later appends REQUIRE the same coarse geometry (appending
-    * under different centroids would put vectors in lists probes never
-    * scan).
+  /** Append one batch's raw (id, v, cn, list) rows to an IVF raw-vector
+    * store under the append-only contract of [[writeStore]].
     */
   def appendIvfAssignments(df: DataFrame, idCol: String, vecCol: String,
-      centroids: Seq[Array[Double]], storePath: String): Unit = {
-    graft.core.StoreMeta.writeOrRequire(df.sparkSession, storePath,
-      "ivf", Map(
-        "numLists" -> centroids.size,
-        "centroids_md5" -> vectorSetFingerprint(centroids)))
-    df.select(col(idCol).as("id"), col(vecCol).as("v"))
-      .withColumn("cn", norm(col("v")))
-      .withColumn("list",
-        bestListStruct(scoredListStructs(col("v"), centroids)).getField("l"))
-      .repartition(col("list")) // file count bounded by lists, not tasks × lists
-      .write.mode("append").partitionBy("list").parquet(storePath)
-  }
+      centroids: Seq[Array[Double]], storePath: String): Unit =
+    writeStore(df, idCol, vecCol, Codec.Flat, Some(centroids), storePath,
+      append = true)
 
-  /** Probe a stored IVF index: same scoring/tie/top-k mechanics as
-    * [[ivfTopK]] (results are bit-identical for the same centroids —
-    * floats and the build-time norm round-trip parquet exactly), but the
-    * corpus side is the store scan pruned to the probed-list union. That
-    * union is driver-small by construction (≤ |queries| × nprobe ids),
-    * so inlining it as a literal IN pushes the pruning into the file
-    * index — on a 10k-list production index a 10-query probe touches
-    * ~40 partition directories and never lists the rest.
+  /** Probe a stored IVF index: bit-identical to [[ivfTopK]] for the same
+    * centroids, the store scan pruned to the probed-list union.
     */
   def ivfTopKFromStore(
       spark: org.apache.spark.sql.SparkSession,
@@ -800,42 +959,9 @@ object Similarity {
       vecCol: String,
       k: Int,
       centroids: Seq[Array[Double]],
-      nprobe: Int): DataFrame = {
-    require(nprobe >= 1 && nprobe <= centroids.size,
-      s"nprobe must be in [1, ${centroids.size}]: $nprobe")
-    graft.core.StoreMeta.requireIfPresent(spark, storePath, "ivf", Map(
-      "numLists" -> centroids.size,
-      "centroids_md5" -> vectorSetFingerprint(centroids)))
-    val probes = queries
-      .select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-        norm(col(vecCol)).as("qn"))
-      .withColumn("__p", explode(slice(
-        array_sort(array(scoredListStructs(col("qv"), centroids): _*)),
-        1, nprobe)))
-      .withColumn("list", col("__p").getField("l"))
-      .drop("__p")
-    val probedLists = probes.select("list").distinct()
-      .collect().map(_.getInt(0)).sorted.toSeq
-    val assigned = spark.read.parquet(storePath)
-      .filter(col("list").isInCollection(probedLists))
-      .select(col("id").as("neighbor_id"), col("v").as("cv"),
-        col("cn"), col("list"))
-    val scored = assigned
-      .join(broadcast(probes), Seq("list"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      // zero-NORM rows drop before scoring: 0/0 is the one case ANSI
-      // division throws on (a zero corpus vector killed the probe); a
-      // NULL dot (the documented over-length/length-mismatch contract)
-      // stays a null sim and ranks as before
-      .filter(col("qn") =!= 0.0 && col("cn") =!= 0.0)
-      .withColumn("sim", dotDouble(col("qv"), col("cv")) / (col("qn") * col("cn")))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    scored
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "sim")
-  }
+      nprobe: Int): DataFrame =
+    stageFromStore(spark, storePath, queries, idCol, vecCol, k, Codec.Flat,
+      Some(centroids), nprobe)._1
 
   /** Embedding outlier scores — the IVF assignment read the other way:
     * each vector's best centroid cosine. Vectors far from EVERY centroid
@@ -915,29 +1041,9 @@ object Similarity {
       m: Int = 4,
       numCodes: Int = 8,
       dsub: Int = 16
-  ): DataFrame = {
-    val enc = corpus.select(col(idCol).as("neighbor_id"),
-      graft.functions.PqCodes(col(vecCol), codebook, m, numCodes, dsub)
-        .as("codes"))
-    val q = queries.select(col(idCol).as("query_id"),
-      graft.functions.PqLut(col(vecCol), codebook, m, numCodes, dsub)
-        .as("lut"))
-    val scored = enc
-      .join(broadcast(q), col("query_id") =!= col("neighbor_id"))
-      .withColumn("adc",
-        graft.functions.PqAdc(col("lut"), col("codes"), numCodes))
-      // a corpus vector that fails to encode (null, short, or containing
-      // a null element) has null codes → null ADC; nulls sort FIRST under
-      // asc, so without this filter unencodable rows would occupy the top
-      // ranks of every query, displacing real neighbors
-      .filter(col("adc").isNotNull)
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("adc").asc, col("neighbor_id"))
-    scored
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "adc")
-  }
+  ): DataFrame =
+    codecTopK(corpus, queries, idCol, vecCol, k,
+      Codec.Pq(codebook, m, numCodes, dsub), None, 0)
 
   /** IVF+PQ ANN — the two scale mechanisms composed, the standard
     * billion-vector index shape (FAISS IVFPQ): the coarse quantizer
@@ -959,33 +1065,9 @@ object Similarity {
       m: Int = 4,
       numCodes: Int = 8,
       dsub: Int = 16
-  ): DataFrame = {
-    require(nprobe >= 1 && nprobe <= centroids.size,
-      s"nprobe must be in [1, ${centroids.size}]: $nprobe")
-    val enc = corpus.select(col(idCol).as("neighbor_id"),
-      bestListStruct(scoredListStructs(col(vecCol), centroids)).getField("l")
-        .as("list"),
-      graft.functions.PqCodes(col(vecCol), codebook, m, numCodes, dsub)
-        .as("codes"))
-    val probes = queries.select(col(idCol).as("query_id"),
-        graft.functions.PqLut(col(vecCol), codebook, m, numCodes, dsub)
-          .as("lut"),
-        explodedProbe(col(vecCol), centroids, nprobe).as("__p"))
-      .withColumn("list", col("__p").getField("l"))
-      .drop("__p")
-    val scored = enc
-      .join(broadcast(probes), Seq("list"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("adc",
-        graft.functions.PqAdc(col("lut"), col("codes"), numCodes))
-      .filter(col("adc").isNotNull) // see pqTopK: nulls would rank first
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("adc").asc, col("neighbor_id"))
-    scored
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "adc")
-  }
+  ): DataFrame =
+    codecTopK(corpus, queries, idCol, vecCol, k,
+      Codec.Pq(codebook, m, numCodes, dsub), Some(centroids), nprobe)
 
   /** Elementwise `v − centroids(list)` as a column: a literal-centroid
     * CASE over the (small, by the same contract as every literal-centroid
@@ -1038,39 +1120,10 @@ object Similarity {
       m: Int = 4,
       numCodes: Int = 8,
       dsub: Int = 16
-  ): DataFrame = {
-    require(nprobe >= 1 && nprobe <= centroids.size,
-      s"nprobe must be in [1, ${centroids.size}]: $nprobe")
-    val enc = corpus
-      .select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
-        bestListStruct(scoredListStructs(col(vecCol), centroids)).getField("l")
-          .as("list"))
-      .select(col("neighbor_id"), col("list"),
-        graft.functions.PqCodes(
-          residualCol(col("cv"), col("list"), centroids),
-          codebook, m, numCodes, dsub).as("codes"))
-    val probes = queries
-      .select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-        explodedProbe(col(vecCol), centroids, nprobe).as("__p"))
-      .withColumn("list", col("__p").getField("l"))
-      .drop("__p")
-      .select(col("query_id"), col("list"),
-        graft.functions.PqLut(
-          residualCol(col("qv"), col("list"), centroids),
-          codebook, m, numCodes, dsub).as("lut"))
-    val scored = enc
-      .join(broadcast(probes), Seq("list"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("adc",
-        graft.functions.PqAdc(col("lut"), col("codes"), numCodes))
-      .filter(col("adc").isNotNull) // see pqTopK: nulls would rank first
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("adc").asc, col("neighbor_id"))
-    scored
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "adc")
-  }
+  ): DataFrame =
+    codecTopK(corpus, queries, idCol, vecCol, k,
+      Codec.Pq(codebook, m, numCodes, dsub, residual = true),
+      Some(centroids), nprobe)
 
   /** Residual column builder for codebook training: (id, res) of a
     * corpus under literal centroids — feed to [[seedPqCodebooks]] /
@@ -1116,30 +1169,14 @@ object Similarity {
         refinePqCodebooksDistributed(df, idCol, vecCol, codebook,
           m, numCodes, dsub, trainIterations)
       else codebook
-    df.select(col(idCol).as("id"), col(vecCol).as("v"))
-      .withColumn("list",
-        bestListStruct(scoredListStructs(col("v"), centroids)).getField("l"))
-      .select(col("id"),
-        graft.functions.PqCodes(col("v"), cb, m, numCodes, dsub)
-          .as("codes"),
-        col("list"))
-      .repartition(col("list")) // file count bounded by lists, not tasks × lists
-      .write.mode("overwrite").partitionBy("list").parquet(storePath)
-    // AFTER the data write: overwrite mode wipes the store root first
-    graft.core.StoreMeta.overwrite(df.sparkSession, storePath, "ivfpq", Map(
-      "numLists" -> centroids.size,
-      "centroids_md5" -> vectorSetFingerprint(centroids),
-      "codebook_md5" -> vectorSetFingerprint(Seq(cb)),
-      "m" -> m, "numCodes" -> numCodes, "dsub" -> dsub))
+    writeStore(df, idCol, vecCol, Codec.Pq(cb, m, numCodes, dsub),
+      Some(centroids), storePath)
     cb
   }
 
-  /** Probe a stored IVFPQ index: same LUT/ADC scoring, tie and top-k
-    * mechanics as [[ivfPqTopK]] (bit-identical results for the same
-    * centroids/codebook — codes are ints, which round-trip parquet
-    * exactly), but the corpus side is the compressed store pruned to
-    * the probed-list union, inlined as a literal IN like
-    * [[ivfTopKFromStore]] so pruning reaches the file index.
+  /** Probe a stored IVFPQ index: bit-identical to [[ivfPqTopK]] for the
+    * same centroids/codebook (codes are ints, which round-trip parquet
+    * exactly), the compressed store pruned to the probed-list union.
     */
   def ivfPqTopKFromStore(
       spark: org.apache.spark.sql.SparkSession,
@@ -1155,59 +1192,8 @@ object Similarity {
       numCodes: Int = 8,
       dsub: Int = 16
   ): DataFrame =
-    ivfPqStageFromStore(spark, storePath, queries, idCol, vecCol, k,
-      centroids, nprobe, codebook, m, numCodes, dsub)._1
-
-  /** [[ivfPqTopKFromStore]] plus the probed-list set it pruned to — so
-    * a two-stage wrapper can prune the raw refine store to the SAME
-    * partition union without running the probe-discovery job twice.
-    */
-  private def ivfPqStageFromStore(
-      spark: org.apache.spark.sql.SparkSession,
-      storePath: String,
-      queries: DataFrame,
-      idCol: String,
-      vecCol: String,
-      k: Int,
-      centroids: Seq[Array[Double]],
-      nprobe: Int,
-      codebook: Array[Double],
-      m: Int,
-      numCodes: Int,
-      dsub: Int
-  ): (DataFrame, Seq[Int]) = {
-    require(nprobe >= 1 && nprobe <= centroids.size,
-      s"nprobe must be in [1, ${centroids.size}]: $nprobe")
-    graft.core.StoreMeta.requireIfPresent(spark, storePath, "ivfpq", Map(
-      "numLists" -> centroids.size,
-      "centroids_md5" -> vectorSetFingerprint(centroids),
-      "codebook_md5" -> vectorSetFingerprint(Seq(codebook)),
-      "m" -> m, "numCodes" -> numCodes, "dsub" -> dsub))
-    val probes = queries.select(col(idCol).as("query_id"),
-        graft.functions.PqLut(col(vecCol), codebook, m, numCodes, dsub)
-          .as("lut"),
-        explodedProbe(col(vecCol), centroids, nprobe).as("__p"))
-      .withColumn("list", col("__p").getField("l"))
-      .drop("__p")
-    val probedLists = probes.select("list").distinct()
-      .collect().map(_.getInt(0)).sorted.toSeq
-    val enc = spark.read.parquet(storePath)
-      .filter(col("list").isInCollection(probedLists))
-      .select(col("id").as("neighbor_id"), col("codes"), col("list"))
-    val scored = enc
-      .join(broadcast(probes), Seq("list"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("adc",
-        graft.functions.PqAdc(col("lut"), col("codes"), numCodes))
-      .filter(col("adc").isNotNull) // see pqTopK: nulls would rank first
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("adc").asc, col("neighbor_id"))
-    val ranked = scored
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "adc")
-    (ranked, probedLists)
-  }
+    stageFromStore(spark, storePath, queries, idCol, vecCol, k,
+      Codec.Pq(codebook, m, numCodes, dsub), Some(centroids), nprobe)._1
 
   // ----- 8-bit scalar quantization (SQ8, FAISS QT_8bit shape) -----
 
@@ -1249,49 +1235,15 @@ object Similarity {
       Array.tabulate(dim)(i => row.getDouble(2 * i + 1)))
   }
 
-  // Each division happens exactly once per dim so the oracle's inline
-  // 255.0/(mx−mn) and (mx−mn)/255.0 reproduce the same IEEE bits;
-  // degenerate (max == min) dims encode 0 and decode to min.
-  private def sqScales(mins: Array[Double], maxs: Array[Double]): Array[Double] =
-    Array.tabulate(mins.length)(i =>
-      if (maxs(i) > mins(i)) 255.0 / (maxs(i) - mins(i)) else 0.0)
-
-  private def sqSteps(mins: Array[Double], maxs: Array[Double]): Array[Double] =
-    Array.tabulate(mins.length)(i =>
-      if (maxs(i) > mins(i)) (maxs(i) - mins(i)) / 255.0 else 0.0)
-
-  /** Shared scoring tail of the in-flight and stored SQ paths: broadcast
-    * the (small) query set against the coded corpus, decode-on-the-fly
-    * asymmetric L2², rank ascending with id tiebreak. The corpus side is
-    * never shuffled and never reconstructed to doubles — distance reads
-    * the code bytes directly ([[graft.functions.SqDist]]), so the join
-    * moves 1 byte per dim per corpus row.
-    */
-  private def sqScore(enc: DataFrame, queries: DataFrame, idCol: String,
-      vecCol: String, k: Int, mins: Array[Double],
-      maxs: Array[Double]): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-    val scored = enc
-      .join(broadcast(q), col("query_id") =!= col("neighbor_id"))
-      .withColumn("adc", graft.functions.SqDist(col("qv"), col("codes"),
-        mins, sqSteps(mins, maxs)))
-      .filter(col("adc").isNotNull) // unencodable rows must not rank first
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("adc").asc, col("neighbor_id"))
-    scored
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "adc")
-  }
-
   /** Exact-scan top-k over SQ8-compressed vectors: the accuracy/memory
     * point between [[bruteForceTopK]] (exact, 4·dim bytes per row) and
     * [[pqTopK]] (m bytes per row, coarse): dim bytes per row with per-dim
     * resolution (max−min)/255, which on well-spread data ranks within a
     * hair of exact L2 — the standard "compressed flat" index. Corpus is
     * encoded map-side and streamed (never shuffled); pair distance
-    * decodes bytes on the fly. Combine with an IVF partitioning for
-    * sublinearity; alone it is the 4×-less-IO brute scan.
+    * decodes the code bytes on the fly ([[graft.functions.SqDist]]), so
+    * the join moves 1 byte per dim per corpus row. Combine with an IVF
+    * partitioning for sublinearity; alone it is the 4×-less-IO brute scan.
     */
   def sqTopK(
       corpus: DataFrame,
@@ -1301,12 +1253,9 @@ object Similarity {
       k: Int,
       mins: Array[Double],
       maxs: Array[Double]
-  ): DataFrame = {
-    val enc = corpus.select(col(idCol).as("neighbor_id"),
-      graft.functions.SqCodes(col(vecCol), mins, sqScales(mins, maxs))
-        .as("codes"))
-    sqScore(enc, queries, idCol, vecCol, k, mins, maxs)
-  }
+  ): DataFrame =
+    codecTopK(corpus, queries, idCol, vecCol, k, Codec.Sq8(mins, maxs),
+      None, 0)
 
   /** Persist the SQ8-compressed corpus: (id, codes binary) — dim bytes
     * per vector instead of 4·dim float bytes, the 100 TB store shape
@@ -1315,20 +1264,11 @@ object Similarity {
     * refuses instead of silently decoding against the wrong grid.
     */
   def writeSqCodes(df: DataFrame, idCol: String, vecCol: String,
-      storePath: String, mins: Array[Double], maxs: Array[Double]): Unit = {
-    df.select(col(idCol).as("id"),
-      graft.functions.SqCodes(col(vecCol), mins, sqScales(mins, maxs))
-        .as("codes"))
-      .write.mode("overwrite").parquet(storePath)
-    // AFTER the data write: overwrite mode wipes the store root first
-    graft.core.StoreMeta.overwrite(df.sparkSession, storePath, "sq8", Map(
-      "dim" -> mins.length,
-      "params_md5" -> vectorSetFingerprint(Seq(mins, maxs))))
-  }
+      storePath: String, mins: Array[Double], maxs: Array[Double]): Unit =
+    writeStore(df, idCol, vecCol, Codec.Sq8(mins, maxs), None, storePath)
 
-  /** Probe a stored SQ8 index: same scoring/tie mechanics as [[sqTopK]]
-    * (bit-identical for the same params — code bytes round-trip parquet
-    * exactly), but the corpus side is the compressed store.
+  /** Probe a stored SQ8 index: bit-identical to [[sqTopK]] for the same
+    * params — code bytes round-trip parquet exactly.
     */
   def sqTopKFromStore(
       spark: org.apache.spark.sql.SparkSession,
@@ -1339,14 +1279,9 @@ object Similarity {
       k: Int,
       mins: Array[Double],
       maxs: Array[Double]
-  ): DataFrame = {
-    graft.core.StoreMeta.requireIfPresent(spark, storePath, "sq8", Map(
-      "dim" -> mins.length,
-      "params_md5" -> vectorSetFingerprint(Seq(mins, maxs))))
-    val enc = spark.read.parquet(storePath)
-      .select(col("id").as("neighbor_id"), col("codes"))
-    sqScore(enc, queries, idCol, vecCol, k, mins, maxs)
-  }
+  ): DataFrame =
+    stageFromStore(spark, storePath, queries, idCol, vecCol, k,
+      Codec.Sq8(mins, maxs), None, 0)._1
 
   /** IVF + SQ8: coarse-quantizer candidate pruning over byte-compressed
     * vectors — [[ivfTopK]]'s sublinearity at [[sqTopK]]'s 4× compression,
@@ -1366,41 +1301,9 @@ object Similarity {
       nprobe: Int,
       mins: Array[Double],
       maxs: Array[Double]
-  ): DataFrame = {
-    require(nprobe >= 1 && nprobe <= centroids.size,
-      s"nprobe must be in [1, ${centroids.size}]: $nprobe")
-    val enc = corpus.select(col(idCol).as("neighbor_id"),
-      bestListStruct(scoredListStructs(col(vecCol), centroids)).getField("l")
-        .as("list"),
-      graft.functions.SqCodes(col(vecCol), mins, sqScales(mins, maxs))
-        .as("codes"))
-    val probes = queries
-      .select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-        explodedProbe(col(vecCol), centroids, nprobe).as("__p"))
-      .withColumn("list", col("__p").getField("l"))
-      .drop("__p")
-    ivfSqScore(enc, probes, k, mins, maxs)
-  }
-
-  /** Shared probe-scoring tail of the in-flight and stored IVF-SQ paths:
-    * `enc` is (neighbor_id, list, codes), `probes` is
-    * (query_id, qv, list).
-    */
-  private def ivfSqScore(enc: DataFrame, probes: DataFrame, k: Int,
-      mins: Array[Double], maxs: Array[Double]): DataFrame = {
-    val scored = enc
-      .join(broadcast(probes), Seq("list"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("adc", graft.functions.SqDist(col("qv"), col("codes"),
-        mins, sqSteps(mins, maxs)))
-      .filter(col("adc").isNotNull) // unencodable rows must not rank first
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("adc").asc, col("neighbor_id"))
-    scored
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "adc")
-  }
+  ): DataFrame =
+    codecTopK(corpus, queries, idCol, vecCol, k, Codec.Sq8(mins, maxs),
+      Some(centroids), nprobe)
 
   /** Persist the IVF-SQ8 index: (id, codes binary) partitioned by list —
     * the 100 TB shape when PQ is too lossy and raw floats too big: dim
@@ -1410,53 +1313,24 @@ object Similarity {
     */
   def writeIvfSqCodes(df: DataFrame, idCol: String, vecCol: String,
       centroids: Seq[Array[Double]], storePath: String,
-      mins: Array[Double], maxs: Array[Double]): Unit = {
-    df.select(col(idCol).as("id"),
-      graft.functions.SqCodes(col(vecCol), mins, sqScales(mins, maxs))
-        .as("codes"),
-      bestListStruct(scoredListStructs(col(vecCol), centroids)).getField("l")
-        .as("list"))
-      .repartition(col("list")) // file count bounded by lists, not tasks × lists
-      .write.mode("overwrite").partitionBy("list").parquet(storePath)
-    // AFTER the data write: overwrite mode wipes the store root first
-    graft.core.StoreMeta.overwrite(df.sparkSession, storePath, "ivfsq", Map(
-      "numLists" -> centroids.size,
-      "centroids_md5" -> vectorSetFingerprint(centroids),
-      "dim" -> mins.length,
-      "params_md5" -> vectorSetFingerprint(Seq(mins, maxs))))
-  }
+      mins: Array[Double], maxs: Array[Double]): Unit =
+    writeStore(df, idCol, vecCol, Codec.Sq8(mins, maxs), Some(centroids),
+      storePath)
 
-  /** Append one batch's encoded rows to an IVF-SQ8 store — no read,
-    * list, or rewrite of existing data (the append-only contract of the
-    * dedup/LM stores: what a long-running ingester needs). The first
-    * write stamps `_meta`; later appends REQUIRE the same coarse
-    * geometry and grid params. Training params are FROZEN at store
+  /** Append one batch's encoded rows to an IVF-SQ8 store (the append-only
+    * contract of [[writeStore]]). Training params are FROZEN at store
     * creation by design — re-training per batch would silently re-grid
     * codes already on disk (the DSIR frozen-fit argument); rebuild via
     * [[writeIvfSqCodes]] when the corpus distribution genuinely moves.
     */
   def appendIvfSqCodes(df: DataFrame, idCol: String, vecCol: String,
       centroids: Seq[Array[Double]], storePath: String,
-      mins: Array[Double], maxs: Array[Double]): Unit = {
-    graft.core.StoreMeta.writeOrRequire(df.sparkSession, storePath,
-      "ivfsq", Map(
-        "numLists" -> centroids.size,
-        "centroids_md5" -> vectorSetFingerprint(centroids),
-        "dim" -> mins.length,
-        "params_md5" -> vectorSetFingerprint(Seq(mins, maxs))))
-    df.select(col(idCol).as("id"),
-      graft.functions.SqCodes(col(vecCol), mins, sqScales(mins, maxs))
-        .as("codes"),
-      bestListStruct(scoredListStructs(col(vecCol), centroids)).getField("l")
-        .as("list"))
-      .repartition(col("list")) // file count bounded by lists, not tasks × lists
-      .write.mode("append").partitionBy("list").parquet(storePath)
-  }
+      mins: Array[Double], maxs: Array[Double]): Unit =
+    writeStore(df, idCol, vecCol, Codec.Sq8(mins, maxs), Some(centroids),
+      storePath, append = true)
 
-  /** Probe a stored IVF-SQ8 index: same scoring/tie mechanics as
-    * [[ivfSqTopK]] (bit-identical — code bytes round-trip parquet
-    * exactly), corpus side pruned to the probed-list union via a literal
-    * IN that reaches the file index as a partition filter.
+  /** Probe a stored IVF-SQ8 index: bit-identical to [[ivfSqTopK]], the
+    * store scan pruned to the probed-list union.
     */
   def ivfSqTopKFromStore(
       spark: org.apache.spark.sql.SparkSession,
@@ -1470,43 +1344,8 @@ object Similarity {
       mins: Array[Double],
       maxs: Array[Double]
   ): DataFrame =
-    ivfSqStageFromStore(spark, storePath, queries, idCol, vecCol, k,
-      centroids, nprobe, mins, maxs)._1
-
-  /** [[ivfSqTopKFromStore]] plus the probed-list set it pruned to (see
-    * [[ivfPqStageFromStore]]).
-    */
-  private def ivfSqStageFromStore(
-      spark: org.apache.spark.sql.SparkSession,
-      storePath: String,
-      queries: DataFrame,
-      idCol: String,
-      vecCol: String,
-      k: Int,
-      centroids: Seq[Array[Double]],
-      nprobe: Int,
-      mins: Array[Double],
-      maxs: Array[Double]
-  ): (DataFrame, Seq[Int]) = {
-    require(nprobe >= 1 && nprobe <= centroids.size,
-      s"nprobe must be in [1, ${centroids.size}]: $nprobe")
-    graft.core.StoreMeta.requireIfPresent(spark, storePath, "ivfsq", Map(
-      "numLists" -> centroids.size,
-      "centroids_md5" -> vectorSetFingerprint(centroids),
-      "dim" -> mins.length,
-      "params_md5" -> vectorSetFingerprint(Seq(mins, maxs))))
-    val probes = queries
-      .select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-        explodedProbe(col(vecCol), centroids, nprobe).as("__p"))
-      .withColumn("list", col("__p").getField("l"))
-      .drop("__p")
-    val probedLists = probes.select("list").distinct()
-      .collect().map(_.getInt(0)).sorted.toSeq
-    val enc = spark.read.parquet(storePath)
-      .filter(col("list").isInCollection(probedLists))
-      .select(col("id").as("neighbor_id"), col("list"), col("codes"))
-    (ivfSqScore(enc, probes, k, mins, maxs), probedLists)
-  }
+    stageFromStore(spark, storePath, queries, idCol, vecCol, k,
+      Codec.Sq8(mins, maxs), Some(centroids), nprobe)._1
 
   /** Exact re-ranking of a compressed shortlist (the FAISS
     * IndexRefineFlat shape — the standard two-stage production
@@ -1568,12 +1407,7 @@ object Similarity {
       .withColumn("__d", zip_with(col("qv"), col("cv"), (a, b) => a - b))
       .withColumn("dist", dotDouble(col("__d"), col("__d")))
       .filter(col("dist").isNotNull)
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("dist").asc, col("neighbor_id"))
-    scored
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "dist")
+    rankTopK(scored, "dist", ascending = true, k)
   }
 
   /** SQ8 first stage + exact refine: the shortlist is [[sqTopK]]'s ADC
@@ -1624,11 +1458,9 @@ object Similarity {
   /** Fully-PERSISTED two-stage retrieval: the compressed store answers
     * the shortlist ([[ivfPqTopKFromStore]] at k·factor — (id, codes)
     * partitions pruned to the probed lists) and the raw-vector store
-    * ([[writeIvfAssignments]]) answers the exact refine. The SAME
-    * probed-list pruning applies to the refine scan — every shortlist
-    * member came from a probed list — so neither store is ever read
-    * beyond the probed partitions: at a 10k-list production index a
-    * 10-query retrieval touches ~40 directories of code bytes plus the
+    * ([[writeIvfAssignments]]) answers the exact refine over the SAME
+    * probed lists ([[rerankFromStores]]): at a 10k-list production index
+    * a 10-query retrieval touches ~40 directories of code bytes plus the
     * same ~40 of raw vectors, never the rest of either store.
     */
   def ivfPqRerankTopKFromStores(
@@ -1646,42 +1478,10 @@ object Similarity {
       numCodes: Int = 8,
       dsub: Int = 16,
       factor: Int = 4
-  ): DataFrame = {
-    require(factor >= 1, s"refine factor must be >= 1: $factor")
-    val (shortlist, probedLists) = ivfPqStageFromStore(spark, pqStorePath,
-      queries, idCol, vecCol, k * factor, centroids, nprobe, codebook,
-      m, numCodes, dsub)
-    rerankFromRawStore(spark, rawStorePath, shortlist, queries,
-      idCol, vecCol, k, centroids, probedLists)
-  }
-
-  /** The shared raw-refine tail of every persisted two-stage wrapper:
-    * prune the raw-vector store ([[writeIvfAssignments]]) to the SAME
-    * probed-list union stage one scanned — every shortlist member came
-    * from a probed list, so neither store is ever read beyond the
-    * probed partitions — and re-rank exactly. One definition, so the
-    * raw-store contract (meta keys, list pruning) can never drift
-    * between the PQ / SQ / binary compositions.
-    */
-  private def rerankFromRawStore(
-      spark: org.apache.spark.sql.SparkSession,
-      rawStorePath: String,
-      shortlist: DataFrame,
-      queries: DataFrame,
-      idCol: String,
-      vecCol: String,
-      k: Int,
-      centroids: Seq[Array[Double]],
-      probedLists: Seq[Int]
-  ): DataFrame = {
-    graft.core.StoreMeta.requireIfPresent(spark, rawStorePath, "ivf", Map(
-      "numLists" -> centroids.size,
-      "centroids_md5" -> vectorSetFingerprint(centroids)))
-    val rawPruned = spark.read.parquet(rawStorePath)
-      .filter(col("list").isInCollection(probedLists))
-      .select(col("id").as(idCol), col("v").as(vecCol))
-    rerankExact(shortlist, rawPruned, queries, idCol, vecCol, k)
-  }
+  ): DataFrame =
+    rerankFromStores(spark, pqStorePath, rawStorePath, queries, idCol,
+      vecCol, k, Codec.Pq(codebook, m, numCodes, dsub), centroids, nprobe,
+      factor)
 
   /** IVF-SQ8 first stage + exact refine — the measured production
     * two-stage configuration: the coarse probe makes the scan sublinear
@@ -1732,13 +1532,9 @@ object Similarity {
       mins: Array[Double],
       maxs: Array[Double],
       factor: Int = 4
-  ): DataFrame = {
-    require(factor >= 1, s"refine factor must be >= 1: $factor")
-    val (shortlist, probedLists) = ivfSqStageFromStore(spark, sqStorePath,
-      queries, idCol, vecCol, k * factor, centroids, nprobe, mins, maxs)
-    rerankFromRawStore(spark, rawStorePath, shortlist, queries,
-      idCol, vecCol, k, centroids, probedLists)
-  }
+  ): DataFrame =
+    rerankFromStores(spark, sqStorePath, rawStorePath, queries, idCol,
+      vecCol, k, Codec.Sq8(mins, maxs), centroids, nprobe, factor)
 
   /** (id, bk) multi-table LSH bucket keys of an embedding table — the
     * STORE layout for incremental embedding dedup: `tables` keys per
@@ -1967,12 +1763,7 @@ object Similarity {
       // stays a null sim and ranks as before
       .filter(col("qn") =!= 0.0 && col("cn") =!= 0.0)
       .withColumn("sim", dotDouble(col("qv"), col("cv")) / (col("qn") * col("cn")))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    scored
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "sim")
+    rankTopK(scored, "sim", ascending = false, k)
   }
 
   /** Persist the LSH top-k index: (neighbor_id, cv, cn) partitioned by
@@ -2039,12 +1830,7 @@ object Similarity {
       .filter(col("qn") =!= 0.0 && col("cn") =!= 0.0) // zero-norm: see lshTopK
       .withColumn("sim",
         dotDouble(col("qv"), col("cv")) / (col("qn") * col("cn")))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    scored
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "sim")
+    rankTopK(scored, "sim", ascending = false, k)
   }
 
   /** MULTI-PROBE LSH top-k (Lv et al. 2007, "Multi-Probe LSH"): each
@@ -2102,12 +1888,7 @@ object Similarity {
       .filter(col("qn") =!= 0.0 && col("cn") =!= 0.0) // zero-norm: see lshTopK
       .withColumn("sim",
         dotDouble(col("qv"), col("cv")) / (col("qn") * col("cn")))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    scored
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "sim")
+    rankTopK(scored, "sim", ascending = false, k)
   }
 
   /** Per-subspace Lloyd (k-means) refinement of a PQ codebook — the
@@ -2363,71 +2144,11 @@ object Similarity {
 
   // ------------------------------------------------- binary (1-bit) quantization
 
-  /** Identity-basis "planes" for sign-bit quantization: plane j is the
-    * one-hot e_j, so [[graft.functions.HyperplaneBits]]' dot-sign bit j
-    * is just sign(x_j) — the kernel's tight loop packs all dim sign
-    * bits in one pass with zero new kernel code.
-    */
-  private def identitySigns(dim: Int): Seq[Array[Double]] =
-    (0 until dim).map(j => Array.tabulate(dim)(i => if (i == j) 1.0 else 0.0))
-
-  /** Packed sign words of a vector (bit i%w of word i/w set iff
-    * x_i > 0) — at most 32 bits per word, NOT 64, so the packed value
-    * and its oracle replay (`1::BIGINT << j`, j < 32) never touch the
-    * long sign bit in either engine. dim ≤ 32 packs into ONE word of
-    * dim bits (small-dim test geometry); larger dims must be a multiple
-    * of 32.
-    */
-  private def signWordBits(dim: Int): Int = {
-    require(dim <= 32 || dim % 32 == 0,
-      s"binary quantization needs dim <= 32 or dim % 32 == 0: $dim")
-    if (dim <= 32) dim else 32
-  }
-
-  private def signWordCount(dim: Int): Int = dim / signWordBits(dim)
-
-  private def signWords(vec: Column, dim: Int): Column =
-    graft.functions.HyperplaneBits(vec, identitySigns(dim),
-      signWordBits(dim))
-
-  /** True iff the first `dim` elements exist and are non-null — the
-    * null contract for the RANKED binary scan: HyperplaneBits maps a
-    * degenerate vector to the all-zero pattern (fine for LSH bucket
-    * keys, which only need equality), but a ranked Hamming scan would
-    * score that pattern as a real candidate, so degenerate rows are
-    * filtered out instead (mirrors SQ/PQ's null-distance contract).
-    */
-  private def encodableVec(c: Column, dim: Int): Column =
-    c.isNotNull && (size(c) >= dim) &&
-      !exists(slice(c, 1, dim), x => x.isNull)
-
-  private def hammingScore(enc: DataFrame, queries: DataFrame,
-      idCol: String, vecCol: String, k: Int, dim: Int): DataFrame = {
-    val words = signWordCount(dim)
-    val q = queries
-      .filter(encodableVec(col(vecCol), dim))
-      .select(col(idCol).as("query_id"),
-        signWords(col(vecCol), dim).as("qb"))
-    val ham = (0 until words)
-      .map(w => expr(s"bit_count(element_at(qb, ${w + 1}) ^ " +
-        s"element_at(cb, ${w + 1}))").cast("long"))
-      .reduce(_ + _)
-    val scored = enc
-      .join(broadcast(q), col("query_id") =!= col("neighbor_id"))
-      .withColumn("hamming", ham)
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("hamming").asc, col("neighbor_id"))
-    scored
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "hamming")
-  }
-
   /** Binary (1-bit sign) quantization top-k — the 32× compression point
     * past SQ8 (dim/8 BYTES per vector: 64 dims → two 32-bit words in
-    * two longs): corpus and queries quantize to per-dim sign bits,
-    * candidates rank by HAMMING distance (popcount of XOR — for
-    * sign bits an angle proxy: E[hamming] = dim·θ/π, the
+    * two longs): corpus and queries quantize to per-dim sign bits
+    * ([[Codec.Sign]]), candidates rank by HAMMING distance (popcount of
+    * XOR — for sign bits an angle proxy: E[hamming] = dim·θ/π, the
     * Goemans–Williamson/SimHash identity), exact integer arithmetic
     * end-to-end so the oracle replays bit-for-bit. The production
     * deployment is [[binaryRerankTopK]]: Hamming shortlist at k·factor,
@@ -2458,13 +2179,8 @@ object Similarity {
       vecCol: String,
       k: Int,
       dim: Int = 64
-  ): DataFrame = {
-    val enc = corpus
-      .filter(encodableVec(col(vecCol), dim))
-      .select(col(idCol).as("neighbor_id"),
-        signWords(col(vecCol), dim).as("cb"))
-    hammingScore(enc, queries, idCol, vecCol, k, dim)
-  }
+  ): DataFrame =
+    codecTopK(corpus, queries, idCol, vecCol, k, Codec.Sign(dim), None, 0)
 
   /** Persist the sign-bit corpus: (id, cb array<long>) at dim/8 bytes
     * of payload per vector — the smallest store in the family. `_meta`
@@ -2472,14 +2188,8 @@ object Similarity {
     * under a different prefix length join cleanly and mis-rank).
     */
   def writeSignBits(df: DataFrame, idCol: String, vecCol: String,
-      storePath: String, dim: Int = 64): Unit = {
-    df.filter(encodableVec(col(vecCol), dim))
-      .select(col(idCol).as("id"), signWords(col(vecCol), dim).as("cb"))
-      .write.mode("overwrite").parquet(storePath)
-    // AFTER the data write: overwrite mode wipes the store root first
-    graft.core.StoreMeta.overwrite(df.sparkSession, storePath, "binary",
-      Map("dim" -> dim))
-  }
+      storePath: String, dim: Int = 64): Unit =
+    writeStore(df, idCol, vecCol, Codec.Sign(dim), None, storePath)
 
   /** Probe a stored sign-bit index — bit-identical to [[binaryTopK]]
     * for the same corpus (packed longs round-trip parquet exactly).
@@ -2492,13 +2202,9 @@ object Similarity {
       vecCol: String,
       k: Int,
       dim: Int = 64
-  ): DataFrame = {
-    graft.core.StoreMeta.requireIfPresent(spark, storePath, "binary",
-      Map("dim" -> dim))
-    val enc = spark.read.parquet(storePath)
-      .select(col("id").as("neighbor_id"), col("cb"))
-    hammingScore(enc, queries, idCol, vecCol, k, dim)
-  }
+  ): DataFrame =
+    stageFromStore(spark, storePath, queries, idCol, vecCol, k,
+      Codec.Sign(dim), None, 0)._1
 
   /** Binary stage + exact refine — Hamming shortlist at k·factor,
     * re-ranked by exact L2² from raw vectors ([[rerankExact]]): the
@@ -2521,37 +2227,12 @@ object Similarity {
       corpus, queries, idCol, vecCol, k)
   }
 
-  /** Shared probe-scoring tail of the in-flight and stored IVF-binary
-    * paths: `enc` is (neighbor_id, list, cb), `probes` is
-    * (query_id, qb, list) — the [[ivfSqScore]] shape with the byte
-    * decode replaced by XOR+popcount.
-    */
-  private def ivfHammingScore(enc: DataFrame, probes: DataFrame, k: Int,
-      dim: Int): DataFrame = {
-    val words = signWordCount(dim)
-    val ham = (0 until words)
-      .map(w => expr(s"bit_count(element_at(qb, ${w + 1}) ^ " +
-        s"element_at(cb, ${w + 1}))").cast("long"))
-      .reduce(_ + _)
-    val scored = enc
-      .join(broadcast(probes), Seq("list"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("hamming", ham)
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("hamming").asc, col("neighbor_id"))
-    scored
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "hamming")
-  }
-
   /** IVF + binary: coarse-quantizer candidate pruning over sign-bit
     * vectors — [[ivfTopK]]'s sublinearity at [[binaryTopK]]'s 32×
-    * compression, completing the IVF × {raw, SQ8, PQ, binary}
-    * compression/sublinearity matrix. Like SQ (and unlike PQ) the
-    * quantizer is list-independent, so probing is the IVF join with
-    * XOR+popcount fused in; assignment + sign-pack are one map-side
-    * projection and only (id, list, two longs) rows move.
+    * compression. Like SQ (and unlike PQ) the quantizer is
+    * list-independent, so probing is the IVF join with XOR+popcount
+    * fused in; assignment + sign-pack are one map-side projection and
+    * only (id, list, two longs) rows move.
     */
   def ivfBinaryTopK(
       corpus: DataFrame,
@@ -2562,24 +2243,9 @@ object Similarity {
       centroids: Seq[Array[Double]],
       nprobe: Int,
       dim: Int = 64
-  ): DataFrame = {
-    require(nprobe >= 1 && nprobe <= centroids.size,
-      s"nprobe must be in [1, ${centroids.size}]: $nprobe")
-    val enc = corpus
-      .filter(encodableVec(col(vecCol), dim))
-      .select(col(idCol).as("neighbor_id"),
-        bestListStruct(scoredListStructs(col(vecCol), centroids))
-          .getField("l").as("list"),
-        signWords(col(vecCol), dim).as("cb"))
-    val probes = queries
-      .filter(encodableVec(col(vecCol), dim))
-      .select(col(idCol).as("query_id"),
-        signWords(col(vecCol), dim).as("qb"),
-        explodedProbe(col(vecCol), centroids, nprobe).as("__p"))
-      .withColumn("list", col("__p").getField("l"))
-      .drop("__p")
-    ivfHammingScore(enc, probes, k, dim)
-  }
+  ): DataFrame =
+    codecTopK(corpus, queries, idCol, vecCol, k, Codec.Sign(dim),
+      Some(centroids), nprobe)
 
   /** Persist the IVF-binary index: (id, cb) partitioned by list — the
     * smallest partition-pruned store in the family (two longs per
@@ -2587,46 +2253,21 @@ object Similarity {
     */
   def writeIvfBinary(df: DataFrame, idCol: String, vecCol: String,
       centroids: Seq[Array[Double]], storePath: String,
-      dim: Int = 64): Unit = {
-    df.filter(encodableVec(col(vecCol), dim))
-      .select(col(idCol).as("id"), signWords(col(vecCol), dim).as("cb"),
-        bestListStruct(scoredListStructs(col(vecCol), centroids))
-          .getField("l").as("list"))
-      .repartition(col("list")) // file count bounded by lists, not tasks × lists
-      .write.mode("overwrite").partitionBy("list").parquet(storePath)
-    // AFTER the data write: overwrite mode wipes the store root first
-    graft.core.StoreMeta.overwrite(df.sparkSession, storePath,
-      "ivf_binary", Map(
-        "numLists" -> centroids.size,
-        "centroids_md5" -> vectorSetFingerprint(centroids),
-        "dim" -> dim))
-  }
+      dim: Int = 64): Unit =
+    writeStore(df, idCol, vecCol, Codec.Sign(dim), Some(centroids),
+      storePath)
 
-  /** Append one batch's sign-bit rows to an IVF-binary store — the
-    * append-only maintenance contract of [[appendIvfSqCodes]]: no read,
-    * list, or rewrite of existing data; first write stamps `_meta`,
-    * later appends REQUIRE the same geometry and dim.
+  /** Append one batch's sign-bit rows to an IVF-binary store (the
+    * append-only contract of [[writeStore]]).
     */
   def appendIvfBinary(df: DataFrame, idCol: String, vecCol: String,
       centroids: Seq[Array[Double]], storePath: String,
-      dim: Int = 64): Unit = {
-    graft.core.StoreMeta.writeOrRequire(df.sparkSession, storePath,
-      "ivf_binary", Map(
-        "numLists" -> centroids.size,
-        "centroids_md5" -> vectorSetFingerprint(centroids),
-        "dim" -> dim))
-    df.filter(encodableVec(col(vecCol), dim))
-      .select(col(idCol).as("id"), signWords(col(vecCol), dim).as("cb"),
-        bestListStruct(scoredListStructs(col(vecCol), centroids))
-          .getField("l").as("list"))
-      .repartition(col("list")) // file count bounded by lists, not tasks × lists
-      .write.mode("append").partitionBy("list").parquet(storePath)
-  }
+      dim: Int = 64): Unit =
+    writeStore(df, idCol, vecCol, Codec.Sign(dim), Some(centroids),
+      storePath, append = true)
 
   /** Probe a stored IVF-binary index — bit-identical to
-    * [[ivfBinaryTopK]] (packed longs round-trip parquet exactly),
-    * corpus side pruned to the probed-list union via a literal IN that
-    * reaches the file index as a partition filter.
+    * [[ivfBinaryTopK]], the store scan pruned to the probed-list union.
     */
   def ivfBinaryTopKFromStore(
       spark: org.apache.spark.sql.SparkSession,
@@ -2639,52 +2280,14 @@ object Similarity {
       nprobe: Int,
       dim: Int = 64
   ): DataFrame =
-    ivfBinaryStageFromStore(spark, storePath, queries, idCol, vecCol, k,
-      centroids, nprobe, dim)._1
+    stageFromStore(spark, storePath, queries, idCol, vecCol, k,
+      Codec.Sign(dim), Some(centroids), nprobe)._1
 
-  /** [[ivfBinaryTopKFromStore]] plus the probed-list set it pruned to
-    * (see [[ivfPqStageFromStore]]).
-    */
-  private def ivfBinaryStageFromStore(
-      spark: org.apache.spark.sql.SparkSession,
-      storePath: String,
-      queries: DataFrame,
-      idCol: String,
-      vecCol: String,
-      k: Int,
-      centroids: Seq[Array[Double]],
-      nprobe: Int,
-      dim: Int
-  ): (DataFrame, Seq[Int]) = {
-    require(nprobe >= 1 && nprobe <= centroids.size,
-      s"nprobe must be in [1, ${centroids.size}]: $nprobe")
-    graft.core.StoreMeta.requireIfPresent(spark, storePath, "ivf_binary",
-      Map("numLists" -> centroids.size,
-        "centroids_md5" -> vectorSetFingerprint(centroids),
-        "dim" -> dim))
-    val probes = queries
-      .filter(encodableVec(col(vecCol), dim))
-      .select(col(idCol).as("query_id"),
-        signWords(col(vecCol), dim).as("qb"),
-        explodedProbe(col(vecCol), centroids, nprobe).as("__p"))
-      .withColumn("list", col("__p").getField("l"))
-      .drop("__p")
-    val probedLists = probes.select("list").distinct()
-      .collect().map(_.getInt(0)).sorted.toSeq
-    val enc = spark.read.parquet(storePath)
-      .filter(col("list").isInCollection(probedLists))
-      .select(col("id").as("neighbor_id"), col("list"), col("cb"))
-    (ivfHammingScore(enc, probes, k, dim), probedLists)
-  }
-
-  /** Fully-PERSISTED binary two-stage retrieval — the
-    * [[ivfSqRerankTopKFromStores]] shape at 32× stage-one compression:
-    * the sign-bit store answers the Hamming top-(k·factor) shortlist,
-    * the raw-vector store ([[writeIvfAssignments]]) answers the exact
-    * refine, BOTH scans pruned to the probed lists. The smallest
-    * stage-one IO in the family; pick `factor` against
-    * [[rerankExact]]'s measured binary guidance (Hamming is a coarse
-    * proxy — budget a larger factor than SQ needs).
+  /** Fully-PERSISTED binary two-stage retrieval ([[rerankFromStores]]
+    * with the sign-bit store as stage one): the smallest stage-one IO in
+    * the family; pick `factor` against [[rerankExact]]'s measured binary
+    * guidance (Hamming is a coarse proxy — budget a larger factor than
+    * SQ needs).
     */
   def ivfBinaryRerankTopKFromStores(
       spark: org.apache.spark.sql.SparkSession,
@@ -2698,14 +2301,9 @@ object Similarity {
       nprobe: Int,
       dim: Int = 64,
       factor: Int = 4
-  ): DataFrame = {
-    require(factor >= 1, s"refine factor must be >= 1: $factor")
-    val (shortlist, probedLists) = ivfBinaryStageFromStore(spark,
-      binStorePath, queries, idCol, vecCol, k * factor, centroids,
-      nprobe, dim)
-    rerankFromRawStore(spark, rawStorePath, shortlist, queries,
-      idCol, vecCol, k, centroids, probedLists)
-  }
+  ): DataFrame =
+    rerankFromStores(spark, binStorePath, rawStorePath, queries, idCol,
+      vecCol, k, Codec.Sign(dim), centroids, nprobe, factor)
 
   // --------------------------------------------- persisted training artifacts
 

@@ -218,12 +218,6 @@ final case class CatalogTableBackend(catalogName: String, namespace: String)
 
 object CommitBackend {
 
-  /** Iceberg runtime present? (reflective probe — no compile-time dep). */
-  def icebergAvailable: Boolean =
-    try {
-      Class.forName("org.apache.iceberg.spark.SparkCatalog"); true
-    } catch { case _: Throwable => false }
-
   /** Pick the backend: a configured catalog (target `catalog.name` +
     * optional `catalog.namespace`) gets the table backend; otherwise the
     * parquet-only degradation path.

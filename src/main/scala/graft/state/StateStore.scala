@@ -102,20 +102,9 @@ final class StateStore(statePath: String, hadoopConf: Configuration) {
 
   // ---------------------------------------------------- spreadsheet skip (I3)
 
-  /** validator.py:369-425 — same compare as files, `spreadsheet_` key. */
-  def shouldSkipSpreadsheet(spreadsheetId: String, currentModified: String,
-      lookbackDays: Int = 0): Boolean = {
-    read().get(s"spreadsheet_$spreadsheetId").flatMap(_.get("last_modified")) match {
-      case Some(last) if last.nonEmpty =>
-        currentModified <= last && lookbackDays == 0
-      case _ => false
-    }
-  }
-
-  def updateSpreadsheetState(spreadsheetId: String, modifiedTime: String): Unit =
-    updateSpreadsheetEntries(Seq(spreadsheetId -> modifiedTime))
-
-  /** Batch form — one read + one write. */
+  /** Record processed spreadsheets under `spreadsheet_` keys
+    * (validator.py:369-425) — one read + one write for the batch.
+    */
   def updateSpreadsheetEntries(entries: Seq[(String, String)]): Unit =
     write(read() ++ entries.map { case (id, mtime) =>
       s"spreadsheet_$id" ->

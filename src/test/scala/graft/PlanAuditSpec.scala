@@ -397,9 +397,9 @@ class PlanAuditSpec extends SparkSpec {
       ("operators/Similarity.scala", "broadcast(d)") -> (2, "GATED pinVec row+byte gate"),
       ("operators/Similarity.scala", "broadcast(d) else d") -> (2, "GATED broadcastMaxPairs"),
       ("operators/Similarity.scala", "broadcast(losers)") -> (1, "GATED broadcastMaxPairs"),
-      ("operators/Similarity.scala", "broadcast(probes), Seq(\"list\"))") -> (7, "QUERY probed-list union"),
+      ("operators/Similarity.scala", "broadcast(probes), Seq(\"list\"))") -> (1, "QUERY probed-list union"),
       ("operators/Similarity.scala", "broadcast(q),") -> (1, "QUERY seed vectors"),
-      ("operators/Similarity.scala", "broadcast(q), col(\"query_id\") =!= col(\"neighbor_id\"))") -> (4, "QUERY seed vectors"),
+      ("operators/Similarity.scala", "broadcast(q), col(\"query_id\") =!= col(\"neighbor_id\"))") -> (1, "QUERY seed vectors"),
       ("operators/Similarity.scala", "broadcast(vecs.select(col(\"id\").as(\"id_a\"),") -> (1, "GATED fused-branch row+byte gate"),
       ("operators/Similarity.scala", "broadcast(vecs.select(col(\"id\").as(\"id_b\"),") -> (1, "GATED fused-branch row+byte gate"),
       ("operators/Similarity.scala", "broadcast(withQ), Seq(\"neighbor_id\"))") -> (1, "QUERY shortlist x query vectors (k-bounded)"),

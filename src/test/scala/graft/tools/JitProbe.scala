@@ -47,7 +47,10 @@ object JitProbe {
     val jobs = new java.util.concurrent.atomic.AtomicLong()
     val stages = new java.util.concurrent.atomic.AtomicLong()
     val tasks = new java.util.concurrent.atomic.AtomicLong()
-    val jobStart = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+    // boxed values: a Scala Long map unboxes a missing key to 0L, so a
+    // job whose start was missed would add its epoch-ms end time
+    val jobStart =
+      new java.util.concurrent.ConcurrentHashMap[Int, java.lang.Long]()
     spark.sparkContext.addSparkListener(
       new org.apache.spark.scheduler.SparkListener {
         override def onJobStart(
@@ -57,7 +60,7 @@ object JitProbe {
         override def onJobEnd(
             e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
           val s = jobStart.remove(e.jobId)
-          if (s != null) jobWall.addAndGet(e.time - s)
+          if (s != null) jobWall.addAndGet(e.time - s.longValue)
         }
         override def onStageCompleted(
             e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
