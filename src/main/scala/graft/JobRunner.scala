@@ -44,9 +44,6 @@ object JobRunner {
     if (path.isAbsolute) p else Paths.get(jobDir, p).toString
   }
 
-  /** Source planning (cli.py:453-614 routing, minus driver-side SaaS
-    * connectors). Returns the raw DataFrame before validation.
-    */
   /** Incremental context resolved from the source config + state store. */
   private final case class IncrementalPlan(
       store: Option[graft.state.StateStore],
@@ -76,6 +73,9 @@ object JobRunner {
             .map(_.toDouble.toInt).getOrElse(0))
     }
 
+  /** Source planning (cli.py:453-614 routing, minus driver-side SaaS
+    * connectors). Returns the raw DataFrame before validation.
+    */
   def planSource(spark: SparkSession, src: SourceConfig, contract: DataContract,
       jobDir: String, mode: String = "self_hosted"): DataFrame =
     planSourceIncremental(spark, src, contract, jobDir, mode)._1
@@ -323,14 +323,15 @@ object JobRunner {
     */
   def applyCuration(df: DataFrame, raw: Map[String, Any]): DataFrame = {
     val c = Yaml.map(raw, "curation")
+    curate(df, c, curationStore(c))
+  }
+
+  private def curate(df: DataFrame, c: Map[String, Any],
+      store: Option[CurationStore]): DataFrame = {
     if (c.isEmpty) return df
-    def need(k: String): String = Yaml.str(c, k).getOrElse(
-      throw new IllegalArgumentException(s"curation requires $k"))
-    val bucketed = curationStoreBucketed(c)
-    if (curationStoreFormat(c) == "bloom" &&
-        Yaml.str(c, "dedupe").exists(_ != "incremental"))
-      throw new IllegalArgumentException(
-        "store_format: bloom supports only dedupe: incremental")
+    val need = curationKey(c)
+    // what the incremental dedupe modes below check against
+    def corpusKeys: DataFrame = store.get.keys.read(df.sparkSession)
     var out = obsStage(df, "input")
     // extraction first: downstream dedup/quality rules should judge the
     // extracted prose, not the markup
@@ -379,45 +380,34 @@ object JobRunner {
           out, need("id_field"), need("text_field"))
       case "incremental" =>
         // vs an existing fingerprint store (missing store = first run);
-        // append surviving rows' fingerprints post-commit via
-        // Dedup.appendFingerprints — store maintenance is a separate
-        // write, not part of the job's single action. With
-        // `store_format: bucketed`, `fingerprint_store` names a TABLE
-        // bucketed on the join key (the 100 TB shape: the store streams
-        // with zero Exchange; only the batch shuffles). With
-        // `store_format: bloom`, the store's `_bloom` sidecar prefilters
-        // map-side (missing sidecar = build once from the store) and
-        // only bloom-positive rows touch the store.
-        if (curationStoreFormat(c) == "bloom") {
-          val store = graft.operators.Dedup.readFingerprints(
-            df.sparkSession, need("fingerprint_store"))
-          val sketch = graft.operators.Dedup.readBloomSidecar(
-            df.sparkSession, need("fingerprint_store")).getOrElse(
-            graft.operators.Dedup.buildFingerprintBloom(
-              store, bloomExpectedItems(c), bloomFpp(c)))
-          out = graft.operators.Dedup.dropDuplicatesIncrementalBloom(
-            out, need("id_field"), need("text_field"), store, sketch)
-        } else
-          out = graft.operators.Dedup.dropDuplicatesIncremental(
-            out, need("id_field"), need("text_field"),
-            if (bucketed) graft.operators.Dedup.readBucketedFingerprints(
-              df.sparkSession, need("fingerprint_store"))
-            else graft.operators.Dedup.readFingerprints(
-              df.sparkSession, need("fingerprint_store")))
+        // surviving rows' fingerprints are appended post-commit under
+        // `update_store` — store maintenance is a separate write, not
+        // part of the job's single action. With `store_format: bloom`,
+        // the store's `_bloom` sidecar prefilters map-side (missing
+        // sidecar = build once from the store) and only bloom-positive
+        // rows touch the store.
+        val corpus = corpusKeys
+        out = store.get.bloom match {
+          case Some((expected, fpp)) =>
+            val sketch = graft.operators.Dedup.readBloomSidecar(
+              df.sparkSession, need("fingerprint_store")).getOrElse(
+              graft.operators.Dedup.buildFingerprintBloom(
+                corpus, expected, fpp))
+            graft.operators.Dedup.dropDuplicatesIncrementalBloom(
+              out, need("id_field"), need("text_field"), corpus, sketch)
+          case None =>
+            graft.operators.Dedup.dropDuplicatesIncremental(
+              out, need("id_field"), need("text_field"), corpus)
+        }
       case "incremental_near" =>
         // vs an existing (id, band-key) MinHash store; the exact-Jaccard
         // verify re-reads candidate corpus documents from `corpus_path`
         // (the prior days' committed output), semi-join pruned to
-        // candidates only. Store maintenance post-commit via
-        // appendBandKeys / saveBucketedBandKeys, same split as above.
+        // candidates only. Store maintenance post-commit, as above.
         out = graft.operators.Dedup.dropNearDuplicatesIncremental(
-          out, need("id_field"), need("text_field"),
-          if (bucketed) graft.operators.Dedup.readBucketedBandKeys(
-            df.sparkSession, need("band_key_store"))
-          else graft.operators.Dedup.readBandKeys(
-            df.sparkSession, need("band_key_store")),
-          readCorpusDocs(df.sparkSession, need("corpus_path"),
-            need("id_field"), need("text_field"), out))
+          out, need("id_field"), need("text_field"), corpusKeys,
+          graft.operators.Dedup.readCorpusDocs(
+            need("corpus_path"), need("id_field"), need("text_field"), out))
       case "spans" =>
         // cut repeated passages in place (keep-first); schema preserved,
         // fully-duplicate documents disappear
@@ -454,21 +444,16 @@ object JobRunner {
           maxTokenDf = Yaml.str(c, "tfidf_max_token_df")
             .map(_.toDouble.toInt).getOrElse(50))
       case "incremental_simhash" =>
-        // vs an existing (id, simhash) store (missing store = first run);
-        // append surviving rows' hashes post-commit via
-        // Dedup.appendSimhashes — store maintenance is a separate write,
-        // same contract as the exact incremental store. Bucketed form
-        // stores pre-exploded (sh, chunk-key) rows bucketed on the key.
+        // vs an existing (id, simhash) store (missing store = first run),
+        // maintained post-commit like the exact incremental store. The
+        // bucketed form stores pre-exploded (sh, chunk-key) rows
+        // bucketed on the key.
         out =
-          if (bucketed)
+          if (store.get.keys.family.kind == "simhash_chunks")
             graft.operators.Dedup.dropSimhashDuplicatesIncrementalChunked(
-              out, need("id_field"), need("text_field"),
-              graft.operators.Dedup.readBucketedSimhashChunks(
-                df.sparkSession, need("simhash_store")))
+              out, need("id_field"), need("text_field"), corpusKeys)
           else graft.operators.Dedup.dropSimhashDuplicatesIncremental(
-            out, need("id_field"), need("text_field"),
-            graft.operators.Dedup.readSimhashes(
-              df.sparkSession, need("simhash_store")))
+            out, need("id_field"), need("text_field"), corpusKeys)
       case other =>
         throw new IllegalArgumentException(s"unknown curation.dedupe: $other")
     }
@@ -633,32 +618,67 @@ object JobRunner {
       df.observe(s"graft.curation.$stage", count(lit(1)).as("n"))
     else df
 
-  /** `curation.store_format`: `parquet` (default — store keys are paths,
-    * appends are plain parquet), `bucketed` (store keys name TABLES
-    * bucketed on the join key, so the per-batch store join reads with
-    * zero Exchange — the 100 TB shape; see
-    * [[graft.operators.Dedup.saveBucketedFingerprints]]), or `bloom`
+  /** A required `curation.<key>`; absent is a config error. */
+  private def curationKey(c: Map[String, Any]): String => String = k =>
+    Yaml.str(c, k).getOrElse(throw new IllegalArgumentException(s"curation requires $k"))
+
+  /** The incremental key store a curation block dedups against, plus
+    * what maintains it alongside the keys: the bloom sketch sizing
+    * (`bloom_expected_items`, `bloom_fpp`) and the corpus-docs path the
+    * near-dup verify reads.
+    */
+  private final case class CurationStore(keys: graft.core.KeyStore,
+      bloom: Option[(Long, Double)] = None, corpusPath: Option[String] = None)
+
+  /** Resolve the curation store ONCE from `dedupe`, `store_format` and
+    * the mode's `*_store` key; the same value serves the read in
+    * [[applyCuration]], the post-commit append and `compact_store_every`.
+    * None for dedupe modes without a key store.
+    *
+    * `store_format`: `parquet` (default — store keys are paths, appends
+    * are plain parquet), `bucketed` (store keys name TABLES bucketed on
+    * the join key, so the per-batch store join reads with zero Exchange
+    * — the 100 TB shape; see [[graft.core.KeyStore]]), or `bloom`
     * (`dedupe: incremental` only — a `_bloom` sketch sidecar inside the
     * parquet store answers "definitely new" map-side, so the store is
-    * only consulted for the bloom-positive sliver; sized by
-    * `bloom_expected_items` / `bloom_fpp`, maintained post-commit like
-    * the fingerprint append).
+    * only consulted for the bloom-positive sliver; maintained
+    * post-commit with the fingerprint append). A format the mode has no
+    * store for is a config error, not silently ignored.
     */
-  private def curationStoreFormat(c: Map[String, Any]): String =
-    Yaml.str(c, "store_format").getOrElse("parquet") match {
-      case f @ ("parquet" | "bucketed" | "bloom") => f
-      case other => throw new IllegalArgumentException(
-        s"unknown curation.store_format: $other (parquet|bucketed|bloom)")
+  private def curationStore(c: Map[String, Any]): Option[CurationStore] = {
+    import graft.operators.Dedup
+    val need = curationKey(c)
+    val format = Yaml.str(c, "store_format").getOrElse("parquet")
+    def store(family: graft.core.StoreFamily, key: String) =
+      graft.core.KeyStore(family,
+        graft.core.StoreLayout(need(key), table = format == "bucketed"))
+    (Yaml.str(c, "dedupe"), format) match {
+      case (_, f) if !Set("parquet", "bucketed", "bloom")(f) =>
+        throw new IllegalArgumentException(
+          s"unknown curation.store_format: $f (parquet|bucketed|bloom)")
+      case (Some(mode), "bloom") if mode != "incremental" =>
+        throw new IllegalArgumentException(
+          "store_format: bloom supports only dedupe: incremental")
+      case (Some("incremental"), _) =>
+        Some(CurationStore(store(Dedup.fingerprintFamily, "fingerprint_store"),
+          bloom = Option.when(format == "bloom")(
+            (Yaml.str(c, "bloom_expected_items").map(_.toLong).getOrElse(1000000L),
+              Yaml.str(c, "bloom_fpp").map(_.toDouble).getOrElse(0.01)))))
+      case (Some("incremental_near"), _) =>
+        Some(CurationStore(store(Dedup.bandKeyFamily(), "band_key_store"),
+          corpusPath = Some(need("corpus_path"))))
+      case (Some("incremental_simhash"), "bucketed") =>
+        Some(CurationStore(store(Dedup.simhashChunkFamily(), "simhash_store")))
+      case (Some("incremental_simhash"), _) =>
+        Some(CurationStore(store(Dedup.simhashFamily(), "simhash_store")))
+      case (mode, "bucketed") =>
+        throw new IllegalArgumentException(
+          s"store_format: bucketed has no store for dedupe: " +
+            s"${mode.getOrElse("<none>")} (incremental, incremental_near, " +
+            "incremental_simhash)")
+      case _ => None
     }
-
-  private def curationStoreBucketed(c: Map[String, Any]): Boolean =
-    curationStoreFormat(c) == "bucketed"
-
-  private def bloomExpectedItems(c: Map[String, Any]): Long =
-    Yaml.str(c, "bloom_expected_items").map(_.toLong).getOrElse(1000000L)
-
-  private def bloomFpp(c: Map[String, Any]): Double =
-    Yaml.str(c, "bloom_fpp").map(_.toDouble).getOrElse(0.01)
+  }
 
   /** Catalog persistence for oneshot CLI sessions. The default
     * in-memory catalog dies with its process, so bucketed store tables
@@ -681,21 +701,6 @@ object JobRunner {
     if (sys.env.get("GRAFT_CATALOG").contains("hive"))
       builder.enableHiveSupport()
   }
-
-  /** Corpus documents for the incremental near-dup verify. A missing
-    * path is the day-1 bootstrap (empty corpus, typed off the batch so
-    * the join keys line up); any other failure propagates — same
-    * contract as the store readers.
-    */
-  private def readCorpusDocs(spark: SparkSession, path: String,
-      idCol: String, textCol: String, batch: DataFrame): DataFrame =
-    try spark.read.parquet(path).select(col(idCol), col(textCol))
-    catch {
-      case e: org.apache.spark.sql.AnalysisException
-          if e.getCondition == "PATH_NOT_FOUND" ||
-            Option(e.getMessage).exists(_.contains("Path does not exist")) =>
-        batch.select(col(idCol), col(textCol)).limit(0)
-    }
 
   /** Output base path `root/domain/data_product/table` (cli.py:695-723).
     * Local-path root comes from connection.path; S3 from connection.s3.bucket.
@@ -792,8 +797,10 @@ object JobRunner {
 
     // beyond-reference, opt-in: schema-preserving curation between
     // validation and sink (see applyCuration)
-    val curated = tracer.span("phase.curate") {
-      applyCuration(validated, job.raw)
+    val curation = Yaml.map(job.raw, "curation")
+    val (curated, dedupStore) = tracer.span("phase.curate") {
+      val store = curationStore(curation)
+      (curate(validated, curation, store), store)
     }
 
     // valid-record count rides the single write action
@@ -900,121 +907,60 @@ object JobRunner {
     // redundant dedup check next run, never duplicate data.
     tracer.span("phase.curation_store") {
       try {
-        val cur = Yaml.map(job.raw, "curation")
-        if (cur.nonEmpty && Yaml.bool(cur, "update_store")) {
-          def need(k: String): String = Yaml.str(cur, k).getOrElse(
-            throw new IllegalArgumentException(s"curation requires $k"))
-          val bucketed = curationStoreBucketed(cur)
-          Yaml.str(cur, "dedupe") match {
-            case Some("incremental") if bucketed =>
-              graft.operators.Dedup.saveBucketedFingerprints(
-                curated, need("text_field"), need("fingerprint_store"))
-            case Some("incremental")
-                if curationStoreFormat(cur) == "bloom" =>
-              // fingerprint append PLUS the sketch sidecar: merge the
-              // batch's sketch into the existing sidecar, or (no sidecar
-              // yet) build from the just-appended full store — merging
-              // the batch again is harmless, bloom insertion is
-              // idempotent for the same items
-              val store = need("fingerprint_store")
-              graft.operators.Dedup.appendFingerprints(
-                curated, need("text_field"), store)
-              val sparkS = curated.sparkSession
-              val expected = bloomExpectedItems(cur)
-              val fpp = bloomFpp(cur)
-              val batchSketch = graft.operators.Dedup.buildFingerprintBloom(
-                curated.select(graft.operators.Dedup.fingerprint(
-                  col(need("text_field"))).as("fp")), expected, fpp)
-              val merged = graft.operators.Dedup
-                .readBloomSidecar(sparkS, store) match {
-                case Some(s) =>
-                  graft.operators.Dedup.mergeFingerprintBloom(s, batchSketch)
-                case None => graft.operators.Dedup.buildFingerprintBloom(
-                  graft.operators.Dedup.readFingerprints(sparkS, store),
-                  expected, fpp)
-              }
-              graft.operators.Dedup.writeBloomSidecar(sparkS, store, merged)
-            case Some("incremental") =>
-              graft.operators.Dedup.appendFingerprints(
-                curated, need("text_field"), need("fingerprint_store"))
-            case Some("incremental_near") =>
-              // TWO appends: band keys for the LSH join AND the documents
-              // for the exact-Jaccard verify — without the corpus append,
-              // tomorrow's candidates verify against an empty corpus and
-              // near-dups silently pass (the verify semi-join prunes
-              // everything).
-              if (bucketed)
-                graft.operators.Dedup.saveBucketedBandKeys(
-                  curated, need("id_field"), need("text_field"),
-                  need("band_key_store"))
-              else
-                graft.operators.Dedup.appendBandKeys(
-                  curated, need("id_field"), need("text_field"),
-                  need("band_key_store"))
+        if (curation.nonEmpty && Yaml.bool(curation, "update_store")) {
+          val need = curationKey(curation)
+          dedupStore.foreach { s =>
+            s.keys.append(curated, need("id_field"), need("text_field"))
+            // bloom: the batch folds into the sketch sidecar too
+            s.bloom.foreach { case (expected, fpp) =>
+              graft.operators.Dedup.appendFingerprintBloom(curated,
+                need("text_field"), need("fingerprint_store"), expected, fpp)
+            }
+            // near: the documents too, for the exact-Jaccard verify —
+            // without them tomorrow's candidates verify against an empty
+            // corpus and near-dups silently pass
+            s.corpusPath.foreach { p =>
               curated.select(col(need("id_field")), col(need("text_field")))
-                .write.mode("append").parquet(need("corpus_path"))
-            case Some("incremental_simhash") if bucketed =>
-              graft.operators.Dedup.saveBucketedSimhashChunks(
-                curated, need("id_field"), need("text_field"),
-                need("simhash_store"))
-            case Some("incremental_simhash") =>
-              graft.operators.Dedup.appendSimhashes(
-                curated, need("id_field"), need("text_field"),
-                need("simhash_store"))
-            case Some("incremental_tfidf") =>
-              // vectors + postings append under the store's frozen fit
-              // (idf untouched; see Tfidf.appendToStore for the
-              // cap-drift/compaction contract)
-              graft.operators.Tfidf.appendToStore(
-                curated, need("id_field"), need("text_field"),
-                need("tfidf_store"),
-                maxTokenDf = Yaml.str(cur, "tfidf_max_token_df")
-                  .map(_.toDouble.toInt).getOrElse(50))
-            case _ => ()
+                .write.mode("append").parquet(p)
+            }
           }
+          if (Yaml.str(curation, "dedupe").contains("incremental_tfidf"))
+            // vectors + postings append under the store's frozen fit
+            // (idf untouched; see Tfidf.appendToStore for the
+            // cap-drift/compaction contract)
+            graft.operators.Tfidf.appendToStore(
+              curated, need("id_field"), need("text_field"),
+              need("tfidf_store"),
+              maxTokenDf = Yaml.str(curation, "tfidf_max_token_df")
+                .map(_.toDouble.toInt).getOrElse(50))
           // `curation.search_index: <path>` — the landed rows also
           // append one immutable segment to the BM25 postings index, so
           // tomorrow's retrieval/decontamination probes see them.
           // Orthogonal to the dedupe mode (and correct BECAUSE of it:
           // deduped batches keep segments disjoint, which the
           // segmented probe's df/stats merge assumes).
-          Yaml.str(cur, "search_index").foreach { path =>
+          Yaml.str(curation, "search_index").foreach { path =>
             graft.operators.Search.writeIndexSegment(
               curated, need("id_field"), need("text_field"), path,
-              buckets = Yaml.str(cur, "search_index_buckets")
+              buckets = Yaml.str(curation, "search_index_buckets")
                 .map(_.toInt).getOrElse(64))
           }
           // `curation.compact_store_every: N` — every Nth append-count
-          // compacts the flat path store's small files in the same
+          // compacts a path-layout store's small files in the same
           // maintenance window (post-commit, single-writer). The count
           // is the store's current file count, so "every 32" means
           // "compact once ~32 small files accumulate" without any extra
-          // state. Bucketed tables and the tfidf store are excluded
+          // state. Compaction keeps the `_meta_params` and `_bloom`
+          // sidecars. Bucketed tables and the tfidf store are excluded
           // (bucketed layouts are append-aligned; tfidf compacts by
           // re-running saveStore, see Tfidf.appendToStore).
-          Yaml.str(cur, "compact_store_every").map(_.toDouble.toInt)
+          Yaml.str(curation, "compact_store_every").map(_.toDouble.toInt)
             .filter(_ > 0).foreach { every =>
-              val flatStore = Yaml.str(cur, "dedupe") match {
-                case Some("incremental") if !bucketed &&
-                    curationStoreFormat(cur) != "bloom" =>
-                  Some(need("fingerprint_store"))
-                case Some("incremental_near") if !bucketed =>
-                  Some(need("band_key_store"))
-                case Some("incremental_simhash") if !bucketed =>
-                  Some(need("simhash_store"))
-                case _ => None
-              }
-              flatStore.foreach { sp =>
-                val root = new org.apache.hadoop.fs.Path(sp)
-                val fs = root.getFileSystem(
-                  curated.sparkSession.sessionState.newHadoopConf())
-                val nFiles =
-                  if (fs.exists(root))
-                    fs.listStatus(root).count(st => st.isFile &&
-                      !st.getPath.getName.startsWith("_") &&
-                      !st.getPath.getName.startsWith("."))
-                  else 0
-                if (nFiles >= every) {
+              dedupStore.map(_.keys.layout).collect {
+                case graft.core.StoreLayout.Path(sp) => sp
+              }.foreach { sp =>
+                if (graft.core.StoreCompaction.dataFileCount(
+                    curated.sparkSession, sp) >= every) {
                   val (b, a) = graft.core.StoreCompaction
                     .compactFlatStore(curated.sparkSession, sp)
                   log(s"compacted store $sp: $b -> $a files")
@@ -1025,7 +971,7 @@ object JobRunner {
               // SEGMENT count (one `_meta` row per append), so a
               // long-running indexer's probe cost stays flat instead
               // of growing a directory per micro-batch
-              Yaml.str(cur, "search_index").foreach { path =>
+              Yaml.str(curation, "search_index").foreach { path =>
                 // no swallow-to-zero: writeIndexSegment succeeded
                 // earlier in this run, so _meta is present by
                 // construction — a failed read here is CORRUPTION, and

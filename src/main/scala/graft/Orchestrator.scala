@@ -134,12 +134,7 @@ object Orchestrator {
           case e: graft.core.DataNotReadyException =>
             log(s"index build input not ready (retrying): ${e.getMessage}")
             (graft.core.ExitCodes.Failure, true)
-          case e: IllegalArgumentException =>
-            log(s"index build config error (not retried): ${e.getMessage}")
-            (graft.core.ExitCodes.Failure, false)
-          case e: org.apache.spark.sql.AnalysisException
-              if e.getCondition == "PATH_NOT_FOUND" ||
-                Option(e.getMessage).exists(_.contains("Path does not exist")) =>
+          case e @ (_: IllegalArgumentException | graft.core.PathNotFound(_)) =>
             log(s"index build config error (not retried): ${e.getMessage}")
             (graft.core.ExitCodes.Failure, false)
           case e: Exception =>

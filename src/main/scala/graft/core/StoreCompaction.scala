@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
 /** Small-file compaction for the FLAT append-only stores (fingerprint /
@@ -28,6 +28,24 @@ import org.apache.spark.sql.SparkSession
   */
 object StoreCompaction {
 
+  /** A flat store's data files: top-level files except underscore
+    * sidecars and dot files.
+    */
+  private def dataFiles(fs: FileSystem, dir: Path): Seq[FileStatus] =
+    fs.listStatus(dir).toSeq.filter { st =>
+      st.isFile && !st.getPath.getName.startsWith("_") &&
+        !st.getPath.getName.startsWith(".")
+    }
+
+  /** How many data files `storePath` holds (0 if it does not exist yet)
+    * — the small-file count a compaction cadence compares against.
+    */
+  private[graft] def dataFileCount(spark: SparkSession, storePath: String): Int = {
+    val root = new Path(storePath)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    if (fs.exists(root)) dataFiles(fs, root).size else 0
+  }
+
   /** Rewrite `storePath`'s parquet data files into
     * ~`targetFileBytes`-sized files. Returns (filesBefore, filesAfter).
     */
@@ -36,11 +54,7 @@ object StoreCompaction {
     val root = new Path(storePath)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     require(fs.exists(root), s"no store at $storePath")
-    def dataFiles = fs.listStatus(root).toSeq.filter { st =>
-      st.isFile && !st.getPath.getName.startsWith("_") &&
-        !st.getPath.getName.startsWith(".")
-    }
-    val before = dataFiles
+    val before = dataFiles(fs, root)
     if (before.isEmpty) return (0, 0)
     val totalBytes = before.map(_.getLen).sum
     val n = math.max(1L, (totalBytes + targetFileBytes - 1) / targetFileBytes).toInt
@@ -60,10 +74,7 @@ object StoreCompaction {
     // semantics, recovered by the next compaction — instead of a
     // window where the store has NO data files (all data stranded in
     // the tmp dir and the next read failing on schema inference).
-    val moved = fs.listStatus(tmp).toSeq.filter { st =>
-      st.isFile && !st.getPath.getName.startsWith("_") &&
-        !st.getPath.getName.startsWith(".")
-    }
+    val moved = dataFiles(fs, tmp)
     moved.foreach(st =>
       fs.rename(st.getPath, new Path(root, st.getPath.getName)))
     before.foreach(st => fs.delete(st.getPath, false))

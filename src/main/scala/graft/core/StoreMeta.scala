@@ -33,6 +33,11 @@ import org.apache.spark.sql.SparkSession
   * first-run bootstrap must keep working) and the next append writes
   * the sidecar. Once present, any mismatch refuses loudly; silence is
   * the one behavior this class exists to kill.
+  *
+  * The incremental key stores (fingerprint, band-key, simhash,
+  * simhash-chunk, embedding-bucket) reach these gates only through
+  * [[KeyStore]], which picks the path or table form by layout; the
+  * TF-IDF, LM, quality-model and ANN index stores call them directly.
   */
 object StoreMeta {
 
@@ -63,7 +68,10 @@ object StoreMeta {
     }
   }
 
-  private def write(spark: SparkSession, storePath: String, family: String,
+  /** Overwrite-side: a full (re)save replaces the store, so its params
+    * sidecar is replaced unconditionally too.
+    */
+  def overwrite(spark: SparkSession, storePath: String, family: String,
       params: Map[String, Any]): Unit = {
     val mp = metaPath(storePath)
     val f = fs(spark, mp)
@@ -77,13 +85,6 @@ object StoreMeta {
     finally out.close()
   }
 
-  /** Overwrite-side: a full (re)save replaces the store, so its params
-    * sidecar is replaced unconditionally too.
-    */
-  def overwrite(spark: SparkSession, storePath: String, family: String,
-      params: Map[String, Any]): Unit =
-    write(spark, storePath, family, params)
-
   /** Append-side gate: first writer records (family + params); every
     * later writer must present the SAME params or the append refuses —
     * mixed-parameter rows in one store are unusable by construction.
@@ -93,7 +94,7 @@ object StoreMeta {
     val want = normalize(family, params)
     read(spark, storePath) match {
       case Some(have) => requireSame(storePath, have, want)
-      case None       => write(spark, storePath, family, params)
+      case None       => overwrite(spark, storePath, family, params)
     }
   }
 

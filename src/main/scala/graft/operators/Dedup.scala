@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.CacheScope
+import graft.core.{CacheScope, KeyStore, StoreFamily, StoreLayout}
 
 /** Deduplication operators for large-scale training-data pipelines:
   * exact (fingerprint groupBy), MinHash+LSH (banded), SimHash (chunked),
@@ -87,11 +87,6 @@ object Dedup {
       "left_anti")
   }
 
-  /** Append a batch's fingerprints to a parquet store — the maintenance
-    * half of [[dropDuplicatesIncremental]]: run it on the rows that
-    * actually landed, and tomorrow's batch dedups against them without
-    * ever rereading today's text.
-    */
   /** The fingerprint normalization convention id, recorded in every
     * fingerprint store's params sidecar: a store written under a
     * DIFFERENT normalization (e.g. case-preserving) would join cleanly
@@ -100,15 +95,20 @@ object Dedup {
     */
   val FingerprintNorm = "lower:ws-collapse:trim:md5"
 
-  private def fingerprintMeta: Map[String, Any] = Map("norm" -> FingerprintNorm)
+  /** (fp) rows of [[fingerprint]] — the incremental exact-dedup store. */
+  private[graft] def fingerprintFamily: StoreFamily =
+    StoreFamily("fingerprint", Map("norm" -> FingerprintNorm), "fp STRING",
+      "fp", (df, _, text) => df.select(fingerprint(col(text)).as("fp")))
 
+  /** Append a batch's fingerprints to a parquet store — the maintenance
+    * half of [[dropDuplicatesIncremental]]: run it on the rows that
+    * actually landed, and tomorrow's batch dedups against them without
+    * ever rereading today's text.
+    */
   def appendFingerprints(df: DataFrame, textCol: String,
-      storePath: String): Unit = {
-    graft.core.StoreMeta.writeOrRequire(df.sparkSession, storePath,
-      "fingerprint", fingerprintMeta)
-    df.select(fingerprint(col(textCol)).as("fp"))
-      .write.mode("append").parquet(storePath)
-  }
+      storePath: String): Unit =
+    KeyStore(fingerprintFamily, StoreLayout.Path(storePath))
+      .append(df, idCol = "", srcCol = textCol)
 
   /** Read a fingerprint store; a MISSING store is an empty set (first run
     * bootstraps). Only path-not-found is treated as bootstrap — a
@@ -118,82 +118,16 @@ object Dedup {
     */
   def readFingerprints(spark: org.apache.spark.sql.SparkSession,
       storePath: String): DataFrame =
-    try {
-      graft.core.StoreMeta.requireIfPresent(spark, storePath,
-        "fingerprint", fingerprintMeta)
-      spark.read.parquet(storePath)
-    } catch {
-      case e: org.apache.spark.sql.AnalysisException
-          if e.getCondition == "PATH_NOT_FOUND" ||
-            Option(e.getMessage).exists(_.contains("Path does not exist")) =>
-        emptyFingerprints(spark)
-    }
-
-  private def emptyFingerprints(
-      spark: org.apache.spark.sql.SparkSession): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("fp",
-          org.apache.spark.sql.types.StringType))))
+    KeyStore(fingerprintFamily, StoreLayout.Path(storePath)).read(spark)
 
   /** Read a BUCKETED fingerprint table ([[saveBucketedFingerprints]]);
     * a missing table is an empty set — the same first-run bootstrap
-    * contract as [[readFingerprints]] (and like there, only absence is
-    * bootstrap: a present-but-unreadable table fails the job).
+    * contract as [[readFingerprints]], guarded against a stale
+    * warehouse directory left by another process (see [[KeyStore]]).
     */
   def readBucketedFingerprints(spark: org.apache.spark.sql.SparkSession,
-      table: String): DataFrame = {
-    graft.core.StoreMeta.requireIfPresentTable(spark, table,
-      "fingerprint", fingerprintMeta)
-    readBucketedFingerprints0(spark, table)
-  }
-
-  private def readBucketedFingerprints0(
-      spark: org.apache.spark.sql.SparkSession, table: String): DataFrame =
-    if (spark.catalog.tableExists(table)) spark.table(table)
-    else { bucketedBootstrapGuard(spark, table); emptyFingerprints(spark) }
-
-  /** Guard the "missing table = first run" bootstrap against the one
-    * situation where it silently commits duplicates: the table is not in
-    * THIS session's catalog but its warehouse directory exists on disk —
-    * i.e. a previous PROCESS wrote it and this session runs on the
-    * default in-memory catalog, which dies with its session. Bootstrapping
-    * here would dedup against nothing and re-commit the corpus, so fail
-    * loudly instead (the same philosophy as [[readFingerprints]]'
-    * absence-only bootstrap). Oneshot CLI cycles need a persistent
-    * metastore (`GRAFT_CATALOG=hive`) or a long-lived session
-    * (Orchestrator / BatchRunner).
-    */
-  private def bucketedBootstrapGuard(
-      spark: org.apache.spark.sql.SparkSession, table: String): Unit = {
-    // Hadoop FS, not java.nio: the warehouse can be s3a:// (no NIO
-    // provider) or a local path with characters a java.net.URI rejects —
-    // either would turn the day-1 bootstrap into a crash.
-    // defaultTablePath resolves the table's DATABASE first; a
-    // db-qualified store table whose database doesn't exist yet is a
-    // genuine first run (no database → no warehouse dir to collide
-    // with), so that lookup failure falls through to the documented
-    // empty-store bootstrap instead of crashing it.
-    val tablePath =
-      try spark.sessionState.catalog.defaultTablePath(
-        spark.sessionState.sqlParser.parseTableIdentifier(table))
-      catch {
-        case _: org.apache.spark.sql.catalyst.analysis.NoSuchDatabaseException =>
-          return
-      }
-    val loc = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = loc.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(loc))
-      throw new IllegalStateException(
-        s"Bucketed store table '$table' is not in this session's catalog " +
-          s"but its warehouse location '$loc' exists on disk. A previous " +
-          "process likely wrote it and this session's in-memory catalog " +
-          "cannot see it; bootstrapping would silently disable incremental " +
-          "dedup and commit duplicates. Run with a persistent metastore " +
-          "(GRAFT_CATALOG=hive on the CLI), reuse a long-lived session, " +
-          "or remove the stale location.")
-  }
+      table: String): DataFrame =
+    KeyStore(fingerprintFamily, StoreLayout.Table(table)).read(spark)
 
   /** BUCKETED fingerprint store — the 100 TB shape of the incremental
     * store. The per-batch check is a left-ANTI join whose corpus side
@@ -209,15 +143,9 @@ object Dedup {
     * exchange elimination is automatic (BucketedStoreSpec pins it).
     */
   def saveBucketedFingerprints(df: DataFrame, textCol: String,
-      table: String, buckets: Int = 256): Unit = {
-    graft.core.StoreMeta.requireIfPresentTable(df.sparkSession, table,
-      "fingerprint", fingerprintMeta)
-    df.select(fingerprint(col(textCol)).as("fp"))
-      .write.mode("append").format("parquet")
-      .bucketBy(buckets, "fp").sortBy("fp").saveAsTable(table)
-    graft.core.StoreMeta.writeOrRequireTable(df.sparkSession, table,
-      "fingerprint", fingerprintMeta)
-  }
+      table: String, buckets: Int = 256): Unit =
+    KeyStore(fingerprintFamily, StoreLayout.Table(table, buckets))
+      .append(df, idCol = "", srcCol = textCol)
 
   /** Bucketed (id, band-key) store for [[dropNearDuplicatesIncremental]]
     * — same reasoning as [[saveBucketedFingerprints]]: the LSH join
@@ -226,15 +154,9 @@ object Dedup {
     */
   def saveBucketedBandKeys(df: DataFrame, idCol: String, textCol: String,
       table: String, buckets: Int = 256, shingleN: Int = 3,
-      bands: Int = 16, rowsPerBand: Int = 4): Unit = {
-    graft.core.StoreMeta.requireIfPresentTable(df.sparkSession, table,
-      "minhash_band_keys", bandKeyMeta(shingleN, bands, rowsPerBand))
-    minhashBandKeys(df, idCol, textCol, shingleN, bands, rowsPerBand)
-      .write.mode("append").format("parquet")
-      .bucketBy(buckets, "bk").sortBy("bk").saveAsTable(table)
-    graft.core.StoreMeta.writeOrRequireTable(df.sparkSession, table,
-      "minhash_band_keys", bandKeyMeta(shingleN, bands, rowsPerBand))
-  }
+      bands: Int = 16, rowsPerBand: Int = 4): Unit =
+    KeyStore(bandKeyFamily(shingleN, bands, rowsPerBand),
+      StoreLayout.Table(table, buckets)).append(df, idCol, textCol)
 
   // ----------------------------------------------------------- Bloom sketch
 
@@ -332,6 +254,25 @@ object Dedup {
     try out.write(sketch) finally out.close()
   }
 
+  /** Fold a landed batch into the store's sketch sidecar (run after its
+    * fingerprints were appended): merge the batch's sketch into the
+    * existing sidecar, or — no sidecar yet — build one from the full
+    * store, which already holds the batch (bloom insertion is
+    * idempotent, so that is harmless).
+    */
+  private[graft] def appendFingerprintBloom(batch: DataFrame, textCol: String,
+      storePath: String, expectedItems: Long, fpp: Double): Unit = {
+    val spark = batch.sparkSession
+    val batchSketch = buildFingerprintBloom(
+      batch.select(fingerprint(col(textCol)).as("fp")), expectedItems, fpp)
+    val merged = readBloomSidecar(spark, storePath) match {
+      case Some(s) => mergeFingerprintBloom(s, batchSketch)
+      case None => buildFingerprintBloom(
+        readFingerprints(spark, storePath), expectedItems, fpp)
+    }
+    writeBloomSidecar(spark, storePath, merged)
+  }
+
   /** Bloom-prefiltered incremental exact dedup — result is EXACTLY
     * [[dropDuplicatesIncremental]] (the sketch is only a prefilter;
     * false positives are removed by an exact check), but the corpus
@@ -417,26 +358,6 @@ object Dedup {
     }
   }
 
-  /** MinHash-LSH near-duplicate pairs with exact-Jaccard verification.
-    *
-    * Stages: shingle → minhash(k = bands×rowsPerBand) → explode band keys
-    * (shuffle on the 8-byte band hash) → bucket-local self-join for
-    * candidates → distinct pairs → exact Jaccard verify → threshold.
-    * Never an all-pairs comparison; the physical plan contains no
-    * CartesianProduct. Candidate recall at similarity j is
-    * 1 − (1 − j^rowsPerBand)^bands — the 16×4 default gives
-    * 1 − 3.8e-8 at j = 0.9 (and the exact-Jaccard verify keeps
-    * precision at 1.0 regardless). The generated aggregate has k min
-    * columns; k beyond ~128 mostly buys janino compile time.
-    *
-    * Caching: intermediate frames are persisted through
-    * [[graft.core.CacheScope]] because they feed multiple downstream
-    * joins. Wrap build + terminal action in `CacheScope.scoped { ... }`
-    * (JobRunner does this per job) and every intermediate is released
-    * when the block exits; bare callers can `CacheScope.releaseAll()`.
-    *
-    * Returns (id_a, id_b, jaccard) with id_a < id_b.
-    */
   /** (id, sh) shingle table — the shared first stage of every minhash
     * pipeline.
     */
@@ -469,6 +390,26 @@ object Dedup {
     bandKeysFromShingles(shingleTable(df, idCol, textCol, shingleN),
       bands, rowsPerBand)
 
+  /** MinHash-LSH near-duplicate pairs with exact-Jaccard verification.
+    *
+    * Stages: shingle → minhash(k = bands×rowsPerBand) → explode band keys
+    * (shuffle on the 8-byte band hash) → bucket-local self-join for
+    * candidates → distinct pairs → exact Jaccard verify → threshold.
+    * Never an all-pairs comparison; the physical plan contains no
+    * CartesianProduct. Candidate recall at similarity j is
+    * 1 − (1 − j^rowsPerBand)^bands — the 16×4 default gives
+    * 1 − 3.8e-8 at j = 0.9 (and the exact-Jaccard verify keeps
+    * precision at 1.0 regardless). The generated aggregate has k min
+    * columns; k beyond ~128 mostly buys janino compile time.
+    *
+    * Caching: intermediate frames are persisted through
+    * [[graft.core.CacheScope]] because they feed multiple downstream
+    * joins. Wrap build + terminal action in `CacheScope.scoped { ... }`
+    * (JobRunner does this per job) and every intermediate is released
+    * when the block exits; bare callers can `CacheScope.releaseAll()`.
+    *
+    * Returns (id_a, id_b, jaccard) with id_a < id_b.
+    */
   def minhashNearDupPairs(
       df: DataFrame,
       idCol: String,
@@ -827,7 +768,8 @@ object Dedup {
 
   /** pairs → connected components → anti-join the non-survivors (everyone
     * but the min-id member of each transitive cluster) out of `df`.
-    * Shared tail of every near-dup REMOVAL flavor (minhash, simhash).
+    * Shared tail of every near-dup REMOVAL flavor (minhash, simhash,
+    * embedding).
     */
   private[operators] def dropClusterLosers(df: DataFrame, idCol: String,
       pairs: DataFrame, losersBroadcastMax: Long): DataFrame = {
@@ -1011,22 +953,35 @@ object Dedup {
     survivors.join(pinIfSmall(hits, nBatch), Seq(idCol), "left_anti")
   }
 
+  private def simhashMeta(bits: Int, hasher: SimhashHasher): Map[String, Any] =
+    Map("bits" -> bits, "hasher" -> hasher.toString)
+
+  /** (id, sh) rows of [[simhashTable]] — the incremental simhash store. */
+  private[graft] def simhashFamily(bits: Int = 64,
+      hasher: SimhashHasher = SimhashHasher.Xx): StoreFamily =
+    StoreFamily("simhash", simhashMeta(bits, hasher), "id BIGINT, sh BIGINT",
+      "sh", (df, id, text) => simhashTable(df, id, text, bits, hasher))
+
+  /** PRE-EXPLODED (sh, chunk-key) rows — the bucketed simhash store,
+    * bucketed on the chunk key (see [[saveBucketedSimhashChunks]]).
+    */
+  private[graft] def simhashChunkFamily(bits: Int = 64,
+      hasher: SimhashHasher = SimhashHasher.Xx): StoreFamily =
+    StoreFamily("simhash_chunks", simhashMeta(bits, hasher),
+      "sh BIGINT, ck STRING", "ck", (df, id, text) =>
+        simhashTable(df, id, text, bits, hasher)
+          .select(col("sh"), explode(simhashChunkKeys(col("sh"), bits)).as("ck")))
+
   /** Append a batch's simhashes to a parquet store — the maintenance half
     * of [[dropSimhashDuplicatesIncremental]]: run on the rows that
     * landed; tomorrow's batch Hamming-checks against them without
     * re-reading today's text.
     */
-  private def simhashMeta(bits: Int, hasher: SimhashHasher): Map[String, Any] =
-    Map("bits" -> bits, "hasher" -> hasher.toString)
-
   def appendSimhashes(df: DataFrame, idCol: String, textCol: String,
       storePath: String, bits: Int = 64,
-      hasher: SimhashHasher = SimhashHasher.Xx): Unit = {
-    graft.core.StoreMeta.writeOrRequire(df.sparkSession, storePath,
-      "simhash", simhashMeta(bits, hasher))
-    simhashTable(df, idCol, textCol, bits, hasher)
-      .write.mode("append").parquet(storePath)
-  }
+      hasher: SimhashHasher = SimhashHasher.Xx): Unit =
+    KeyStore(simhashFamily(bits, hasher), StoreLayout.Path(storePath))
+      .append(df, idCol, textCol)
 
   /** BUCKETED simhash-chunk store — the 100 TB shape of the simhash
     * store (same reasoning as [[saveBucketedFingerprints]]): rows are
@@ -1039,16 +994,9 @@ object Dedup {
     */
   def saveBucketedSimhashChunks(df: DataFrame, idCol: String,
       textCol: String, table: String, buckets: Int = 256, bits: Int = 64,
-      hasher: SimhashHasher = SimhashHasher.Xx): Unit = {
-    graft.core.StoreMeta.requireIfPresentTable(df.sparkSession, table,
-      "simhash_chunks", simhashMeta(bits, hasher))
-    simhashTable(df, idCol, textCol, bits, hasher)
-      .select(col("sh"), explode(simhashChunkKeys(col("sh"), bits)).as("ck"))
-      .write.mode("append").format("parquet")
-      .bucketBy(buckets, "ck").sortBy("ck").saveAsTable(table)
-    graft.core.StoreMeta.writeOrRequireTable(df.sparkSession, table,
-      "simhash_chunks", simhashMeta(bits, hasher))
-  }
+      hasher: SimhashHasher = SimhashHasher.Xx): Unit =
+    KeyStore(simhashChunkFamily(bits, hasher),
+      StoreLayout.Table(table, buckets)).append(df, idCol, textCol)
 
   /** Read a bucketed simhash-chunk table; missing table = empty set,
     * same bootstrap contract as [[readSimhashes]]; present table
@@ -1057,20 +1005,8 @@ object Dedup {
   def readBucketedSimhashChunks(spark: org.apache.spark.sql.SparkSession,
       table: String, bits: Int = 64,
       hasher: SimhashHasher = SimhashHasher.Xx): DataFrame =
-    if (spark.catalog.tableExists(table)) {
-      graft.core.StoreMeta.requireIfPresentTable(spark, table,
-        "simhash_chunks", simhashMeta(bits, hasher))
-      spark.table(table)
-    } else {
-      bucketedBootstrapGuard(spark, table)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("sh",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("ck",
-            org.apache.spark.sql.types.StringType))))
-    }
+    KeyStore(simhashChunkFamily(bits, hasher), StoreLayout.Table(table))
+      .read(spark)
 
   /** Read a simhash store; a MISSING store is an empty set (first run
     * bootstraps) — any other failure propagates, same contract as
@@ -1079,22 +1015,8 @@ object Dedup {
   def readSimhashes(spark: org.apache.spark.sql.SparkSession,
       storePath: String, bits: Int = 64,
       hasher: SimhashHasher = SimhashHasher.Xx): DataFrame =
-    try {
-      graft.core.StoreMeta.requireIfPresent(spark, storePath,
-        "simhash", simhashMeta(bits, hasher))
-      spark.read.parquet(storePath)
-    } catch {
-      case e: org.apache.spark.sql.AnalysisException
-          if e.getCondition == "PATH_NOT_FOUND" ||
-            Option(e.getMessage).exists(_.contains("Path does not exist")) =>
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("id",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("sh",
-              org.apache.spark.sql.types.LongType))))
-    }
+    KeyStore(simhashFamily(bits, hasher), StoreLayout.Path(storePath))
+      .read(spark)
 
   /** Incremental NEAR-dup dedup — the operator a daily 100 TB ingest
     * actually runs: dedup a new batch against an existing corpus without
@@ -1167,23 +1089,26 @@ object Dedup {
     survivors.join(pinIfSmall(losers, nCands), Seq(idCol), "left_anti")
   }
 
+  /** (id, bk) rows of [[minhashBandKeys]] — the incremental near-dup
+    * store, bucketed on `bk` in the table layout.
+    */
+  private[graft] def bandKeyFamily(shingleN: Int = 3, bands: Int = 16,
+      rowsPerBand: Int = 4): StoreFamily =
+    StoreFamily("minhash_band_keys", Map("shingleN" -> shingleN,
+      "bands" -> bands, "rowsPerBand" -> rowsPerBand), "id BIGINT, bk BIGINT",
+      "bk", (df, id, text) =>
+        minhashBandKeys(df, id, text, shingleN, bands, rowsPerBand))
+
   /** Append a batch's band keys to a parquet store — the maintenance half
     * of [[dropNearDuplicatesIncremental]]: run it on the rows that
     * landed, and tomorrow's batch LSH-joins against them without
     * re-shingling today's documents.
     */
-  private def bandKeyMeta(shingleN: Int, bands: Int,
-      rowsPerBand: Int): Map[String, Any] =
-    Map("shingleN" -> shingleN, "bands" -> bands, "rowsPerBand" -> rowsPerBand)
-
   def appendBandKeys(df: DataFrame, idCol: String, textCol: String,
       storePath: String, shingleN: Int = 3, bands: Int = 16,
-      rowsPerBand: Int = 4): Unit = {
-    graft.core.StoreMeta.writeOrRequire(df.sparkSession, storePath,
-      "minhash_band_keys", bandKeyMeta(shingleN, bands, rowsPerBand))
-    minhashBandKeys(df, idCol, textCol, shingleN, bands, rowsPerBand)
-      .write.mode("append").parquet(storePath)
-  }
+      rowsPerBand: Int = 4): Unit =
+    KeyStore(bandKeyFamily(shingleN, bands, rowsPerBand),
+      StoreLayout.Path(storePath)).append(df, idCol, textCol)
 
   /** Read a band-key store; a MISSING store is an empty set (first run
     * bootstraps) — any other failure propagates, same contract as
@@ -1195,26 +1120,8 @@ object Dedup {
   def readBandKeys(spark: org.apache.spark.sql.SparkSession,
       storePath: String, shingleN: Int = 3, bands: Int = 16,
       rowsPerBand: Int = 4): DataFrame =
-    try {
-      graft.core.StoreMeta.requireIfPresent(spark, storePath,
-        "minhash_band_keys", bandKeyMeta(shingleN, bands, rowsPerBand))
-      spark.read.parquet(storePath)
-    } catch {
-      case e: org.apache.spark.sql.AnalysisException
-          if e.getCondition == "PATH_NOT_FOUND" ||
-            Option(e.getMessage).exists(_.contains("Path does not exist")) =>
-        emptyBandKeys(spark)
-    }
-
-  private def emptyBandKeys(
-      spark: org.apache.spark.sql.SparkSession): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("bk",
-          org.apache.spark.sql.types.LongType))))
+    KeyStore(bandKeyFamily(shingleN, bands, rowsPerBand),
+      StoreLayout.Path(storePath)).read(spark)
 
   /** Read a BUCKETED band-key table ([[saveBucketedBandKeys]]); missing
     * table = empty set, same bootstrap contract as [[readBandKeys]]
@@ -1224,11 +1131,21 @@ object Dedup {
   def readBucketedBandKeys(spark: org.apache.spark.sql.SparkSession,
       table: String, shingleN: Int = 3, bands: Int = 16,
       rowsPerBand: Int = 4): DataFrame =
-    if (spark.catalog.tableExists(table)) {
-      graft.core.StoreMeta.requireIfPresentTable(spark, table,
-        "minhash_band_keys", bandKeyMeta(shingleN, bands, rowsPerBand))
-      spark.table(table)
-    } else { bucketedBootstrapGuard(spark, table); emptyBandKeys(spark) }
+    KeyStore(bandKeyFamily(shingleN, bands, rowsPerBand),
+      StoreLayout.Table(table)).read(spark)
+
+  /** Corpus documents for the incremental near-dup verify. A missing
+    * path is the day-1 bootstrap (empty corpus, typed off the batch so
+    * the join keys line up); any other failure propagates — same
+    * contract as the store readers.
+    */
+  private[graft] def readCorpusDocs(path: String, idCol: String,
+      textCol: String, batch: DataFrame): DataFrame =
+    try batch.sparkSession.read.parquet(path).select(col(idCol), col(textCol))
+    catch {
+      case graft.core.PathNotFound(_) =>
+        batch.select(col(idCol), col(textCol)).limit(0)
+    }
 
   /** Exact substring-SPAN dedup — repeated-passage detection at the
     * granularity pre-training curation actually wants (Lee et al. 2022,

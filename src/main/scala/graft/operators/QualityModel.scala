@@ -187,10 +187,7 @@ object QualityModel {
     val metaRows =
       try spark.read.parquet(s"$storePath/_meta").collect()
       catch {
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getCondition == "PATH_NOT_FOUND" ||
-              Option(e.getMessage)
-                .exists(_.contains("Path does not exist")) =>
+        case graft.core.PathNotFound(_) =>
           throw new IllegalArgumentException(
             s"quality model store missing at $storePath — a missing " +
               "store is an error, not a bootstrap: scoring against an " +

@@ -907,14 +907,6 @@ object Similarity {
     codecTopK(corpus, queries, idCol, vecCol, k, Codec.Flat, Some(centroids),
       nprobe)
 
-  /** The persisted-assignment IVF index — the production shape past a
-    * few hundred lists, where [[ivfTopK]]'s literal-centroid expressions
-    * stop scaling: list assignment runs ONCE at index-build time
-    * (map-side, zero shuffles) and lands in a parquet store PARTITIONED
-    * BY list, with the vector norm precomputed. Probing then reads only
-    * the lists some query actually probes — partition pruning makes the
-    * scan cost O(probed lists), not O(corpus).
-    */
   /** Deterministic fingerprint of a centroid set / codebook (MD5 over
     * the doubles' bit patterns) — recorded in the index sidecar so a
     * probe with DIFFERENT centroids than the assignments were built
@@ -932,9 +924,15 @@ object Similarity {
     md.digest().map("%02x".format(_)).mkString
   }
 
-  /** Persist the IVF assignments partitioned by coarse list: (id, v, cn)
-    * rows with the norm precomputed — the raw-vector store, also the
-    * refine half of every persisted two-stage pair.
+  /** The persisted-assignment IVF index — the production shape past a
+    * few hundred lists, where [[ivfTopK]]'s literal-centroid expressions
+    * stop scaling: list assignment runs ONCE at index-build time
+    * (map-side, zero shuffles) and lands in a parquet store PARTITIONED
+    * BY list, with the vector norm precomputed. Probing then reads only
+    * the lists some query actually probes — partition pruning makes the
+    * scan cost O(probed lists), not O(corpus).
+    * The (id, v, cn) rows written here are the raw-vector store, also
+    * the refine half of every persisted two-stage pair.
     */
   def writeIvfAssignments(df: DataFrame, idCol: String, vecCol: String,
       centroids: Seq[Array[Double]], storePath: String): Unit =
@@ -1547,20 +1545,24 @@ object Similarity {
     bucketTable(df.select(col(idCol).as("id"), col(vecCol).as("v")),
       planes, tables, dim)
 
+  /** (id, bk) rows of [[embeddingBucketKeys]] — the incremental
+    * embedding-dedup store, bucketed on `bk` in the table layout.
+    */
+  private[graft] def embeddingBucketFamily(planes: Int = 8, tables: Int = 8,
+      dim: Int = 64): graft.core.StoreFamily =
+    graft.core.StoreFamily("embedding_buckets",
+      Map("planes" -> planes, "tables" -> tables, "dim" -> dim),
+      "id BIGINT, bk STRING", "bk", (df, id, vec) =>
+        embeddingBucketKeys(df, id, vec, planes, tables, dim))
+
   /** Append a batch's bucket keys to a parquet store — the maintenance
     * half of [[dropNearCorpusEmbeddings]].
     */
-  private def bucketMeta(planes: Int, tables: Int, dim: Int): Map[String, Any] =
-    Map("planes" -> planes, "tables" -> tables, "dim" -> dim)
-
   def appendEmbeddingBuckets(df: DataFrame, idCol: String, vecCol: String,
       storePath: String, planes: Int = 8, tables: Int = 8,
-      dim: Int = 64): Unit = {
-    graft.core.StoreMeta.writeOrRequire(df.sparkSession, storePath,
-      "embedding_buckets", bucketMeta(planes, tables, dim))
-    embeddingBucketKeys(df, idCol, vecCol, planes, tables, dim)
-      .write.mode("append").parquet(storePath)
-  }
+      dim: Int = 64): Unit =
+    graft.core.KeyStore(embeddingBucketFamily(planes, tables, dim),
+      graft.core.StoreLayout.Path(storePath)).append(df, idCol, vecCol)
 
   /** Read an embedding-bucket store for [[dropNearCorpusEmbeddings]];
     * missing store = empty set (first-run bootstrap), same contract as
@@ -1572,22 +1574,8 @@ object Similarity {
   def readEmbeddingBuckets(spark: org.apache.spark.sql.SparkSession,
       storePath: String, planes: Int = 8, tables: Int = 8,
       dim: Int = 64): DataFrame =
-    try {
-      graft.core.StoreMeta.requireIfPresent(spark, storePath,
-        "embedding_buckets", bucketMeta(planes, tables, dim))
-      spark.read.parquet(storePath)
-    } catch {
-      case e: org.apache.spark.sql.AnalysisException
-          if e.getCondition == "PATH_NOT_FOUND" ||
-            Option(e.getMessage).exists(_.contains("Path does not exist")) =>
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("id",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("bk",
-              org.apache.spark.sql.types.StringType))))
-    }
+    graft.core.KeyStore(embeddingBucketFamily(planes, tables, dim),
+      graft.core.StoreLayout.Path(storePath)).read(spark)
 
   /** BUCKETED bucket-key store — the 100 TB shape (see
     * [[graft.operators.Dedup.saveBucketedFingerprints]]): the store join
@@ -1596,15 +1584,9 @@ object Similarity {
     */
   def saveBucketedEmbeddingBuckets(df: DataFrame, idCol: String,
       vecCol: String, table: String, buckets: Int = 256, planes: Int = 8,
-      tables: Int = 8, dim: Int = 64): Unit = {
-    graft.core.StoreMeta.requireIfPresentTable(df.sparkSession, table,
-      "embedding_buckets", bucketMeta(planes, tables, dim))
-    embeddingBucketKeys(df, idCol, vecCol, planes, tables, dim)
-      .write.mode("append").format("parquet")
-      .bucketBy(buckets, "bk").sortBy("bk").saveAsTable(table)
-    graft.core.StoreMeta.writeOrRequireTable(df.sparkSession, table,
-      "embedding_buckets", bucketMeta(planes, tables, dim))
-  }
+      tables: Int = 8, dim: Int = 64): Unit =
+    graft.core.KeyStore(embeddingBucketFamily(planes, tables, dim),
+      graft.core.StoreLayout.Table(table, buckets)).append(df, idCol, vecCol)
 
   /** Incremental EMBEDDING near-dup dedup — the semantic twin of
     * [[graft.operators.Dedup.dropNearDuplicatesIncremental]]: dedup a
@@ -1664,16 +1646,8 @@ object Similarity {
         CacheScope.persist(Dedup.capHotKeys(rawBuckets, "bk", maxBucketDf))
       else rawBuckets
     val pairs = nearDupPairsFromBuckets(base, allBuckets, threshold, dim)
-    val comps = Dedup.connectedComponents(pairs)
-    val losers = CacheScope.persist(comps.filter(col("id") =!= col("component"))
-      .select(col("id").as(idCol)))
-      // guard-counted for the size guard, then anti-joined
-    val pinnedLosers =
-      if (Dedup.guardCount(losers)
-          <= Dedup.broadcastMaxPairs) broadcast(losers)
-      else losers
     val survivors = CacheScope.persist(
-      batch.join(pinnedLosers, Seq(idCol), "left_anti"))
+      Dedup.dropClusterLosers(batch, idCol, pairs, Dedup.broadcastMaxPairs))
     val bBuckets =
       if (probes <= 1)
         allBuckets

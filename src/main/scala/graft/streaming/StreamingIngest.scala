@@ -132,6 +132,36 @@ object StreamingIngest {
       .drop("__fp")
   }
 
+  /** Run `body` exactly once per (markerRoot, batchId) — the per-batch
+    * marker protocol every foreachBatch twin shares. A marker under
+    * `markerRoot/_markers` means the batch fully committed: skip the
+    * replay. Absent → run `body`, write the marker, then prune markers
+    * from earlier batches (a restart only ever replays the LATEST
+    * checkpoint-uncommitted batch, so once batch N runs, markers < N can
+    * never be consulted again — without pruning a long-running ingester
+    * accumulates one file per micro-batch forever; pruning is idempotent
+    * on replay). Underscore-prefixed paths are invisible to parquet
+    * readers (like _SUCCESS) and go through the Hadoop FS API so
+    * object-store roots work.
+    */
+  private def runBatchOnce(spark: SparkSession, markerRoot: String,
+      batchId: Long)(body: => Unit): Unit = {
+    val markerDir = new org.apache.hadoop.fs.Path(s"$markerRoot/_markers")
+    val marker = new org.apache.hadoop.fs.Path(markerDir, s"batch_$batchId")
+    val fs = marker.getFileSystem(spark.sessionState.newHadoopConf())
+    if (!fs.exists(marker)) {
+      body
+      fs.mkdirs(markerDir)
+      fs.create(marker, false).close()
+      val stale = fs.listStatus(markerDir).filter { st =>
+        st.getPath.getName.stripPrefix("batch_").toLongOption
+          .exists(_ < batchId)
+      }
+      stale.foreach(st => fs.delete(st.getPath, false))
+      ()
+    }
+  }
+
   /** Streaming NEAR-dup dedup — the streaming twin of
     * [[graft.operators.Dedup.dropNearDuplicatesIncremental]], closing
     * the last batch-only gap in the incremental-dedup family (exact
@@ -171,36 +201,6 @@ object StreamingIngest {
     * store-side Exchange in the non-broadcast regime — the right shape
     * for a long-running ingester whose store grows without bound.
     */
-  /** Run `body` exactly once per (markerRoot, batchId) — the per-batch
-    * marker protocol every foreachBatch twin shares. A marker under
-    * `markerRoot/_markers` means the batch fully committed: skip the
-    * replay. Absent → run `body`, write the marker, then prune markers
-    * from earlier batches (a restart only ever replays the LATEST
-    * checkpoint-uncommitted batch, so once batch N runs, markers < N can
-    * never be consulted again — without pruning a long-running ingester
-    * accumulates one file per micro-batch forever; pruning is idempotent
-    * on replay). Underscore-prefixed paths are invisible to parquet
-    * readers (like _SUCCESS) and go through the Hadoop FS API so
-    * object-store roots work.
-    */
-  private def runBatchOnce(spark: SparkSession, markerRoot: String,
-      batchId: Long)(body: => Unit): Unit = {
-    val markerDir = new org.apache.hadoop.fs.Path(s"$markerRoot/_markers")
-    val marker = new org.apache.hadoop.fs.Path(markerDir, s"batch_$batchId")
-    val fs = marker.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(marker)) {
-      body
-      fs.mkdirs(markerDir)
-      fs.create(marker, false).close()
-      val stale = fs.listStatus(markerDir).filter { st =>
-        st.getPath.getName.stripPrefix("batch_").toLongOption
-          .exists(_ < batchId)
-      }
-      stale.foreach(st => fs.delete(st.getPath, false))
-      ()
-    }
-  }
-
   def nearDedupStreamIncremental(
       stream: DataFrame,
       idCol: String,
@@ -214,7 +214,10 @@ object StreamingIngest {
       rowsPerBand: Int = 4,
       threshold: Double = 0.9,
       bucketedStore: Boolean = false,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
+    val store = graft.core.KeyStore(
+      graft.operators.Dedup.bandKeyFamily(shingleN, bands, rowsPerBand),
+      graft.core.StoreLayout(bandKeyStorePath, table = bucketedStore))
     stream.writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
@@ -222,39 +225,23 @@ object StreamingIngest {
         val spark = batch.sparkSession
         runBatchOnce(spark, outPath, batchId) {
           graft.core.CacheScope.scoped {
-            val store =
-              if (bucketedStore) graft.operators.Dedup.readBucketedBandKeys(
-                spark, bandKeyStorePath)
-              else graft.operators.Dedup.readBandKeys(spark, bandKeyStorePath)
-            val corpus =
-              try spark.read.parquet(corpusDocsPath)
-                .select(col(idCol), col(textCol))
-              catch {
-                case e: org.apache.spark.sql.AnalysisException
-                    if e.getCondition == "PATH_NOT_FOUND" ||
-                      Option(e.getMessage)
-                        .exists(_.contains("Path does not exist")) =>
-                  batch.select(col(idCol), col(textCol)).limit(0)
-              }
+            val corpusKeys = store.read(spark)
+            val corpus = graft.operators.Dedup.readCorpusDocs(
+              corpusDocsPath, idCol, textCol, batch)
             // persisted: written to three sinks below, computed once
             val survivors = graft.core.CacheScope.persist(
               graft.operators.Dedup.dropNearDuplicatesIncremental(
-                batch, idCol, textCol, store, corpus,
+                batch, idCol, textCol, corpusKeys, corpus,
                 shingleN, bands, rowsPerBand, threshold))
             survivors.write.mode("append").parquet(outPath)
-            if (bucketedStore)
-              graft.operators.Dedup.saveBucketedBandKeys(survivors, idCol,
-                textCol, bandKeyStorePath,
-                shingleN = shingleN, bands = bands, rowsPerBand = rowsPerBand)
-            else
-              graft.operators.Dedup.appendBandKeys(survivors, idCol,
-                textCol, bandKeyStorePath, shingleN, bands, rowsPerBand)
+            store.append(survivors, idCol, textCol)
             survivors.select(col(idCol), col(textCol))
               .write.mode("append").parquet(corpusDocsPath)
           }
         }
       }
       .start()
+  }
 
   /** Streaming incremental EMBEDDING near-dup dedup — the semantic twin
     * of [[nearDedupStreamIncremental]] for streams that carry an
@@ -288,7 +275,10 @@ object StreamingIngest {
       tables: Int = 8,
       dim: Int = 64,
       probes: Int = 1,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
+    val store = graft.core.KeyStore(
+      graft.operators.Similarity.embeddingBucketFamily(planes, tables, dim),
+      graft.core.StoreLayout.Path(bucketStorePath))
     stream.writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
@@ -296,25 +286,20 @@ object StreamingIngest {
         val spark = batch.sparkSession
         runBatchOnce(spark, outPath, batchId) {
           graft.core.CacheScope.scoped {
-            val store = graft.operators.Similarity.readEmbeddingBuckets(
-              spark, bucketStorePath, planes, tables, dim)
+            val corpusKeys = store.read(spark)
             val outDir = new org.apache.hadoop.fs.Path(outPath)
             val fs = outDir.getFileSystem(spark.sessionState.newHadoopConf())
-            val slim = batch
-              .select(org.apache.spark.sql.functions.col(idCol),
-                org.apache.spark.sql.functions.col(vecCol))
             // explicit schema: an output dir holding only markers/_SUCCESS
             // (empty first batch) must read as zero rows, not fail
             // schema inference
             val corpusVecs =
               if (fs.exists(outDir))
                 spark.read.schema(batch.schema).parquet(outPath)
-                  .select(org.apache.spark.sql.functions.col(idCol),
-                    org.apache.spark.sql.functions.col(vecCol))
-              else slim.limit(0)
+                  .select(col(idCol), col(vecCol))
+              else batch.select(col(idCol), col(vecCol)).limit(0)
             val survivors = graft.core.CacheScope.persist(
               graft.operators.Similarity.dropNearCorpusEmbeddings(
-                batch, idCol, vecCol, store, corpusVecs, threshold,
+                batch, idCol, vecCol, corpusKeys, corpusVecs, threshold,
                 planes, tables, dim, probes = probes))
             // bucket keys BEFORE the survivor write: every mid-batch
             // crash window is then output-duplicate-free. Crash between
@@ -327,13 +312,13 @@ object StreamingIngest {
             // batch matches its OWN keys + vectors at cosine 1 and
             // drops entirely. The reverse order left a window that
             // re-landed the same survivors in the output corpus.
-            graft.operators.Similarity.appendEmbeddingBuckets(survivors,
-              idCol, vecCol, bucketStorePath, planes, tables, dim)
+            store.append(survivors, idCol, vecCol)
             survivors.write.mode("append").parquet(outPath)
           }
         }
       }
       .start()
+  }
 
   /** Streaming incremental TF-IDF near-dup dedup — the model-free twin
     * of [[nearDedupStreamIncremental]] for streams with no embedding

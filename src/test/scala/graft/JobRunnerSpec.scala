@@ -1123,6 +1123,159 @@ class JobRunnerSpec extends SparkSpec {
     spark.sql(s"DROP TABLE $table")
   }
 
+  test("curation store_format bloom: compact_store_every compacts the data, keeps the sidecars") {
+    def jobYaml(dir: java.nio.file.Path, out: String, store: String,
+        compact: Boolean): String =
+      write(dir, s"job_bloomcompact_$compact.yaml",
+        s"""tenant_id: t1
+           |source_connector_path: recipe_csv.yaml
+           |target_connector_path: recipe_parquet.yaml
+           |asset_path: asset.yaml
+           |schema_validation_mode: strict
+           |curation:
+           |  id_field: id
+           |  text_field: name
+           |  dedupe: incremental
+           |  store_format: bloom
+           |  bloom_expected_items: 1000
+           |  fingerprint_store: $store
+           |  update_store: true
+           |${if (compact) "  compact_store_every: 1" else ""}
+           |source:
+           |  files:
+           |    - {path: data.csv, object: people}
+           |target:
+           |  connection: {path: $out}
+           |""".stripMargin)
+    def dataFiles(store: String): Int =
+      new java.io.File(store).listFiles().count(f => f.isFile &&
+        !f.getName.startsWith("_") && !f.getName.startsWith("."))
+    def bytes(store: String, sidecar: String): Seq[Byte] =
+      Files.readAllBytes(java.nio.file.Paths.get(store, sidecar)).toSeq
+    val root = Files.createTempDirectory("bloomcompact-")
+    val compacted = root.resolve("compacted").toString
+    val plain = root.resolve("plain").toString // same cycle, never compacted
+    var metaParams = Seq.empty[Byte]
+    val days = Seq(
+      Seq("1,alice,9.5", "2,bob,8.0"),
+      Seq("3,alice,7.0", "4,carol,6.0"),
+      Seq("5,carol,5.0", "6,dave,4.0"))
+    for ((rows, day) <- days.zipWithIndex) {
+      val (dir, _) = fixture(rows, "strict")
+      val rc = JobRunner.run(spark,
+        jobYaml(dir, dir.resolve("outc").toString, compacted, compact = true))
+      val rp = JobRunner.run(spark,
+        jobYaml(dir, dir.resolve("outp").toString, plain, compact = false))
+      rc.exitCode shouldBe ExitCodes.Success
+      rp.exitCode shouldBe ExitCodes.Success
+      // the window ran: one data file, sidecars untouched by it
+      dataFiles(compacted) shouldBe 1
+      dataFiles(plain) should be >= day + 1 // one or more per append
+      bytes(compacted, "_bloom") shouldBe bytes(plain, "_bloom")
+      if (day == 0) metaParams = bytes(compacted, "_meta_params")
+      else bytes(compacted, "_meta_params") shouldBe metaParams
+      // same answers as the uncompacted store, day 3 included: carol
+      // (day-2 commit) is dropped, dave kept
+      spark.read.parquet(rc.outputPath).select("id").collect()
+        .map(_.get(0).toString).sorted shouldBe
+        spark.read.parquet(rp.outputPath).select("id").collect()
+          .map(_.get(0).toString).sorted
+      if (day == 2)
+        spark.read.parquet(rc.outputPath).select("id").collect()
+          .map(_.get(0).toString) shouldBe Array("6")
+    }
+    graft.operators.Dedup.readFingerprints(spark, compacted).count() shouldBe 4
+  }
+
+  test("curation store_format bucketed rejects a dedupe mode with no bucketed store") {
+    val (dir, _) = fixture(Seq(
+      "1,the quick brown fox jumps over the lazy dog by the river,1.0",
+      "2,the quick brown fox jumps over the lazy dog by the river,2.0",
+      "3,some altogether different sentence about compilers and parsers,3.0"),
+      "strict")
+    def jobYaml(name: String, storeFormat: String): String =
+      write(dir, name,
+        s"""tenant_id: t1
+           |source_connector_path: recipe_csv.yaml
+           |target_connector_path: recipe_parquet.yaml
+           |asset_path: asset.yaml
+           |schema_validation_mode: strict
+           |curation:
+           |  id_field: id
+           |  text_field: name
+           |  dedupe: near
+           |$storeFormat
+           |source:
+           |  files:
+           |    - {path: data.csv, object: people}
+           |target:
+           |  connection: {path: ${dir.resolve(name + "_out")}}
+           |""".stripMargin)
+    val e = the[IllegalArgumentException] thrownBy JobRunner.run(spark,
+      jobYaml("job_nearbucketed.yaml", "  store_format: bucketed"))
+    e.getMessage should include("dedupe: near")
+    // the same mode without a store_format is the ingest_curate shape
+    val r = JobRunner.run(spark, jobYaml("job_near.yaml", ""))
+    r.exitCode shouldBe ExitCodes.Success
+    r.validRecords shouldBe 2
+  }
+
+  test("curation store_format bucketed: incremental_near two-day cycle from YAML") {
+    val table = "jrspec_near_bucketed_yaml"
+    spark.sql(s"DROP TABLE IF EXISTS $table")
+    val corpus = Files.createTempDirectory("nearbk-corpus-").toString + "/docs"
+    def jobYaml(dir: java.nio.file.Path, out: String): String =
+      write(dir, "job_nearbk.yaml",
+        s"""tenant_id: t1
+           |source_connector_path: recipe_csv.yaml
+           |target_connector_path: recipe_parquet.yaml
+           |asset_path: asset.yaml
+           |schema_validation_mode: strict
+           |curation:
+           |  id_field: id
+           |  text_field: name
+           |  dedupe: incremental_near
+           |  store_format: bucketed
+           |  band_key_store: $table
+           |  corpus_path: $corpus
+           |  update_store: true
+           |source:
+           |  files:
+           |    - {path: data.csv, object: people}
+           |target:
+           |  connection: {path: $out}
+           |""".stripMargin)
+    // day 1: missing table and corpus bootstrap; the append creates a
+    // bucketed band-key table and lands the documents
+    val (dir1, _) = fixture(Seq(
+      "1,the quick brown fox jumps over the lazy dog by the river,1.0",
+      "2,an altogether different sentence about compilers and parsers,2.0"),
+      "strict")
+    val r1 = JobRunner.run(spark, jobYaml(dir1, dir1.resolve("out1").toString))
+    r1.exitCode shouldBe ExitCodes.Success
+    r1.validRecords shouldBe 2
+    val meta = spark.sessionState.catalog.getTableMetadata(
+      spark.sessionState.sqlParser.parseTableIdentifier(table))
+    meta.bucketSpec.map(b => (b.numBuckets, b.bucketColumnNames)) shouldBe
+      Some((256, Seq("bk")))
+    spark.table(table).count() shouldBe 32L // 16 bands per document
+    spark.read.parquet(corpus).count() shouldBe 2L
+    // day 2: the near-dup of a day-1 document is dropped through the
+    // table, the fresh one kept and appended
+    val (dir2, _) = fixture(Seq(
+      "10,THE QUICK brown fox jumps over the lazy dog by the river,1.0",
+      "11,a genuinely new document about sailing across the open bay,2.0"),
+      "strict")
+    val r2 = JobRunner.run(spark, jobYaml(dir2, dir2.resolve("out2").toString))
+    r2.exitCode shouldBe ExitCodes.Success
+    r2.validRecords shouldBe 1
+    spark.read.parquet(r2.outputPath).select("id").collect()
+      .map(_.get(0).toString) shouldBe Array("11")
+    spark.table(table).count() shouldBe 48L
+    spark.read.parquet(corpus).count() shouldBe 3L
+    spark.sql(s"DROP TABLE $table")
+  }
+
   test("curated job releases every cache it creates (long-lived session)") {
     // dedupe: near runs the persist-heaviest curation path (shingle +
     // band + candidate caches, connected components); a long-lived

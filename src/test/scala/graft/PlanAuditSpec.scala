@@ -396,7 +396,6 @@ class PlanAuditSpec extends SparkSpec {
       ("operators/Similarity.scala", "broadcast(bBuckets), col(\"bk\") === col(\"cbk\"))") -> (1, "QUERY batch bucket keys (ingest-batch bounded)"),
       ("operators/Similarity.scala", "broadcast(d)") -> (2, "GATED pinVec row+byte gate"),
       ("operators/Similarity.scala", "broadcast(d) else d") -> (2, "GATED broadcastMaxPairs"),
-      ("operators/Similarity.scala", "broadcast(losers)") -> (1, "GATED broadcastMaxPairs"),
       ("operators/Similarity.scala", "broadcast(probes), Seq(\"list\"))") -> (1, "QUERY probed-list union"),
       ("operators/Similarity.scala", "broadcast(q),") -> (1, "QUERY seed vectors"),
       ("operators/Similarity.scala", "broadcast(q), col(\"query_id\") =!= col(\"neighbor_id\"))") -> (1, "QUERY seed vectors"),
