@@ -832,16 +832,19 @@ object JobRunner {
         s"sheets:$sheetId"
       } else {
         // W2 sizing runs on an OBSERVE-FREE twin of the output plan — its
-        // two sample actions must not consume the validation Observation.
-        // Computed only here: a sheets target would pay the sample
-        // actions for a result nobody reads. Transform partition entries
+        // head-sample `take` must not consume the validation Observation.
+        // The estimate is passed by name, so only a Parquet commit runs
+        // it: a sheets target never gets here, and a catalog table that
+        // commits sizes its own files. Transform partition entries
         // (days(ts), bucket(n, id)) are materialized as identity columns
         // so the twin matches the degradation path's written shape.
-        val (twinMat, twinCols) = graft.sinks.PartitionTransforms.materialize(
-          Validation.transform(raw, contract, vmode), partitions)
-        val sizingTwin = ParquetSink.preparePartitions(twinMat, twinCols)
-        val maxRecords = ParquetSink.estimateMaxRecordsPerFile(
-          sizingTwin, base, tgt.parquetTargetSizeMb)
+        def maxRecords: Long = {
+          val (twinMat, twinCols) = graft.sinks.PartitionTransforms.materialize(
+            Validation.transform(raw, contract, vmode), partitions)
+          ParquetSink.estimateMaxRecordsPerFile(
+            ParquetSink.preparePartitions(twinMat, twinCols), base,
+            tgt.parquetTargetSizeMb)
+        }
 
         // W6 tags + commit via the strongest available backend
         // (ParquetOnly = the reference's graceful-degradation path)

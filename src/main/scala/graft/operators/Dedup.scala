@@ -419,7 +419,13 @@ object Dedup {
       rowsPerBand: Int = 4,
       threshold: Double = 0.9,
       maxBandDf: Int = 0
-  ): DataFrame = {
+  ): DataFrame =
+    minhashPairSet(df, idCol, textCol, shingleN, bands, rowsPerBand,
+      threshold, maxBandDf).pairs
+
+  private def minhashPairSet(df: DataFrame, idCol: String, textCol: String,
+      shingleN: Int, bands: Int, rowsPerBand: Int, threshold: Double,
+      maxBandDf: Int): PairSet = {
     val sh = CacheScope.persist(shingleTable(df, idCol, textCol, shingleN))
       // reused by the band explode and both verify joins
     val banded = CacheScope.persist(capHotKeys(
@@ -573,7 +579,10 @@ object Dedup {
     * incremental-dedup family at sf0.1 for exactly these reasons. What
     * DOES bound the per-batch action overhead is count REUSE: each
     * incremental path runs ONE guard count per shared input and derives
-    * every dependent pin decision from it.
+    * every dependent pin decision from it. The same reuse reaches the
+    * cluster tail: the verify's candidate count is handed on as the
+    * [[PairSet]] bound, so [[dropClusterLosers]] picks its driver path
+    * from it instead of counting the verified pairs and then the losers.
     */
   private[graft] def guardCount(df: DataFrame): Long =
     df.count()
@@ -591,27 +600,39 @@ object Dedup {
     * [[broadcastMaxPairs]] for the dup-catastrophic tail where even the
     * candidate set is too big to ship.
     */
-  private def verifyJaccard(pairs: DataFrame, sh: DataFrame, threshold: Double): DataFrame =
+  private def verifyJaccard(pairs: DataFrame, sh: DataFrame, threshold: Double): PairSet =
     verifyJaccardBetween(pairs, sh, sh, threshold)
 
   /** Two-table variant: `id_a` resolves shingles in `shA`, `id_b` in
     * `shB` — the incremental path verifies batch docs against corpus
-    * docs, the self-dedup path passes the same table twice.
+    * docs, the self-dedup path passes the same table twice. The verified
+    * pairs are a filtered subset of the candidates, so the candidate
+    * guard count rides along as their bound.
     */
   private def verifyJaccardBetween(pairs: DataFrame, shA: DataFrame,
-      shB: DataFrame, threshold: Double): DataFrame = {
+      shB: DataFrame, threshold: Double): PairSet = {
     val p = CacheScope.persist(pairs) // guard-counted for the broadcast pin, then joined
     val nPairs = guardCount(p)
     val withA = shA.select(col("id").as("id_a"), col("sh").as("sh_a"))
       .join(pinIfSmall(p, nPairs), "id_a")
-    shB.select(col("id").as("id_b"), col("sh").as("sh_b"))
+    PairSet(shB.select(col("id").as("id_b"), col("sh").as("sh_b"))
       .join(pinIfSmall(withA, nPairs), "id_b")
       .withColumn("jaccard",
         size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
           size(array_union(col("sh_a"), col("sh_b"))).cast("double"))
       .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
+      .select("id_a", "id_b", "jaccard"), Some(nPairs))
   }
+
+  /** A near-dup pair set (`id_a`, `id_b`, …) plus, when its producer ran
+    * one, the candidate guard count: the verified pairs are a filtered
+    * subset of those distinct candidates (ids are keys), so the count
+    * bounds them and the cluster tail decides driver vs distributed
+    * without counting the pairs again. `bound = None`: the tail
+    * guard-counts the pairs itself.
+    */
+  private[operators] final case class PairSet(pairs: DataFrame,
+      bound: Option[Long] = None)
 
   /** Connected components over a near-dup pair set. Returns
     * (id, component = min id of the cluster).
@@ -624,6 +645,9 @@ object Dedup {
     * Spark rounds. This is the same candidate-bounded reasoning as the
     * broadcast verify joins — the graph is small BY CONSTRUCTION, and a
     * 10-round distributed loop over it is pure scheduling overhead.
+    * This public entry has no producer bound, so it persists the pairs
+    * and guard-counts them once to choose; the removal tails
+    * ([[dropClusterLosers]]) take the bound from the pair producer.
     *
     * Above the threshold (dup-catastrophic corpora), min-label
     * propagation with pointer jumping: every node adopts the smallest of
@@ -636,23 +660,51 @@ object Dedup {
     * iterations. Superseded rounds are unpersisted as soon as the next
     * round materializes (a 20-round run over a big corpus would
     * otherwise hold 20 label tables in cache); the convergence check is
-    * an early-exit scan of the just-materialized round.
+    * an `isEmpty` probe of the just-materialized round (a `take(1)`, no
+    * codegen'd limit, so no new class per round).
     *
     * Both paths produce the identical min-label result; the driver path
     * requires an orderable id type (numeric/string) and falls through to
     * the distributed loop otherwise.
     */
   def connectedComponents(pairs: DataFrame, maxIterations: Int = 20,
-      driverMaxPairs: Long = defaultDriverMaxPairs): DataFrame = {
-    // one scope-released materialization of the pair set; both paths reuse it
-    val pe = CacheScope.persist(pairs.select(col("id_a"), col("id_b")))
-    val idType = pe.schema("id_a").dataType
-    if (guardCount(pe) <= driverMaxPairs)
-      driverOrdering(idType) match {
-        case Some(ord) => return driverComponents(pe, idType, ord)
-        case None      => () // un-orderable id type: distributed loop below
-      }
-    val spark = pairs.sparkSession
+      driverMaxPairs: Long = defaultDriverMaxPairs): DataFrame =
+    clusters(PairSet(pairs), maxIterations, driverMaxPairs) match {
+      case Left(roots) => componentFrame(pairs, roots)
+      case Right(comps) => comps
+    }
+
+  /** The size-adaptive choice behind every cluster tail: `Left` = the
+    * driver union-find's id → component map, `Right` = the distributed
+    * (id, component) frame. A producer bound ≤ `driverMaxPairs` goes
+    * straight to ONE collect of the unpersisted pairs; otherwise the
+    * pairs are persisted and guard-counted once, and that count picks
+    * the path.
+    */
+  private def clusters(pairs: PairSet, maxIterations: Int = 20,
+      driverMaxPairs: Long = defaultDriverMaxPairs): Either[java.util.HashMap[Any, Any], DataFrame] = {
+    val ids = pairs.pairs.select(col("id_a"), col("id_b"))
+    val ord = driverOrdering(ids.schema("id_a").dataType)
+    ord match {
+      case Some(o) if pairs.bound.exists(_ <= driverMaxPairs) =>
+        Left(unionFind(ids.collect(), o))
+      case _ =>
+        // one scope-released materialization; both paths reuse it
+        val pe = CacheScope.persist(ids)
+        ord match {
+          case Some(o) if guardCount(pe) <= driverMaxPairs =>
+            Left(unionFind(pe.collect(), o))
+          case _ => Right(distributedComponents(pe, maxIterations))
+        }
+    }
+  }
+
+  /** Min-label propagation with pointer jumping over persisted
+    * (id_a, id_b) edges — see [[connectedComponents]].
+    */
+  private def distributedComponents(pe: DataFrame,
+      maxIterations: Int): DataFrame = {
+    val spark = pe.sparkSession
     val edges = CacheScope.persist( // scanned every round: one materialization
       pe.select(col("id_a").as("src"), col("id_b").as("dst"))
         .union(pe.select(col("id_b").as("src"), col("id_a").as("dst")))
@@ -685,7 +737,7 @@ object Dedup {
       val updated = org.apache.spark.sql.GraftExpressionBridge
         .dataFrameFromInternalRdd(spark,
           cached.queryExecution.toRdd.map(_.copy()), cached.schema)
-      converged = updated.filter(col("__changed")).limit(1).count() == 0
+      converged = updated.filter(col("__changed")).isEmpty
       labels = updated.drop("__changed")
       prevRound.foreach(_.unpersist(false)) // superseded round: release now
       prevRound = Some(cached)
@@ -709,14 +761,13 @@ object Dedup {
     }
   }
 
-  /** Driver union-find over a collected pair set: path compression +
-    * union-by-min keeps every root the minimum id of its component, so
-    * the result is bit-identical to the distributed min-label loop.
+  /** Driver union-find over collected (id_a, id_b) rows: path
+    * compression + union-by-min keeps every root the minimum id of its
+    * component, so the result is bit-identical to the distributed
+    * min-label loop. Returns id → component, fully compressed.
     */
-  private def driverComponents(pe: DataFrame,
-      idType: org.apache.spark.sql.types.DataType,
-      ord: Ordering[Any]): DataFrame = {
-    import org.apache.spark.sql.types.{StructField, StructType}
+  private def unionFind(edges: Array[org.apache.spark.sql.Row],
+      ord: Ordering[Any]): java.util.HashMap[Any, Any] = {
     val parent = new java.util.HashMap[Any, Any]()
     def find(x: Any): Any = {
       var root = x
@@ -727,7 +778,7 @@ object Dedup {
       }
       root
     }
-    pe.collect().foreach { r =>
+    edges.foreach { r =>
       val (a, b) = (r.get(0), r.get(1))
       if (!parent.containsKey(a)) parent.put(a, a)
       if (!parent.containsKey(b)) parent.put(b, b)
@@ -736,12 +787,27 @@ object Dedup {
         if (ord.lt(ra, rb)) parent.put(rb, ra) else parent.put(ra, rb)
       }
     }
-    val rows = new java.util.ArrayList[org.apache.spark.sql.Row](parent.size())
-    parent.keySet().forEach { id =>
-      rows.add(org.apache.spark.sql.Row(id, find(id)))
-    }
-    pe.sparkSession.createDataFrame(rows, StructType(Seq(
-      StructField("id", idType), StructField("component", idType))))
+    parent.keySet().forEach(id => find(id)) // value updates only
+    parent
+  }
+
+  /** Driver-built local frame of `rows` whose every column has the pair
+    * id type — no Spark job, and its size is known on the driver.
+    */
+  private def idFrame(pairs: DataFrame, names: Seq[String],
+      rows: java.util.List[org.apache.spark.sql.Row]): DataFrame = {
+    import org.apache.spark.sql.types.{StructField, StructType}
+    val idType = pairs.schema("id_a").dataType
+    pairs.sparkSession.createDataFrame(rows,
+      StructType(names.map(StructField(_, idType))))
+  }
+
+  /** (id, component) frame of a driver union-find result. */
+  private def componentFrame(pairs: DataFrame,
+      roots: java.util.HashMap[Any, Any]): DataFrame = {
+    val rows = new java.util.ArrayList[org.apache.spark.sql.Row](roots.size())
+    roots.forEach((id, root) => rows.add(org.apache.spark.sql.Row(id, root)))
+    idFrame(pairs, Seq("id", "component"), rows)
   }
 
   /** Near-duplicate REMOVAL: detect pairs with MinHash-LSH, cluster them
@@ -761,7 +827,7 @@ object Dedup {
       losersBroadcastMax: Long = broadcastMaxPairs,
       maxBandDf: Int = 0
   ): DataFrame = {
-    val pairs = minhashNearDupPairs(df, idCol, textCol, shingleN, bands,
+    val pairs = minhashPairSet(df, idCol, textCol, shingleN, bands,
       rowsPerBand, threshold, maxBandDf)
     dropClusterLosers(df, idCol, pairs, losersBroadcastMax)
   }
@@ -769,14 +835,30 @@ object Dedup {
   /** pairs → connected components → anti-join the non-survivors (everyone
     * but the min-id member of each transitive cluster) out of `df`.
     * Shared tail of every near-dup REMOVAL flavor (minhash, simhash,
-    * embedding).
+    * embedding, TF-IDF).
+    *
+    * Where the size comes from: a producer that guard-counted its
+    * candidates (minhash and simhash verify, the embedding fallback
+    * verify) hands that count over as `pairs.bound`. At or under
+    * `driverMaxPairs` the tail is one collect of the pairs, the driver
+    * union-find, and a driver-built loser frame whose size is known
+    * without a Spark job. Without a bound it guard-counts the persisted
+    * pairs once; above the ceiling it runs the distributed loop and
+    * guard-counts the persisted losers.
     */
   private[operators] def dropClusterLosers(df: DataFrame, idCol: String,
-      pairs: DataFrame, losersBroadcastMax: Long): DataFrame = {
-    val comps = connectedComponents(pairs)
-    val losers = CacheScope.persist(comps.filter(col("id") =!= col("component"))
-      .select(col("id").as(idCol)))
-      // guard-counted for the size guard, then anti-joined
+      pairs: PairSet, losersBroadcastMax: Long): DataFrame = {
+    val (losers, nLosers) = clusters(pairs) match {
+      case Left(roots) =>
+        val rows = new java.util.ArrayList[org.apache.spark.sql.Row]()
+        roots.forEach((id, root) =>
+          if (id != root) rows.add(org.apache.spark.sql.Row(id)))
+        (idFrame(pairs.pairs, Seq(idCol), rows), rows.size.toLong)
+      case Right(comps) =>
+        val persisted = CacheScope.persist(
+          comps.filter(col("id") =!= col("component")).select(col("id").as(idCol)))
+        (persisted, guardCount(persisted)) // guard-counted, then anti-joined
+    }
     // losers is pair-bounded, NOT broadcast-small by construction: a
     // dup-catastrophic corpus (the exact case the distributed-CC path
     // exists for) can yield a loser set past the 8 GB broadcast ceiling.
@@ -786,7 +868,7 @@ object Dedup {
     // shuffle, but a plan that COMPLETES where an over-ceiling broadcast
     // fails the job outright.
     val pinned =
-      if (guardCount(losers) <= losersBroadcastMax)
+      if (nLosers <= losersBroadcastMax)
         broadcast(losers)
       else losers
     df.join(pinned, Seq(idCol), "left_anti")
@@ -796,16 +878,22 @@ object Dedup {
     * ties to the lower id) instead of the min id — what a curation
     * pipeline usually wants: among near-duplicate pages keep the
     * longest / highest-quality copy, not the accident of the smallest
-    * key. Same size-adaptive CC; the only addition is one narrow
-    * (id, score) join against the pair-bounded component table and a
-    * per-component window over component-sized groups.
+    * key. Same size-adaptive CC (and the same producer bound as
+    * [[dropClusterLosers]]: a driver-built component table needs no
+    * persist or count); the only addition is one narrow (id, score) join
+    * against the pair-bounded component table and a per-component window
+    * over component-sized groups.
     */
   private[operators] def dropClusterLosersKeepBest(df: DataFrame,
-      idCol: String, scoreCol: String, pairs: DataFrame,
+      idCol: String, scoreCol: String, pairs: PairSet,
       losersBroadcastMax: Long): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val comps = CacheScope.persist(connectedComponents(pairs))
-    val nComp = guardCount(comps)
+    val (comps, nComp) = clusters(pairs) match {
+      case Left(roots) => (componentFrame(pairs.pairs, roots), roots.size.toLong)
+      case Right(c) =>
+        val persisted = CacheScope.persist(c)
+        (persisted, guardCount(persisted))
+    }
     // scores ride in via a join pruned to clustered ids only — broadcast
     // the component table under the guard so the corpus is never shuffled
     val compPinned =
@@ -840,7 +928,7 @@ object Dedup {
       losersBroadcastMax: Long = broadcastMaxPairs,
       maxBandDf: Int = 0
   ): DataFrame = {
-    val pairs = minhashNearDupPairs(df, idCol, textCol, shingleN, bands,
+    val pairs = minhashPairSet(df, idCol, textCol, shingleN, bands,
       rowsPerBand, threshold, maxBandDf)
     dropClusterLosersKeepBest(df, idCol, scoreCol, pairs, losersBroadcastMax)
   }
@@ -858,8 +946,7 @@ object Dedup {
       hasher: SimhashHasher = SimhashHasher.Xx,
       losersBroadcastMax: Long = broadcastMaxPairs
   ): DataFrame = {
-    val pairs = simhashNearDupPairs(df, idCol, textCol, maxHamming, bits,
-      hasher)
+    val pairs = simhashPairSet(df, idCol, textCol, maxHamming, bits, hasher)
     dropClusterLosers(df, idCol, pairs, losersBroadcastMax)
   }
 
@@ -1085,7 +1172,7 @@ object Dedup {
       .join(pinIfSmall(candCorpusIds, nCands), Seq(idCol), "left_semi")
     val shCorpus = shingleTable(candDocs, idCol, textCol, shingleN)
     val losers = verifyJaccardBetween(cands, shBatch, shCorpus, threshold)
-      .select(col("id_a").as(idCol)).distinct()
+      .pairs.select(col("id_a").as(idCol)).distinct()
     survivors.join(pinIfSmall(losers, nCands), Seq(idCol), "left_anti")
   }
 
@@ -1417,6 +1504,11 @@ object Dedup {
       hasher: SimhashHasher = SimhashHasher.Xx,
       maxChunkDf: Int = 0
   ): DataFrame =
+    simhashPairSet(df, idCol, textCol, maxHamming, bits, hasher, maxChunkDf).pairs
+
+  private def simhashPairSet(df: DataFrame, idCol: String, textCol: String,
+      maxHamming: Int, bits: Int, hasher: SimhashHasher,
+      maxChunkDf: Int = 0): PairSet =
     simhashPairsFromTable(
       // reused by the chunk explode (×2 self-join) + verify
       CacheScope.persist(simhashTable(df, idCol, textCol, bits, hasher)),
@@ -1424,10 +1516,11 @@ object Dedup {
 
   /** Pair detection over an already-built (id, sh) table — shared by the
     * self-dedup path above and the incremental path (which reuses the
-    * batch table for the corpus check instead of rehashing).
+    * batch table for the corpus check instead of rehashing). The
+    * candidate guard count bounds the verified pairs (see [[PairSet]]).
     */
   private def simhashPairsFromTable(hashed: DataFrame, maxHamming: Int,
-      bits: Int, maxChunkDf: Int = 0): DataFrame = {
+      bits: Int, maxChunkDf: Int = 0): PairSet = {
     val chunked = capHotKeys(
       hashed.select(col("id"),
         explode(simhashChunkKeys(col("sh"), bits)).as("ck")),
@@ -1444,11 +1537,11 @@ object Dedup {
     val nPairs = guardCount(cp)
     val withA = hashed.select(col("id").as("id_a"), col("sh").as("sh_a"))
       .join(pinIfSmall(cp, nPairs), "id_a")
-    hashed.select(col("id").as("id_b"), col("sh").as("sh_b"))
+    PairSet(hashed.select(col("id").as("id_b"), col("sh").as("sh_b"))
       .join(pinIfSmall(withA, nPairs), "id_b")
       .withColumn("hamming", bit_count(col("sh_a").bitwiseXOR(col("sh_b"))))
       .filter(col("hamming") <= maxHamming)
-      .select("id_a", "id_b", "hamming")
+      .select("id_a", "id_b", "hamming"), Some(nPairs))
   }
 
   // ------------------------------------------------------ blocked Jaccard

@@ -155,7 +155,7 @@ object Similarity {
       if (maxBucketDf > 0)
         CacheScope.persist(Dedup.capHotKeys(raw, "bk", maxBucketDf))
       else raw // both sides of the self-join
-    nearDupPairsFromBuckets(base, bucketed, threshold, dim)
+    nearDupPairsFromBuckets(base, bucketed, threshold, dim).pairs
   }
 
   /** Collision probability of two vectors with cosine `c` in ONE
@@ -357,10 +357,12 @@ object Similarity {
     *    the corpus keeps only candidate vectors (broadcast semi-join on
     *    the id set), both lookups broadcast that slim slice while the
     *    pair count allows (see Dedup.verifyJaccard; past the guard the
-    *    joins run unhinted instead of risking the 8 GB ceiling).
+    *    joins run unhinted instead of risking the 8 GB ceiling). That
+    *    distinct-candidate count bounds the verified pairs, so it rides
+    *    along for the cluster tail; the fused branch has no such count.
     */
   private def nearDupPairsFromBuckets(base: DataFrame, bucketed: DataFrame,
-      threshold: Double, dim: Int): DataFrame = {
+      threshold: Double, dim: Int): Dedup.PairSet = {
     val rawCands = obsCount(
       bucketed.as("x")
         .join(bucketed.as("y"),
@@ -379,7 +381,7 @@ object Similarity {
     if (nBase <= Dedup.broadcastMaxPairs &&
         Dedup.vecBroadcastBytes(nBase, dim) <= Dedup.broadcastMaxVecBytes) {
       val vecs = CacheScope.persist(base.withColumn("nrm", norm(col("v"))))
-      obsCount(
+      Dedup.PairSet(obsCount(
         rawCands
           .join(broadcast(vecs.select(col("id").as("id_a"),
             col("v").as("va"), col("nrm").as("na"))), "id_a")
@@ -390,7 +392,7 @@ object Similarity {
           .filter(col("cosine") >= threshold)
           .select("id_a", "id_b", "cosine"),
         "graft.neardup.verified_pairs")
-        .distinct()
+        .distinct())
     } else {
       val cp = CacheScope.persist(rawCands.distinct())
       val nPairs = Dedup.guardCount(cp)
@@ -411,7 +413,7 @@ object Similarity {
             Dedup.vecBroadcastBytes(candRowBound, dim) <=
               Dedup.broadcastMaxVecBytes) broadcast(d)
         else d
-      obsCount(
+      Dedup.PairSet(obsCount(
         cp
           .join(pinVec(candVecs.select(col("id").as("id_a"),
             col("v").as("va"), col("nrm").as("na"))), "id_a")
@@ -421,7 +423,7 @@ object Similarity {
             dotDouble(col("va"), col("vb")), col("na"), col("nb")))
           .filter(col("cosine") >= threshold)
           .select("id_a", "id_b", "cosine"),
-        "graft.neardup.verified_pairs")
+        "graft.neardup.verified_pairs"), Some(nPairs))
     }
   }
 
@@ -660,7 +662,7 @@ object Similarity {
         CacheScope.persist(Dedup.capHotKeys(assigned, "bk", maxListDf))
       else assigned
     nearDupPairsFromBuckets(base, blocked, threshold,
-      dim = centroids.head.length)
+      dim = centroids.head.length).pairs
   }
 
   // ------------------------------------------------------------- IVF core

@@ -403,8 +403,8 @@ object Tfidf {
       .filter(cosineAtLeast(col("dot"), col("n2_a"), col("n2_b"), tauNum, tauDen))
       .select("id_a", "id_b")
 
-    val withinSurvivors = Dedup.dropClusterLosers(batch, idCol, wPairs,
-      Dedup.broadcastMaxPairs)
+    val withinSurvivors = Dedup.dropClusterLosers(batch, idCol,
+      Dedup.PairSet(wPairs), Dedup.broadcastMaxPairs)
     val pinned =
       if (hits.count() <= Dedup.broadcastMaxPairs) broadcast(hits) else hits
     withinSurvivors.join(pinned, Seq(idCol), "left_anti")
@@ -424,6 +424,7 @@ object Tfidf {
       tauNum: Int = 4, tauDen: Int = 5): DataFrame = {
     val pairs = cosinePairs(df, idCol, textCol, buckets, maxTokenDf,
       tauNum, tauDen).select("id_a", "id_b")
-    Dedup.dropClusterLosers(df, idCol, pairs, Dedup.broadcastMaxPairs)
+    Dedup.dropClusterLosers(df, idCol, Dedup.PairSet(pairs),
+      Dedup.broadcastMaxPairs)
   }
 }

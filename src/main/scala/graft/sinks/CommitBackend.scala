@@ -35,12 +35,15 @@ trait CommitBackend {
       partitionCols: Seq[String]): Unit
 
   /** Append `df` and record table properties; never throws for
-    * catalog-side failures (degradation contract).
+    * catalog-side failures (degradation contract). `maxRecordsPerFile`
+    * is by-name: only a Parquet write reads it (a catalog table sizes
+    * its own files), so a caller's sample estimate runs only when the
+    * commit lands as Parquet.
     */
   def commit(df: DataFrame, location: String, contract: DataContract,
       partitionCols: Seq[String], properties: Map[String, String],
       targetMb: Int = ParquetSink.DefaultTargetMb,
-      maxRecordsPerFile: Option[Long] = None): CommitResult
+      maxRecordsPerFile: => Option[Long] = None): CommitResult
 }
 
 /** The reference's degradation path as a first-class backend: partitioned
@@ -74,7 +77,7 @@ object ParquetOnly extends CommitBackend {
 
   def commit(df: DataFrame, location: String, contract: DataContract,
       partitionCols: Seq[String], properties: Map[String, String],
-      targetMb: Int, maxRecordsPerFile: Option[Long]): CommitResult = {
+      targetMb: Int, maxRecordsPerFile: => Option[Long]): CommitResult = {
     val t0 = System.currentTimeMillis()
     // transform entries (days(ts), bucket(n, id)) have no Hive-layout
     // analog: derive identity columns so data still lands partitioned
@@ -125,7 +128,7 @@ final case class CatalogTableBackend(catalogName: String, namespace: String)
 
   def commit(df: DataFrame, location: String, contract: DataContract,
       partitionCols: Seq[String], properties: Map[String, String],
-      targetMb: Int, maxRecordsPerFile: Option[Long]): CommitResult = {
+      targetMb: Int, maxRecordsPerFile: => Option[Long]): CommitResult = {
     val spark = df.sparkSession
     val fqn = tableFqn(contract)
     val t0 = System.currentTimeMillis()

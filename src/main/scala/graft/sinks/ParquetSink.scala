@@ -3,8 +3,12 @@ package graft.sinks
 import graft.core.ValidationMode
 import org.apache.spark.sql.{Column, DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths}
 import java.util.UUID
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.mapreduce.TaskAttemptID
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 
 /** Partitioned, size-targeted Parquet sink (SURVEY.md §2.4 W1/W2 + M7).
   *
@@ -16,8 +20,9 @@ import java.util.UUID
   *    normalization is applied to the partition column values pre-write.
   *  - target file size 128–200 MB, default 150
   *    (parquet_writer.py:33-35, config.py:412-414), estimated by writing a
-  *    ≤1000-row sample and extrapolating bytes/row
-  *    (parquet_writer.py:360-381) → `maxRecordsPerFile`.
+  *    ≤1000-row head sample (one `take`, held on the driver) and
+  *    extrapolating bytes/row (parquet_writer.py:360-381) →
+  *    `maxRecordsPerFile`.
   *  - snappy compression + dictionary encoding (parquet_writer.py:424-429);
   *    both are Spark parquet defaults, set explicitly anyway.
   *  - `ingest_date` synthesized as today when it is a partition column but
@@ -64,35 +69,46 @@ object ParquetSink {
     * the reference's own trick (parquet_writer.py:360-381). Returns 0
     * (= unlimited) when the frame is empty.
     *
-    * The ≤`sampleRows` sample is written to a hidden temp dir on the SAME
-    * Hadoop filesystem as `outputPath` and measured through the Hadoop FS
-    * API — a driver-local java.nio path would measure 0 bytes on any real
-    * cluster (default FS ≠ driver disk) and silently disable the 128–200 MB
-    * semantic.
+    * The sample is `df.take(sampleRows)`: Spark scans one partition
+    * first and scales up only when it comes up short, so sizing never
+    * touches the whole input, runs no codegen'd limit and no shuffle.
+    * The ≤`sampleRows` rows held on the driver are the same footprint as
+    * the reference's in-process sample. The driver writes them through
+    * Spark's own Parquet writer (same codec and encodings as a real
+    * write) as ONE file in a hidden temp dir on the SAME Hadoop
+    * filesystem as `outputPath`, and measures it through the Hadoop FS
+    * API — a driver-local java.nio path would measure 0 bytes on any
+    * real cluster (default FS ≠ driver disk) and silently disable the
+    * 128–200 MB semantic. The row count is the sample's length, so
+    * nothing is read back and the write is no Spark job.
     *
-    * CAUTION: this runs two Spark actions on `df`. Never pass a frame
+    * CAUTION: the `take` is a Spark action on `df`. Never pass a frame
     * carrying an `observe()` whose metrics you still need — the sample
-    * actions would satisfy the Observation with partial-scan counts. The
-    * job driver passes the un-observed twin of its output plan.
+    * would satisfy the Observation with a partial-scan count. The job
+    * driver passes the un-observed twin of its output plan.
     */
   def estimateMaxRecordsPerFile(df: DataFrame, outputPath: String, targetMb: Int,
       sampleRows: Int = 1000): Long = {
     val clamped = math.max(MinTargetMb, math.min(MaxTargetMb, targetMb))
-    val hconf = df.sparkSession.sessionState.newHadoopConf()
-    val base = new org.apache.hadoop.fs.Path(outputPath)
-    val fs = base.getFileSystem(hconf)
-    val tmp = new org.apache.hadoop.fs.Path(
-      base.getParent match { case null => base; case p => p },
+    val sample = df.take(sampleRows)
+    if (sample.isEmpty) return 0L
+    val spark = df.sparkSession
+    val job = org.apache.hadoop.mapreduce.Job.getInstance(
+      spark.sessionState.newHadoopConf())
+    val base = new Path(outputPath)
+    val fs = base.getFileSystem(job.getConfiguration)
+    val tmp = new Path(base.getParent match { case null => base; case p => p },
       s".graft_sizing_${UUID.randomUUID().toString}")
+    val file = new Path(tmp, "sample.parquet")
     try {
-      df.limit(sampleRows).coalesce(1)
-        .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-      val parts = fs.listStatus(tmp).filter(_.getPath.getName.endsWith(".parquet"))
-      val bytes = parts.map(_.getLen).sum
-      // row count from the written files' footers — no extra scan of df
-      val n = df.sparkSession.read.parquet(tmp.toString).count()
-      if (n == 0) return 0L
-      val bytesPerRow = math.max(1L, bytes / n)
+      val writer = new ParquetFileFormat()
+        .prepareWrite(spark, job, Map.empty, df.schema)
+        .newInstance(file.toString, df.schema,
+          new TaskAttemptContextImpl(job.getConfiguration, new TaskAttemptID()))
+      val toInternal = CatalystTypeConverters.createToCatalystConverter(df.schema)
+      try sample.foreach(r => writer.write(toInternal(r).asInstanceOf[InternalRow]))
+      finally writer.close()
+      val bytesPerRow = math.max(1L, fs.getFileStatus(file).getLen / sample.length)
       math.max(1L, clamped.toLong * 1024L * 1024L / bytesPerRow)
     } finally {
       try fs.delete(tmp, true) catch { case _: Throwable => () }
@@ -111,7 +127,7 @@ object ParquetSink {
     */
   def writtenFiles(spark: org.apache.spark.sql.SparkSession, location: String,
       sinceMs: Long): Seq[(String, Long)] = {
-    val base = new org.apache.hadoop.fs.Path(location)
+    val base = new Path(location)
     val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(base)) Nil
     else {

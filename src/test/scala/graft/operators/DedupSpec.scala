@@ -482,4 +482,48 @@ class DedupSpec extends SparkSpec {
     Dedup.dropNearDuplicates(df, "doc_id", "text")
       .select("doc_id").as[Long].collect().sorted shouldBe Array(1L, 4L)
   }
+
+  test("driver-regime removal: candidate count, one pair collect, final count") {
+    // the verify's candidate guard count bounds the verified pairs, so
+    // the cluster tail runs no pair count and no loser count of its own
+    val chain = Seq(
+      (1L, "alpha beta gamma delta epsilon zeta eta theta iota"),
+      (2L, "alpha beta gamma delta epsilon zeta eta theta kappa"),
+      (3L, "omega beta gamma delta epsilon zeta eta theta kappa"),
+      (9L, "completely unrelated words appear in this document here")
+    ).toDF("id", "text")
+    val tag = s"marker-${java.util.UUID.randomUUID()}"
+    val actions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val markers = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          durationNs: Long): Unit =
+        if (qe.analyzed.toString.contains(tag)) markers.incrementAndGet()
+        else if (markers.get() == 1) actions.add(funcName)
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    // listener delivery is asynchronous but ordered: only actions seen
+    // between the two marker queries are this removal's
+    def marker(n: Int): Unit = {
+      spark.range(1).select(lit(tag).as("m")).collect()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (markers.get() < n && System.nanoTime() < deadline) Thread.sleep(20)
+    }
+    spark.listenerManager.register(listener)
+    val survivors =
+      try {
+        marker(1)
+        val n = Dedup.dropNearDuplicates(chain, "id", "text",
+          shingleN = 2, bands = 16, rowsPerBand = 2, threshold = 0.6).count()
+        marker(2)
+        n
+      } finally spark.listenerManager.unregister(listener)
+    survivors shouldBe 2L
+    import scala.jdk.CollectionConverters._
+    actions.asScala.toSeq shouldBe Seq("count", "collect", "count")
+    graft.core.CacheScope.releaseAll()
+  }
 }

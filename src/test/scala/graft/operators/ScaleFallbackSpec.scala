@@ -94,4 +94,60 @@ class ScaleFallbackSpec extends SparkSpec {
     val forced = withForcedFallbacks(run())
     forced shouldBe fast
   }
+
+  // ---- the shared cluster tail, per removal flavor: the driver regime
+  // (producer bound or one pair count → driver union-find, broadcast
+  // loser anti-join), the forced distributed CC, and the driver regime
+  // with a zero broadcast ceiling (shuffle loser anti-join) keep the
+  // same survivors
+
+  /** Broadcast ceiling 0 with the default driver ceiling, for flavors
+    * whose loser ceiling is the thread's broadcastMaxPairs.
+    */
+  private def withShuffleLosers[T](body: => T): T =
+    Dedup.withGuardThresholds(0L, Dedup.defaultDriverMaxPairs)(body)
+
+  test("cluster tail regimes agree: simhash removal") {
+    def run(losersMax: Long = Dedup.broadcastMaxPairs): Array[Long] =
+      Dedup.dropSimhashNearDuplicates(docs, "doc_id", "text",
+        losersBroadcastMax = losersMax)
+        .select("doc_id").as[Long].collect().sorted
+    val fast = run()
+    withForcedFallbacks(run()) shouldBe fast
+    run(losersMax = 0L) shouldBe fast
+    fast.length should be < 500 // some near-dups actually dropped
+  }
+
+  test("cluster tail regimes agree: embedding removal") {
+    // planted clusters: exact copies (1000+i of i) and a perturbed copy
+    // (2000+i) of each, over unrelated random vectors
+    val dim = 16
+    val rnd = new scala.util.Random(11)
+    val base = (0L until 200L).map(i => i -> Array.fill(dim)(rnd.nextGaussian().toFloat))
+    val planted = base.take(20).flatMap { case (i, v) =>
+      Seq(1000L + i -> v.clone(), 2000L + i -> v.map(x => x + 0.001f)) }
+    val batch = (base ++ planted).toDF("vec_id", "embedding")
+    val corpus = (0L until 50L)
+      .map(i => (5000L + i) -> Array.fill(dim)(rnd.nextGaussian().toFloat))
+      .toDF("vec_id", "embedding")
+    val store = Similarity.embeddingBucketKeys(
+      corpus, "vec_id", "embedding", planes = 4, tables = 8, dim = dim)
+    def run(): Array[Long] = Similarity.dropNearCorpusEmbeddings(
+      batch, "vec_id", "embedding", store, corpus,
+      threshold = 0.99, planes = 4, tables = 8, dim = dim)
+      .select("vec_id").as[Long].collect().sorted
+    val fast = run()
+    withForcedFallbacks(run()) shouldBe fast
+    withShuffleLosers(run()) shouldBe fast
+    fast shouldBe (0L until 200L).toArray // every planted copy dropped
+  }
+
+  test("cluster tail regimes agree: tfidf removal") {
+    def run(): Array[Long] = Tfidf.dropNearDuplicates(docs, "doc_id", "text")
+      .select("doc_id").as[Long].collect().sorted
+    val fast = run()
+    withForcedFallbacks(run()) shouldBe fast
+    withShuffleLosers(run()) shouldBe fast
+    fast.length should be < 500 // some near-dups actually dropped
+  }
 }

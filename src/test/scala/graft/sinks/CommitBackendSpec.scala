@@ -89,6 +89,24 @@ class CommitBackendSpec extends SparkSpec {
     else spark.table(r.location).count() shouldBe 1
   }
 
+  test("catalog commit evaluates the size estimate only when it degrades") {
+    var evaluated = 0
+    def estimate: Option[Long] = { evaluated += 1; Some(1000L) }
+    // a catalog table sizes its own files: the estimate never runs
+    val ok = CatalogTableBackend("spark_catalog", "default").commit(data,
+      "/unused", contract.copy(name = "commit_lazy_estimate"), Nil,
+      Map.empty, 150, estimate)
+    ok.backend shouldBe "catalog:spark_catalog"
+    evaluated shouldBe 0
+    // degraded to parquet: the Parquet write reads it exactly once
+    val out = Files.createTempDirectory("degrade-est-").toString + "/t"
+    val degraded = CatalogTableBackend("no_such_catalog", "ns").commit(data,
+      out, contract, Nil, Map.empty, 150, estimate)
+    degraded.backend shouldBe "parquet_only"
+    evaluated shouldBe 1
+    spark.read.parquet(out).count() shouldBe 2
+  }
+
   test("forTarget picks the catalog backend only when configured") {
     CommitBackend.forTarget(spark, Map.empty) shouldBe ParquetOnly
     CommitBackend.forTarget(spark,

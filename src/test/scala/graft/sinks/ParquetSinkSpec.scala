@@ -21,6 +21,83 @@ class ParquetSinkSpec extends SparkSpec {
       .exists(_.startsWith(".graft_sizing_")) shouldBe false
   }
 
+  test("sizing: one head-partition task, no shuffle, no recompile, bytes/row of the sample file") {
+    val sampleRows = 1000
+    // identical rows, so any sample writes the same bytes; a random pad
+    // keeps the file well above one byte per row
+    val pad = new scala.util.Random(7).alphanumeric.take(4000).mkString
+    // 8 partitions of 1500 rows: the first alone covers the sample
+    val df = spark.range(0L, 12000L, 1L, 8).select(lit(pad).as("pad"))
+    val root = Files.createTempDirectory("sink-size-")
+    val out = root.toString + "/t"
+
+    val group = s"sizing-spec-${java.util.UUID.randomUUID()}"
+    val stageTasks = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
+    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onStageSubmitted(
+          e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group)
+          stageTasks.put(e.stageInfo.stageId, e.stageInfo.numTasks)
+      override def onTaskEnd(
+          t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (stageTasks.containsKey(t.stageId) && t.taskMetrics != null)
+          shuffleBytes.addAndGet(t.taskMetrics.shuffleWriteMetrics.bytesWritten)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val est =
+      try {
+        spark.sparkContext.setJobGroup(group, "sizing spec")
+        try ParquetSink.estimateMaxRecordsPerFile(df, out, 150, sampleRows)
+        finally spark.sparkContext.clearJobGroup()
+      } finally {
+        // a marker job after the sizing: once its start is seen, every
+        // sizing event before it has been delivered (one ordered queue)
+        val seen = new java.util.concurrent.CountDownLatch(1)
+        val marker = new org.apache.spark.scheduler.SparkListener {
+          override def onJobStart(
+              e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+            if (e.properties != null &&
+                e.properties.getProperty("spark.jobGroup.id") == s"$group-end")
+              seen.countDown()
+        }
+        spark.sparkContext.addSparkListener(marker)
+        spark.sparkContext.setJobGroup(s"$group-end", "sizing spec marker")
+        try spark.sparkContext.parallelize(Seq(1), 1).count()
+        finally spark.sparkContext.clearJobGroup()
+        seen.await(30, java.util.concurrent.TimeUnit.SECONDS)
+        spark.sparkContext.removeSparkListener(marker)
+        spark.sparkContext.removeSparkListener(listener)
+      }
+    import scala.jdk.CollectionConverters._
+    val tasks = stageTasks.values().asScala.toSeq
+    // one stage of one task: the head scan reads the first split only,
+    // and the driver writes the sample file without a Spark job
+    tasks shouldBe Seq(1)
+    shuffleBytes.get() shouldBe 0L
+
+    // a second call compiles no new classes (no numbered limit counter)
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics
+      .METRIC_COMPILATION_TIME
+    val before = compiles.getCount
+    ParquetSink.estimateMaxRecordsPerFile(df, out, 150, sampleRows) shouldBe est
+    compiles.getCount - before shouldBe 0L
+
+    // nothing left behind next to the output
+    root.toFile.list().filter(_.startsWith(".graft_sizing_")) shouldBe empty
+
+    // the estimate is the size target over the sample file's bytes/row
+    val sampleDir = root.toString + "/sample"
+    spark.range(sampleRows.toLong).select(lit(pad).as("pad"))
+      .coalesce(1).write.parquet(sampleDir)
+    val bytes = new java.io.File(sampleDir).listFiles()
+      .filter(_.getName.endsWith(".parquet")).map(_.length()).sum
+    val bytesPerRow = math.max(1L, bytes / sampleRows)
+    bytesPerRow should be > 1L
+    est shouldBe 150L * 1024L * 1024L / bytesPerRow
+  }
+
   test("empty frame: estimate 0 = unlimited, write still succeeds") {
     val df = Seq.empty[(Long, String)].toDF("id", "pad")
     val out = Files.createTempDirectory("sink-empty-").toString + "/t"

@@ -85,4 +85,23 @@ class FloorRefreshSpec extends AnyFunSuite with Matchers {
     withClue(out) { rc should not be 0 }
     java.nio.file.Files.readString(floor) shouldBe before
   }
+
+  test("refresh verb: reads pretty-printed artifacts; the default note is replaced, not chained") {
+    assume(havePython, "python3 available")
+    val dir = java.nio.file.Files.createTempDirectory("floor-spec-")
+    val floor = dir.resolve("floor.json")
+    write(floor,
+      """{"floors": {"a": 2.0}, "sf": "sf0.1", "source": "s", "what": "w"}""")
+    val art = dir.resolve("art.json")
+    write(art, "{\n \"queries\": {\"a\": 1.0},\n \"sf\": \"/data/sf0.1\"\n}\n")
+    def source(): String = mapper.readTree(floor.toFile).get("source").asText()
+    val (rc, out) = run(Seq(floor.toString, art.toString))
+    withClue(out) { rc shouldBe 0 }
+    mapper.readTree(floor.toFile).get("floors").get("a").asDouble() shouldBe 1.0
+    val first = source()
+    first should not include "s + "
+    val (rc2, out2) = run(Seq(floor.toString, art.toString))
+    withClue(out2) { rc2 shouldBe 0 }
+    source() shouldBe first
+  }
 }

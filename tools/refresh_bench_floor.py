@@ -29,12 +29,19 @@ import sys
 
 
 def load_artifact(path):
-    """First JSON object line of a bench artifact (full or compact)."""
+    """The JSON object that opens on the first line starting with "{" —
+    a bench artifact's one-line result (full or compact), or a
+    pretty-printed object spanning the rest of the file."""
     with open(path, encoding="utf-8") as f:
-        for line in f:
-            line = line.strip()
-            if line.startswith("{"):
-                return json.loads(line)
+        text = f.read()
+    start = 0
+    for line in text.splitlines(keepends=True):
+        if line.lstrip().startswith("{"):
+            try:
+                return json.JSONDecoder().raw_decode(text, start + line.index("{"))[0]
+            except json.JSONDecodeError as e:
+                raise SystemExit(f"{path}: incomplete JSON object: {e}")
+        start += len(line)
     raise SystemExit(f"{path}: no JSON object line found")
 
 
@@ -93,9 +100,11 @@ def main(argv):
     floor_doc = json.loads(current_text)
     artifacts = [(p, load_artifact(p)) for p in artifact_paths]
     if source_note is None:
-        source_note = (floor_doc.get("source", "") + " + " +
-                       " + ".join(os.path.basename(p) for p in artifact_paths)
-                       + " (elementwise min, refresh_bench_floor.py)")
+        # replaces the previous note: the floors already carry the older
+        # artifacts' minima, so chaining notes would only grow the file
+        source_note = (" + ".join(os.path.basename(p) for p in artifact_paths)
+                       + " (elementwise min over the previous floors, "
+                       "refresh_bench_floor.py)")
     out, lowered, added = merge(floor_doc, artifacts, source_note)
     text = render(out)
     if check:
