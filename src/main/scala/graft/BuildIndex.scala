@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.config.Yaml
-import graft.operators.{Codec, LanguageModel, QualityModel, Sampling,
+import graft.operators.{Coarse, Codec, LanguageModel, QualityModel, Sampling,
   Search, Similarity, Tfidf}
 
 /** Config-driven index/fit builds — the job-surface half of the
@@ -410,10 +410,6 @@ object BuildIndex {
     }
 
     val raw: Option[String] = kind match {
-      case "lsh" =>
-        Similarity.writeLshBuckets(input, idCol, vecCol, store,
-          planes = intOpt("planes").getOrElse(6), dim = dim)
-        None
       case "embedding_buckets" =>
         // the near-dup key store is append-only by contract — a
         // rebuild is a new path, not an overwrite
@@ -422,14 +418,18 @@ object BuildIndex {
           tables = intOpt("tables").getOrElse(8), dim = dim)
         None
       case _ =>
-        // one codec selection + one write: the codec carries the store's
-        // encodings, `_meta` kind/keys and `_train` artifacts
-        val coarse =
-          if (kind == "sq" || kind == "binary") None
-          else Some(Similarity.seedCentroids(input, idCol, vecCol,
-            intOpt("num_lists").getOrElse(16)))
+        // one coarse and codec selection + one write: the coarse stage
+        // carries the list layout, the codec the store's encodings; both
+        // carry `_meta` keys and `_train` artifacts. The probe width is
+        // query-time: a write reads only the geometry.
+        val coarse = kind match {
+          case "sq" | "binary" => Coarse.Scan
+          case "lsh" => Coarse.Lsh(intOpt("planes").getOrElse(6), dim, 1)
+          case _ => Coarse.Ivf(Similarity.seedCentroids(input, idCol, vecCol,
+            intOpt("num_lists").getOrElse(16)), 1)
+        }
         val codec: Codec = kind match {
-          case "ivf" => Codec.Flat
+          case "ivf" | "lsh" => Codec.Flat
           case "sq" | "ivfsq" =>
             val (mins, maxs) = sqGrid()
             Codec.Sq8(mins, maxs)
@@ -453,10 +453,10 @@ object BuildIndex {
         Similarity.writeTrain(spark, store, codec, coarse)
         // the optional raw-vector refine twin, same centroids: the other
         // half of the persisted two-stage retrieval pair (raw_store is
-        // refused up front for kinds without one)
-        for (cs <- coarse; rp <- Yaml.str(c, "raw_store")) yield {
-          Similarity.writeStore(input, idCol, vecCol, Codec.Flat, Some(cs), rp)
-          Similarity.writeTrain(spark, rp, Codec.Flat, Some(cs))
+        // refused up front for kinds without one, flat ones included)
+        Yaml.str(c, "raw_store").map { rp =>
+          Similarity.writeStore(input, idCol, vecCol, Codec.Flat, coarse, rp)
+          Similarity.writeTrain(spark, rp, Codec.Flat, coarse)
           rp
         }
     }

@@ -838,7 +838,7 @@ object Queries {
     */
   def annLshMultiprobeTopK(spark: SparkSession, dir: String): DataFrame = {
     val e = t(spark, dir, "embeddings")
-    graft.operators.Similarity.lshTopKMultiProbe(
+    graft.operators.Similarity.lshTopK(
       e, e.filter(col("vec_id") < 10), "vec_id", "embedding",
       k = 5, planes = 4, dim = 64, probes = 3)
   }
@@ -946,7 +946,7 @@ object Queries {
     */
   def annDecontaminateMultiprobe(spark: SparkSession, dir: String): DataFrame = {
     val e = t(spark, dir, "embeddings").select("vec_id", "embedding")
-    graft.operators.Decontaminate.dropNearBenchmarkEmbeddingsMultiProbe(
+    graft.operators.Decontaminate.dropNearBenchmarkEmbeddings(
       e.filter(col("vec_id") >= 25), e.filter(col("vec_id") < 25),
       "vec_id", "embedding", threshold = 0.4, planes = 4, tables = 4,
       probes = 2)

@@ -89,14 +89,14 @@ object Recall {
           emb, queries, "vec_id", "embedding", k, planes = planes, dim = 64))
       }).toMap
       // multi-probe: the fix for the single-table cliff at 8 planes —
-      // probes=1 must coincide with lshTopK (spec-pinned), and recall
+      // probes=1 is the single-bucket probe (spec-pinned), and recall
       // should climb with the probe budget at fixed index cost
       val lshMp = (for {
         planes <- Seq(4, 8)
         probes <- Seq(1, 2, 4, 8) if probes <= planes
       } yield {
         s"lsh_multiprobe_planes${planes}_probes$probes" -> topkRecall(
-          Similarity.lshTopKMultiProbe(emb, queries, "vec_id", "embedding",
+          Similarity.lshTopK(emb, queries, "vec_id", "embedding",
             k, planes = planes, dim = 64, probes = probes))
       }).toMap
       val ivf = (for (nprobe <- Seq(2, 4, 8, 16)) yield {
@@ -341,7 +341,7 @@ object Recall {
     def deconRecall(tables: Int, probes: Int): Double = {
       if (nTrueHits == 0) return 1.0
       val kept = graft.operators.Decontaminate
-        .dropNearBenchmarkEmbeddingsMultiProbe(dCorpus, dBench,
+        .dropNearBenchmarkEmbeddings(dCorpus, dBench,
           "vec_id", "embedding", threshold = 0.4,
           planes = 4, tables = tables, dim = 64, probes = probes)
       val dropped = dCorpus.select("vec_id")

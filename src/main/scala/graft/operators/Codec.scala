@@ -4,13 +4,13 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** How one vector family is stored and scored — the codec half of
-  * [[Similarity]]'s IVF core. A codec owns every per-family decision:
-  * the corpus and query encodings, the pair score with its sort
-  * direction and null contract, the `_meta` kind strings and keys of
-  * its stores, and the `_train` artifacts a separate probing process
-  * needs. The core owns everything that is the same for all of them:
-  * list assignment, the list-partitioned store layout, probed-list
-  * pruning, the scoring tail and the raw-store refine.
+  * [[Similarity]]'s vector core ([[Coarse]] is the other half). A codec
+  * owns every per-family decision: the corpus and query encodings, the
+  * pair score with its sort direction and null contract, the `_meta`
+  * kind strings and keys of its stores, and the `_train` artifacts a
+  * separate probing process needs. The core owns everything that is
+  * the same for all of them: the list-partitioned store layout,
+  * probed-list pruning, the scoring tail and the raw-store refine.
   *
   * Column contract: the corpus payload ([[corpus]], named [[payload]])
   * is both what a store holds and what the score reads, so a stored
@@ -24,7 +24,7 @@ private[graft] sealed trait Codec {
   /** `_meta` kind of the codec's flat and list-partitioned stores. */
   def flatKind: String
   def ivfKind: String
-  /** Codec `_meta` keys; the coarse quantizer adds its own in front. */
+  /** Codec `_meta` keys; the coarse stage adds its own in front. */
   def metaKeys: Map[String, Any]
   def payload: Seq[String]
   def corpus(v: Column): Seq[Column]

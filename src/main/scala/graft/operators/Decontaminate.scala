@@ -118,13 +118,24 @@ object Decontaminate {
   /** SEMANTIC decontamination: drop corpus rows whose EMBEDDING is
     * within `threshold` cosine of any benchmark embedding — catches the
     * paraphrased/translated leakage the n-gram overlap above misses.
-    * Multi-table hyperplane LSH buckets both sides (a pair is a
-    * candidate when it shares a bucket in ANY table, recall
-    * 1 − (1 − (1−θ/π)^planes)^tables); the benchmark side is broadcast
-    * (small by definition), the benchmark vector rides the joined row so
-    * the exact-cosine verify is INLINE — the corpus is never shuffled
-    * and never scanned twice. A corpus row identical to a benchmark row
-    * drops, as decontamination semantics require.
+    * Multi-table hyperplane LSH buckets both sides through
+    * [[Similarity.bucketKeys]] (a pair is a candidate when it shares a
+    * bucket in ANY table, recall 1 − (1 − (1−θ/π)^planes)^tables); the
+    * benchmark side is broadcast (small by definition), the benchmark
+    * vector rides the joined row so the exact-cosine verify is INLINE —
+    * the corpus is never shuffled and never scanned twice. A corpus row
+    * identical to a benchmark row drops, as decontamination semantics
+    * require.
+    *
+    * Multi-probe (Lv et al. 2007, `probes > 1`): the corpus keeps
+    * exactly ONE key per (row, table) — the side whose hashing/explode
+    * volume matters at 100 TB — while each BENCHMARK vector also probes,
+    * per table, the `probes − 1` buckets reached by flipping its
+    * smallest-|margin| sign bits within that table. Table recall per
+    * pair rises toward the multi-probe union, so `tables` can shrink
+    * ~probes× at equal recall; probes multiply only the broadcast side
+    * (|benchmark|·tables·probes rows). Margins, flip order and the
+    * `probes = 1` single-key contract are [[Similarity.probeBuckets]]'.
     */
   def dropNearBenchmarkEmbeddings(
       corpus: DataFrame,
@@ -134,80 +145,17 @@ object Decontaminate {
       threshold: Double,
       planes: Int = 4,
       tables: Int = 8,
-      dim: Int = 64): DataFrame = {
-    import Similarity.{dotDouble, norm}
-    val allSigns = (0 until tables * planes).map(Similarity.planeSigns(_, dim))
-    def bucketed(df: DataFrame, id: String, v: String) =
-      df.select(col(idCol).as(id), col(vecCol).as(v))
-        .withColumn("__bits",
-          graft.functions.HyperplaneBits(col(v), allSigns, planes))
-        .select(col(id), col(v), posexplode(col("__bits")).as(Seq("t", "b")))
-        .select(col(id), col(v), concat_ws(":", col("t"), col("b")).as("bk"))
-    val c = bucketed(corpus, "cid", "cv").withColumn("cn", norm(col("cv")))
-    val bmk = bucketed(benchmark, "bid", "bv").withColumn("bn", norm(col("bv")))
-    val hits = c.join(broadcast(bmk), Seq("bk"))
-      .filter(Similarity.cosineOrNull(dotDouble(col("cv"), col("bv")),
-        col("cn"), col("bn")) >= threshold)
-      .select(col("cid").as(idCol))
-      .distinct()
-    corpus.join(hits, Seq(idCol), "left_anti")
-  }
-
-  /** MULTI-PROBE semantic decontamination (Lv et al. 2007 applied to the
-    * benchmark side): the corpus keeps exactly ONE bucket key per
-    * (row, table) — the side whose hashing/explode volume matters at
-    * 100 TB — while each BENCHMARK vector additionally probes, per
-    * table, the `probes − 1` buckets reached by flipping its
-    * smallest-|margin| sign bits within that table. Table-recall per
-    * pair rises from (1−θ/π)^planes toward the multi-probe union, so
-    * `tables` can shrink ~probes× at equal recall: probes multiply only
-    * the BROADCAST side (|benchmark|·tables·probes rows), the corpus
-    * plan is byte-for-byte the single-probe one.
-    *
-    * Determinism contract: per-table margins are the same sequential
-    * [[graft.functions.VecDot]] folds over the first `dim` elements the
-    * bucketing hashes; flip order within a table is (|margin| ASC,
-    * plane ASC); probe buckets are pairwise distinct per table.
-    * `probes = 1` is bit-identical to [[dropNearBenchmarkEmbeddings]].
-    */
-  def dropNearBenchmarkEmbeddingsMultiProbe(
-      corpus: DataFrame,
-      benchmark: DataFrame,
-      idCol: String,
-      vecCol: String,
-      threshold: Double,
-      planes: Int = 4,
-      tables: Int = 4,
       dim: Int = 64,
-      probes: Int = 2): DataFrame = {
-    require(probes >= 1 && probes <= planes,
-      s"probes must be in [1, planes=$planes]: $probes")
-    import Similarity.{dotDouble, norm, planeSigns}
-    val allSigns = (0 until tables * planes).map(planeSigns(_, dim))
-    val c = corpus.select(col(idCol).as("cid"), col(vecCol).as("cv"))
-      .withColumn("__bits",
-        graft.functions.HyperplaneBits(col("cv"), allSigns, planes))
-      .select(col("cid"), col("cv"), posexplode(col("__bits")).as(Seq("t", "b")))
-      .select(col("cid"), col("cv"), concat_ws(":", col("t"), col("b")).as("bk"))
-      .withColumn("cn", norm(col("cv")))
-    // the one shared margin/flip definition — Similarity.probeBuckets —
-    // so this site can never drift from the batch-dedup probe sites
-    val perTable = (0 until tables).map { t =>
-      struct(lit(t).as("t"),
-        Similarity.probeBuckets(col("bv"), element_at(col("__bits"), t + 1),
-          t * planes, planes, dim, probes).as("bs"))
+      probes: Int = 1): DataFrame = {
+    import Similarity.{bucketKeys, dotDouble, norm}
+    def keyed(df: DataFrame, side: String, sideProbes: Int) = {
+      val cols = Seq(s"${side}id", s"${side}v", s"${side}n")
+      bucketKeys(df.select(col(idCol).as(cols(0)), col(vecCol).as(cols(1)),
+        norm(col(vecCol)).as(cols(2))), cols(1), cols, planes, tables, dim,
+        sideProbes)
     }
-    val bmk = benchmark.select(col(idCol).as("bid"), col(vecCol).as("bv"))
-      .withColumn("__bits",
-        graft.functions.HyperplaneBits(col("bv"), allSigns, planes))
-      .withColumn("bn", norm(col("bv")))
-      .select(col("bid"), col("bv"), col("bn"),
-        explode(array(perTable: _*)).as("tb"))
-      .select(col("bid"), col("bv"), col("bn"), col("tb.t").as("t"),
-        explode(col("tb.bs")).as("b"))
-      .select(col("bid"), col("bv"), col("bn"),
-        concat_ws(":", col("t"), col("b")).as("bk"))
-    val hits = c.join(broadcast(bmk), Seq("bk"))
+    val bmk = keyed(benchmark, "b", probes)
+    val hits = keyed(corpus, "c", 1).join(broadcast(bmk), Seq("bk"))
       .filter(Similarity.cosineOrNull(dotDouble(col("cv"), col("bv")),
         col("cn"), col("bn")) >= threshold)
       .select(col("cid").as(idCol))

@@ -1546,6 +1546,50 @@ object Dedup {
 
   // ------------------------------------------------------ blocked Jaccard
 
+  /** Blocked shingle postings (blk, id, n, s), persisted — the shared
+    * first stage of [[ngramJaccardPairs]] and [[containmentPairs]]: one
+    * row per (document, distinct shingle), `n` the document's shingle
+    * count, `s` the shingle's 8-byte xxhash64.
+    *
+    * Postings are keyed by the hash, not the string — the self-join
+    * shuffles fixed-width keys (collision odds ~|vocab|²/2^64). The hash
+    * runs AFTER the explode: xxhash64 as a plain column stays in codegen;
+    * inside a transform() lambda it is interpreted per element.
+    *
+    * Stop-shingle cap: a shingle shared by d documents contributes d²
+    * pre-aggregate pairs, so one boilerplate shingle with df=10⁵ would
+    * emit 10¹⁰ rows. Shingles with df > maxShingleDf within a block are
+    * dropped from the postings (classic prefix/stop-token filter).
+    * RECALL TRADE: a pair whose overlap is mostly stop-shingles scores
+    * lower and can fall below the threshold; at j ≥ 0.9 thresholds
+    * genuine near-dups share many shingles and survive. Set
+    * maxShingleDf ≤ 0 to disable. Hot keys are found with a
+    * partial-aggregated groupBy (shuffles one narrow row per distinct
+    * shingle, not the postings) and removed via broadcast anti-join —
+    * hot shingles are few by definition (each needs > maxShingleDf
+    * documents), so the broadcast stays tiny.
+    */
+  private def blockedPostings(df: DataFrame, idCol: String, textCol: String,
+      blockCol: String, shingleN: Int, maxShingleDf: Int): DataFrame = {
+    val sh = df.select(col(idCol).as("id"), col(blockCol).as("blk"),
+      wordShingles(col(textCol), shingleN).as("sh"))
+      .filter(size(col("sh")) > 0)
+      .withColumn("n", size(col("sh")))
+    val raw = sh.select(col("blk"), col("id"), col("n"),
+      explode(col("sh")).as("sstr"))
+      .select(col("blk"), col("id"), col("n"), xxhash64(col("sstr")).as("s"))
+    val capped =
+      if (maxShingleDf <= 0) raw
+      else {
+        val hot = raw.groupBy("blk", "s")
+          .agg(count(lit(1)).as("__df"))
+          .filter(col("__df") > maxShingleDf)
+          .select("blk", "s")
+        raw.join(broadcast(hot), Seq("blk", "s"), "left_anti")
+      }
+    CacheScope.persist(capped) // both sides of the postings self-join
+  }
+
   /** Blocked n-gram Jaccard: all pairs WITHIN a blocking key (e.g. lang),
     * never across the whole corpus. The join shuffles on the block key;
     * block sizes bound the quadratic cost, so pick keys with bounded
@@ -1566,39 +1610,10 @@ object Dedup {
     // all-pairs intersect), but cost is Σ_shingle df² instead of
     // Σ_block |block|²·|sh| — and every stage is a plain shuffle, so it
     // scales horizontally. Size-ratio prune (j ≥ t ⇒ t ≤ |A|/|B| ≤ 1/t)
-    // cuts the pair stream before the aggregate.
-    val sh = df.select(col(idCol).as("id"), col(blockCol).as("blk"),
-      wordShingles(col(textCol), shingleN).as("sh"))
-      .filter(size(col("sh")) > 0)
-      .withColumn("n", size(col("sh")))
-    // postings keyed by the 8-byte shingle hash, not the string — the
-    // join shuffles fixed-width keys (collision odds ~|vocab|²/2^64).
-    // Stop-shingle cap: a shingle shared by d documents contributes d²
-    // pre-aggregate pairs, so one boilerplate shingle with df=10⁵ would
-    // emit 10¹⁰ rows. Shingles with df > maxShingleDf are dropped from
-    // the postings (classic prefix/stop-token filter). RECALL TRADE: a
-    // pair whose overlap is mostly stop-shingles scores lower and can
-    // fall below the threshold; at j ≥ 0.9 thresholds genuine near-dups
-    // share many shingles and survive. Set maxShingleDf ≤ 0 to disable.
-    // Hot keys are found with a partial-aggregated groupBy (shuffles one
-    // narrow row per distinct shingle, not the postings) and removed via
-    // broadcast anti-join — hot shingles are few by definition (each
-    // needs > maxShingleDf documents), so the broadcast stays tiny.
-    // hash AFTER the explode — xxhash64 as a plain column stays in
-    // codegen; inside a transform() lambda it is interpreted per element
-    val raw = sh.select(col("blk"), col("id"), col("n"),
-      explode(col("sh")).as("sstr"))
-      .select(col("blk"), col("id"), col("n"), xxhash64(col("sstr")).as("s"))
-    val capped =
-      if (maxShingleDf <= 0) raw
-      else {
-        val hot = raw.groupBy("blk", "s")
-          .agg(count(lit(1)).as("__df"))
-          .filter(col("__df") > maxShingleDf)
-          .select("blk", "s")
-        raw.join(broadcast(hot), Seq("blk", "s"), "left_anti")
-      }
-    val posts = CacheScope.persist(capped) // both sides of the postings self-join
+    // cuts the pair stream before the aggregate. Postings, hashing and
+    // the stop-shingle cap: see blockedPostings.
+    val posts = blockedPostings(df, idCol, textCol, blockCol, shingleN,
+      maxShingleDf)
     posts.as("x")
       .join(posts.as("y"),
         col("x.s") === col("y.s") && col("x.blk") === col("y.blk") &&
@@ -1645,23 +1660,8 @@ object Dedup {
       threshold: Double = 0.8,
       maxShingleDf: Int = 10000
   ): DataFrame = {
-    val sh = df.select(col(idCol).as("id"), col(blockCol).as("blk"),
-      wordShingles(col(textCol), shingleN).as("sh"))
-      .filter(size(col("sh")) > 0)
-      .withColumn("n", size(col("sh")))
-    val raw = sh.select(col("blk"), col("id"), col("n"),
-      explode(col("sh")).as("sstr"))
-      .select(col("blk"), col("id"), col("n"), xxhash64(col("sstr")).as("s"))
-    val capped =
-      if (maxShingleDf <= 0) raw
-      else {
-        val hot = raw.groupBy("blk", "s")
-          .agg(count(lit(1)).as("__df"))
-          .filter(col("__df") > maxShingleDf)
-          .select("blk", "s")
-        raw.join(broadcast(hot), Seq("blk", "s"), "left_anti")
-      }
-    val posts = CacheScope.persist(capped)
+    val posts = blockedPostings(df, idCol, textCol, blockCol, shingleN,
+      maxShingleDf)
     posts.as("x")
       .join(posts.as("y"),
         col("x.s") === col("y.s") && col("x.blk") === col("y.blk") &&

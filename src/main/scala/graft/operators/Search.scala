@@ -473,13 +473,6 @@ object Search {
       .write.mode("append").parquet(s"$storePath/_meta")
   }
 
-  /** BM25 top-k across ALL segments of an appendable index. The scan is
-    * still partition-pruned to the query terms' buckets (within every
-    * segment partition); corpus stats are the sum of the per-segment
-    * `_meta` rows; df comes from a probe-time aggregate over the pruned
-    * postings (≤ |terms| result rows, broadcast back). Results are
-    * identical to a monolithic index over the same documents.
-    */
   // ------------------------------------------ crash-safe segment compaction
 
   private def storeFs(spark: SparkSession, storePath: String) =
@@ -502,14 +495,6 @@ object Search {
       throw new IllegalStateException(
         s"rename failed: $src -> $dst (store left in its pre-step state)")
 
-  /** The readable `_meta` location, tolerating a compaction that died
-    * mid-flip: prefer the live `_meta`; with it absent, roll FORWARD to
-    * a COMPLETE `_meta_next` (its merged segment was fully renamed in
-    * before the flip began — `_SUCCESS` is the completeness witness) or
-    * BACK to the preserved `_meta_prev`. Read-only — probes must keep
-    * answering without write permission; writers heal the store via
-    * [[repairMetaFlip]] instead.
-    */
   /** Segment count through the same crash-tolerant meta view probes
     * use — for callers (the `kind: compact` verb's report) that need
     * the pre-merge count without assuming the live `_meta` survived the
@@ -520,6 +505,14 @@ object Search {
       storePath: String): Long =
     spark.read.parquet(segmentMetaPath(spark, storePath)).count()
 
+  /** The readable `_meta` location, tolerating a compaction that died
+    * mid-flip: prefer the live `_meta`; with it absent, roll FORWARD to
+    * a COMPLETE `_meta_next` (its merged segment was fully renamed in
+    * before the flip began — `_SUCCESS` is the completeness witness) or
+    * BACK to the preserved `_meta_prev`. Read-only — probes must keep
+    * answering without write permission; writers heal the store via
+    * [[repairMetaFlip]] instead.
+    */
   private def segmentMetaPath(spark: SparkSession, storePath: String): String = {
     val fs = storeFs(spark, storePath)
     if (fs.exists(hp(s"$storePath/_meta"))) s"$storePath/_meta"
@@ -724,6 +717,13 @@ object Search {
     try body finally debrisOverride.set(prev)
   }
 
+  /** BM25 top-k across ALL segments of an appendable index. The scan is
+    * still partition-pruned to the query terms' buckets (within every
+    * segment partition); corpus stats are the sum of the per-segment
+    * `_meta` rows; df comes from a probe-time aggregate over the pruned
+    * postings (≤ |terms| result rows, broadcast back). Results are
+    * identical to a monolithic index over the same documents.
+    */
   def bm25TopKSegmented(spark: SparkSession, storePath: String,
       queries: DataFrame, idCol: String, textCol: String, k: Int,
       k1: Double = DefaultK1, b: Double = DefaultB,

@@ -7,24 +7,30 @@ import org.apache.spark.sql.functions._
 /** Similarity search over embedding columns (array<float>).
   *
   * Two paths, mirroring what a 100 TB training-data pipeline needs:
-  *  - broadcast-query top-k scans — exact brute force and the
-  *    compressed/IVF indexes; the corpus is streamed, never shuffled, so
-  *    it scales with executors for any corpus size (the query set must
-  *    stay broadcast-small).
-  *  - random-hyperplane LSH bucketing — the scale path for large query
-  *    sets: one shuffle on the bucket key, bucket-local top-k.
+  *  - broadcast-query top-k scans — exact brute force, the compressed
+  *    indexes and the IVF / LSH coarse stages; the corpus is streamed,
+  *    never shuffled, so it scales with executors for any corpus size
+  *    (the query set must stay broadcast-small).
+  *  - multi-table hyperplane-LSH bucket keys ([[bucketKeys]]) — the
+  *    scale path for all-pairs work (near-dup self-joins, incremental
+  *    store joins, semantic decontamination): one shuffle on the bucket
+  *    key, bucket-local verify.
   *
   * Where the decisions live: every ranked vector family (raw, SQ8, PQ,
-  * PQ-residual, sign bits; flat or IVF; in memory or from a store) runs
-  * through ONE IVF core in this file (the "IVF core" section: corpus
-  * encode, probe builder, scoring tail, list-partitioned store write and
-  * append, stage-from-store, raw-store refine). Per-family choices —
-  * encodings, score column and direction, null contract, `_meta` kind
-  * strings and keys, `_train` artifacts — live in [[Codec]]
-  * (Codec.scala). The store layout — (id, payload) parquet rows,
-  * partitioned by `list` under a coarse quantizer, `_meta_params`
-  * sidecar via [[graft.core.StoreMeta]], `_train/` artifacts — is
-  * decided once, in [[writeStore]] / [[stageFromStore]].
+  * PQ-residual, sign bits; flat, IVF or LSH; in memory or from a store)
+  * runs through ONE vector core in this file (the "vector core"
+  * section: corpus encode, probe builder, scoring tail, partitioned
+  * store write and append, stage-from-store, raw-store refine).
+  * Per-family choices — encodings, score column and direction, null
+  * contract, `_meta` kind strings and keys, `_train` artifacts — live in
+  * [[Codec]] (Codec.scala). Coarse choices — which list a corpus row
+  * lives in, which lists a query probes and in what order, the coarse
+  * `_meta` kind and keys, on-disk column names — live in [[Coarse]]
+  * (Coarse.scala: a flat scan, IVF lists or LSH buckets). The store
+  * layout — (id, payload) parquet rows, partitioned by the coarse list
+  * column, `_meta_params` sidecar via [[graft.core.StoreMeta]], `_train/`
+  * artifacts — is decided once, in [[writeStore]] / [[stageFromStore]].
+  * Every `t:b` multi-table bucket key is built by [[bucketKeys]].
   *
   * All arithmetic accumulates sequentially in double (floats widened per
   * element) so results are bit-reproducible across runs and engines.
@@ -66,7 +72,7 @@ object Similarity {
     * corpus, rank by cosine desc with id tiebreak. Self-pairs excluded.
     * Norms are precomputed per row (not per pair) — same bits, |c|+|q|
     * instead of |c|×|q| norm evaluations. The [[Codec.Flat]] codec with
-    * no coarse quantizer. Returns (query_id, neighbor_id, rank, sim).
+    * no coarse stage. Returns (query_id, neighbor_id, rank, sim).
     */
   def bruteForceTopK(
       corpus: DataFrame,
@@ -75,7 +81,7 @@ object Similarity {
       vecCol: String,
       k: Int
   ): DataFrame =
-    codecTopK(corpus, queries, idCol, vecCol, k, Codec.Flat, None, 0)
+    codecTopK(corpus, queries, idCol, vecCol, k, Codec.Flat, Coarse.Scan)
 
   /** The per-query top-k every ranked path here ends in: `score` in the
     * given direction, ties to the lower `neighbor_id`; returns
@@ -117,10 +123,6 @@ object Similarity {
     element_at(graft.functions.HyperplaneBits(vec,
       (0 until planes).map(planeSigns(_, dim)), planes), 1)
 
-  def withLshBucket(df: DataFrame, vecCol: String, planes: Int, dim: Int,
-      outCol: String = "bucket"): DataFrame =
-    df.withColumn(outCol, lshBucket(col(vecCol), planes, dim))
-
   /** Embedding-cosine near-duplicate pairs via MULTI-TABLE hyperplane
     * LSH: `tables` independent bucketings of `planes` sign bits each; a
     * pair is a candidate when it shares a bucket in ANY table
@@ -150,7 +152,8 @@ object Similarity {
     // is what gets persisted — capHotKeys reads its input twice (df
     // count + anti-join probe), so persisting only the capped output
     // would run the HyperplaneBits kernel pass twice.
-    val raw = CacheScope.persist(bucketTable(base, planes, tables, dim))
+    val raw = CacheScope.persist(
+      bucketKeys(base, "v", Seq("id"), planes, tables, dim))
     val bucketed =
       if (maxBucketDf > 0)
         CacheScope.persist(Dedup.capHotKeys(raw, "bk", maxBucketDf))
@@ -213,25 +216,14 @@ object Similarity {
     plans.head
   }
 
-  /** (id, bk) multi-table MULTI-PROBE bucket keys of a (id, v) frame:
-    * per table, the kernel bucket plus the `probes − 1` buckets reached
-    * by flipping that table's smallest-|margin| sign bits (ties → lower
-    * plane) — the query/batch-side key set that lets a single-key store
-    * run `~probes×` fewer tables at equal recall (Lv et al. 2007).
-    * Margins are the same sequential [[graft.functions.VecDot]] folds
-    * over the first `dim` elements the bucketing hashes; probe buckets
-    * are pairwise distinct per table. `probes = 1` emits exactly the
-    * single-probe keys.
-    */
   /** The multi-probe bucket set of one vector against one hash table
     * (Lv et al. 2007): the kernel bucket `b0` plus the `probes − 1`
     * buckets reached by flipping the sign bits whose hyperplane margin
     * |v·plane| is smallest — an array<long> of pairwise-distinct
     * buckets. THE single definition of the margin/flip contract, shared
-    * by every probe site ([[multiProbeKeys]], [[lshTopKFromStore]],
-    * [[lshTopKMultiProbe]],
-    * [[Decontaminate.dropNearBenchmarkEmbeddingsMultiProbe]]) so a
-    * tie-break or margin change can never drift between them.
+    * by every probe site ([[bucketKeys]] and the LSH coarse stage,
+    * [[Coarse.Lsh]]) so a tie-break or margin change can never drift
+    * between them.
     *
     * Determinism contract: margins are sequential [[VecDot]] folds of
     * `slice(vec, 1, dim)` — the same prefix [[HyperplaneBits]] buckets
@@ -240,55 +232,56 @@ object Similarity {
     * flip order is (|margin| ASC, plane ASC); pow(2, p) is exact for
     * p < 53. A degenerate vector (null / shorter than dim / null
     * element) has null margins; those are filtered, so it probes only
-    * its kernel bucket — the single-probe contract. `probes = 1` emits
-    * exactly `array(b0)`.
+    * its kernel bucket — the single-probe contract. `probes = 1` is
+    * exactly `array(b0)`, with no margin computed.
     */
   private[graft] def probeBuckets(vec: Column, b0: Column, seedOffset: Int,
-      planes: Int, dim: Int, probes: Int): Column = {
-    val margins = array((0 until planes).map { p =>
-      struct(abs(dotDouble(slice(vec, 1, dim),
-        lit(planeSigns(seedOffset + p, dim)))).as("a"), lit(p).as("p"))
-    }: _*)
-    val flips = slice(
-      array_sort(filter(margins, x => x.getField("a").isNotNull)),
-      1, probes - 1)
-    concat(array(b0), transform(flips, x => b0.bitwiseXOR(
-      pow(lit(2.0), x.getField("p")).cast("long"))))
-  }
+      planes: Int, dim: Int, probes: Int): Column =
+    if (probes == 1) array(b0)
+    else {
+      val margins = array((0 until planes).map { p =>
+        struct(abs(dotDouble(slice(vec, 1, dim),
+          lit(planeSigns(seedOffset + p, dim)))).as("a"), lit(p).as("p"))
+      }: _*)
+      val flips = slice(
+        array_sort(filter(margins, x => x.getField("a").isNotNull)),
+        1, probes - 1)
+      concat(array(b0), transform(flips, x => b0.bitwiseXOR(
+        pow(lit(2.0), x.getField("p")).cast("long"))))
+    }
 
-  private[graft] def multiProbeKeys(base: DataFrame, planes: Int,
-      tables: Int, dim: Int, probes: Int): DataFrame = {
+  /** (carry…, bk) multi-table bucket keys of `df` — THE builder of every
+    * `t:b` key: near-dup self-joins, the embedding-bucket store, both
+    * sides of the incremental store join and of semantic
+    * decontamination. Bucket of table t uses plane seeds
+    * [t*planes, (t+1)*planes); ONE HyperplaneBits kernel call per row
+    * computes all tables×planes dots. With `probes = 1` each row gets
+    * one key per table (posexplode's position is the table index); with
+    * `probes > 1` each table also yields the row's `probes − 1`
+    * smallest-margin flips ([[probeBuckets]]), pairwise distinct per
+    * table — the query/batch-side key set that lets a single-key store
+    * run ~probes× fewer tables at equal recall.
+    */
+  private[graft] def bucketKeys(df: DataFrame, vecCol: String,
+      carry: Seq[String], planes: Int, tables: Int, dim: Int,
+      probes: Int = 1): DataFrame = {
     require(probes >= 1 && probes <= planes,
       s"probes must be in [1, planes=$planes]: $probes")
-    val allSigns = (0 until tables * planes).map(planeSigns(_, dim))
-    val perTable = (0 until tables).map { t =>
-      struct(lit(t).as("t"),
-        probeBuckets(col("v"), element_at(col("__bits"), t + 1),
-          t * planes, planes, dim, probes).as("bs"))
-    }
-    base
-      .withColumn("__bits",
-        graft.functions.HyperplaneBits(col("v"), allSigns, planes))
-      .select(col("id"), explode(array(perTable: _*)).as("tb"))
-      .select(col("id"), col("tb.t").as("t"), explode(col("tb.bs")).as("b"))
-      .select(col("id"), concat_ws(":", col("t"), col("b")).as("bk"))
-  }
-
-  /** (id, bk) multi-table bucket keys of a (id, v) frame — the shared
-    * first stage of every embedding near-dup pipeline. Bucket of table t
-    * uses plane seeds [t*planes, (t+1)*planes); ONE HyperplaneBits kernel
-    * call per row computes all tables×planes dots (the previous per-plane
-    * formulation ran 64 VecDot nodes per row), and posexplode's position
-    * is the table index.
-    */
-  private def bucketTable(base: DataFrame, planes: Int, tables: Int,
-      dim: Int): DataFrame = {
-    val allSigns = (0 until tables * planes).map(planeSigns(_, dim))
-    base
-      .withColumn("__bits",
-        graft.functions.HyperplaneBits(col("v"), allSigns, planes))
-      .select(col("id"), posexplode(col("__bits")).as(Seq("t", "b")))
-      .select(col("id"), concat_ws(":", col("t"), col("b")).as("bk"))
+    val kept = carry.map(col)
+    val bits = df.withColumn("__bits", graft.functions.HyperplaneBits(
+      col(vecCol), (0 until tables * planes).map(planeSigns(_, dim)), planes))
+    val tb =
+      if (probes == 1)
+        bits.select(kept :+ posexplode(col("__bits")).as(Seq("t", "b")): _*)
+      else bits
+        .select(kept :+ explode(array((0 until tables).map { t =>
+          struct(lit(t).as("t"), probeBuckets(col(vecCol),
+            element_at(col("__bits"), t + 1), t * planes, planes, dim,
+            probes).as("bs"))
+        }: _*)).as("tb"): _*)
+        .select(kept ++ Seq(col("tb.t").as("t"),
+          explode(col("tb.bs")).as("b")): _*)
+    tb.select(kept :+ concat_ws(":", col("t"), col("b")).as("bk"): _*)
   }
 
   // --------------------------------------- plan attribution (opt-in)
@@ -580,7 +573,7 @@ object Similarity {
   /** (−score, list) structs for every centroid — negated so `least` /
     * `array_sort` pick the BEST-cosine list with ties to the lower id.
     */
-  private def scoredListStructs(vec: Column,
+  private[operators] def scoredListStructs(vec: Column,
       centroids: Seq[Array[Double]]): Seq[Column] =
     centroids.zipWithIndex.map { case (c, i) =>
       struct((-centroidScore(vec, c)).as("s"), lit(i).as("l"))
@@ -591,17 +584,6 @@ object Similarity {
     */
   private def bestListStruct(cols: Seq[Column]): Column =
     if (cols.sizeIs == 1) cols.head else least(cols: _*)
-
-  /** The probed-list explosion of the IVF core's one probe builder
-    * ([[probeFrame]]): `vec`'s `nprobe` best-scored list structs,
-    * exploded to one row per (query row, probed list). Lists order by
-    * (−score, list id), the [[scoredListStructs]] struct order, the
-    * same tie-break as the corpus-side [[listAssignment]].
-    */
-  private def explodedProbe(vec: Column, centroids: Seq[Array[Double]],
-      nprobe: Int): Column =
-    explode(slice(array_sort(array(scoredListStructs(vec, centroids): _*)),
-      1, nprobe))
 
   /** Best-centroid list id as a plain map-side Column (ties to the lower
     * list) — the coarse-quantizer assignment shared by the IVF build,
@@ -665,95 +647,91 @@ object Similarity {
       dim = centroids.head.length).pairs
   }
 
-  // ------------------------------------------------------------- IVF core
+  // ---------------------------------------------------------- vector core
   //
   // One path for every vector codec ([[Codec]]: raw, SQ8, PQ, sign bits)
-  // under an optional coarse quantizer — `centroids = None` scans the
-  // whole corpus, `Some` partitions it into IVF lists. There is one
-  // corpus encode, one probe builder, one scoring tail, one store write
-  // (overwrite and append), one stage-from-store and one raw-store
-  // refine; each public ANN entry point is a codec construction plus one
-  // call in here. Codec decisions (encodings, score, null contract,
-  // `_meta` kind and keys, `_train` artifacts) live in Codec.scala.
+  // under one coarse stage ([[Coarse]]: a flat scan, IVF lists or LSH
+  // buckets — the core calls either kind of partition a `list`). There
+  // is one corpus encode, one probe builder, one scoring tail, one store
+  // write (overwrite and append), one stage-from-store and one raw-store
+  // refine; each public ANN entry point is a codec and a coarse value
+  // plus one call in here. Codec decisions (encodings, score, null
+  // contract, `_meta` kind and keys, `_train` artifacts) live in
+  // Codec.scala; coarse decisions (assignment, probe order, `_meta` kind
+  // and keys, on-disk column names) in Coarse.scala.
 
-  private def requireNprobe(centroids: Seq[Array[Double]], nprobe: Int): Unit =
-    require(nprobe >= 1 && nprobe <= centroids.size,
-      s"nprobe must be in [1, ${centroids.size}]: $nprobe")
-
-  /** `_meta` kind and keys of a store: the coarse geometry (list count +
-    * centroid fingerprint) in front of the codec's own keys. A probe
-    * presenting other centroids refuses instead of silently pruning to
-    * the wrong lists.
-    */
-  private def storeMeta(codec: Codec, centroids: Option[Seq[Array[Double]]])
-      : (String, Map[String, Any]) =
-    centroids.fold((codec.flatKind, codec.metaKeys)) { cs =>
-      (codec.ivfKind, Map[String, Any]("numLists" -> cs.size,
-        "centroids_md5" -> vectorSetFingerprint(cs)) ++ codec.metaKeys)
-    }
+  /** The centroids a residual codec encodes against, if any. */
+  private def residualOf(codec: Codec, coarse: Coarse)
+      : Option[Seq[Array[Double]]] = coarse match {
+    case Coarse.Ivf(cs, _) if codec.residual => Some(cs)
+    case _ => None
+  }
 
   private def requireStore(spark: org.apache.spark.sql.SparkSession,
-      storePath: String, codec: Codec,
-      centroids: Option[Seq[Array[Double]]]): Unit = {
-    val (kind, keys) = storeMeta(codec, centroids)
+      storePath: String, codec: Codec, coarse: Coarse): Unit = {
+    val (kind, keys) = coarse.meta(codec)
     graft.core.StoreMeta.requireIfPresent(spark, storePath, kind, keys)
   }
 
+  /** A store's rows under the core's column names. */
+  private def readStore(spark: org.apache.spark.sql.SparkSession,
+      storePath: String, coarse: Coarse): DataFrame =
+    coarse.storedNames.foldLeft(spark.read.parquet(storePath)) {
+      case (d, (core, stored)) => d.withColumnRenamed(stored, core) }
+
   /** Encoded corpus rows: (`idAs`, list, payload…) under a coarse
-    * quantizer, else (`idAs`, payload…). Assignment and encode are
+    * stage, else (`idAs`, payload…). Assignment and encode are
     * map-side — zero shuffles; a residual codec encodes
     * `v − centroid(list)`.
     */
   private def corpusFrame(df: DataFrame, idCol: String, vecCol: String,
-      codec: Codec, centroids: Option[Seq[Array[Double]]],
-      idAs: String): DataFrame = {
+      codec: Codec, coarse: Coarse, idAs: String): DataFrame = {
     val kept = codec.encodable(col(vecCol)).fold(df)(c => df.filter(c))
-    centroids match {
-      case None =>
+    coarse match {
+      case Coarse.Scan =>
         kept.select(col(idCol).as(idAs) +: codec.corpus(col(vecCol)): _*)
-      case Some(cs) =>
-        val v =
-          if (codec.residual) residualCol(col("__v"), col("list"), cs)
-          else col("__v")
+      case lists: Coarse.Lists =>
+        val v = residualOf(codec, coarse)
+          .fold(col("__v"))(residualCol(col("__v"), col("list"), _))
         kept.select(col(idCol).as(idAs), col(vecCol).as("__v"),
-            listAssignment(col(vecCol), cs).as("list"))
+            lists.assign(col(vecCol)).as("list"))
           .select(col(idAs) +: col("list") +: codec.corpus(v): _*)
     }
   }
 
   /** The query side: (query_id, payload…) for a flat scan; under a
-    * coarse quantizer one row per (query, probed list) —
+    * coarse stage one row per (query, probed list) —
     * (query_id, payload…, list), with a residual codec's payload
     * computed per probe row (one LUT per probed list).
     */
   private def probeFrame(queries: DataFrame, idCol: String, vecCol: String,
-      codec: Codec, centroids: Option[Seq[Array[Double]]],
-      nprobe: Int): DataFrame = {
+      codec: Codec, coarse: Coarse): DataFrame = {
     val kept =
       codec.encodable(col(vecCol)).fold(queries)(c => queries.filter(c))
-    centroids match {
-      case None =>
+    coarse match {
+      case Coarse.Scan =>
         kept.select(col(idCol).as("query_id") +: codec.query(col(vecCol)): _*)
-      case Some(cs) =>
+      case lists: Coarse.Lists =>
+        val residual = residualOf(codec, coarse)
         val pre =
-          if (codec.residual) Seq(col(vecCol).as("qv"))
+          if (residual.isDefined) Seq(col(vecCol).as("qv"))
           else codec.query(col(vecCol))
         val probes = kept
           .select((col(idCol).as("query_id") +: pre) :+
-            explodedProbe(col(vecCol), cs, nprobe).as("__p"): _*)
-          .withColumn("list", col("__p").getField("l"))
+            lists.probe(col(vecCol)).as("__p"): _*)
+          .withColumn("list", lists.probedId(col("__p")))
           .drop("__p")
-        if (!codec.residual) probes
-        else probes.select(col("query_id") +: col("list") +:
-          codec.query(residualCol(col("qv"), col("list"), cs)): _*)
+        residual.fold(probes)(cs => probes.select(col("query_id") +:
+          col("list") +: codec.query(residualCol(col("qv"), col("list"),
+            cs)): _*))
     }
   }
 
   /** The scoring tail: broadcast the (small) query side against the
-    * encoded corpus — on the list key under a coarse quantizer, else
-    * every query against every corpus row — drop self-pairs, score,
-    * apply the codec's null contract, rank. The corpus is never
-    * shuffled; only scored candidates move into the per-query window.
+    * encoded corpus — on the list key under a coarse stage, else every
+    * query against every corpus row — drop self-pairs, score, apply the
+    * codec's null contract, rank. The corpus is never shuffled; only
+    * scored candidates move into the per-query window.
     */
   private def scoredTopK(enc: DataFrame, probes: DataFrame, codec: Codec,
       k: Int, listed: Boolean): DataFrame = {
@@ -773,19 +751,17 @@ object Similarity {
     rankTopK(kept, codec.score, codec.ascending, k)
   }
 
-  /** In-memory top-k of any codec, flat or IVF. */
+  /** In-memory top-k of any codec under any coarse stage. */
   private[operators] def codecTopK(corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int, codec: Codec,
-      centroids: Option[Seq[Array[Double]]], nprobe: Int): DataFrame = {
-    centroids.foreach(requireNprobe(_, nprobe))
-    scoredTopK(corpusFrame(corpus, idCol, vecCol, codec, centroids,
+      coarse: Coarse): DataFrame =
+    scoredTopK(corpusFrame(corpus, idCol, vecCol, codec, coarse,
         "neighbor_id"),
-      probeFrame(queries, idCol, vecCol, codec, centroids, nprobe),
-      codec, k, centroids.isDefined)
-  }
+      probeFrame(queries, idCol, vecCol, codec, coarse),
+      codec, k, coarse != Coarse.Scan)
 
   /** The one store write of any codec, overwrite or append: (id,
-    * payload…) rows, PARTITIONED BY list under a coarse quantizer.
+    * payload…) rows, PARTITIONED BY list under a coarse stage.
     * Every list-partitioned write repartitions on the list first:
     * encoding is map-side, so WITHOUT it every input task holds rows of
     * every list and the dynamic-partition write fans out tasks × lists
@@ -799,17 +775,20 @@ object Similarity {
     * codes already on disk).
     */
   private[graft] def writeStore(df: DataFrame, idCol: String,
-      vecCol: String, codec: Codec, centroids: Option[Seq[Array[Double]]],
-      storePath: String, append: Boolean = false): Unit = {
-    val (kind, keys) = storeMeta(codec, centroids)
+      vecCol: String, codec: Codec, coarse: Coarse, storePath: String,
+      append: Boolean = false): Unit = {
+    val (kind, keys) = coarse.meta(codec)
     if (append)
       graft.core.StoreMeta.writeOrRequire(df.sparkSession, storePath, kind,
         keys)
-    val enc = corpusFrame(df, idCol, vecCol, codec, centroids, "id")
+    val enc = coarse.storedNames.foldLeft(
+      corpusFrame(df, idCol, vecCol, codec, coarse, "id")) {
+      case (d, (core, stored)) => d.withColumnRenamed(core, stored) }
     val mode = if (append) "append" else "overwrite"
-    if (centroids.isEmpty) enc.write.mode(mode).parquet(storePath)
-    else enc.repartition(col("list")) // file count bounded by lists, not tasks × lists
-      .write.mode(mode).partitionBy("list").parquet(storePath)
+    val part = coarse.storedNames.getOrElse("list", "list")
+    if (coarse == Coarse.Scan) enc.write.mode(mode).parquet(storePath)
+    else enc.repartition(col(part)) // file count bounded by lists, not tasks × lists
+      .write.mode(mode).partitionBy(part).parquet(storePath)
     // AFTER the data write: overwrite mode wipes the store root first
     if (!append)
       graft.core.StoreMeta.overwrite(df.sparkSession, storePath, kind, keys)
@@ -819,9 +798,11 @@ object Similarity {
     * coarse centroids, then the codec's own (SQ grid, PQ codebook).
     */
   private[graft] def writeTrain(spark: org.apache.spark.sql.SparkSession,
-      storePath: String, codec: Codec,
-      centroids: Option[Seq[Array[Double]]]): Unit = {
-    centroids.foreach(writeCentroids(spark, storePath, _))
+      storePath: String, codec: Codec, coarse: Coarse): Unit = {
+    coarse match {
+      case Coarse.Ivf(cs, _) => writeCentroids(spark, storePath, cs)
+      case _ =>
+    }
     codec.writeTrain(spark, storePath)
   }
 
@@ -829,32 +810,30 @@ object Similarity {
     * set it pruned to (empty for a flat store), so a two-stage refine
     * prunes the raw store to the SAME partition union without re-running
     * the probe-discovery job. The union is driver-small by construction
-    * (≤ |queries| × nprobe ids), so inlining it as a literal IN pushes
-    * the pruning into the file index — on a 10k-list index a 10-query
-    * probe touches ~40 partition directories and never lists the rest.
-    * Codes, floats and norms round-trip parquet exactly, so a store
-    * probe is bit-identical to the in-memory path.
+    * (≤ |queries| × probe width ids), so inlining it as a literal IN
+    * pushes the pruning into the file index — on a 10k-list index a
+    * 10-query probe touches ~40 partition directories and never lists
+    * the rest. Codes, floats and norms round-trip parquet exactly, so a
+    * store probe is bit-identical to the in-memory path.
     */
   private[operators] def stageFromStore(
       spark: org.apache.spark.sql.SparkSession, storePath: String,
       queries: DataFrame, idCol: String, vecCol: String, k: Int,
-      codec: Codec, centroids: Option[Seq[Array[Double]]],
-      nprobe: Int): (DataFrame, Seq[Int]) = {
-    centroids.foreach(requireNprobe(_, nprobe))
-    requireStore(spark, storePath, codec, centroids)
-    val probes = probeFrame(queries, idCol, vecCol, codec, centroids, nprobe)
+      codec: Codec, coarse: Coarse): (DataFrame, Seq[Any]) = {
+    requireStore(spark, storePath, codec, coarse)
+    val probes = probeFrame(queries, idCol, vecCol, codec, coarse)
     val probedLists =
-      if (centroids.isEmpty) Nil
-      else probes.select("list").distinct()
-        .collect().map(_.getInt(0)).sorted.toSeq
+      if (coarse == Coarse.Scan) Nil
+      else probes.select("list").distinct().collect().map(_.get(0))
+        .sortBy(_.asInstanceOf[Number].longValue).toSeq
     val payload = codec.payload.map(col)
-    val stored = spark.read.parquet(storePath)
+    val stored = readStore(spark, storePath, coarse)
     val enc =
-      if (centroids.isEmpty)
+      if (coarse == Coarse.Scan)
         stored.select(col("id").as("neighbor_id") +: payload: _*)
       else stored.filter(col("list").isInCollection(probedLists))
         .select(col("id").as("neighbor_id") +: col("list") +: payload: _*)
-    (scoredTopK(enc, probes, codec, k, centroids.isDefined), probedLists)
+    (scoredTopK(enc, probes, codec, k, coarse != Coarse.Scan), probedLists)
   }
 
   /** Fully-PERSISTED two-stage retrieval over any codec: the compressed
@@ -868,12 +847,12 @@ object Similarity {
   private def rerankFromStores(spark: org.apache.spark.sql.SparkSession,
       storePath: String, rawStorePath: String, queries: DataFrame,
       idCol: String, vecCol: String, k: Int, codec: Codec,
-      centroids: Seq[Array[Double]], nprobe: Int, factor: Int): DataFrame = {
+      coarse: Coarse, factor: Int): DataFrame = {
     require(factor >= 1, s"refine factor must be >= 1: $factor")
     val (shortlist, probedLists) = stageFromStore(spark, storePath, queries,
-      idCol, vecCol, k * factor, codec, Some(centroids), nprobe)
-    requireStore(spark, rawStorePath, Codec.Flat, Some(centroids))
-    val rawPruned = spark.read.parquet(rawStorePath)
+      idCol, vecCol, k * factor, codec, coarse)
+    requireStore(spark, rawStorePath, Codec.Flat, coarse)
+    val rawPruned = readStore(spark, rawStorePath, coarse)
       .filter(col("list").isInCollection(probedLists))
       .select(col("id").as(idCol), col("v").as(vecCol))
     rerankExact(shortlist, rawPruned, queries, idCol, vecCol, k)
@@ -906,8 +885,8 @@ object Similarity {
       centroids: Seq[Array[Double]],
       nprobe: Int
   ): DataFrame =
-    codecTopK(corpus, queries, idCol, vecCol, k, Codec.Flat, Some(centroids),
-      nprobe)
+    codecTopK(corpus, queries, idCol, vecCol, k, Codec.Flat,
+      Coarse.Ivf(centroids, nprobe))
 
   /** Deterministic fingerprint of a centroid set / codebook (MD5 over
     * the doubles' bit patterns) — recorded in the index sidecar so a
@@ -938,15 +917,16 @@ object Similarity {
     */
   def writeIvfAssignments(df: DataFrame, idCol: String, vecCol: String,
       centroids: Seq[Array[Double]], storePath: String): Unit =
-    writeStore(df, idCol, vecCol, Codec.Flat, Some(centroids), storePath)
+    writeStore(df, idCol, vecCol, Codec.Flat, Coarse.Ivf(centroids, 1),
+      storePath)
 
   /** Append one batch's raw (id, v, cn, list) rows to an IVF raw-vector
     * store under the append-only contract of [[writeStore]].
     */
   def appendIvfAssignments(df: DataFrame, idCol: String, vecCol: String,
       centroids: Seq[Array[Double]], storePath: String): Unit =
-    writeStore(df, idCol, vecCol, Codec.Flat, Some(centroids), storePath,
-      append = true)
+    writeStore(df, idCol, vecCol, Codec.Flat, Coarse.Ivf(centroids, 1),
+      storePath, append = true)
 
   /** Probe a stored IVF index: bit-identical to [[ivfTopK]] for the same
     * centroids, the store scan pruned to the probed-list union.
@@ -961,7 +941,7 @@ object Similarity {
       centroids: Seq[Array[Double]],
       nprobe: Int): DataFrame =
     stageFromStore(spark, storePath, queries, idCol, vecCol, k, Codec.Flat,
-      Some(centroids), nprobe)._1
+      Coarse.Ivf(centroids, nprobe))._1
 
   /** Embedding outlier scores — the IVF assignment read the other way:
     * each vector's best centroid cosine. Vectors far from EVERY centroid
@@ -1043,7 +1023,7 @@ object Similarity {
       dsub: Int = 16
   ): DataFrame =
     codecTopK(corpus, queries, idCol, vecCol, k,
-      Codec.Pq(codebook, m, numCodes, dsub), None, 0)
+      Codec.Pq(codebook, m, numCodes, dsub), Coarse.Scan)
 
   /** IVF+PQ ANN — the two scale mechanisms composed, the standard
     * billion-vector index shape (FAISS IVFPQ): the coarse quantizer
@@ -1067,7 +1047,7 @@ object Similarity {
       dsub: Int = 16
   ): DataFrame =
     codecTopK(corpus, queries, idCol, vecCol, k,
-      Codec.Pq(codebook, m, numCodes, dsub), Some(centroids), nprobe)
+      Codec.Pq(codebook, m, numCodes, dsub), Coarse.Ivf(centroids, nprobe))
 
   /** Elementwise `v − centroids(list)` as a column: a literal-centroid
     * CASE over the (small, by the same contract as every literal-centroid
@@ -1123,7 +1103,7 @@ object Similarity {
   ): DataFrame =
     codecTopK(corpus, queries, idCol, vecCol, k,
       Codec.Pq(codebook, m, numCodes, dsub, residual = true),
-      Some(centroids), nprobe)
+      Coarse.Ivf(centroids, nprobe))
 
   /** Residual column builder for codebook training: (id, res) of a
     * corpus under literal centroids — feed to [[seedPqCodebooks]] /
@@ -1170,7 +1150,7 @@ object Similarity {
           m, numCodes, dsub, trainIterations)
       else codebook
     writeStore(df, idCol, vecCol, Codec.Pq(cb, m, numCodes, dsub),
-      Some(centroids), storePath)
+      Coarse.Ivf(centroids, 1), storePath)
     cb
   }
 
@@ -1193,7 +1173,7 @@ object Similarity {
       dsub: Int = 16
   ): DataFrame =
     stageFromStore(spark, storePath, queries, idCol, vecCol, k,
-      Codec.Pq(codebook, m, numCodes, dsub), Some(centroids), nprobe)._1
+      Codec.Pq(codebook, m, numCodes, dsub), Coarse.Ivf(centroids, nprobe))._1
 
   // ----- 8-bit scalar quantization (SQ8, FAISS QT_8bit shape) -----
 
@@ -1255,7 +1235,7 @@ object Similarity {
       maxs: Array[Double]
   ): DataFrame =
     codecTopK(corpus, queries, idCol, vecCol, k, Codec.Sq8(mins, maxs),
-      None, 0)
+      Coarse.Scan)
 
   /** Persist the SQ8-compressed corpus: (id, codes binary) — dim bytes
     * per vector instead of 4·dim float bytes, the 100 TB store shape
@@ -1265,7 +1245,8 @@ object Similarity {
     */
   def writeSqCodes(df: DataFrame, idCol: String, vecCol: String,
       storePath: String, mins: Array[Double], maxs: Array[Double]): Unit =
-    writeStore(df, idCol, vecCol, Codec.Sq8(mins, maxs), None, storePath)
+    writeStore(df, idCol, vecCol, Codec.Sq8(mins, maxs), Coarse.Scan,
+      storePath)
 
   /** Probe a stored SQ8 index: bit-identical to [[sqTopK]] for the same
     * params — code bytes round-trip parquet exactly.
@@ -1281,7 +1262,7 @@ object Similarity {
       maxs: Array[Double]
   ): DataFrame =
     stageFromStore(spark, storePath, queries, idCol, vecCol, k,
-      Codec.Sq8(mins, maxs), None, 0)._1
+      Codec.Sq8(mins, maxs), Coarse.Scan)._1
 
   /** IVF + SQ8: coarse-quantizer candidate pruning over byte-compressed
     * vectors — [[ivfTopK]]'s sublinearity at [[sqTopK]]'s 4× compression,
@@ -1303,7 +1284,7 @@ object Similarity {
       maxs: Array[Double]
   ): DataFrame =
     codecTopK(corpus, queries, idCol, vecCol, k, Codec.Sq8(mins, maxs),
-      Some(centroids), nprobe)
+      Coarse.Ivf(centroids, nprobe))
 
   /** Persist the IVF-SQ8 index: (id, codes binary) partitioned by list —
     * the 100 TB shape when PQ is too lossy and raw floats too big: dim
@@ -1314,8 +1295,8 @@ object Similarity {
   def writeIvfSqCodes(df: DataFrame, idCol: String, vecCol: String,
       centroids: Seq[Array[Double]], storePath: String,
       mins: Array[Double], maxs: Array[Double]): Unit =
-    writeStore(df, idCol, vecCol, Codec.Sq8(mins, maxs), Some(centroids),
-      storePath)
+    writeStore(df, idCol, vecCol, Codec.Sq8(mins, maxs),
+      Coarse.Ivf(centroids, 1), storePath)
 
   /** Append one batch's encoded rows to an IVF-SQ8 store (the append-only
     * contract of [[writeStore]]). Training params are FROZEN at store
@@ -1326,8 +1307,8 @@ object Similarity {
   def appendIvfSqCodes(df: DataFrame, idCol: String, vecCol: String,
       centroids: Seq[Array[Double]], storePath: String,
       mins: Array[Double], maxs: Array[Double]): Unit =
-    writeStore(df, idCol, vecCol, Codec.Sq8(mins, maxs), Some(centroids),
-      storePath, append = true)
+    writeStore(df, idCol, vecCol, Codec.Sq8(mins, maxs),
+      Coarse.Ivf(centroids, 1), storePath, append = true)
 
   /** Probe a stored IVF-SQ8 index: bit-identical to [[ivfSqTopK]], the
     * store scan pruned to the probed-list union.
@@ -1345,7 +1326,7 @@ object Similarity {
       maxs: Array[Double]
   ): DataFrame =
     stageFromStore(spark, storePath, queries, idCol, vecCol, k,
-      Codec.Sq8(mins, maxs), Some(centroids), nprobe)._1
+      Codec.Sq8(mins, maxs), Coarse.Ivf(centroids, nprobe))._1
 
   /** Exact re-ranking of a compressed shortlist (the FAISS
     * IndexRefineFlat shape — the standard two-stage production
@@ -1480,8 +1461,8 @@ object Similarity {
       factor: Int = 4
   ): DataFrame =
     rerankFromStores(spark, pqStorePath, rawStorePath, queries, idCol,
-      vecCol, k, Codec.Pq(codebook, m, numCodes, dsub), centroids, nprobe,
-      factor)
+      vecCol, k, Codec.Pq(codebook, m, numCodes, dsub),
+      Coarse.Ivf(centroids, nprobe), factor)
 
   /** IVF-SQ8 first stage + exact refine — the measured production
     * two-stage configuration: the coarse probe makes the scan sublinear
@@ -1534,7 +1515,8 @@ object Similarity {
       factor: Int = 4
   ): DataFrame =
     rerankFromStores(spark, sqStorePath, rawStorePath, queries, idCol,
-      vecCol, k, Codec.Sq8(mins, maxs), centroids, nprobe, factor)
+      vecCol, k, Codec.Sq8(mins, maxs), Coarse.Ivf(centroids, nprobe),
+      factor)
 
   /** (id, bk) multi-table LSH bucket keys of an embedding table — the
     * STORE layout for incremental embedding dedup: `tables` keys per
@@ -1544,8 +1526,8 @@ object Similarity {
     */
   def embeddingBucketKeys(df: DataFrame, idCol: String, vecCol: String,
       planes: Int = 8, tables: Int = 8, dim: Int = 64): DataFrame =
-    bucketTable(df.select(col(idCol).as("id"), col(vecCol).as("v")),
-      planes, tables, dim)
+    bucketKeys(df.select(col(idCol).as("id"), col(vecCol).as("v")), "v",
+      Seq("id"), planes, tables, dim)
 
   /** (id, bk) rows of [[embeddingBucketKeys]] — the incremental
     * embedding-dedup store, bucketed on `bk` in the table layout.
@@ -1641,7 +1623,7 @@ object Similarity {
     // though capHotKeys reads its input twice.
     val base = batch.select(col(idCol).as("id"), col(vecCol).as("v"))
     val rawBuckets = CacheScope.persist(obsCount(
-      bucketTable(base, planes, tables, dim),
+      bucketKeys(base, "v", Seq("id"), planes, tables, dim),
       "graft.neardup.batch_bucket_rows"))
     val allBuckets =
       if (maxBucketDf > 0)
@@ -1655,9 +1637,9 @@ object Similarity {
         allBuckets
           .join(survivors.select(col(idCol).as("id")), Seq("id"), "left_semi")
       else {
-        val pk = multiProbeKeys(
-          survivors.select(col(idCol).as("id"), col(vecCol).as("v")),
-          planes, tables, dim, probes)
+        val pk = bucketKeys(
+          survivors.select(col(idCol).as("id"), col(vecCol).as("v")), "v",
+          Seq("id"), planes, tables, dim, probes)
         if (maxBucketDf > 0) Dedup.capHotKeys(pk, "bk", maxBucketDf) else pk
       }
     val cname = corpusBuckets.columns // accept any column names: (id, bk)
@@ -1709,10 +1691,26 @@ object Similarity {
     survivors.join(pin(hits), Seq(idCol), "left_anti")
   }
 
-  /** Approximate top-k: queries join only their own LSH bucket; exact
-    * cosine rank within the bucket. One shuffle on the bucket key; never
-    * a full cross join. Recall is tunable via `planes` (fewer planes =
-    * bigger buckets = higher recall, more compute).
+  /** Approximate top-k over random-hyperplane LSH buckets — the
+    * [[Codec.Flat]] codec under the [[Coarse.Lsh]] stage: every corpus
+    * vector lives in its `planes`-bit bucket, each query probes its own
+    * bucket plus, with `probes > 1`, the `probes − 1` buckets reached by
+    * flipping its smallest-|margin| sign bits (Lv et al. 2007,
+    * "Multi-Probe LSH" — the planes the query sits closest to, i.e. the
+    * flips most likely to hold near neighbors lost to quantization).
+    * Exact cosine ranks the candidates. Recall is tunable via `planes`
+    * (fewer planes = bigger buckets) and `probes` (more candidates with
+    * no extra tables or index storage — the standard fix for the
+    * single-table recall cliff the RECALL harness measures at 8 planes).
+    *
+    * Scale shape: the core's — the query side (|queries| × probes rows)
+    * is broadcast against the corpus, which is bucketed map-side and
+    * never shuffled, so the query set must stay driver-small, as on
+    * every core path. Margins are computed on the first `dim` elements
+    * the bucketing hashes (over-length queries probe fully); a
+    * degenerate query (null / shorter than `dim` / null element) probes
+    * only its kernel bucket. See [[probeBuckets]] for the determinism
+    * contract.
     */
   def lshTopK(
       corpus: DataFrame,
@@ -1721,57 +1719,27 @@ object Similarity {
       vecCol: String,
       k: Int,
       planes: Int = 6,
-      dim: Int = 64
-  ): DataFrame = {
-    val c = withLshBucket(
-      corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
-        norm(col(vecCol)).as("cn")),
-      "cv", planes, dim)
-    val q = withLshBucket(
-      queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-        norm(col(vecCol)).as("qn")),
-      "qv", planes, dim)
-    val scored = c.join(q,
-      c("bucket") === q("bucket") && col("query_id") =!= col("neighbor_id"))
-      // zero-NORM rows drop before scoring: 0/0 is the one case ANSI
-      // division throws on (a zero corpus vector killed the probe); a
-      // NULL dot (the documented over-length/length-mismatch contract)
-      // stays a null sim and ranks as before
-      .filter(col("qn") =!= 0.0 && col("cn") =!= 0.0)
-      .withColumn("sim", dotDouble(col("qv"), col("cv")) / (col("qn") * col("cn")))
-    rankTopK(scored, "sim", ascending = false, k)
-  }
+      dim: Int = 64,
+      probes: Int = 1
+  ): DataFrame =
+    codecTopK(corpus, queries, idCol, vecCol, k, Codec.Flat,
+      Coarse.Lsh(planes, dim, probes))
 
-  /** Persist the LSH top-k index: (neighbor_id, cv, cn) partitioned by
-    * `bucket` — the hyperplane analog of [[writeIvfAssignments]]. The
-    * plane signs are deterministic functions of (planes, dim), so the
-    * `_meta` sidecar records just those two; a probe with different
-    * values refuses instead of scanning buckets hashed under another
-    * geometry. Probing reads ONLY the probed-bucket partitions
-    * (literal IN → partition-pruned scan), so cost follows the query
-    * set's probe count, not the corpus.
+  /** Persist the LSH top-k index: (id, v, nrm) partitioned by `bucket` —
+    * the [[Coarse.Lsh]] layout of the core's one store write, the
+    * hyperplane analog of [[writeIvfAssignments]]. The `_meta` sidecar
+    * records (planes, dim); a probe with different values refuses
+    * instead of scanning buckets hashed under another geometry.
     */
   def writeLshBuckets(df: DataFrame, idCol: String, vecCol: String,
-      storePath: String, planes: Int = 6, dim: Int = 64): Unit = {
-    withLshBucket(
-      df.select(col(idCol).as("id"), col(vecCol).as("v"),
-        norm(col(vecCol)).as("nrm")),
-      "v", planes, dim)
-      .repartition(col("bucket")) // file count bounded by buckets, not tasks × buckets
-      .write.mode("overwrite").partitionBy("bucket").parquet(storePath)
-    // AFTER the data write: overwrite mode wipes the store root first
-    graft.core.StoreMeta.overwrite(df.sparkSession, storePath, "lsh", Map(
-      "planes" -> planes, "dim" -> dim))
-  }
+      storePath: String, planes: Int = 6, dim: Int = 64): Unit =
+    writeStore(df, idCol, vecCol, Codec.Flat, Coarse.Lsh(planes, dim, 1),
+      storePath)
 
-  /** Probe a stored LSH index with optional multi-probe: bit-identical
-    * results to [[lshTopK]] (probes = 1) / [[lshTopKMultiProbe]] for the
-    * same corpus — vectors and norms round-trip parquet exactly — but
-    * the corpus side is the persisted store pruned to the probed-bucket
-    * union, inlined as a literal IN like [[ivfTopKFromStore]] so pruning
-    * reaches the file index. The probed-bucket collect is bounded by
-    * |queries| × probes (the query set is driver-small by contract,
-    * exactly as in the IVF store probes).
+  /** Probe a stored LSH index: bit-identical to [[lshTopK]] at the same
+    * `probes` — vectors and norms round-trip parquet exactly — with the
+    * store scan pruned to the probed-bucket union (a literal IN, so
+    * pruning reaches the file index, as in [[ivfTopKFromStore]]).
     */
   def lshTopKFromStore(
       spark: org.apache.spark.sql.SparkSession,
@@ -1783,89 +1751,9 @@ object Similarity {
       planes: Int = 6,
       dim: Int = 64,
       probes: Int = 1
-  ): DataFrame = {
-    require(probes >= 1 && probes <= planes,
-      s"probes must be in [1, planes=$planes]: $probes")
-    graft.core.StoreMeta.requireIfPresent(spark, storePath, "lsh", Map(
-      "planes" -> planes, "dim" -> dim))
-    val q = queries
-      .select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-        norm(col(vecCol)).as("qn"))
-      .withColumn("b0", lshBucket(col("qv"), planes, dim))
-      .withColumn("bucket", explode(
-        probeBuckets(col("qv"), col("b0"), 0, planes, dim, probes)))
-      .drop("b0")
-    val probedBuckets = q.select("bucket").distinct()
-      .collect().map(_.getLong(0)).sorted.toSeq
-    val c = spark.read.parquet(storePath)
-      .filter(col("bucket").isInCollection(probedBuckets))
-      .select(col("id").as("neighbor_id"), col("v").as("cv"),
-        col("nrm").as("cn"), col("bucket"))
-    val scored = c.join(broadcast(q),
-      c("bucket") === q("bucket") && col("query_id") =!= col("neighbor_id"))
-      .filter(col("qn") =!= 0.0 && col("cn") =!= 0.0) // zero-norm: see lshTopK
-      .withColumn("sim",
-        dotDouble(col("qv"), col("cv")) / (col("qn") * col("cn")))
-    rankTopK(scored, "sim", ascending = false, k)
-  }
-
-  /** MULTI-PROBE LSH top-k (Lv et al. 2007, "Multi-Probe LSH"): each
-    * query probes its own bucket PLUS the `probes − 1` buckets obtained
-    * by flipping the sign bits whose hyperplane margin |q·plane_j| is
-    * smallest — the planes the query sits closest to, i.e. the flips
-    * most likely to hold near neighbors lost to quantization. This
-    * multiplies the candidate budget by ~`probes` WITHOUT adding hash
-    * tables (no extra index storage, no extra corpus passes) — the
-    * standard fix for the single-table recall cliff the RECALL harness
-    * measures at 8 planes (each bucket holds < k candidates, capping
-    * recall structurally).
-    *
-    * Scale shape: identical to [[lshTopK]] — the corpus is bucketed
-    * map-side and shuffled once on the bucket key; only the QUERY side
-    * fans out ×probes (queries are the broadcast-small side). A corpus
-    * vector lives in exactly one bucket and probe buckets are pairwise
-    * distinct, so no candidate dedup pass is needed.
-    *
-    * Determinism contract: margins are the same sequential [[VecDot]]
-    * folds against the literal sign vectors the bucketing uses,
-    * evaluated over the first `dim` elements (the same prefix
-    * [[graft.functions.HyperplaneBits]] buckets on, so an over-length
-    * vector probes the full set, not just its kernel bucket); the
-    * flip order is (|margin| ASC, plane ASC) — both replayable in SQL.
-    * A degenerate query vector (null / shorter than `dim` / null
-    * element) has null margins; those are filtered, so it probes only
-    * its kernel bucket (0), mirroring the single-probe contract.
-    */
-  def lshTopKMultiProbe(
-      corpus: DataFrame,
-      queries: DataFrame,
-      idCol: String,
-      vecCol: String,
-      k: Int,
-      planes: Int = 6,
-      dim: Int = 64,
-      probes: Int = 2
-  ): DataFrame = {
-    require(probes >= 1 && probes <= planes,
-      s"probes must be in [1, planes=$planes]: $probes")
-    val c = withLshBucket(
-      corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
-        norm(col(vecCol)).as("cn")),
-      "cv", planes, dim)
-    val q = queries
-      .select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-        norm(col(vecCol)).as("qn"))
-      .withColumn("b0", lshBucket(col("qv"), planes, dim))
-      .withColumn("bucket", explode(
-        probeBuckets(col("qv"), col("b0"), 0, planes, dim, probes)))
-      .drop("b0")
-    val scored = c.join(q,
-      c("bucket") === q("bucket") && col("query_id") =!= col("neighbor_id"))
-      .filter(col("qn") =!= 0.0 && col("cn") =!= 0.0) // zero-norm: see lshTopK
-      .withColumn("sim",
-        dotDouble(col("qv"), col("cv")) / (col("qn") * col("cn")))
-    rankTopK(scored, "sim", ascending = false, k)
-  }
+  ): DataFrame =
+    stageFromStore(spark, storePath, queries, idCol, vecCol, k, Codec.Flat,
+      Coarse.Lsh(planes, dim, probes))._1
 
   /** Per-subspace Lloyd (k-means) refinement of a PQ codebook — the
     * training half of Jégou et al. 2011 that [[seedPqCodebooks]]'
@@ -2156,7 +2044,7 @@ object Similarity {
       k: Int,
       dim: Int = 64
   ): DataFrame =
-    codecTopK(corpus, queries, idCol, vecCol, k, Codec.Sign(dim), None, 0)
+    codecTopK(corpus, queries, idCol, vecCol, k, Codec.Sign(dim), Coarse.Scan)
 
   /** Persist the sign-bit corpus: (id, cb array<long>) at dim/8 bytes
     * of payload per vector — the smallest store in the family. `_meta`
@@ -2165,7 +2053,8 @@ object Similarity {
     */
   def writeSignBits(df: DataFrame, idCol: String, vecCol: String,
       storePath: String, dim: Int = 64): Unit =
-    writeStore(df, idCol, vecCol, Codec.Sign(dim), None, storePath)
+    writeStore(df, idCol, vecCol, Codec.Sign(dim), Coarse.Scan,
+      storePath)
 
   /** Probe a stored sign-bit index — bit-identical to [[binaryTopK]]
     * for the same corpus (packed longs round-trip parquet exactly).
@@ -2180,7 +2069,7 @@ object Similarity {
       dim: Int = 64
   ): DataFrame =
     stageFromStore(spark, storePath, queries, idCol, vecCol, k,
-      Codec.Sign(dim), None, 0)._1
+      Codec.Sign(dim), Coarse.Scan)._1
 
   /** Binary stage + exact refine — Hamming shortlist at k·factor,
     * re-ranked by exact L2² from raw vectors ([[rerankExact]]): the
@@ -2221,7 +2110,7 @@ object Similarity {
       dim: Int = 64
   ): DataFrame =
     codecTopK(corpus, queries, idCol, vecCol, k, Codec.Sign(dim),
-      Some(centroids), nprobe)
+      Coarse.Ivf(centroids, nprobe))
 
   /** Persist the IVF-binary index: (id, cb) partitioned by list — the
     * smallest partition-pruned store in the family (two longs per
@@ -2230,7 +2119,7 @@ object Similarity {
   def writeIvfBinary(df: DataFrame, idCol: String, vecCol: String,
       centroids: Seq[Array[Double]], storePath: String,
       dim: Int = 64): Unit =
-    writeStore(df, idCol, vecCol, Codec.Sign(dim), Some(centroids),
+    writeStore(df, idCol, vecCol, Codec.Sign(dim), Coarse.Ivf(centroids, 1),
       storePath)
 
   /** Append one batch's sign-bit rows to an IVF-binary store (the
@@ -2239,7 +2128,7 @@ object Similarity {
   def appendIvfBinary(df: DataFrame, idCol: String, vecCol: String,
       centroids: Seq[Array[Double]], storePath: String,
       dim: Int = 64): Unit =
-    writeStore(df, idCol, vecCol, Codec.Sign(dim), Some(centroids),
+    writeStore(df, idCol, vecCol, Codec.Sign(dim), Coarse.Ivf(centroids, 1),
       storePath, append = true)
 
   /** Probe a stored IVF-binary index — bit-identical to
@@ -2257,7 +2146,7 @@ object Similarity {
       dim: Int = 64
   ): DataFrame =
     stageFromStore(spark, storePath, queries, idCol, vecCol, k,
-      Codec.Sign(dim), Some(centroids), nprobe)._1
+      Codec.Sign(dim), Coarse.Ivf(centroids, nprobe))._1
 
   /** Fully-PERSISTED binary two-stage retrieval ([[rerankFromStores]]
     * with the sign-bit store as stage one): the smallest stage-one IO in
@@ -2279,7 +2168,7 @@ object Similarity {
       factor: Int = 4
   ): DataFrame =
     rerankFromStores(spark, binStorePath, rawStorePath, queries, idCol,
-      vecCol, k, Codec.Sign(dim), centroids, nprobe, factor)
+      vecCol, k, Codec.Sign(dim), Coarse.Ivf(centroids, nprobe), factor)
 
   // --------------------------------------------- persisted training artifacts
 

@@ -109,24 +109,4 @@ object CsvSource {
     // "", NULL, null, None → real NULL (csv_extractor.py null markers)
     raw.select(raw.columns.map(c => Coercion.nullifyMarkers(col(c)).as(c)): _*)
   }
-
-  /** Headerless variant: synthesize column_1..column_N like the reference's
-    * Sheets reader does for missing headers
-    * (google_sheets_extractor.py:257-289).
-    */
-  def readHeaderless(
-      spark: SparkSession,
-      paths: Seq[String],
-      numCols: Int,
-      opts: CsvOptions = CsvOptions()
-  ): DataFrame = {
-    val df = spark.read
-      .option("header", "false")
-      .option("sep", opts.delimiter)
-      .option("quote", opts.quoteChar)
-      .option("inferSchema", "false")
-      .csv(paths: _*)
-    val named = df.toDF((1 to df.columns.length).map(i => s"column_$i"): _*)
-    named.select(named.columns.map(c => Coercion.nullifyMarkers(col(c).cast("string")).as(c)): _*)
-  }
 }

@@ -34,10 +34,4 @@ object MarkdownKvSource {
       extractedAt: Timestamp = new Timestamp(System.currentTimeMillis())): DataFrame =
     MarkdownKv.parseRowPerKv(read(spark, paths), "markdown_kv_content", "doc_id",
       extractedAt).toDF()
-
-  /** Parsed scan, nested `document_level` mode. */
-  def readDocumentLevel(spark: SparkSession, paths: Seq[String],
-      extractedAt: Timestamp = new Timestamp(System.currentTimeMillis())): DataFrame =
-    MarkdownKv.parseDocumentLevel(read(spark, paths), "markdown_kv_content", "doc_id",
-      extractedAt).toDF()
 }

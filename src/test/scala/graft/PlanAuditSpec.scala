@@ -381,11 +381,11 @@ class PlanAuditSpec extends SparkSpec {
       ("Recall.scala", "broadcast(dBench.select(col(\"embedding\").as(\"bv\"),") -> (1, "QUERY benchmark side"),
       ("operators/Decontaminate.scala", "broadcast(benchSh), \"g\")") -> (1, "QUERY benchmark shingles"),
       ("operators/Decontaminate.scala", "broadcast(benchSh), \"gh\")") -> (1, "QUERY benchmark shingles"),
-      ("operators/Decontaminate.scala", "broadcast(bmk), Seq(\"bk\"))") -> (2, "QUERY benchmark bucket keys"),
+      ("operators/Decontaminate.scala", "broadcast(bmk), Seq(\"bk\"))") -> (1, "QUERY benchmark bucket keys"),
       ("operators/Dedup.scala", "broadcast(comps) else comps") -> (1, "GATED losersBroadcastMax"),
       ("operators/Dedup.scala", "broadcast(d) else d") -> (1, "GATED broadcastMaxPairs"),
       ("operators/Dedup.scala", "broadcast(df) else df") -> (1, "GATED broadcastMaxPairs"),
-      ("operators/Dedup.scala", "broadcast(hot), Seq(\"blk\", \"s\"), \"left_anti\")") -> (2, "CAPPED hot band keys"),
+      ("operators/Dedup.scala", "broadcast(hot), Seq(\"blk\", \"s\"), \"left_anti\")") -> (1, "CAPPED hot band keys"),
       ("operators/Dedup.scala", "broadcast(hot), Seq(keyCol), \"left_anti\")") -> (1, "CAPPED hot keys <= N/cap"),
       ("operators/Dedup.scala", "broadcast(losers)") -> (2, "GATED losersBroadcastMax/guard"),
       ("operators/QualityModel.scala", "broadcast(model.weights), Seq(\"token\"), \"left\")") -> (1, "MODEL fixed vocabulary"),
@@ -397,7 +397,6 @@ class PlanAuditSpec extends SparkSpec {
       ("operators/Similarity.scala", "broadcast(d)") -> (2, "GATED pinVec row+byte gate"),
       ("operators/Similarity.scala", "broadcast(d) else d") -> (2, "GATED broadcastMaxPairs"),
       ("operators/Similarity.scala", "broadcast(probes), Seq(\"list\"))") -> (1, "QUERY probed-list union"),
-      ("operators/Similarity.scala", "broadcast(q),") -> (1, "QUERY seed vectors"),
       ("operators/Similarity.scala", "broadcast(q), col(\"query_id\") =!= col(\"neighbor_id\"))") -> (1, "QUERY seed vectors"),
       ("operators/Similarity.scala", "broadcast(vecs.select(col(\"id\").as(\"id_a\"),") -> (1, "GATED fused-branch row+byte gate"),
       ("operators/Similarity.scala", "broadcast(vecs.select(col(\"id\").as(\"id_b\"),") -> (1, "GATED fused-branch row+byte gate"),

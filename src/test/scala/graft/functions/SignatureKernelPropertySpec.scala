@@ -57,7 +57,7 @@ class SignatureKernelPropertySpec extends SparkSpec {
     kernel shouldBe legacy
   }
 
-  test("multiProbeKeys matches a driver-side margin/flip replay on random vectors") {
+  test("bucketKeys matches a driver-side margin/flip replay on random vectors") {
     import graft.operators.Similarity
     val (planes, tables, dim) = (4, 3, 8)
     val signs = (0 until tables * planes).map(Similarity.planeSigns(_, dim))
@@ -83,8 +83,8 @@ class SignatureKernelPropertySpec extends SparkSpec {
           .map(b => s"$t:$b")
       }.toSet
     for (probes <- Seq(1, 2, 3)) {
-      val got = Similarity.multiProbeKeys(
-        vecs.toDF("id", "v"), planes, tables, dim, probes)
+      val got = Similarity.bucketKeys(
+        vecs.toDF("id", "v"), "v", Seq("id"), planes, tables, dim, probes)
         .as[(Long, String)].collect()
         .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
       vecs.foreach { case (id, v) =>

@@ -86,21 +86,52 @@ class DecontaminateSpec extends SparkSpec {
   test("multi-probe embedding decontamination: probes=1 ≡ single-probe; flip recovers a cross-plane leak") {
     import spark.implicits._
     import graft.operators.Similarity
-    // probes=1 must be bit-identical to the base path at equal config
+    // probes=1 is the single-probe path: a corpus row drops iff it
+    // shares its kernel bucket with a benchmark row in SOME table and
+    // verifies — replayed on the driver with the kernel's sequential
+    // double folds, so any extra probe bucket shows as an extra drop
+    // seeded random directions: the sin-family vectors used elsewhere
+    // span a 2-D plane, which leaves most buckets empty
     val n = 80
-    val corp = (0L until n.toLong).map { i =>
-      (i, Array.tabulate(8)(j => math.sin(i * 0.37 + j * 1.13).toFloat))
-    }.toDF("id", "v")
+    val rng = new scala.util.Random(7)
+    val vecs = (0L until n.toLong).map { i =>
+      (i, Array.fill(8)((rng.nextDouble() * 2 - 1).toFloat))
+    }
+    val corp = vecs.toDF("id", "v")
     val bmk = corp.filter($"id" < 5)
       .select(($"id" + 500).as("id"), $"v")
     def ids(df: org.apache.spark.sql.DataFrame) =
       df.select("id").as[Long].collect().sorted
-    ids(Decontaminate.dropNearBenchmarkEmbeddingsMultiProbe(
-      corp, bmk, "id", "v", threshold = 0.4,
-      planes = 4, tables = 3, dim = 8, probes = 1)) shouldBe
+    val (p1, d1) = (4, 8)
+    val allSigns = (0 until 3 * p1).map(Similarity.planeSigns(_, d1))
+    def fold(a: Array[Float], b: Int => Double): Double = {
+      var s = 0.0
+      var i = 0
+      while (i < d1) { s += a(i).toDouble * b(i); i += 1 }
+      s
+    }
+    def buckets(v: Array[Float], tables: Int) = (0 until tables).map(t =>
+      (0 until p1).map(p =>
+        if (fold(v, allSigns(t * p1 + p)(_)) > 0) 1L << p else 0L).sum)
+    def cos(a: Array[Float], b: Array[Float]) =
+      fold(a, b(_).toDouble) / (math.sqrt(fold(a, a(_).toDouble)) *
+        math.sqrt(fold(b, b(_).toDouble)))
+    val bench = vecs.take(5).map(_._2)
+    // threshold -1 keeps every candidate pair, so on one table the drop
+    // set IS the shared-bucket set and any extra key shows; 3 tables at
+    // 0.4 check the verify too
+    for ((threshold, tables) <- Seq((0.4, 3), (-1.0, 1)))
+        withClue(s"threshold $threshold, tables $tables: ") {
+      val replayKept = vecs.filterNot { case (_, c) =>
+        bench.exists(b => buckets(c, tables).zip(buckets(b, tables))
+          .exists(x => x._1 == x._2) && cos(c, b) >= threshold)
+      }.map(_._1).sorted.toArray
       ids(Decontaminate.dropNearBenchmarkEmbeddings(
-        corp, bmk, "id", "v", threshold = 0.4,
-        planes = 4, tables = 3, dim = 8))
+        corp, bmk, "id", "v", threshold = threshold,
+        planes = p1, tables = tables, dim = d1)) shouldBe replayKept
+      // the replay both keeps and drops rows, so the comparison has teeth
+      replayKept.length should (be > 0 and be < n)
+    }
     // single-table plant: corpus vector = benchmark vector shifted
     // across ONLY its smallest-margin plane (shift orthogonal to the
     // other three sign vectors) — invisible at probes=1 (different
@@ -138,7 +169,7 @@ class DecontaminateSpec extends SparkSpec {
       (2L, Array.tabulate(dim)(j => math.cos(j * 2.3).toFloat))).toDF("id", "v")
     val bmk2 = Seq((900L, bv.map(_.toFloat))).toDF("id", "v")
     def kept(probes: Int) = ids(
-      Decontaminate.dropNearBenchmarkEmbeddingsMultiProbe(
+      Decontaminate.dropNearBenchmarkEmbeddings(
         corp2, bmk2, "id", "v", threshold = 0.9,
         planes = planes, tables = 1, dim = dim, probes = probes))
     kept(1) should contain(1L) // leak survives single-probe

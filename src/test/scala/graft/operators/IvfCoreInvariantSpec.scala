@@ -5,10 +5,13 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Family-wide invariants of [[Similarity]]'s IVF core, one table row
-  * per codec:
+/** Family-wide invariants of [[Similarity]]'s vector core, one table
+  * row per codec (and, for the raw codec, per coarse stage):
   *  (a) probing every list (nprobe = numLists) answers exactly what the
-  *      codec's flat scan answers, in memory and from a store;
+  *      codec's flat scan answers, in memory and from a store; an LSH
+  *      store answers what the in-memory LSH probe answers;
+  *  (b) recall@k against brute force never drops as the probe widens
+  *      (a seeded property over random corpora);
   *  (c) appending a batch to a store probes the same as building the
   *      store from both batches at once.
   */
@@ -27,7 +30,7 @@ class IvfCoreInvariantSpec extends SparkSpec {
   // a store missing any row) changes the answer, not just its tail
   private val k = 149
   private lazy val cents = Similarity.seedCentroids(corpus, id, vec, 4)
-  private lazy val all = Some(cents)
+  private def ivf(nprobe: Int) = Coarse.Ivf(cents, nprobe)
   private lazy val (mins, maxs) = Similarity.trainSqParams(corpus, vec, 8)
 
   private case class Case(name: String, codec: Codec,
@@ -53,10 +56,9 @@ class IvfCoreInvariantSpec extends SparkSpec {
   private def tmp(tag: String) = java.nio.file.Files
     .createTempDirectory(s"ivf-core-$tag-").toString + "/idx"
 
-  private def fromStore(path: String, codec: Codec,
-      centroids: Option[Seq[Array[Double]]], nprobe: Int) =
+  private def fromStore(path: String, codec: Codec, coarse: Coarse) =
     rows(Similarity.stageFromStore(spark, path, queries, id, vec, k, codec,
-      centroids, nprobe)._1)
+      coarse)._1)
 
   /** A residual codec has no flat scan; its exhaustive answer is the
     * flat PQ scan of each list's residuals against that list's
@@ -85,18 +87,19 @@ class IvfCoreInvariantSpec extends SparkSpec {
         if (c.codec.residual) residualExhaustive(c.codec.asInstanceOf[Codec.Pq])
         else {
           val flat = rows(Similarity.codecTopK(corpus, queries, id, vec, k,
-            c.codec, None, 0))
+            c.codec, Coarse.Scan))
           val flatStore = tmp(s"${c.name}-flat")
-          Similarity.writeStore(corpus, id, vec, c.codec, None, flatStore)
-          fromStore(flatStore, c.codec, None, 0) shouldBe flat
+          Similarity.writeStore(corpus, id, vec, c.codec, Coarse.Scan,
+            flatStore)
+          fromStore(flatStore, c.codec, Coarse.Scan) shouldBe flat
           flat
         }
       exhaustive should have size (queries.count() * k)
-      rows(Similarity.codecTopK(corpus, queries, id, vec, k, c.codec, all,
-        cents.size)) shouldBe exhaustive
+      rows(Similarity.codecTopK(corpus, queries, id, vec, k, c.codec,
+        ivf(cents.size))) shouldBe exhaustive
       val store = tmp(c.name)
-      Similarity.writeStore(corpus, id, vec, c.codec, all, store)
-      fromStore(store, c.codec, all, cents.size) shouldBe exhaustive
+      Similarity.writeStore(corpus, id, vec, c.codec, ivf(1), store)
+      fromStore(store, c.codec, ivf(cents.size)) shouldBe exhaustive
     }
   }
 
@@ -108,18 +111,65 @@ class IvfCoreInvariantSpec extends SparkSpec {
       ranks(Similarity.bruteForceTopK(corpus, queries, id, vec, k))
   }
 
+  test("(a) lsh: store ≡ in-memory probe for probes ∈ {1, 2, planes}") {
+    val planes = 4
+    val store = tmp("lsh")
+    Similarity.writeStore(corpus, id, vec, Codec.Flat,
+      Coarse.Lsh(planes, 8, 1), store)
+    for (probes <- Seq(1, 2, planes)) withClue(s"probes=$probes: ") {
+      val lsh = Coarse.Lsh(planes, 8, probes)
+      val inMemory = rows(Similarity.codecTopK(corpus, queries, id, vec, k,
+        Codec.Flat, lsh))
+      inMemory should not be empty
+      fromStore(store, Codec.Flat, lsh) shouldBe inMemory
+    }
+  }
+
+  test("(b) recall@k vs bruteForceTopK never drops as nprobe or probes grows") {
+    // the probed lists (buckets) are prefixes of one fixed order and the
+    // scores are exact, so a wider probe only adds candidates: every true
+    // top-k neighbor found at width p is still found at p + 1
+    import org.scalacheck.{Gen, Prop, Test => Check}
+    val (n, dim, numLists, planes, kk) = (60, 8, 4, 4, 10)
+    def recall(truth: Set[(Long, Long)], approx: DataFrame): Double =
+      approx.select("query_id", "neighbor_id").as[(Long, Long)].collect()
+        .count(truth.contains).toDouble / truth.size
+    val prop = Prop.forAllNoShrink(Gen.choose(0L, Long.MaxValue)) { seed =>
+      val rng = new scala.util.Random(seed)
+      val df = (0L until n.toLong).map(i => (i, Array.fill(dim)(
+        (rng.nextDouble() * 2 - 1).toFloat))).toDF(id, vec)
+      val qs = df.filter(col(id) < 4)
+      val truth = Similarity.bruteForceTopK(df, qs, id, vec, kk)
+        .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
+      val cs = Similarity.seedCentroids(df, id, vec, numLists)
+      val ivfRecall = (1 to numLists).map(p => recall(truth,
+        Similarity.codecTopK(df, qs, id, vec, kk, Codec.Flat,
+          Coarse.Ivf(cs, p))))
+      val lshRecall = (1 to planes).map(p => recall(truth,
+        Similarity.lshTopK(df, qs, id, vec, kk, planes, dim, p)))
+      def monotone(r: Seq[Double]) = r.zip(r.tail).forall(t => t._1 <= t._2)
+      Prop(monotone(ivfRecall) && monotone(lshRecall) &&
+        ivfRecall.last == 1.0) :|
+        s"seed $seed: ivf $ivfRecall lsh $lshRecall"
+    }
+    val result = Check.check(Check.Parameters.default
+      .withMinSuccessfulTests(5).withWorkers(1)
+      .withInitialSeed(org.scalacheck.rng.Seed(20260517L)), prop)
+    withClue(result.status.toString) { result.passed shouldBe true }
+  }
+
   test("(c) append(b2) after write(b1) probes the same as write(b1 ∪ b2)") {
     val b1 = corpus.filter(col(id) < 90)
     val b2 = corpus.filter(col(id) >= 90)
     for (c <- cases; append <- c.append) withClue(s"${c.name}: ") {
       val appended = tmp(s"${c.name}-append")
-      Similarity.writeStore(b1, id, vec, c.codec, all, appended)
+      Similarity.writeStore(b1, id, vec, c.codec, ivf(1), appended)
       append(b2, appended)
       val rebuilt = tmp(s"${c.name}-rebuild")
-      Similarity.writeStore(b1.union(b2), id, vec, c.codec, all, rebuilt)
+      Similarity.writeStore(b1.union(b2), id, vec, c.codec, ivf(1), rebuilt)
       for (nprobe <- Seq(2, cents.size))
-        fromStore(appended, c.codec, all, nprobe) shouldBe
-          fromStore(rebuilt, c.codec, all, nprobe)
+        fromStore(appended, c.codec, ivf(nprobe)) shouldBe
+          fromStore(rebuilt, c.codec, ivf(nprobe))
     }
   }
 }

@@ -34,7 +34,8 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("lsh buckets: identical direction vectors share a bucket") {
-    val b = Similarity.withLshBucket(vecs, "embedding", planes = 8, dim = 3)
+    val b = vecs.withColumn("bucket",
+        Similarity.lshBucket($"embedding", planes = 8, dim = 3))
       .select("vec_id", "bucket").as[(Long, Long)].collect().toMap
     b(1L) shouldBe b(3L)  // parallel vectors: identical projections
     b(1L) should not be b(5L) // opposite vector flips every sign bit
@@ -359,8 +360,8 @@ class SimilaritySpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("query_id", "neighbor_id", "rank", "sim")
         .as[(Long, Long, Long, Double)].collect().sortBy(t => (t._1, t._3))
-    // probes=1 ≡ lshTopK; probes=3 ≡ lshTopKMultiProbe — vectors and
-    // norms round-trip parquet exactly
+    // store ≡ in-memory at probes=1 and 3 — vectors and norms
+    // round-trip parquet exactly
     rows(Similarity.lshTopKFromStore(spark, store, queries,
       "vec_id", "embedding", k = 5, planes = 4, dim = 8)) shouldBe
       rows(Similarity.lshTopK(corpus, queries,
@@ -368,7 +369,7 @@ class SimilaritySpec extends SparkSpec {
     val stored = Similarity.lshTopKFromStore(spark, store, queries,
       "vec_id", "embedding", k = 5, planes = 4, dim = 8, probes = 3)
     rows(stored) shouldBe
-      rows(Similarity.lshTopKMultiProbe(corpus, queries,
+      rows(Similarity.lshTopK(corpus, queries,
         "vec_id", "embedding", k = 5, planes = 4, dim = 8, probes = 3))
     // the probed-bucket union reaches the file index as a partition
     // filter — unprobed bucket= directories are never listed
@@ -1249,16 +1250,27 @@ class SimilaritySpec extends SparkSpec {
     (i, Array.tabulate(8)(j => math.sin(i * 0.37 + j * 1.13).toFloat))
   }.toDF("vec_id", "embedding")
 
-  test("lshTopKMultiProbe: probes=1 is bit-identical to lshTopK") {
+  test("lshTopK: probes=1 scores exactly the query's own lshBucket") {
     val corpus = mpVecs(120)
     val queries = corpus.filter($"vec_id" < 8)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("query_id", "neighbor_id", "rank", "sim")
         .as[(Long, Long, Long, Double)].collect().sortBy(t => (t._1, t._3))
-    rows(Similarity.lshTopKMultiProbe(corpus, queries, "vec_id", "embedding",
-      k = 5, planes = 4, dim = 8, probes = 1)) shouldBe
-      rows(Similarity.lshTopK(corpus, queries, "vec_id", "embedding",
-        k = 5, planes = 4, dim = 8))
+    // the probe array itself: array(lshBucket(v)), nothing else
+    val b0 = Similarity.lshBucket($"embedding", 4, 8)
+    corpus.select(b0.as("b0"), Similarity.probeBuckets($"embedding", b0, 0,
+        planes = 4, dim = 8, probes = 1).as("bs"))
+      .as[(Long, Seq[Long])].collect()
+      .foreach { case (b, bs) => bs shouldBe Seq(b) }
+    // and the ranking: exact cosine brute force over the query's bucket
+    val bucketed = corpus.withColumn("b", b0)
+    val perBucket = queries.withColumn("b", b0).select("vec_id", "b")
+      .as[(Long, Long)].collect().map { case (q, b) =>
+        Similarity.bruteForceTopK(bucketed.filter($"b" === b),
+          bucketed.filter($"vec_id" === q), "vec_id", "embedding", k = 5)
+      }.reduce(_ union _)
+    rows(Similarity.lshTopK(corpus, queries, "vec_id", "embedding",
+      k = 5, planes = 4, dim = 8, probes = 1)) shouldBe rows(perBucket)
   }
 
   test("lshTopKMultiProbe: planted near-dup recovered by a flipped probe") {
@@ -1307,7 +1319,7 @@ class SimilaritySpec extends SparkSpec {
     }
     val corpus = (base ++ planted).toDF("vec_id", "embedding")
     val queries = corpus.filter($"vec_id" < 5)
-    def found(probes: Int) = Similarity.lshTopKMultiProbe(
+    def found(probes: Int) = Similarity.lshTopK(
       corpus, queries, "vec_id", "embedding",
       k = 300, planes = planes, dim = dim, probes = probes)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
@@ -1324,7 +1336,7 @@ class SimilaritySpec extends SparkSpec {
     // same rows as single-probe for that query
     val shortQ = Seq((900L, Array(1.0f, 2.0f)))
       .toDF("vec_id", "embedding")
-    val multi = Similarity.lshTopKMultiProbe(corpus, shortQ,
+    val multi = Similarity.lshTopK(corpus, shortQ,
       "vec_id", "embedding", k = 200, planes = 4, dim = 8, probes = 3)
     val single = Similarity.lshTopK(corpus, shortQ,
       "vec_id", "embedding", k = 200, planes = 4, dim = 8)
@@ -1334,7 +1346,7 @@ class SimilaritySpec extends SparkSpec {
     // real, so the candidate pool strictly grows vs single-probe
     val longQ = Seq((901L, Array.tabulate(11)(j =>
       math.sin(0.37 + j * 1.13).toFloat))).toDF("vec_id", "embedding")
-    val mLong = Similarity.lshTopKMultiProbe(corpus, longQ,
+    val mLong = Similarity.lshTopK(corpus, longQ,
       "vec_id", "embedding", k = 200, planes = 4, dim = 8, probes = 3)
     val sLong = Similarity.lshTopK(corpus, longQ,
       "vec_id", "embedding", k = 200, planes = 4, dim = 8)

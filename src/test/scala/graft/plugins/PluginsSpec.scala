@@ -20,6 +20,17 @@ class FixtureClassReader extends Reader {
   }
 }
 
+/** A test writer plugin: one parquet write, one FileMeta per file. */
+object FixtureWriter extends Writer {
+  def write(df: DataFrame, config: Map[String, Any]): Seq[FileMeta] = {
+    val path = config("path").toString
+    df.coalesce(1).write.mode("overwrite").parquet(path)
+    new java.io.File(path).listFiles().toSeq
+      .filter(_.getName.endsWith(".parquet"))
+      .map(f => FileMeta(f.getPath, df.count(), f.length()))
+  }
+}
+
 class PluginsSpec extends SparkSpec {
 
   test("loads a Scala object reader and reads through it") {
@@ -33,6 +44,22 @@ class PluginsSpec extends SparkSpec {
   test("loads a no-arg class reader") {
     PluginLoader.loadReader("graft.plugins.FixtureClassReader")
       .read(spark, Map.empty).collect()(0).getLong(0) shouldBe 2L
+  }
+
+  test("loads a Scala object writer: write lands files, default commit accepts") {
+    import spark.implicits._
+    val w = PluginLoader.loadWriter("graft.plugins.FixtureWriter")
+    val dir = java.nio.file.Files.createTempDirectory("plugin-writer-")
+      .resolve("out").toString
+    val metas = w.write(Seq((1L, "a"), (2L, "b")).toDF("id", "name"),
+      Map("path" -> dir))
+    metas.map(_.records) shouldBe Seq(2L)
+    metas.head.bytes should be > 0L
+    w.commit(metas, Map.empty) shouldBe true
+    spark.read.parquet(dir).count() shouldBe 2L
+    // a reader is not a writer
+    an[IllegalArgumentException] should be thrownBy
+      PluginLoader.loadWriter("graft.plugins.FixtureReader")
   }
 
   test("rejects classes that don't implement the trait") {
