@@ -534,9 +534,12 @@ object Bench {
     // corpus model (r22): "split" = per-replica vocabulary (default,
     // the no-artificial-near-dups model); "dup" = verbatim doc replicas
     // (df ∝ N - the regime where the BM25 maxDf ceiling is live; BM25
-    // families only). Each model keeps its own corpus tree so
-    // GRAFT_SCALE_REUSE can never serve one model's corpus to the other.
+    // families only). Each model keeps its own default corpus tree, and
+    // a reused corpus must carry this model's marker, so
+    // GRAFT_SCALE_REUSE cannot serve one model's corpus to the other even
+    // under an explicit GRAFT_SCALE_DIR.
     val model = sys.env.getOrElse("GRAFT_SCALE_MODEL", "split")
+    graft.tools.ScaleCorpus.requireModel(model)
     val work = sys.env.getOrElse("GRAFT_SCALE_DIR",
       System.getProperty("java.io.tmpdir") +
         (if (model == "split") "/graft_scale" else s"/graft_scale_$model"))
@@ -563,8 +566,8 @@ object Bench {
     val errors = scala.collection.mutable.ArrayBuffer[(String, String)]()
     factors.foreach { f =>
       val out = s"$work/sf${f}x"
-      val done = new java.io.File(s"$out/embeddings.parquet/_SUCCESS")
-      if (sys.env.contains("GRAFT_SCALE_REUSE") && done.exists()) {
+      if (sys.env.contains("GRAFT_SCALE_REUSE") &&
+          graft.tools.ScaleCorpus.reusable(out, model)) {
         System.err.println(s"[bench-scale] reuse ${f}x corpus at $out")
         legs += f -> out
       } else {

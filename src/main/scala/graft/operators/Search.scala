@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.StoreScan
 
 /** Distributed full-text retrieval: an inverted index (postings with
   * denormalized length/df) plus BM25 top-k scoring, in-flight or
@@ -32,6 +33,11 @@ import org.apache.spark.sql.functions._
   *    posting row, so a probe reads only the query terms' bucket
   *    partitions (partition pruning + token predicate pushdown) and
   *    never joins a corpus-sized side table;
+  *  - a store probe lists only those bucket directories, on the driver,
+  *    and takes the schema from one footer ([[graft.core.StoreScan]]:
+  *    no listing or schema-inference Spark job, whatever the bucket
+  *    count), and collects its (query, term) rows once — the term set,
+  *    the probed buckets and the scoring broadcast all come from them;
   *  - top-k per query is a bounded row_number window over the few
   *    surviving (query, doc) groups.
   */
@@ -220,8 +226,8 @@ object Search {
     * bucket, with a one-row `_meta` sidecar carrying the corpus stats
     * the scoring formula needs. Probes then read only the buckets some
     * query term hashes into — on a production index with thousands of
-    * buckets, a short query touches a handful of partition directories
-    * and never lists the rest.
+    * buckets, a short query lists and reads a handful of partition
+    * directories and never lists the rest ([[graft.core.StoreScan]]).
     */
   def writePostingsStore(docs: DataFrame, idCol: String, textCol: String,
       storePath: String, buckets: Int = 64): Unit = {
@@ -250,40 +256,61 @@ object Search {
       .write.mode("overwrite").parquet(s"$storePath/_meta")
   }
 
-  /** BM25 top-k against a persisted postings store. Query terms collect
-    * driver-side (distinct tokens of a small seed set — same ceiling as
-    * the broadcast in [[bm25TopK]]); their bucket union is inlined as a
-    * literal partition filter and the term set as a pushed string
-    * predicate, so the scan is O(probed buckets). Scores are
-    * bit-identical to the in-flight path: tf/len/df are longs and the
-    * token strings round-trip parquet exactly.
+  /** BM25 top-k against a persisted postings store. The (query, term)
+    * rows collect driver-side ONCE (tokens of a small seed set — same
+    * ceiling as the broadcast in [[bm25TopK]]); the scoring join
+    * broadcasts a local relation of those rows, and their bucket union
+    * names the only directories [[graft.core.StoreScan]] lists (on the
+    * driver, with one footer for the schema — no listing or schema Spark
+    * job). The bucket union also stays a literal partition filter and
+    * the term set a pushed string predicate, so the scan is
+    * O(probed buckets). Scores are bit-identical to the in-flight path:
+    * tf/len/df are longs and the token strings round-trip parquet
+    * exactly.
     */
   def bm25TopKFromStore(spark: SparkSession, storePath: String,
       queries: DataFrame, idCol: String, textCol: String, k: Int,
       k1: Double = DefaultK1, b: Double = DefaultB,
       maxDf: Long = 0L): DataFrame = {
-    val meta = spark.read.parquet(s"$storePath/_meta").collect()(0)
+    val meta = StoreScan.read(spark, s"$storePath/_meta").collect()(0)
     val (nDocs, totalLen, buckets) =
       (meta.getAs[Long]("n_docs"), meta.getAs[Long]("total_len"),
         meta.getAs[Int]("buckets"))
-    val qt = queryTerms(queries, idCol, textCol)
-    val terms = qt.select("tok").distinct().collect()
-      .map(_.getString(0)).sorted.toSeq
-    val probedBuckets = terms
-      .map(t => math.floorMod(MurmurFree.md5Long60(t), buckets.toLong))
-      .distinct.sorted
+    val (qt, terms, probedBuckets) =
+      probedTerms(spark, queries, idCol, textCol, buckets)
     // df is DENORMALIZED into every store row, so the df-ceiling (see
     // bm25TopK) rides the scan as a pushed long predicate — parquet
     // row groups dominated by a stopword's postings skip on statistics
     // before any scoring work
     val dfPred =
       if (maxDf > 0) col("df") <= maxDf else lit(true)
-    val postings = spark.read.parquet(s"$storePath/postings")
+    val postings = StoreScan.read(spark, s"$storePath/postings",
+        "bucket" -> probedBuckets)
       .filter(col("bucket").isInCollection(probedBuckets) &&
         col("tok").isInCollection(terms) && dfPred)
       .select("tok", "doc_id", "tf", "len", "df")
     scoreTopK(postings, qt, (nDocs, totalLen), k, k1, b)
   }
+
+  /** The query side of a store probe, computed ONCE: the (query_id, tok)
+    * rows collect to the driver (driver-small — the contract the scoring
+    * broadcast already assumes), the sorted term set and probed buckets
+    * derive from them, and the returned frame is a local relation of the
+    * same rows for the scoring join to broadcast, so the query
+    * tokenization is neither planned nor run a second time.
+    */
+  private def probedTerms(spark: SparkSession, queries: DataFrame,
+      idCol: String, textCol: String, buckets: Int)
+      : (DataFrame, Seq[String], Seq[Long]) = {
+    val q = queryTerms(queries, idCol, textCol)
+    val rows = q.collect()
+    val terms = rows.map(_.getAs[String]("tok")).distinct.sorted.toSeq
+    (spark.createDataFrame(java.util.Arrays.asList(rows: _*), q.schema),
+      terms,
+      terms.map(t => math.floorMod(MurmurFree.md5Long60(t), buckets.toLong))
+        .distinct.sorted)
+  }
+
   // ------------------------------------------------- exact phrase match
 
   /** Exact token-phrase occurrence counts: documents containing
@@ -717,9 +744,10 @@ object Search {
     try body finally debrisOverride.set(prev)
   }
 
-  /** BM25 top-k across ALL segments of an appendable index. The scan is
-    * still partition-pruned to the query terms' buckets (within every
-    * segment partition); corpus stats are the sum of the per-segment
+  /** BM25 top-k across ALL segments of an appendable index. The scan
+    * reads only the live segments × the query terms' bucket directories
+    * ([[graft.core.StoreScan]]), and the (query, term) rows collect once
+    * as in [[bm25TopKFromStore]]; corpus stats are the sum of the per-segment
     * `_meta` rows; df comes from a probe-time aggregate over the pruned
     * postings (≤ |terms| result rows, broadcast back). Results are
     * identical to a monolithic index over the same documents.
@@ -728,7 +756,7 @@ object Search {
       queries: DataFrame, idCol: String, textCol: String, k: Int,
       k1: Double = DefaultK1, b: Double = DefaultB,
       maxDf: Long = 0L): DataFrame = {
-    val metas = spark.read.parquet(segmentMetaPath(spark, storePath))
+    val metas = StoreScan.read(spark, segmentMetaPath(spark, storePath))
       .collect()
     require(metas.nonEmpty, s"empty search index at $storePath")
     val bucketSizes = metas.map(_.getAs[Int]("buckets")).distinct
@@ -763,12 +791,8 @@ object Search {
     // double-count df/stats — `segment` is a partition column, so this
     // prunes directories, it does not scan them
     val liveSegs = metas.map(_.getAs[String]("segment")).toSeq
-    val qt = queryTerms(queries, idCol, textCol)
-    val terms = qt.select("tok").distinct().collect()
-      .map(_.getString(0)).sorted.toSeq
-    val probedBuckets = terms
-      .map(t => math.floorMod(MurmurFree.md5Long60(t), buckets.toLong))
-      .distinct.sorted
+    val (qt, terms, probedBuckets) =
+      probedTerms(spark, queries, idCol, textCol, buckets)
     // pruned feeds both the df aggregate and the scoring join — persist
     // so the store scan runs once (releasable via CacheScope)
     // bucket before segment: both prune partitions, but the rendered
@@ -776,7 +800,8 @@ object Search {
     // segment list is UUIDs — bucket-first keeps the pruning visible
     // to plan audits
     val pruned = graft.core.CacheScope.persist(
-      spark.read.parquet(s"$storePath/postings")
+      StoreScan.read(spark, s"$storePath/postings",
+          "segment" -> liveSegs, "bucket" -> probedBuckets)
         .filter(col("bucket").isInCollection(probedBuckets) &&
           col("segment").isInCollection(liveSegs) &&
           col("tok").isInCollection(terms))

@@ -673,11 +673,20 @@ object Similarity {
     graft.core.StoreMeta.requireIfPresent(spark, storePath, kind, keys)
   }
 
-  /** A store's rows under the core's column names. */
+  /** A store's rows under the core's column names: the probed lists'
+    * partitions only under a coarse stage ([[graft.core.StoreScan]] —
+    * no listing or schema job), the whole store for a flat scan.
+    */
   private def readStore(spark: org.apache.spark.sql.SparkSession,
-      storePath: String, coarse: Coarse): DataFrame =
-    coarse.storedNames.foldLeft(spark.read.parquet(storePath)) {
+      storePath: String, coarse: Coarse, probedLists: Seq[Any]): DataFrame = {
+    val stored = coarse match {
+      case Coarse.Scan => graft.core.StoreScan.read(spark, storePath)
+      case _ => graft.core.StoreScan.read(spark, storePath,
+        coarse.storedNames.getOrElse("list", "list") -> probedLists)
+    }
+    coarse.storedNames.foldLeft(stored) {
       case (d, (core, stored)) => d.withColumnRenamed(stored, core) }
+  }
 
   /** Encoded corpus rows: (`idAs`, list, payload…) under a coarse
     * stage, else (`idAs`, payload…). Assignment and encode are
@@ -808,26 +817,34 @@ object Similarity {
 
   /** Probe a stored index of any codec: the top-k plus the probed-list
     * set it pruned to (empty for a flat store), so a two-stage refine
-    * prunes the raw store to the SAME partition union without re-running
-    * the probe-discovery job. The union is driver-small by construction
-    * (≤ |queries| × probe width ids), so inlining it as a literal IN
-    * pushes the pruning into the file index — on a 10k-list index a
-    * 10-query probe touches ~40 partition directories and never lists
-    * the rest. Codes, floats and norms round-trip parquet exactly, so a
-    * store probe is bit-identical to the in-memory path.
+    * reads the raw store's SAME partition union. The query side
+    * (`probeFrame`) runs once: its rows collect to the driver
+    * (≤ |queries| × probe width rows — the contract the scoring
+    * broadcast already assumes), the sorted probed lists derive from
+    * them, and the scoring join broadcasts a local relation of the same
+    * rows. The store read is [[graft.core.StoreScan]] over the probed
+    * lists' directories only — on a 10k-list index a 10-query probe
+    * lists ~40 partition directories on the driver, reads one footer for
+    * the schema and runs no listing or schema-inference job; the literal
+    * IN on the list column still prunes inside them. Codes, floats and
+    * norms round-trip parquet exactly, so a store probe is bit-identical
+    * to the in-memory path.
     */
   private[operators] def stageFromStore(
       spark: org.apache.spark.sql.SparkSession, storePath: String,
       queries: DataFrame, idCol: String, vecCol: String, k: Int,
       codec: Codec, coarse: Coarse): (DataFrame, Seq[Any]) = {
     requireStore(spark, storePath, codec, coarse)
-    val probes = probeFrame(queries, idCol, vecCol, codec, coarse)
+    val probeQ = probeFrame(queries, idCol, vecCol, codec, coarse)
+    val probeRows = probeQ.collect()
+    val probes = spark.createDataFrame(java.util.Arrays.asList(probeRows: _*),
+      probeQ.schema)
     val probedLists =
       if (coarse == Coarse.Scan) Nil
-      else probes.select("list").distinct().collect().map(_.get(0))
+      else probeRows.map(_.getAs[Any]("list")).distinct
         .sortBy(_.asInstanceOf[Number].longValue).toSeq
     val payload = codec.payload.map(col)
-    val stored = readStore(spark, storePath, coarse)
+    val stored = readStore(spark, storePath, coarse, probedLists)
     val enc =
       if (coarse == Coarse.Scan)
         stored.select(col("id").as("neighbor_id") +: payload: _*)
@@ -852,7 +869,7 @@ object Similarity {
     val (shortlist, probedLists) = stageFromStore(spark, storePath, queries,
       idCol, vecCol, k * factor, codec, coarse)
     requireStore(spark, rawStorePath, Codec.Flat, coarse)
-    val rawPruned = readStore(spark, rawStorePath, coarse)
+    val rawPruned = readStore(spark, rawStorePath, coarse, probedLists)
       .filter(col("list").isInCollection(probedLists))
       .select(col("id").as(idCol), col("v").as(vecCol))
     rerankExact(shortlist, rawPruned, queries, idCol, vecCol, k)
@@ -1441,8 +1458,11 @@ object Similarity {
     * partitions pruned to the probed lists) and the raw-vector store
     * ([[writeIvfAssignments]]) answers the exact refine over the SAME
     * probed lists ([[rerankFromStores]]): at a 10k-list production index
-    * a 10-query retrieval touches ~40 directories of code bytes plus the
-    * same ~40 of raw vectors, never the rest of either store.
+    * a 10-query retrieval lists and reads ~40 directories of code bytes
+    * plus the same ~40 of raw vectors, never the rest of either store —
+    * each store read is [[graft.core.StoreScan]] (probed directories
+    * listed on the driver, one footer for the schema, no listing or
+    * schema-inference Spark job), and the query side runs once.
     */
   def ivfPqRerankTopKFromStores(
       spark: org.apache.spark.sql.SparkSession,
@@ -1497,8 +1517,11 @@ object Similarity {
     * the raw-vector store ([[writeIvfAssignments]]) answers the exact
     * refine, BOTH scans pruned to the probed lists (every shortlist
     * member came from a probed list). At a 10k-list production index a
-    * 10-query retrieval touches ~nprobe·|Q| directories of code bytes
-    * plus the same few of raw vectors — never the rest of either store.
+    * 10-query retrieval lists and reads ~nprobe·|Q| directories of code
+    * bytes plus the same few of raw vectors — never the rest of either
+    * store: each read is [[graft.core.StoreScan]] (probed directories
+    * listed on the driver, one footer for the schema, no listing or
+    * schema-inference Spark job), and the query side runs once.
     */
   def ivfSqRerankTopKFromStores(
       spark: org.apache.spark.sql.SparkSession,

@@ -45,8 +45,7 @@ object ScaleCorpus {
   def synthesize(spark: SparkSession, inDir: String, outDir: String,
       factor: Int, model: String = "split"): Unit = {
     require(factor >= 1, s"factor must be >= 1: $factor")
-    require(model == "split" || model == "dup",
-      s"unknown corpus model '$model' (split | dup)")
+    requireModel(model)
     val reps = spark.range(factor).select(col("id").cast("int").as("repl"))
 
     val docs = spark.read.parquet(s"$inDir/documents.parquet")
@@ -89,8 +88,43 @@ object ScaleCorpus {
 
     spark.read.parquet(s"$inDir/region.parquet")
       .write.mode("overwrite").parquet(s"$outDir/region.parquet")
+    // last: a marker only a complete corpus carries
+    val marker = new org.apache.hadoop.fs.Path(outDir, ModelMarker)
+    val out = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .create(marker, true)
+    try out.write(model.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    finally out.close()
     System.err.println(s"[scale-corpus] wrote ${factor}x corpus to $outDir")
   }
+
+  /** The file beside a synthesized corpus naming the model it was built
+    * under.
+    */
+  val ModelMarker = "_model"
+
+  /** Refuse any corpus model but `split` and `dup`. */
+  def requireModel(model: String): Unit =
+    require(model == "split" || model == "dup",
+      s"unknown corpus model '$model' (split | dup)")
+
+  /** Whether the local corpus at `outDir` can be reused for `model`:
+    * false when there is no complete corpus there, true when its model
+    * marker names `model`. A corpus of another model, or one without a
+    * marker, is refused: reusing it would measure the other model.
+    */
+  def reusable(outDir: String, model: String): Boolean =
+    new java.io.File(s"$outDir/embeddings.parquet/_SUCCESS").exists() && {
+      val marker = java.nio.file.Paths.get(outDir, ModelMarker)
+      val have =
+        if (java.nio.file.Files.exists(marker))
+          new String(java.nio.file.Files.readAllBytes(marker),
+            java.nio.charset.StandardCharsets.UTF_8)
+        else "<no marker>"
+      require(have == model, s"corpus at $outDir was synthesized under " +
+        s"model '$have', not '$model': delete it or set another " +
+        "GRAFT_SCALE_DIR")
+      true
+    }
 
   def main(args: Array[String]): Unit = {
     require(args.length == 3 || args.length == 4,

@@ -27,6 +27,43 @@ object GraftExpressionBridge {
       schema: org.apache.spark.sql.types.StructType): DataFrame =
     spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rdd, schema)
 
+  /** A parquet relation over leaf files the caller has already listed:
+    * `leaves` maps each root directory to every data file under it.
+    * Spark's own file index would list the roots again (as a Spark job
+    * above 32 of them); here it reads the given listing instead, so
+    * building the frame touches no file. Partition columns are inferred
+    * from the directory names under `basePath`, and the schema is
+    * `dataSchema` (made nullable, as every file source makes it) plus
+    * those columns — what `spark.read.parquet` would build over the same
+    * files. The listing is a snapshot: a refresh does not re-list.
+    */
+  def parquetOverListing(spark: SparkSession, basePath: String,
+      leaves: Seq[(org.apache.hadoop.fs.Path, Array[org.apache.hadoop.fs.FileStatus])],
+      dataSchema: org.apache.spark.sql.types.StructType): DataFrame = {
+    import org.apache.spark.sql.execution.datasources.{FileStatusCache,
+      HadoopFsRelation, InMemoryFileIndex}
+    val listed = leaves.toMap
+    val cache = new FileStatusCache {
+      override def getLeafFiles(p: org.apache.hadoop.fs.Path) = listed.get(p)
+      def putLeafFiles(p: org.apache.hadoop.fs.Path,
+          files: Array[org.apache.hadoop.fs.FileStatus]): Unit = ()
+      def invalidateAll(): Unit = ()
+    }
+    val opts = Map("basePath" -> basePath)
+    val index = new InMemoryFileIndex(spark, leaves.map(_._1), opts,
+      Some(dataSchema), cache)
+    spark.baseRelationToDataFrame(HadoopFsRelation(index,
+      index.partitionSchema, dataSchema.asNullable, None,
+      new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat,
+      opts)(spark))
+  }
+
+  /** Spark's file-listing rule for names that are not data: `_…` and
+    * `.…` entries (a `_`-name holding `=` is a partition directory).
+    */
+  def hiddenPathName(name: String): Boolean =
+    org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(name)
+
   /** Compile every WholeStageCodegen span of a plan EAGERLY, returning
     * the per-span (methodName, generated-source length, error) — the
     * probe behind the codegen-compilability pin: Spark demotes a span

@@ -9,7 +9,7 @@ import graft.operators.Similarity
   * training sidecars alone — no re-derivation from the corpus — with
   * results bit-identical to the in-memory build it replaces.
   */
-class BuildIndexSpec extends SparkSpec {
+class BuildIndexSpec extends SparkSpec with TempDirs {
   import spark.implicits._
 
   private def vecs(n: Int) = (0L until n.toLong).map { i =>
@@ -24,13 +24,10 @@ class BuildIndexSpec extends SparkSpec {
 
   test("ivfsq + raw twin: built stores probe bit-identically to in-memory two-stage, from sidecars alone") {
     val data = vecs(120)
-    val inPath = java.nio.file.Files
-      .createTempDirectory("bidx-in-").toString + "/emb"
+    val inPath = tempDir("bidx-in-") + "/emb"
     data.write.parquet(inPath)
-    val store = java.nio.file.Files
-      .createTempDirectory("bidx-ivfsq-").toString + "/idx"
-    val rawStore = java.nio.file.Files
-      .createTempDirectory("bidx-raw-").toString + "/idx"
+    val store = tempDir("bidx-ivfsq-") + "/idx"
+    val rawStore = tempDir("bidx-raw-") + "/idx"
     val cfg = writeCfg(
       s"input: $inPath",
       "id_field: vec_id",
@@ -64,11 +61,9 @@ class BuildIndexSpec extends SparkSpec {
 
   test("ivfpq with training: persisted codebook is the TRAINED one the store encodes with") {
     val data = vecs(100)
-    val inPath = java.nio.file.Files
-      .createTempDirectory("bidx-in2-").toString + "/emb"
+    val inPath = tempDir("bidx-in2-") + "/emb"
     data.write.parquet(inPath)
-    val store = java.nio.file.Files
-      .createTempDirectory("bidx-ivfpq-").toString + "/idx"
+    val store = tempDir("bidx-ivfpq-") + "/idx"
     val cfg = writeCfg(
       s"input: $inPath",
       "id_field: vec_id",
@@ -105,11 +100,9 @@ class BuildIndexSpec extends SparkSpec {
 
   test("sq + lsh kinds build probe-able stores; unknown kind refuses") {
     val data = vecs(60)
-    val inPath = java.nio.file.Files
-      .createTempDirectory("bidx-in3-").toString + "/emb"
+    val inPath = tempDir("bidx-in3-") + "/emb"
     data.write.parquet(inPath)
-    val sqStore = java.nio.file.Files
-      .createTempDirectory("bidx-sq-").toString + "/idx"
+    val sqStore = tempDir("bidx-sq-") + "/idx"
     BuildIndex.run(spark, writeCfg(
       s"input: $inPath", "id_field: vec_id", "vector_field: embedding",
       "kind: sq", s"store: $sqStore", "dim: 8"))
@@ -117,8 +110,7 @@ class BuildIndexSpec extends SparkSpec {
     Similarity.sqTopKFromStore(spark, sqStore,
       data.filter($"vec_id" < 2), "vec_id", "embedding", k = 3,
       mins = mins, maxs = maxs).count() shouldBe 6
-    val lshStore = java.nio.file.Files
-      .createTempDirectory("bidx-lsh-").toString + "/idx"
+    val lshStore = tempDir("bidx-lsh-") + "/idx"
     BuildIndex.run(spark, writeCfg(
       s"input: $inPath", "id_field: vec_id", "vector_field: embedding",
       "kind: lsh", s"store: $lshStore", "planes: 3", "dim: 8"))
@@ -134,11 +126,9 @@ class BuildIndexSpec extends SparkSpec {
 
   test("misconfiguration refuses up front: wrong dim, raw_store on a non-twin kind") {
     val data = vecs(40) // uniformly 8-dim
-    val inPath = java.nio.file.Files
-      .createTempDirectory("bidx-in4-").toString + "/emb"
+    val inPath = tempDir("bidx-in4-") + "/emb"
     data.write.parquet(inPath)
-    val store = java.nio.file.Files
-      .createTempDirectory("bidx-bad-").toString + "/idx"
+    val store = tempDir("bidx-bad-") + "/idx"
     // omitted dim defaults to 64: on an 8-dim corpus kind: binary would
     // silently write an EMPTY store — must refuse naming the real dim
     val e1 = the[IllegalArgumentException] thrownBy
@@ -195,8 +185,7 @@ class BuildIndexSpec extends SparkSpec {
   test("bm25 + bm25_segment kinds: config-built indexes probe identically to in-flight BM25") {
     import graft.operators.Search
     val docs = docsDf(50)
-    val inPath = java.nio.file.Files
-      .createTempDirectory("bidx-txt-").toString
+    val inPath = tempDir("bidx-txt-")
     docs.write.parquet(s"$inPath/all")
     docs.filter($"doc_id" % 2 === 0).write.parquet(s"$inPath/even")
     docs.filter($"doc_id" % 2 === 1).write.parquet(s"$inPath/odd")
@@ -204,8 +193,7 @@ class BuildIndexSpec extends SparkSpec {
     val direct = Search.bm25TopK(docs, queries, "doc_id", "text", k = 5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .sortBy(t => (t._1, t._3)).toSeq
-    val mono = java.nio.file.Files
-      .createTempDirectory("bidx-bm25-").toString + "/idx"
+    val mono = tempDir("bidx-bm25-") + "/idx"
     BuildIndex.run(spark, writeCfg(s"input: $inPath/all",
       "id_field: doc_id", "text_field: text", "kind: bm25",
       s"store: $mono", "buckets: 8"))
@@ -213,8 +201,7 @@ class BuildIndexSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .sortBy(t => (t._1, t._3)).toSeq shouldBe direct
     // two config-built segments over disjoint halves ≡ the monolith
-    val segd = java.nio.file.Files
-      .createTempDirectory("bidx-bm25s-").toString + "/idx"
+    val segd = tempDir("bidx-bm25s-") + "/idx"
     Seq("even", "odd").foreach(half => BuildIndex.run(spark, writeCfg(
       s"input: $inPath/$half", "id_field: doc_id", "text_field: text",
       "kind: bm25_segment", s"store: $segd", "buckets: 8")))
@@ -228,13 +215,11 @@ class BuildIndexSpec extends SparkSpec {
   test("lm / tfidf / dsir / quality_model kinds: config-built fits score bit-identically") {
     import graft.operators.{LanguageModel, QualityModel, Sampling, Tfidf}
     val docs = docsDf(40)
-    val inPath = java.nio.file.Files
-      .createTempDirectory("bidx-fit-").toString
+    val inPath = tempDir("bidx-fit-")
     docs.write.parquet(s"$inPath/docs")
     val batch = docs.filter($"doc_id" < 6)
     // lm: stored scoring ≡ in-flight fit scoring
-    val lmStore = java.nio.file.Files
-      .createTempDirectory("bidx-lm-").toString + "/m"
+    val lmStore = tempDir("bidx-lm-") + "/m"
     BuildIndex.run(spark, writeCfg(s"input: $inPath/docs",
       "id_field: doc_id", "text_field: text", "kind: lm",
       s"store: $lmStore")).rows shouldBe 40L
@@ -244,10 +229,8 @@ class BuildIndexSpec extends SparkSpec {
     lmRows(LanguageModel.loadModel(spark, lmStore)) shouldBe
       lmRows(LanguageModel.fitBigramModel(docs, "doc_id", "text"))
     // tfidf: config-built store probes like a directly-saved one
-    val cfgStore = java.nio.file.Files
-      .createTempDirectory("bidx-tfidf-").toString + "/s"
-    val dirStore = java.nio.file.Files
-      .createTempDirectory("bidx-tfidf2-").toString + "/s"
+    val cfgStore = tempDir("bidx-tfidf-") + "/s"
+    val dirStore = tempDir("bidx-tfidf2-") + "/s"
     BuildIndex.run(spark, writeCfg(s"input: $inPath/docs",
       "id_field: doc_id", "text_field: text", "kind: tfidf",
       s"store: $cfgStore", "buckets: 16", "max_token_df: 10"))
@@ -260,8 +243,7 @@ class BuildIndexSpec extends SparkSpec {
     // dsir: stored ratios score like the in-flight fit
     val target = docs.filter($"doc_id" % 5 === 0)
     target.write.parquet(s"$inPath/target")
-    val dsirStore = java.nio.file.Files
-      .createTempDirectory("bidx-dsir-").toString + "/r"
+    val dsirStore = tempDir("bidx-dsir-") + "/r"
     BuildIndex.run(spark, writeCfg(s"input: $inPath/docs",
       "id_field: doc_id", "text_field: text", "kind: dsir",
       s"store: $dsirStore", s"target_input: $inPath/target",
@@ -278,8 +260,7 @@ class BuildIndexSpec extends SparkSpec {
     val wmap = Map("common0" -> 0.8, "shared3" -> -1.25, "tok1" -> 0.5)
     val wPath = s"$inPath/weights"
     wmap.toSeq.toDF("token", "weight").write.parquet(wPath)
-    val qStore = java.nio.file.Files
-      .createTempDirectory("bidx-qm-").toString + "/m"
+    val qStore = tempDir("bidx-qm-") + "/m"
     BuildIndex.run(spark, writeCfg(s"input: $wPath", "kind: quality_model",
       "bias: -0.2", s"store: $qStore")).rows shouldBe 3L
     QualityModel.scoreDocs(batch, QualityModel.loadModel(spark, qStore),
@@ -292,12 +273,10 @@ class BuildIndexSpec extends SparkSpec {
 
   test("text kinds refuse misconfiguration before writing anything") {
     val docs = docsDf(10)
-    val inPath = java.nio.file.Files
-      .createTempDirectory("bidx-txtbad-").toString
+    val inPath = tempDir("bidx-txtbad-")
     docs.write.parquet(s"$inPath/docs")
     docs.filter($"doc_id" < 0).write.parquet(s"$inPath/empty")
-    val store = java.nio.file.Files
-      .createTempDirectory("bidx-txtbad-s-").toString + "/s"
+    val store = tempDir("bidx-txtbad-s-") + "/s"
     // empty input would write a healthy-LOOKING store that scores
     // nothing — refuse
     val e1 = the[IllegalArgumentException] thrownBy BuildIndex.run(spark,
@@ -350,8 +329,7 @@ class BuildIndexSpec extends SparkSpec {
   }
 
   test("kind compact: key-matrix refusals before touching the store; ANN empty input is data-not-ready") {
-    val store = java.nio.file.Files
-      .createTempDirectory("bidx-cpt-").toString + "/s"
+    val store = tempDir("bidx-cpt-") + "/s"
     // family is required
     val e1 = the[IllegalArgumentException] thrownBy BuildIndex.run(spark,
       writeCfg("kind: compact", s"store: $store"))
@@ -378,8 +356,7 @@ class BuildIndexSpec extends SparkSpec {
     // ANN empty input: same data-not-ready contract as the text kinds
     import spark.implicits._
     val empty = vecs(5).filter($"vec_id" < 0)
-    val inPath = java.nio.file.Files
-      .createTempDirectory("bidx-annempty-").toString + "/emb"
+    val inPath = tempDir("bidx-annempty-") + "/emb"
     empty.write.parquet(inPath)
     val e6 = the[IllegalArgumentException] thrownBy BuildIndex.run(spark,
       writeCfg(s"input: $inPath", "id_field: vec_id",
@@ -398,8 +375,7 @@ class BuildIndexSpec extends SparkSpec {
     // fail-once and the schedule could never heal the store).
     val docs = Seq((1L, "spark scala engine"), (2L, "scala query engine"),
       (3L, "parquet files store")).toDF("doc_id", "text")
-    val idx = java.nio.file.Files
-      .createTempDirectory("bidx-heal-").toString + "/idx"
+    val idx = tempDir("bidx-heal-") + "/idx"
     graft.operators.Search.writeIndexSegment(
       docs.filter($"doc_id" <= 2), "doc_id", "text", idx, buckets = 4)
     graft.operators.Search.writeIndexSegment(
@@ -422,11 +398,9 @@ class BuildIndexSpec extends SparkSpec {
 
   test("ANN builds: the fused stats pass scans the input once for count+dims+SQ grid") {
     val data = vecs(80)
-    val inPath = java.nio.file.Files
-      .createTempDirectory("bidx-scan-").toString + "/emb"
+    val inPath = tempDir("bidx-scan-") + "/emb"
     data.write.parquet(inPath)
-    val store = java.nio.file.Files
-      .createTempDirectory("bidx-scan-s-").toString + "/idx"
+    val store = tempDir("bidx-scan-s-") + "/idx"
     // count input records read across the whole build: every full pass
     // over the 80-row input adds 80 to the task input metrics
     val read = new java.util.concurrent.atomic.AtomicLong(0L)
@@ -453,8 +427,7 @@ class BuildIndexSpec extends SparkSpec {
       // THREE passes (pre-fusion: four); the _train sidecar writes are
       // driver-side literals and scan nothing
       read.set(0L)
-      val store2 = java.nio.file.Files
-        .createTempDirectory("bidx-scan2-").toString + "/idx"
+      val store2 = tempDir("bidx-scan2-") + "/idx"
       BuildIndex.run(spark, writeCfg(s"input: $inPath",
         "id_field: vec_id", "vector_field: embedding", "kind: ivfsq",
         s"store: $store2", "dim: 8", "num_lists: 4"))

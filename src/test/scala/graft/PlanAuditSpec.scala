@@ -285,6 +285,9 @@ class PlanAuditSpec extends SparkSpec {
     // no doubles, no arrays in the hot path). ann_ivfbinary_store_topk
     // adds the probed-list partition prune (pinned in SimilaritySpec)
     // and joins on the list key — still broadcast, still no sort-merge.
+    // A store probe encodes its query side once, before this plan runs,
+    // and broadcasts the packed rows as a local relation, so the
+    // sign-pack kernel shows in the in-memory plan only.
     for (name <- Seq("ann_binary_store_topk", "ann_ivfbinary_store_topk")) {
       withClue(s"$name: ") {
         val p = plan(name)
@@ -292,9 +295,10 @@ class PlanAuditSpec extends SparkSpec {
         p should not include "SortMergeJoin"
         p should not include "CartesianProduct"
         p should include("bit_count") // pair score on packed words
-        p should include("hyperplanebits") // sign-pack kernel, map-side
+        p should include("LocalTableScan") // query words, encoded once
       }
     }
+    plan("ann_binary_rerank_topk") should include("hyperplanebits") // map-side
   }
 
   test("quality-model scoring broadcasts the weight table; per-doc agg partial-aggregates") {

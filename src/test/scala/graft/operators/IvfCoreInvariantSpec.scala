@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   *  (c) appending a batch to a store probes the same as building the
   *      store from both batches at once.
   */
-class IvfCoreInvariantSpec extends SparkSpec {
+class IvfCoreInvariantSpec extends SparkSpec with graft.TempDirs {
   import spark.implicits._
 
   private val id = "vec_id"
@@ -53,8 +53,7 @@ class IvfCoreInvariantSpec extends SparkSpec {
     df.collect().map(_.toSeq).toSeq
       .sortBy(r => (r(0).asInstanceOf[Long], r(2).asInstanceOf[Long]))
 
-  private def tmp(tag: String) = java.nio.file.Files
-    .createTempDirectory(s"ivf-core-$tag-").toString + "/idx"
+  private def tmp(tag: String) = tempDir(s"ivf-core-$tag-") + "/idx"
 
   private def fromStore(path: String, codec: Codec, coarse: Coarse) =
     rows(Similarity.stageFromStore(spark, path, queries, id, vec, k, codec,
@@ -112,16 +111,24 @@ class IvfCoreInvariantSpec extends SparkSpec {
   }
 
   test("(a) lsh: store ≡ in-memory probe for probes ∈ {1, 2, planes}") {
+    // seeded Gaussian vectors: the sin-family corpus spans a 2-D plane
+    // and leaves most buckets empty, so a probe skipping a bucket
+    // directory could still match the in-memory answer
     val planes = 4
+    val rng = new scala.util.Random(5L)
+    val spread = (0L until 150L).map(i =>
+      (i, Array.fill(8)(rng.nextGaussian().toFloat))).toDF(id, vec)
+    val qs = spread.filter(col(id) < 6)
     val store = tmp("lsh")
-    Similarity.writeStore(corpus, id, vec, Codec.Flat,
+    Similarity.writeStore(spread, id, vec, Codec.Flat,
       Coarse.Lsh(planes, 8, 1), store)
     for (probes <- Seq(1, 2, planes)) withClue(s"probes=$probes: ") {
       val lsh = Coarse.Lsh(planes, 8, probes)
-      val inMemory = rows(Similarity.codecTopK(corpus, queries, id, vec, k,
+      val inMemory = rows(Similarity.codecTopK(spread, qs, id, vec, k,
         Codec.Flat, lsh))
       inMemory should not be empty
-      fromStore(store, Codec.Flat, lsh) shouldBe inMemory
+      rows(Similarity.stageFromStore(spark, store, qs, id, vec, k,
+        Codec.Flat, lsh)._1) shouldBe inMemory
     }
   }
 

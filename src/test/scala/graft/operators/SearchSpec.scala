@@ -3,7 +3,7 @@ package graft.operators
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-class SearchSpec extends SparkSpec {
+class SearchSpec extends SparkSpec with graft.TempDirs {
   import spark.implicits._
 
   private val corpus = Seq(
@@ -58,8 +58,7 @@ class SearchSpec extends SparkSpec {
     val direct = Search.bm25TopK(wide, queries, "doc_id", "text", k = 5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .sortBy(t => (t._1, t._3))
-    val store = java.nio.file.Files
-      .createTempDirectory("bm25-store-").toString + "/idx"
+    val store = tempDir("bm25-store-") + "/idx"
     Search.writePostingsStore(wide, "doc_id", "text", store, buckets = 16)
     val stored = Search.bm25TopKFromStore(spark, store, queries,
       "doc_id", "text", k = 5)
@@ -82,8 +81,7 @@ class SearchSpec extends SparkSpec {
     val direct = Search.bm25TopK(wide, queries, "doc_id", "text", k = 5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .sortBy(t => (t._1, t._3))
-    val store = java.nio.file.Files
-      .createTempDirectory("bm25-segs-").toString + "/idx"
+    val store = tempDir("bm25-segs-") + "/idx"
     (0 to 2).foreach(i => Search.writeIndexSegment(
       wide.filter($"doc_id" % 3 === i), "doc_id", "text", store, buckets = 16))
     val seg = Search.bm25TopKSegmented(spark, store, queries,
@@ -103,12 +101,10 @@ class SearchSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val queries = wide.filter($"doc_id" < 2)
     val batches = (0 to 2).map(i => wide.filter($"doc_id" % 3 === i))
-    val seqStore = java.nio.file.Files
-      .createTempDirectory("bm25-seq-").toString + "/idx"
+    val seqStore = tempDir("bm25-seq-") + "/idx"
     batches.foreach(b =>
       Search.writeIndexSegment(b, "doc_id", "text", seqStore, buckets = 16))
-    val batStore = java.nio.file.Files
-      .createTempDirectory("bm25-bat-").toString + "/idx"
+    val batStore = tempDir("bm25-bat-") + "/idx"
     Search.writeIndexSegments(batches, "doc_id", "text", batStore, buckets = 16)
     // one _meta row per batch with the per-batch stats, both layouts
     def metas(p: String) = spark.read.parquet(s"$p/_meta")
@@ -126,8 +122,7 @@ class SearchSpec extends SparkSpec {
   }
 
   test("writeIndexSegments: a token-free batch still lands a (0,0) _meta row") {
-    val store = java.nio.file.Files
-      .createTempDirectory("bm25-zero-").toString + "/idx"
+    val store = tempDir("bm25-zero-") + "/idx"
     Search.writeIndexSegments(Seq(
       Seq((0L, "alpha beta")).toDF("doc_id", "text"),
       Seq((1L, " \t\n")).toDF("doc_id", "text")), // tokenless batch
@@ -144,8 +139,7 @@ class SearchSpec extends SparkSpec {
   }
 
   test("segmented index: appending a segment changes df-sensitive scores") {
-    val store = java.nio.file.Files
-      .createTempDirectory("bm25-grow-").toString + "/idx"
+    val store = tempDir("bm25-grow-") + "/idx"
     val batch1 = Seq((0L, "alpha beta"), (1L, "alpha gamma")).toDF("doc_id", "text")
     Search.writeIndexSegment(batch1, "doc_id", "text", store, buckets = 4)
     val q = Seq((100L, "alpha")).toDF("doc_id", "text")
@@ -168,8 +162,7 @@ class SearchSpec extends SparkSpec {
     val wide = (0L until 60L)
       .map(i => (i, s"tok$i common${i % 3} tok${(i + 1) % 60}"))
       .toDF("doc_id", "text")
-    val store = java.nio.file.Files
-      .createTempDirectory("bm25-compact-").toString + "/idx"
+    val store = tempDir("bm25-compact-") + "/idx"
     (0 to 3).foreach(i => Search.writeIndexSegment(
       wide.filter($"doc_id" % 4 === i), "doc_id", "text", store, buckets = 8))
     val queries = wide.filter($"doc_id" < 2)
@@ -232,8 +225,7 @@ class SearchSpec extends SparkSpec {
     val wide = (0L until 40L)
       .map(i => (i, s"tok$i common${i % 3} tok${(i + 1) % 40}"))
       .toDF("doc_id", "text")
-    val store = java.nio.file.Files
-      .createTempDirectory("bm25-crash-").toString + "/idx"
+    val store = tempDir("bm25-crash-") + "/idx"
     (0 to 2).foreach(i => Search.writeIndexSegment(
       wide.filter($"doc_id" % 3 === i), "doc_id", "text", store, buckets = 8))
     val queries = wide.filter($"doc_id" < 2)
@@ -320,8 +312,7 @@ class SearchSpec extends SparkSpec {
   }
 
   test("compacting a zero-postings store (all-empty-text segments) merges metas without failing") {
-    val store = java.nio.file.Files
-      .createTempDirectory("bm25-empty-").toString + "/idx"
+    val store = tempDir("bm25-empty-") + "/idx"
     val blank = Seq((0L, "   "), (1L, " ")).toDF("doc_id", "text")
     Search.writeIndexSegment(blank, "doc_id", "text", store, buckets = 4)
     Search.writeIndexSegment(blank, "doc_id", "text", store, buckets = 4)
@@ -379,14 +370,12 @@ class SearchSpec extends SparkSpec {
     // a ceiling no term reaches ≡ exact
     run(100L) shouldBe exact
     // the same ceiling through the store and segment paths
-    val store = java.nio.file.Files
-      .createTempDirectory("bm25-maxdf-").toString + "/s"
+    val store = tempDir("bm25-maxdf-") + "/s"
     Search.writePostingsStore(docs, "doc_id", "text", store, buckets = 4)
     Search.bm25TopKFromStore(spark, store, queries, "doc_id", "text",
       k = 10, maxDf = 3L)
       .collect().map(r => r.getLong(1) -> r.getLong(3)).toMap shouldBe ceiled
-    val segs = java.nio.file.Files
-      .createTempDirectory("bm25-maxdf-seg-").toString + "/s"
+    val segs = tempDir("bm25-maxdf-seg-") + "/s"
     (0 to 1).foreach(i => Search.writeIndexSegment(
       docs.filter($"doc_id" % 2 === i), "doc_id", "text", segs, buckets = 4))
     Search.bm25TopKSegmented(spark, segs, queries, "doc_id", "text",
@@ -436,8 +425,7 @@ class SearchSpec extends SparkSpec {
         keep.size should be < df_.size
       }
       // the store path agrees with the in-flight path under the ceiling
-      val store = java.nio.file.Files
-        .createTempDirectory(s"bm25-prop-$seed-").toString + "/s"
+      val store = tempDir(s"bm25-prop-$seed-") + "/s"
       Search.writePostingsStore(docs, "doc_id", "text", store, buckets = 4)
       rows(Search.bm25TopKFromStore(spark, store, queries, "doc_id",
         "text", k = 5, maxDf = ceiling)) shouldBe ceiled
@@ -449,8 +437,7 @@ class SearchSpec extends SparkSpec {
     val wide = (0L until 40L)
       .map(i => (i, s"tok$i common${i % 3} tok${(i + 1) % 40}"))
       .toDF("doc_id", "text")
-    val store = java.nio.file.Files
-      .createTempDirectory("bm25-retain-").toString + "/idx"
+    val store = tempDir("bm25-retain-") + "/idx"
     (0 to 2).foreach(i => Search.writeIndexSegment(
       wide.filter($"doc_id" % 3 === i), "doc_id", "text", store, buckets = 8))
     def segDirs() = new java.io.File(s"$store/postings").listFiles()
@@ -511,21 +498,18 @@ class SearchSpec extends SparkSpec {
         else if (f.getName.endsWith(".parquet")) 1 else 0
       }.sum
     }
-    val store = java.nio.file.Files
-      .createTempDirectory("bm25-files-").toString + "/idx"
+    val store = tempDir("bm25-files-") + "/idx"
     Search.writePostingsStore(wide, "doc_id", "text", store, buckets = 4)
     // without the bucket-aligned repartition this is tasks × buckets
     parquetFiles(s"$store/postings") should be <= 4
-    val seg = java.nio.file.Files
-      .createTempDirectory("bm25-segfiles-").toString + "/idx"
+    val seg = tempDir("bm25-segfiles-") + "/idx"
     Search.writeIndexSegment(wide, "doc_id", "text", seg, buckets = 4)
     parquetFiles(s"$seg/postings") should be <= 4
     graft.core.CacheScope.releaseAll()
   }
 
   test("segmented index: mismatched bucket counts refuse loudly") {
-    val store = java.nio.file.Files
-      .createTempDirectory("bm25-mismatch-").toString + "/idx"
+    val store = tempDir("bm25-mismatch-") + "/idx"
     val d = Seq((0L, "alpha")).toDF("doc_id", "text")
     Search.writeIndexSegment(d, "doc_id", "text", store, buckets = 4)
     Search.writeIndexSegment(d, "doc_id", "text", store, buckets = 8)

@@ -3,7 +3,7 @@ package graft.operators
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-class SimilaritySpec extends SparkSpec {
+class SimilaritySpec extends SparkSpec with graft.TempDirs {
   import spark.implicits._
 
   private val vecs = Seq(
@@ -302,8 +302,7 @@ class SimilaritySpec extends SparkSpec {
       k = 5, centroids = cents, nprobe = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
       .sortBy(t => (t._1, t._3))
-    val store = java.nio.file.Files
-      .createTempDirectory("ivf-store-").toString + "/idx"
+    val store = tempDir("ivf-store-") + "/idx"
     Similarity.writeIvfAssignments(corpus, "vec_id", "embedding", cents, store)
     val stored = Similarity.ivfTopKFromStore(spark, store, queries,
       "vec_id", "embedding", k = 5, centroids = cents, nprobe = 2)
@@ -331,8 +330,7 @@ class SimilaritySpec extends SparkSpec {
       m = 2, numCodes = 4, dsub = 4)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
       .sortBy(t => (t._1, t._3))
-    val store = java.nio.file.Files
-      .createTempDirectory("ivfpq-store-").toString + "/idx"
+    val store = tempDir("ivfpq-store-") + "/idx"
     Similarity.writeIvfPqAssignments(corpus, "vec_id", "embedding", cents,
       cb, store, m = 2, numCodes = 4, dsub = 4)
     // the persisted rows are codes, not vectors — the 64× compression
@@ -351,10 +349,9 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("lshTopKFromStore: bit-identical to in-flight LSH, bucket partitions pruned, meta refusal") {
-    val corpus = mpVecs(150)
+    val corpus = lshVecs(150)
     val queries = corpus.filter($"vec_id" < 5)
-    val store = java.nio.file.Files
-      .createTempDirectory("lsh-store-").toString + "/idx"
+    val store = tempDir("lsh-store-") + "/idx"
     Similarity.writeLshBuckets(corpus, "vec_id", "embedding", store,
       planes = 4, dim = 8)
     def rows(df: org.apache.spark.sql.DataFrame) =
@@ -416,8 +413,7 @@ class SimilaritySpec extends SparkSpec {
     }
     out shouldBe expected.sortBy(t => (t._1, t._3)).toArray
     // store round-trip: code bytes round-trip parquet exactly
-    val store = java.nio.file.Files
-      .createTempDirectory("sq-store-").toString + "/idx"
+    val store = tempDir("sq-store-") + "/idx"
     Similarity.writeSqCodes(grid, "vec_id", "embedding", store, mins, maxs)
     Similarity.sqTopKFromStore(spark, store, queries, "vec_id",
       "embedding", k = 4, mins, maxs)
@@ -487,8 +483,7 @@ class SimilaritySpec extends SparkSpec {
       k = 5, centroids = cents, nprobe = 4, mins = mins, maxs = maxs)) shouldBe
       rows(Similarity.sqTopK(corpus, queries, "vec_id", "embedding",
         k = 5, mins, maxs))
-    val store = java.nio.file.Files
-      .createTempDirectory("ivfsq-store-").toString + "/idx"
+    val store = tempDir("ivfsq-store-") + "/idx"
     Similarity.writeIvfSqCodes(corpus, "vec_id", "embedding", cents,
       store, mins, maxs)
     val stored = Similarity.ivfSqTopKFromStore(spark, store, queries,
@@ -572,14 +567,12 @@ class SimilaritySpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("query_id", "neighbor_id", "rank", "adc")
         .as[(Long, Long, Long, Double)].collect().sortBy(t => (t._1, t._3))
-    val appended = java.nio.file.Files
-      .createTempDirectory("ivfsq-append-").toString + "/idx"
+    val appended = tempDir("ivfsq-append-") + "/idx"
     Similarity.appendIvfSqCodes(first, "vec_id", "embedding", cents,
       appended, mins, maxs)
     Similarity.appendIvfSqCodes(rest, "vec_id", "embedding", cents,
       appended, mins, maxs)
-    val oneShot = java.nio.file.Files
-      .createTempDirectory("ivfsq-oneshot-").toString + "/idx"
+    val oneShot = tempDir("ivfsq-oneshot-") + "/idx"
     Similarity.writeIvfSqCodes(corpus, "vec_id", "embedding", cents,
       oneShot, mins, maxs)
     rows(Similarity.ivfSqTopKFromStore(spark, appended, queries,
@@ -639,10 +632,8 @@ class SimilaritySpec extends SparkSpec {
     val cents = Similarity.seedCentroids(corpus, "vec_id", "embedding", 4)
     val cb = Similarity.seedPqCodebooks(corpus, "vec_id", "embedding",
       m = 2, k = 4, dsub = 4)
-    val pqStore = java.nio.file.Files
-      .createTempDirectory("2stage-pq-").toString + "/idx"
-    val rawStore = java.nio.file.Files
-      .createTempDirectory("2stage-raw-").toString + "/idx"
+    val pqStore = tempDir("2stage-pq-") + "/idx"
+    val rawStore = tempDir("2stage-raw-") + "/idx"
     Similarity.writeIvfPqAssignments(corpus, "vec_id", "embedding",
       cents, cb, pqStore, m = 2, numCodes = 4, dsub = 4)
     Similarity.writeIvfAssignments(corpus, "vec_id", "embedding",
@@ -662,8 +653,7 @@ class SimilaritySpec extends SparkSpec {
     val plan = stored.queryExecution.executedPlan.toString
     "list#\\d+ IN \\(".r.findAllIn(plan).length should be >= 2
     // a raw store built under different centroids refuses via _meta
-    val otherRaw = java.nio.file.Files
-      .createTempDirectory("2stage-raw2-").toString + "/idx"
+    val otherRaw = tempDir("2stage-raw2-") + "/idx"
     Similarity.writeIvfAssignments(corpus, "vec_id", "embedding",
       Seq(cents.head, cents.last), otherRaw)
     val e = the[IllegalArgumentException] thrownBy
@@ -678,10 +668,8 @@ class SimilaritySpec extends SparkSpec {
     val queries = corpus.filter($"vec_id" < 4)
     val cents = Similarity.seedCentroids(corpus, "vec_id", "embedding", 4)
     val (mins, maxs) = Similarity.trainSqParams(corpus, "embedding", 8)
-    val sqStore = java.nio.file.Files
-      .createTempDirectory("2stage-ivfsq-").toString + "/idx"
-    val rawStore = java.nio.file.Files
-      .createTempDirectory("2stage-ivfsqraw-").toString + "/idx"
+    val sqStore = tempDir("2stage-ivfsq-") + "/idx"
+    val rawStore = tempDir("2stage-ivfsqraw-") + "/idx"
     Similarity.writeIvfSqCodes(corpus, "vec_id", "embedding", cents,
       sqStore, mins, maxs)
     Similarity.writeIvfAssignments(corpus, "vec_id", "embedding",
@@ -782,8 +770,7 @@ class SimilaritySpec extends SparkSpec {
     }.sortBy(t => (t._1, t._3))
     out shouldBe expected.toArray
     // persisted store: packed longs round-trip parquet exactly
-    val store = java.nio.file.Files
-      .createTempDirectory("binary-store-").toString + "/idx"
+    val store = tempDir("binary-store-") + "/idx"
     Similarity.writeSignBits(all, "vec_id", "embedding", store, dim)
     Similarity.binaryTopKFromStore(spark, store, queries, "vec_id",
       "embedding", k = 79, dim = dim)
@@ -828,8 +815,7 @@ class SimilaritySpec extends SparkSpec {
     // in-memory candidates = probed-list members only: replay the
     // assignment driver-side and check every surfaced neighbor's list
     // is probed by its query
-    val store = java.nio.file.Files
-      .createTempDirectory("ivfbinary-store-").toString + "/idx"
+    val store = tempDir("ivfbinary-store-") + "/idx"
     Similarity.writeIvfBinary(corpus, "vec_id", "embedding", cents,
       store, dim = 8)
     val stored = Similarity.ivfBinaryTopKFromStore(spark, store, queries,
@@ -839,8 +825,7 @@ class SimilaritySpec extends SparkSpec {
     stored.queryExecution.executedPlan.toString should include regex
       "list#\\d+ IN \\("
     // append-only maintenance ≡ one-shot build
-    val appended = java.nio.file.Files
-      .createTempDirectory("ivfbinary-append-").toString + "/idx"
+    val appended = tempDir("ivfbinary-append-") + "/idx"
     Similarity.appendIvfBinary(corpus.filter($"vec_id" < 100), "vec_id",
       "embedding", cents, appended, dim = 8)
     Similarity.appendIvfBinary(corpus.filter($"vec_id" >= 100), "vec_id",
@@ -859,10 +844,8 @@ class SimilaritySpec extends SparkSpec {
     val corpus = mpVecs(150)
     val queries = corpus.filter($"vec_id" < 4)
     val cents = Similarity.seedCentroids(corpus, "vec_id", "embedding", 4)
-    val binStore = java.nio.file.Files
-      .createTempDirectory("2stage-ivfbin-").toString + "/idx"
-    val rawStore = java.nio.file.Files
-      .createTempDirectory("2stage-ivfbinraw-").toString + "/idx"
+    val binStore = tempDir("2stage-ivfbin-") + "/idx"
+    val rawStore = tempDir("2stage-ivfbinraw-") + "/idx"
     Similarity.writeIvfBinary(corpus, "vec_id", "embedding", cents,
       binStore, dim = 8)
     Similarity.writeIvfAssignments(corpus, "vec_id", "embedding",
@@ -1039,8 +1022,7 @@ class SimilaritySpec extends SparkSpec {
       (2L, Array(0.0f, 1.0f, 0.0f))
     ).toDF("vec_id", "v")
     // the bucket store round-trips through parquet (the production shape)
-    val storePath = java.nio.file.Files.createTempDirectory("ebstore")
-      .toString + "/buckets"
+    val storePath = tempDir("ebstore") + "/buckets"
     Similarity.appendEmbeddingBuckets(corpus, "vec_id", "v", storePath,
       planes = 4, tables = 4, dim = 3)
     val store = Similarity.readEmbeddingBuckets(spark, storePath,
@@ -1250,8 +1232,18 @@ class SimilaritySpec extends SparkSpec {
     (i, Array.tabulate(8)(j => math.sin(i * 0.37 + j * 1.13).toFloat))
   }.toDF("vec_id", "embedding")
 
+  // seeded Gaussian vectors, dim 8, for the hyperplane-bucket tests: the
+  // sin family above spans a 2-D plane, so its rows occupy only a few
+  // buckets and a store probe that skipped one would go unnoticed
+  private def lshRaw(n: Int, seed: Long = 11L): Seq[(Long, Array[Float])] = {
+    val rng = new scala.util.Random(seed)
+    (0L until n.toLong).map(i =>
+      (i, Array.fill(8)(rng.nextGaussian().toFloat)))
+  }
+  private def lshVecs(n: Int) = lshRaw(n).toDF("vec_id", "embedding")
+
   test("lshTopK: probes=1 scores exactly the query's own lshBucket") {
-    val corpus = mpVecs(120)
+    val corpus = lshVecs(120)
     val queries = corpus.filter($"vec_id" < 8)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("query_id", "neighbor_id", "rank", "sim")
@@ -1303,9 +1295,7 @@ class SimilaritySpec extends SparkSpec {
       }
       u
     }
-    val base = (0L until 100L).map { i =>
-      (i, Array.tabulate(dim)(j => math.sin(i * 0.37 + j * 1.13).toFloat))
-    }
+    val base = lshRaw(100)
     val planted = base.filter(_._1 < 5).map { case (id, vf) =>
       val v = vf.map(_.toDouble)
       val margins = signs.map(s => math.abs(dot(v, s)))
@@ -1331,7 +1321,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("lshTopKMultiProbe: degenerate and over-length query vectors") {
-    val corpus = mpVecs(120)
+    val corpus = lshVecs(120)
     // shorter than dim: null margins filter out, probes only bucket 0 —
     // same rows as single-probe for that query
     val shortQ = Seq((900L, Array(1.0f, 2.0f)))
@@ -1344,8 +1334,8 @@ class SimilaritySpec extends SparkSpec {
     // LONGER than dim: bucketing uses the first `dim` elements, and so
     // do the margins (the r15 over-length fix) — the extra probes are
     // real, so the candidate pool strictly grows vs single-probe
-    val longQ = Seq((901L, Array.tabulate(11)(j =>
-      math.sin(0.37 + j * 1.13).toFloat))).toDF("vec_id", "embedding")
+    val longQ = Seq((901L, lshRaw(1, seed = 12L).head._2 ++
+      Array(0.5f, -1.5f, 2.0f))).toDF("vec_id", "embedding")
     val mLong = Similarity.lshTopK(corpus, longQ,
       "vec_id", "embedding", k = 200, planes = 4, dim = 8, probes = 3)
     val sLong = Similarity.lshTopK(corpus, longQ,
@@ -1432,8 +1422,7 @@ class SimilaritySpec extends SparkSpec {
       numLists = 4)
     val seed = Similarity.seedPqCodebooks(corpus, "vec_id", "embedding",
       m = 2, k = 4, dsub = 4)
-    val store = java.nio.file.Files
-      .createTempDirectory("ivfpq-train-").toString + "/idx"
+    val store = tempDir("ivfpq-train-") + "/idx"
     val trained = Similarity.writeIvfPqAssignments(corpus, "vec_id",
       "embedding", cents, seed, store, m = 2, numCodes = 4, dsub = 4,
       trainIterations = 2)
@@ -1482,18 +1471,15 @@ class SimilaritySpec extends SparkSpec {
         else if (f.getName.endsWith(".parquet")) 1 else 0
       }.sum
     }
-    val ivf = java.nio.file.Files
-      .createTempDirectory("ivf-files-").toString + "/idx"
+    val ivf = tempDir("ivf-files-") + "/idx"
     Similarity.writeIvfAssignments(corpus, "vec_id", "embedding", cents, ivf)
     parquetFiles(ivf) should be <= 4
     val (mins, maxs) = Similarity.trainSqParams(corpus, "embedding", dim)
-    val ivfsq = java.nio.file.Files
-      .createTempDirectory("ivfsq-files-").toString + "/idx"
+    val ivfsq = tempDir("ivfsq-files-") + "/idx"
     Similarity.writeIvfSqCodes(corpus, "vec_id", "embedding", cents, ivfsq,
       mins, maxs)
     parquetFiles(ivfsq) should be <= 4
-    val lsh = java.nio.file.Files
-      .createTempDirectory("lsh-files-").toString + "/idx"
+    val lsh = tempDir("lsh-files-") + "/idx"
     Similarity.writeLshBuckets(corpus, "vec_id", "embedding", lsh,
       planes = 2, dim = dim)
     parquetFiles(lsh) should be <= 4 // 2 planes -> 4 buckets

@@ -61,5 +61,24 @@ class ScaleCorpusSpec extends SparkSpec {
     val out = java.nio.file.Files.createTempDirectory("scale-bad-").toString
     an[IllegalArgumentException] should be thrownBy
       ScaleCorpus.synthesize(spark, in, out, factor = 2, model = "clone")
+    an[IllegalArgumentException] should be thrownBy
+      ScaleCorpus.requireModel("clone")
+  }
+
+  test("reuse: a corpus serves only the model its marker names") {
+    val in = fixture()
+    val out = java.nio.file.Files.createTempDirectory("scale-reuse-").toString
+    ScaleCorpus.reusable(out, "dup") shouldBe false // nothing there yet
+    ScaleCorpus.synthesize(spark, in, out, factor = 2, model = "dup")
+    ScaleCorpus.reusable(out, "dup") shouldBe true
+    val e = the[IllegalArgumentException] thrownBy
+      ScaleCorpus.reusable(out, "split")
+    e.getMessage should include("'dup', not 'split'")
+    // a corpus without a marker (synthesized before markers existed)
+    // cannot say which model it is, so it serves neither
+    java.nio.file.Files.delete(java.nio.file.Paths.get(out,
+      ScaleCorpus.ModelMarker))
+    an[IllegalArgumentException] should be thrownBy
+      ScaleCorpus.reusable(out, "dup")
   }
 }
