@@ -1,8 +1,9 @@
 package graft.core
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, GraftExpressionBridge, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftExpressionBridge, Row, SparkSession}
 import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.types._
 
 /** The one read of a parquet store by probed partition ids — the store
   * probes of [[graft.operators.Search]] and the vector core of
@@ -59,6 +60,46 @@ object StoreScan {
       case None => spark.read.parquet(root) // no data at all: Spark's own error
     }
   }
+
+  /** The rows of a small store — a `_meta` sidecar of a few rows — read
+    * on the driver with parquet-hadoop's record reader: every data file
+    * under `root`, no Spark job. Rows carry the footer's Spark schema
+    * (`getAs` by name works) and hold atomic columns only. A store with
+    * no data file at all fails as `spark.read.parquet(root)` does.
+    */
+  def driverRows(spark: SparkSession, root: String): Seq[Row] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val base = new Path(root)
+    val fs = base.getFileSystem(conf)
+    dataFiles(fs, fs.makeQualified(base)).getOrElse(Array.empty[FileStatus])
+      .toSeq match {
+      case Nil => spark.read.parquet(root).collect().toSeq
+      case files => files.flatMap { f =>
+        val schema = footerSchema(spark, conf, f)
+        val reader = org.apache.parquet.hadoop.ParquetReader.builder(
+          new org.apache.parquet.hadoop.example.GroupReadSupport(), f.getPath)
+          .withConf(conf).build()
+        try Iterator.continually(reader.read()).takeWhile(_ != null)
+          .map(g => new org.apache.spark.sql.catalyst.expressions
+            .GenericRowWithSchema(schema.fields.map(c => value(g, c)), schema))
+          .toList
+        finally reader.close()
+      }
+    }
+  }
+
+  private def value(g: org.apache.parquet.example.data.Group,
+      c: StructField): Any =
+    if (g.getFieldRepetitionCount(c.name) == 0) null
+    else c.dataType match {
+      case LongType => g.getLong(c.name, 0)
+      case IntegerType => g.getInteger(c.name, 0)
+      case StringType => g.getString(c.name, 0)
+      case DoubleType => g.getDouble(c.name, 0)
+      case BooleanType => g.getBoolean(c.name, 0)
+      case t => throw new UnsupportedOperationException(
+        s"driver-side store read of ${c.name}: $t")
+    }
 
   /** Every data file under `dir` (recursively), or None if `dir` does
     * not exist. Hidden names (`_SUCCESS`, `_meta_params`, `_train/`,

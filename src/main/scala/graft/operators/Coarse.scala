@@ -34,10 +34,10 @@ private[graft] object Coarse {
   sealed trait Lists extends Coarse {
     /** The corpus row's one list id. */
     def assign(v: Column): Column
-    /** One row per probed list (an exploded column), in probe order. */
-    def probe(v: Column): Column
-    /** The list id of one [[probe]] row. */
-    def probedId(p: Column): Column = p
+    /** The probed list ids as one array, in probe order. */
+    def probedIds(v: Column): Column
+    /** One row per probed list id (an exploded column), in probe order. */
+    def probe(v: Column): Column = explode(probedIds(v))
   }
 
   /** Inverted file: each row lives in its best-cosine centroid's list, a
@@ -55,12 +55,12 @@ private[graft] object Coarse {
         "centroids_md5" -> Similarity.vectorSetFingerprint(centroids)) ++
         codec.metaKeys)
     def assign(v: Column): Column = Similarity.listAssignment(v, centroids)
-    /** The `nprobe` best-scored list structs, ordered by (−score, list
-      * id) — the [[Similarity.listAssignment]] tie-break.
+    /** The ids of the `nprobe` best-scored lists, ordered by (−score,
+      * list id) — the [[Similarity.listAssignment]] tie-break.
       */
-    def probe(v: Column): Column = explode(slice(array_sort(array(
-      Similarity.scoredListStructs(v, centroids): _*)), 1, nprobe))
-    override def probedId(p: Column): Column = p.getField("l")
+    def probedIds(v: Column): Column = slice(array_sort(array(
+      Similarity.scoredListStructs(v, centroids): _*)), 1, nprobe)
+      .getField("l")
   }
 
   /** Random-hyperplane LSH: each row lives in its `planes`-bit bucket
@@ -79,8 +79,8 @@ private[graft] object Coarse {
       ("lsh", Map[String, Any]("planes" -> planes, "dim" -> dim) ++
         codec.metaKeys)
     def assign(v: Column): Column = Similarity.lshBucket(v, planes, dim)
-    def probe(v: Column): Column = explode(Similarity.probeBuckets(v,
-      assign(v), 0, planes, dim, probes))
+    def probedIds(v: Column): Column = Similarity.probeBuckets(v,
+      assign(v), 0, planes, dim, probes)
     override val storedNames = Map("list" -> "bucket", "cn" -> "nrm")
   }
 }

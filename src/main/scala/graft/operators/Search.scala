@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField,
+  StructType}
 import graft.core.StoreScan
 
 /** Distributed full-text retrieval: an inverted index (postings with
@@ -36,10 +38,13 @@ import graft.core.StoreScan
   *  - a store probe lists only those bucket directories, on the driver,
   *    and takes the schema from one footer ([[graft.core.StoreScan]]:
   *    no listing or schema-inference Spark job, whatever the bucket
-  *    count), and collects its (query, term) rows once — the term set,
-  *    the probed buckets and the scoring broadcast all come from them;
+  *    count), reads `_meta` on the driver, and collects its (query,
+  *    term) rows once — the term set, the probed buckets and the query
+  *    literal the scan explodes (no broadcast join) all come from them;
   *  - top-k per query is a bounded row_number window over the few
-  *    surviving (query, doc) groups.
+  *    surviving (query, doc) groups in memory; a store probe gathers it
+  *    instead — per-task bounded heaps over the (query, doc) sum
+  *    shuffle's output, merged on the driver, no window shuffle.
   */
 object Search {
 
@@ -256,28 +261,28 @@ object Search {
       .write.mode("overwrite").parquet(s"$storePath/_meta")
   }
 
-  /** BM25 top-k against a persisted postings store. The (query, term)
-    * rows collect driver-side ONCE (tokens of a small seed set — same
-    * ceiling as the broadcast in [[bm25TopK]]); the scoring join
-    * broadcasts a local relation of those rows, and their bucket union
-    * names the only directories [[graft.core.StoreScan]] lists (on the
-    * driver, with one footer for the schema — no listing or schema Spark
-    * job). The bucket union also stays a literal partition filter and
-    * the term set a pushed string predicate, so the scan is
-    * O(probed buckets). Scores are bit-identical to the in-flight path:
-    * tf/len/df are longs and the token strings round-trip parquet
-    * exactly.
+  /** BM25 top-k against a persisted postings store, answered when
+    * called: a local relation (query_id, neighbor_id, rank, score). The
+    * `_meta` row reads on the driver ([[graft.core.StoreScan.driverRows]]),
+    * and the (query, term) rows collect once ([[probedTerms]]); their
+    * bucket union names the only directories [[graft.core.StoreScan]]
+    * lists (on the driver, one footer for the schema), stays a literal
+    * partition filter, and the term set a pushed string predicate, so
+    * the scan is O(probed buckets). The scoring is [[storeTopK]]: one
+    * (query, doc) sum shuffle, the per-query top-k gathered on the
+    * driver. Scores are bit-identical to the in-flight path: tf/len/df
+    * are longs and the token strings round-trip parquet exactly.
     */
   def bm25TopKFromStore(spark: SparkSession, storePath: String,
       queries: DataFrame, idCol: String, textCol: String, k: Int,
       k1: Double = DefaultK1, b: Double = DefaultB,
       maxDf: Long = 0L): DataFrame = {
-    val meta = StoreScan.read(spark, s"$storePath/_meta").collect()(0)
+    val meta = StoreScan.driverRows(spark, s"$storePath/_meta").head
     val (nDocs, totalLen, buckets) =
       (meta.getAs[Long]("n_docs"), meta.getAs[Long]("total_len"),
         meta.getAs[Int]("buckets"))
-    val (qt, terms, probedBuckets) =
-      probedTerms(spark, queries, idCol, textCol, buckets)
+    val (qType, termRows) = probedTerms(queries, idCol, textCol)
+    val (terms, probedBuckets) = termsAndBuckets(termRows, buckets)
     // df is DENORMALIZED into every store row, so the df-ceiling (see
     // bm25TopK) rides the scan as a pushed long predicate — parquet
     // row groups dominated by a stopword's postings skip on statistics
@@ -289,26 +294,64 @@ object Search {
       .filter(col("bucket").isInCollection(probedBuckets) &&
         col("tok").isInCollection(terms) && dfPred)
       .select("tok", "doc_id", "tf", "len", "df")
-    scoreTopK(postings, qt, (nDocs, totalLen), k, k1, b)
+    storeTopK(postings, qType, termRows, (nDocs, totalLen), k, k1, b)
   }
 
-  /** The query side of a store probe, computed ONCE: the (query_id, tok)
-    * rows collect to the driver (driver-small — the contract the scoring
-    * broadcast already assumes), the sorted term set and probed buckets
-    * derive from them, and the returned frame is a local relation of the
-    * same rows for the scoring join to broadcast, so the query
-    * tokenization is neither planned nor run a second time.
+  /** The query side of a store probe, evaluated once on the driver:
+    * (query_id, split tokens) rows collect — a projection, so over a
+    * local query frame it folds into a local relation and runs no job —
+    * and the driver explodes and dedupes them into (tok, query row)
+    * pairs, with the (query_id) row type the probe literal carries.
     */
-  private def probedTerms(spark: SparkSession, queries: DataFrame,
-      idCol: String, textCol: String, buckets: Int)
-      : (DataFrame, Seq[String], Seq[Long]) = {
-    val q = queryTerms(queries, idCol, textCol)
-    val rows = q.collect()
-    val terms = rows.map(_.getAs[String]("tok")).distinct.sorted.toSeq
-    (spark.createDataFrame(java.util.Arrays.asList(rows: _*), q.schema),
-      terms,
-      terms.map(t => math.floorMod(MurmurFree.md5Long60(t), buckets.toLong))
-        .distinct.sorted)
+  private def probedTerms(queries: DataFrame, idCol: String,
+      textCol: String): (StructType, Seq[(Any, Row)]) = {
+    val q = queries.select(col(idCol).as("query_id"),
+      split(lower(trim(col(textCol))), "\\s+").as("toks"))
+    val rows = q.collect().toSeq.flatMap { r =>
+      Option(r.getSeq[String](1)).getOrElse(Nil).filter(_ != "")
+        .map(t => (t: Any) -> Row(r.get(0)))
+    }.distinct
+    (StructType(Seq(q.schema("query_id"))), rows)
+  }
+
+  /** The sorted term set of the probe rows and the sorted token buckets
+    * they hash into.
+    */
+  private def termsAndBuckets(termRows: Seq[(Any, Row)],
+      buckets: Int): (Seq[String], Seq[Long]) = {
+    val terms = termRows.map(_._1.asInstanceOf[String]).distinct.sorted
+    (terms, terms.map(t => math.floorMod(MurmurFree.md5Long60(t),
+      buckets.toLong)).distinct.sorted)
+  }
+
+  /** The store probes' scoring: each posting row meets its query rows
+    * through the probe literal ([[StoreProbe.queryLiteral]]: tok →
+    * [query row], exploded map-side — no broadcast join), one sum
+    * shuffle on (query, doc) totals the micro-nat contributions, and
+    * the per-query top-k is gathered on the driver from the aggregate's
+    * output partitions ([[StoreProbe.gatherTopK]] — no window). The
+    * query rows carry `query_id` and any column `postings` lacks
+    * (the segmented index's probe-time df).
+    */
+  private def storeTopK(postings: DataFrame, qType: StructType,
+      termRows: Seq[(Any, Row)], stats: (Long, Long), k: Int, k1: Double,
+      b: Double): DataFrame = {
+    val (nDocs, totalLen) = stats
+    val avgdl = totalLen.toDouble / nDocs.toDouble
+    val q = StoreProbe.queryLiteral(Some(col("tok")), StringType, qType,
+      termRows)
+    val scored = postings
+      .select(postings.columns.map(col) :+ q.as("__q"): _*)
+      .select(postings.columns.map(col) ++
+        qType.fieldNames.map(f => col(s"__q.$f").as(f)): _*)
+      .filter(col("query_id") =!= col("doc_id"))
+      .withColumn("__w", termScore(col("tf"), col("df"), col("len"),
+        nDocs, avgdl, k1, b))
+      .groupBy(col("query_id"), col("doc_id").as("neighbor_id"))
+      .agg(sum("__w").as("score"))
+    val top = StoreProbe.gatherTopK(scored, "score", ascending = false, k,
+      dropNull = false)
+    top.answer(top.tasks.collect())
   }
 
   // ------------------------------------------------- exact phrase match
@@ -744,20 +787,22 @@ object Search {
     try body finally debrisOverride.set(prev)
   }
 
-  /** BM25 top-k across ALL segments of an appendable index. The scan
-    * reads only the live segments × the query terms' bucket directories
+  /** BM25 top-k across ALL segments of an appendable index, answered
+    * when called. The `_meta` rows read on the driver
+    * ([[graft.core.StoreScan.driverRows]]); the scan reads only the live
+    * segments × the query terms' bucket directories
     * ([[graft.core.StoreScan]]), and the (query, term) rows collect once
-    * as in [[bm25TopKFromStore]]; corpus stats are the sum of the per-segment
-    * `_meta` rows; df comes from a probe-time aggregate over the pruned
-    * postings (≤ |terms| result rows, broadcast back). Results are
+    * as in [[bm25TopKFromStore]]; corpus stats are the sum of the
+    * per-segment `_meta` rows; df comes from a probe-time aggregate over
+    * the pruned postings (≤ |terms| rows, collected), and rides the probe
+    * literal with each query row into [[storeTopK]]. Results are
     * identical to a monolithic index over the same documents.
     */
   def bm25TopKSegmented(spark: SparkSession, storePath: String,
       queries: DataFrame, idCol: String, textCol: String, k: Int,
       k1: Double = DefaultK1, b: Double = DefaultB,
       maxDf: Long = 0L): DataFrame = {
-    val metas = StoreScan.read(spark, segmentMetaPath(spark, storePath))
-      .collect()
+    val metas = StoreScan.driverRows(spark, segmentMetaPath(spark, storePath))
     require(metas.nonEmpty, s"empty search index at $storePath")
     val bucketSizes = metas.map(_.getAs[Int]("buckets")).distinct
     require(bucketSizes.length == 1,
@@ -773,11 +818,10 @@ object Search {
     // hits. neighbor_id is long by the same contract every store
     // probe's doc ids follow (there are no postings rows to carry the
     // writer's actual id type); score is the BIGINT micro-nat type
-    // scoreTopK emits, so a union of probes across stores (or any
+    // storeTopK emits, so a union of probes across stores (or any
     // LongType-expecting consumer) sees ONE schema regardless of
     // store state.
     if (nDocs == 0L) {
-      import org.apache.spark.sql.types._
       val qidType = queries.schema(idCol).dataType
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -790,30 +834,36 @@ object Search {
     // segment (or an orphan a crashed flip left behind) must not
     // double-count df/stats — `segment` is a partition column, so this
     // prunes directories, it does not scan them
-    val liveSegs = metas.map(_.getAs[String]("segment")).toSeq
-    val (qt, terms, probedBuckets) =
-      probedTerms(spark, queries, idCol, textCol, buckets)
-    // pruned feeds both the df aggregate and the scoring join — persist
-    // so the store scan runs once (releasable via CacheScope)
+    val liveSegs = metas.map(_.getAs[String]("segment"))
+    val (qType, termRows) = probedTerms(queries, idCol, textCol)
+    val (terms, probedBuckets) = termsAndBuckets(termRows, buckets)
+    // pruned feeds both the df aggregate and the scoring — persisted so
+    // the store scan runs once, and released when the probe returns
     // bucket before segment: both prune partitions, but the rendered
     // PartitionFilters string truncates after ~100 chars and the
     // segment list is UUIDs — bucket-first keeps the pruning visible
     // to plan audits
-    val pruned = graft.core.CacheScope.persist(
-      StoreScan.read(spark, s"$storePath/postings",
-          "segment" -> liveSegs, "bucket" -> probedBuckets)
-        .filter(col("bucket").isInCollection(probedBuckets) &&
-          col("segment").isInCollection(liveSegs) &&
-          col("tok").isInCollection(terms))
-        .select("tok", "doc_id", "tf", "len"))
-    // segments recompute df at probe time (it can't be denormalized
-    // across immutable segments), so the df-ceiling (see bm25TopK)
-    // filters the aggregated counts; the broadcast inner join then
-    // drops the stopword postings before scoring
-    val dfc0 = pruned.groupBy("tok").agg(count(lit(1)).as("df"))
-    val dfc = if (maxDf > 0) dfc0.filter(col("df") <= maxDf) else dfc0
-    scoreTopK(pruned.join(broadcast(dfc), "tok"), qt,
-      (nDocs, totalLen), k, k1, b)
+    graft.core.CacheScope.scoped {
+      val pruned = graft.core.CacheScope.persist(
+        StoreScan.read(spark, s"$storePath/postings",
+            "segment" -> liveSegs, "bucket" -> probedBuckets)
+          .filter(col("bucket").isInCollection(probedBuckets) &&
+            col("segment").isInCollection(liveSegs) &&
+            col("tok").isInCollection(terms))
+          .select("tok", "doc_id", "tf", "len"))
+      // segments recompute df at probe time (it can't be denormalized
+      // across immutable segments), so the df-ceiling (see bm25TopK)
+      // filters the collected counts; a term without a df row (no
+      // posting, or over the ceiling) leaves the probe literal, so its
+      // postings meet no query row
+      val df = pruned.groupBy("tok").agg(count(lit(1)).as("df")).collect()
+        .map(r => r.getString(0) -> r.getLong(1))
+        .filter { case (_, n) => maxDf <= 0 || n <= maxDf }.toMap
+      val withDf = termRows.flatMap { case (t, r) =>
+        df.get(t.asInstanceOf[String]).map(n => t -> Row(r.get(0), n)) }
+      storeTopK(pruned, qType.add(StructField("df", LongType, nullable = false)),
+        withDf, (nDocs, totalLen), k, k1, b)
+    }
   }
 }
 

@@ -1,8 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, NullType,
+  StructField, StructType}
 
 /** Similarity search over embedding columns (array<float>).
   *
@@ -10,7 +12,10 @@ import org.apache.spark.sql.functions._
   *  - broadcast-query top-k scans — exact brute force, the compressed
   *    indexes and the IVF / LSH coarse stages; the corpus is streamed,
   *    never shuffled, so it scales with executors for any corpus size
-  *    (the query set must stay broadcast-small).
+  *    (the query set must stay broadcast-small). A store probe ships the
+  *    same query rows in the plan as one literal instead of a broadcast,
+  *    and gathers its top-k from per-task heaps on the driver: one
+  *    map-only Spark job per store scan, no shuffle, no window.
   *  - multi-table hyperplane-LSH bucket keys ([[bucketKeys]]) — the
   *    scale path for all-pairs work (near-dup self-joins, incremental
   *    store joins, semantic decontamination): one shuffle on the bucket
@@ -83,17 +88,25 @@ object Similarity {
   ): DataFrame =
     codecTopK(corpus, queries, idCol, vecCol, k, Codec.Flat, Coarse.Scan)
 
-  /** The per-query top-k every ranked path here ends in: `score` in the
-    * given direction, ties to the lower `neighbor_id`; returns
-    * (query_id, neighbor_id, rank, score).
+  /** The per-query top-k every in-memory ranked path here ends in (a
+    * store probe gathers instead: [[StoreProbe.gatherTopK]]): `score`
+    * in the given direction, ties to the lower `neighbor_id`; returns
+    * (query_id, neighbor_id, rank, score). `dropNull` ranks null scores
+    * last and drops them AFTER the window — the same rows and ranks as
+    * dropping them first, but a null filter below the window would be
+    * pushed into the pair join with the score expression substituted,
+    * computing every candidate's score twice.
     */
   private def rankTopK(scored: DataFrame, score: String, ascending: Boolean,
-      k: Int): DataFrame = {
+      k: Int, dropNull: Boolean = false): DataFrame = {
+    val s = col(score)
     val w = Window.partitionBy("query_id").orderBy(
-      if (ascending) col(score).asc else col(score).desc, col("neighbor_id"))
+      if (!ascending) s.desc else if (dropNull) s.asc_nulls_last else s.asc,
+      col("neighbor_id"))
+    val top = col("rank") <= k
     scored
       .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+      .filter(if (dropNull) top && s.isNotNull else top)
       .select("query_id", "neighbor_id", "rank", score)
   }
 
@@ -727,20 +740,21 @@ object Similarity {
           else codec.query(col(vecCol))
         val probes = kept
           .select((col(idCol).as("query_id") +: pre) :+
-            lists.probe(col(vecCol)).as("__p"): _*)
-          .withColumn("list", lists.probedId(col("__p")))
-          .drop("__p")
+            lists.probe(col(vecCol)).as("list"): _*)
         residual.fold(probes)(cs => probes.select(col("query_id") +:
           col("list") +: codec.query(residualCol(col("qv"), col("list"),
             cs)): _*))
     }
   }
 
-  /** The scoring tail: broadcast the (small) query side against the
-    * encoded corpus — on the list key under a coarse stage, else every
-    * query against every corpus row — drop self-pairs, score, apply the
-    * codec's null contract, rank. The corpus is never shuffled; only
-    * scored candidates move into the per-query window.
+  /** The in-memory scoring tail: broadcast the (small) query side
+    * against the encoded corpus — on the list key under a coarse stage,
+    * else every query against every corpus row — drop self-pairs, score,
+    * rank with the codec's null contract. The corpus is never shuffled;
+    * only scored candidates move into the per-query window, which stays
+    * lazy because callers compose this frame into larger plans. A store
+    * probe scores the same pairs without the join or the window
+    * ([[stageFromStore]]).
     */
   private def scoredTopK(enc: DataFrame, probes: DataFrame, codec: Codec,
       k: Int, listed: Boolean): DataFrame = {
@@ -754,10 +768,7 @@ object Similarity {
       }
     val scored = codec.pairFilter.fold(pairs)(c => pairs.filter(c))
       .withColumn(codec.score, codec.scoreExpr)
-    val kept =
-      if (codec.dropNullScore) scored.filter(col(codec.score).isNotNull)
-      else scored
-    rankTopK(kept, codec.score, codec.ascending, k)
+    rankTopK(scored, codec.score, codec.ascending, k, codec.dropNullScore)
   }
 
   /** In-memory top-k of any codec under any coarse stage. */
@@ -815,51 +826,121 @@ object Similarity {
     codec.writeTrain(spark, storePath)
   }
 
-  /** Probe a stored index of any codec: the top-k plus the probed-list
-    * set it pruned to (empty for a flat store), so a two-stage refine
-    * reads the raw store's SAME partition union. The query side
-    * (`probeFrame`) runs once: its rows collect to the driver
-    * (≤ |queries| × probe width rows — the contract the scoring
-    * broadcast already assumes), the sorted probed lists derive from
-    * them, and the scoring join broadcasts a local relation of the same
-    * rows. The store read is [[graft.core.StoreScan]] over the probed
-    * lists' directories only — on a 10k-list index a 10-query probe
-    * lists ~40 partition directories on the driver, reads one footer for
-    * the schema and runs no listing or schema-inference job; the literal
-    * IN on the list column still prunes inside them. Codes, floats and
-    * norms round-trip parquet exactly, so a store probe is bit-identical
-    * to the in-memory path.
+  /** Probe a stored index of any codec, answered when called: the top-k
+    * as a local relation plus the probed-list set it pruned to (empty for
+    * a flat store), so a two-stage refine reads the raw store's SAME
+    * partition union. The query side is evaluated once on the driver
+    * ([[storeProbes]]), and its rows ride the plan as one literal
+    * ([[StoreProbe.queryLiteral]]: list → [query rows], exploded
+    * map-side next to each stored row — no broadcast join). The store
+    * read is [[graft.core.StoreScan]] over the probed lists' directories
+    * only — on a 10k-list index a 10-query probe lists ~40 partition
+    * directories on the driver, reads one footer for the schema and runs
+    * no listing or schema-inference job; the literal IN on the list
+    * column still prunes inside them. Scoring and the per-task top-k run
+    * in ONE map-only Spark job, and the driver merges the per-task lists
+    * ([[StoreProbe.gatherTopK]] — no shuffle, no window). Codes, floats
+    * and norms round-trip parquet exactly, so a store probe is
+    * bit-identical to the in-memory path.
     */
   private[operators] def stageFromStore(
       spark: org.apache.spark.sql.SparkSession, storePath: String,
       queries: DataFrame, idCol: String, vecCol: String, k: Int,
       codec: Codec, coarse: Coarse): (DataFrame, Seq[Any]) = {
     requireStore(spark, storePath, codec, coarse)
-    val probeQ = probeFrame(queries, idCol, vecCol, codec, coarse)
-    val probeRows = probeQ.collect()
-    val probes = spark.createDataFrame(java.util.Arrays.asList(probeRows: _*),
-      probeQ.schema)
+    val (qType, keyType, probes) =
+      storeProbes(spark, queries, idCol, vecCol, codec, coarse)
+    val listed = coarse != Coarse.Scan
     val probedLists =
-      if (coarse == Coarse.Scan) Nil
-      else probeRows.map(_.getAs[Any]("list")).distinct
-        .sortBy(_.asInstanceOf[Number].longValue).toSeq
+      if (!listed) Nil
+      else probes.map(_._1).distinct
+        .sortBy(_.asInstanceOf[Number].longValue)
     val payload = codec.payload.map(col)
     val stored = readStore(spark, storePath, coarse, probedLists)
     val enc =
-      if (coarse == Coarse.Scan)
-        stored.select(col("id").as("neighbor_id") +: payload: _*)
-      else stored.filter(col("list").isInCollection(probedLists))
-        .select(col("id").as("neighbor_id") +: col("list") +: payload: _*)
-    (scoredTopK(enc, probes, codec, k, coarse != Coarse.Scan), probedLists)
+      if (listed) stored.filter(col("list").isInCollection(probedLists))
+      else stored
+    val q = StoreProbe.queryLiteral(if (listed) Some(col("list")) else None,
+      keyType, qType, probes)
+    val pairs = enc
+      .select((col("id").as("neighbor_id") +: payload) :+ q.as("__q"): _*)
+      .select((col("neighbor_id") +: payload) ++
+        qType.fieldNames.map(f => col(s"__q.$f").as(f)): _*)
+      .filter(col("query_id") =!= col("neighbor_id"))
+    val scored = codec.pairFilter.fold(pairs)(c => pairs.filter(c))
+      .select(col("query_id"), col("neighbor_id"),
+        codec.scoreExpr.as(codec.score))
+    val top = StoreProbe.gatherTopK(scored, codec.score, codec.ascending, k,
+      codec.dropNullScore)
+    (top.answer(top.tasks.collect()), probedLists)
   }
 
-  /** Fully-PERSISTED two-stage retrieval over any codec: the compressed
-    * store answers the top-(k·factor) shortlist and the raw-vector store
+  /** A store probe's query side, evaluated once on the driver: the row
+    * type of the probe literal — (query_id, payload…), the query
+    * payload of [[probeFrame]] — its key type, and one (list, query row)
+    * pair per probed list (the key is unused under a flat scan). The
+    * collected frame is a projection of the queries with the probed ids
+    * as one array, exploded on the driver, so over a local query frame it
+    * folds into a local relation and runs no Spark job. A residual codec
+    * computes its per-list payload in a second projection over a local
+    * relation of the exploded rows, which runs none either.
+    */
+  private def storeProbes(spark: org.apache.spark.sql.SparkSession,
+      queries: DataFrame, idCol: String, vecCol: String, codec: Codec,
+      coarse: Coarse): (StructType, DataType, Seq[(Any, Row)]) = {
+    val kept =
+      codec.encodable(col(vecCol)).fold(queries)(c => queries.filter(c))
+    def rowOf(r: Row, n: Int) = Row.fromSeq(r.toSeq.take(n))
+    coarse match {
+      case Coarse.Scan =>
+        val q = kept.select(col(idCol).as("query_id") +:
+          codec.query(col(vecCol)): _*)
+        (q.schema, NullType, q.collect().toSeq.map(r => (null, r)))
+      case lists: Coarse.Lists =>
+        val residual = residualOf(codec, coarse)
+        val pre =
+          if (residual.isDefined) Seq(col(vecCol).as("qv"))
+          else codec.query(col(vecCol))
+        val q = kept.select((col(idCol).as("query_id") +: pre) :+
+          lists.probedIds(col(vecCol)).as("__p"): _*)
+        val n = q.schema.length - 1
+        val rowType = StructType(q.schema.fields.take(n))
+        val keyType =
+          q.schema("__p").dataType.asInstanceOf[ArrayType].elementType
+        val probes = q.collect().toSeq.flatMap(r =>
+          // a null list id (a null vector's) joins no stored row
+          Option(r.getSeq[Any](n)).getOrElse(Nil).filter(_ != null)
+            .map(l => (l, rowOf(r, n))))
+        residual match {
+          case None => (rowType, keyType, probes)
+          case Some(cs) =>
+            val local = spark.createDataFrame(
+              java.util.Arrays.asList(probes.map { case (l, r) =>
+                Row.fromSeq(r.toSeq :+ l) }: _*),
+              rowType.add(StructField("list", keyType, nullable = false)))
+            val lut = local.select((col("query_id") +: codec.query(
+              residualCol(col("qv"), col("list"), cs))) :+ col("list"): _*)
+            val m = lut.schema.length - 1
+            (StructType(lut.schema.fields.take(m)), keyType,
+              lut.collect().toSeq.map(r => (r.get(m), rowOf(r, m))))
+        }
+    }
+  }
+
+  /** Fully-PERSISTED two-stage retrieval over any codec, answered when
+    * called: the compressed store answers the top-(k·factor) shortlist
+    * ([[stageFromStore]]) and the raw-vector store
     * ([[writeIvfAssignments]]) the exact refine, BOTH scans pruned to the
     * probed lists — every shortlist member came from a probed list, so
-    * neither store is read beyond the probed partitions. One definition,
-    * so the raw-store contract (meta keys, list pruning) cannot drift
-    * between the PQ / SQ / binary compositions.
+    * neither store is read beyond the probed partitions. The refine is a
+    * second map-only job: the driver builds neighbor_id → [(query_id,
+    * query vector)] from the gathered shortlist ([[StoreProbe
+    * .queryLiteral]]), the shortlist ids reach the raw scan as a pushed
+    * `In` filter, each raw row's distances are computed once, and the
+    * top-k is gathered ([[StoreProbe.gatherTopK]], null distances
+    * skipped). The answer equals [[rerankExact]] over the shortlist. One
+    * definition, so the raw-store contract (meta keys, list pruning)
+    * cannot drift between the PQ / SQ / binary compositions.
     */
   private def rerankFromStores(spark: org.apache.spark.sql.SparkSession,
       storePath: String, rawStorePath: String, queries: DataFrame,
@@ -869,10 +950,27 @@ object Similarity {
     val (shortlist, probedLists) = stageFromStore(spark, storePath, queries,
       idCol, vecCol, k * factor, codec, coarse)
     requireStore(spark, rawStorePath, Codec.Flat, coarse)
-    val rawPruned = readStore(spark, rawStorePath, coarse, probedLists)
-      .filter(col("list").isInCollection(probedLists))
-      .select(col("id").as(idCol), col("v").as(vecCol))
-    rerankExact(shortlist, rawPruned, queries, idCol, vecCol, k)
+    val qv = queries.select(col(idCol).as("query_id"),
+      col(vecCol).cast("array<double>").as("qv"))
+    val vecsOf = qv.collect().toSeq.groupMap(_.get(0))(_.get(1))
+    val pairs = shortlist.collect().toSeq.flatMap(s =>
+      vecsOf.getOrElse(s.get(0), Nil).map(v => (s.get(1), Row(s.get(0), v))))
+    val q = StoreProbe.queryLiteral(Some(col("id")),
+      shortlist.schema("neighbor_id").dataType,
+      StructType(Seq(shortlist.schema("query_id"), qv.schema("qv"))), pairs)
+    val scored = readStore(spark, rawStorePath, coarse, probedLists)
+      .filter(col("list").isInCollection(probedLists) &&
+        col("id").isInCollection(pairs.map(_._1).distinct))
+      .select(col("id").as("neighbor_id"),
+        col("v").cast("array<double>").as("cv"), q.as("__q"))
+      .select(col("__q.query_id").as("query_id"), col("neighbor_id"),
+        col("__q.qv").as("qv"), col("cv"))
+      // delta projected ONCE, then self-dotted (see rerankExact)
+      .withColumn("__d", zip_with(col("qv"), col("cv"), (a, b) => a - b))
+      .withColumn("dist", dotDouble(col("__d"), col("__d")))
+    val top = StoreProbe.gatherTopK(scored, "dist", ascending = true, k,
+      dropNull = true)
+    top.answer(top.tasks.collect())
   }
 
   /** IVF (inverted-file) ANN — the centroid-partitioned scale path that
@@ -1401,11 +1499,12 @@ object Similarity {
       .join(broadcast(withQ), Seq("neighbor_id"))
       // delta projected ONCE, then self-dotted: CollapseProject keeps a
       // non-cheap alias referenced twice in its own projection, so the
-      // interpreted zip_with runs once per pair, not twice
+      // interpreted zip_with runs once per pair, not twice; null
+      // distances drop after the window, not in a filter the optimizer
+      // would push into the join as a third zip_with
       .withColumn("__d", zip_with(col("qv"), col("cv"), (a, b) => a - b))
       .withColumn("dist", dotDouble(col("__d"), col("__d")))
-      .filter(col("dist").isNotNull)
-    rankTopK(scored, "dist", ascending = true, k)
+    rankTopK(scored, "dist", ascending = true, k, dropNull = true)
   }
 
   /** SQ8 first stage + exact refine: the shortlist is [[sqTopK]]'s ADC

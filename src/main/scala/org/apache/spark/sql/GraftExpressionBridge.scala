@@ -12,6 +12,14 @@ object GraftExpressionBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
+  /** Spark's own ordering of `dt`'s internal values (doubles by
+    * `SQLOrderingUtil`, strings by UTF-8 bytes) — what a sort or a
+    * window compares with.
+    */
+  def internalOrdering(dt: org.apache.spark.sql.types.DataType): Ordering[Any] =
+    org.apache.spark.sql.catalyst.types.PhysicalDataType(dt).ordering
+      .asInstanceOf[Ordering[Any]]
+
   /** Plan-truncated DataFrame over an InternalRow RDD — what
     * `Dataset.checkpoint` builds internally. Used by
     * [[graft.core.CacheScope.checkpoint]] so iterative algorithms can

@@ -13,7 +13,10 @@ import org.apache.spark.sql.functions._
   *  (b) recall@k against brute force never drops as the probe widens
   *      (a seeded property over random corpora);
   *  (c) appending a batch to a store probes the same as building the
-  *      store from both batches at once.
+  *      store from both batches at once;
+  *  (d) a store probe's gathered top-k (per-task heaps merged on the
+  *      driver) equals the in-memory window's, ties included, with the
+  *      parent schema; the per-task heap keeps at most k rows per query.
   */
 class IvfCoreInvariantSpec extends SparkSpec with graft.TempDirs {
   import spark.implicits._
@@ -177,6 +180,101 @@ class IvfCoreInvariantSpec extends SparkSpec with graft.TempDirs {
       for (nprobe <- Seq(2, cents.size))
         fromStore(appended, c.codec, ivf(nprobe)) shouldBe
           fromStore(rebuilt, c.codec, ivf(nprobe))
+    }
+  }
+
+  test("(d) store gather ≡ in-memory window: ties across rank k and tasks, k past the candidates, an empty probe") {
+    import org.apache.spark.sql.types._
+    // seeded Gaussian vectors, each planted four times under the ids
+    // i, i+40, i+80, i+120: copies score identically in every codec, so
+    // each query's three copies tie and k = 2 cuts through them; the
+    // second half is an appended batch, so tied copies sit in different
+    // files, and one file per scan task makes them meet only in the
+    // driver merge
+    val rng = new scala.util.Random(17L)
+    val base = Array.fill(40)(Array.fill(8)(rng.nextGaussian().toFloat))
+    val tied = (0L until 160L).map(i => (i, base((i % 40).toInt)))
+      .toDF(id, vec)
+    val cs = Similarity.seedCentroids(tied, id, vec, 4)
+    val lists = tied.withColumn("l", Similarity.listAssignment(col(vec), cs))
+    // no row of list 3 is stored, and the query at centroid 3 probes
+    // only list 3: its answer is empty
+    val kept = lists.filter(col("l") =!= 3).drop("l")
+    val qs = kept.filter(col(id) < 5).union(
+      Seq((999L, cs(3).map(_.toFloat))).toDF(id, vec))
+    val (sqMins, sqMaxs) = Similarity.trainSqParams(tied, vec, 8)
+    val codecs = Seq("raw" -> Codec.Flat, "sq8" -> Codec.Sq8(sqMins, sqMaxs),
+      "pq" -> Codec.Pq(Similarity.seedPqCodebooks(tied, id, vec, m = 2,
+        k = 8, dsub = 4), 2, 8, 4),
+      "pq-residual" -> Codec.Pq(Similarity.seedPqCodebooks(
+        Similarity.residualFrame(tied, id, vec, cs), "id", "res", m = 2,
+        k = 8, dsub = 4), 2, 8, 4, residual = true),
+      "sign" -> Codec.Sign(8))
+    val conf = "spark.sql.files.openCostInBytes"
+    val prevConf = spark.conf.getOption(conf)
+    spark.conf.set(conf, 128L * 1024 * 1024)
+    try for ((name, codec) <- codecs;
+         coarse <- Seq[Coarse](Coarse.Scan, Coarse.Ivf(cs, 1), Coarse.Ivf(cs, 2))
+         if !(codec.residual && coarse == Coarse.Scan)) {
+      val (label, write) = coarse match {
+        case Coarse.Ivf(c, p) => (s"ivf$p", Coarse.Ivf(c, 1))
+        case other => ("flat", other)
+      }
+      val store = tmp(s"gather-$name-$label")
+      Similarity.writeStore(kept.filter(col(id) < 80), id, vec, codec, write,
+        store)
+      Similarity.writeStore(kept.filter(col(id) >= 80), id, vec, codec, write,
+        store, append = true)
+      for (kk <- Seq(1, 2, 3, 1000)) withClue(s"$name $coarse k=$kk: ") {
+        val stored = Similarity.stageFromStore(spark, store, qs, id, vec, kk,
+          codec, coarse)._1
+        val inMemory = rows(Similarity.codecTopK(kept, qs, id, vec, kk, codec,
+          coarse))
+        rows(stored) shouldBe inMemory
+        stored.schema shouldBe StructType(Seq(
+          StructField("query_id", LongType, nullable = false),
+          StructField("neighbor_id", LongType, nullable = true),
+          StructField("rank", LongType, nullable = false),
+          StructField(codec.score, if (codec.score == "hamming") LongType
+            else DoubleType, nullable = true)))
+        if (label == "ivf1") inMemory.filter(_.head == 999L) shouldBe empty
+        // of the three tied copies, the two ranked are the lower ids
+        if (kk == 2 && name == "raw")
+          inMemory.filter(_.head == 0L).map(_(1)) shouldBe Seq(40L, 80L)
+      }
+    } finally prevConf.fold(spark.conf.unset(conf))(spark.conf.set(conf, _))
+  }
+
+  test("(d) the per-task heap keeps at most k rows per query, and merged task lists equal one sort") {
+    // scores from a small range so ties are everywhere, ids shuffled,
+    // rows dealt to tasks at random: the merge of every task's bounded
+    // list is the global top-k under (score, id)
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val rng = new scala.util.Random(23L)
+    val all = rng.shuffle((0L until 600L).map(n =>
+      Row(n % 3, n, if (n % 17 == 0) null else (rng.nextInt(7) - 3).toDouble)))
+    for (ascending <- Seq(true, false); dropNull <- Seq(true, false);
+         k <- Seq(1, 4, 250)) withClue(s"asc=$ascending drop=$dropNull k=$k: ") {
+      val order = CandidateOrder(LongType, LongType, DoubleType, ascending)
+      val tasks = all.groupBy(_ => rng.nextInt(5)).values.toSeq
+      val perTask = tasks.map(t => order.taskTopK(t.iterator, k, dropNull).toSeq)
+      perTask.zip(tasks).foreach { case (out, in) =>
+        out.size should be <= in.map(_.get(0)).distinct.size * k }
+      val merged = order.merge(perTask.flatten.toArray, k).toSeq
+      // the reference: SQL order with nulls first ascending and last
+      // descending, ties to the lower id
+      val expected = all.filter(r => !(dropNull && r.get(2) == null))
+        .groupBy(_.getLong(0)).toSeq.sortBy(_._1).flatMap { case (_, rs) =>
+          val scored = rs.filter(_.get(2) != null)
+            .sortBy(r => (if (ascending) r.getDouble(2) else -r.getDouble(2),
+              r.getLong(1)))
+          val nulls = rs.filter(_.get(2) == null).sortBy(_.getLong(1))
+          (if (ascending) nulls ++ scored else scored ++ nulls).take(k)
+            .zipWithIndex.map { case (r, i) =>
+              Row(r.get(0), r.get(1), i + 1L, r.get(2)) }
+        }
+      merged shouldBe expected
     }
   }
 }

@@ -3,7 +3,8 @@ package graft.operators
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-class SearchSpec extends SparkSpec with graft.TempDirs {
+class SearchSpec extends SparkSpec with graft.TempDirs
+    with graft.ExecutedPlans {
   import spark.implicits._
 
   private val corpus = Seq(
@@ -60,13 +61,13 @@ class SearchSpec extends SparkSpec with graft.TempDirs {
       .sortBy(t => (t._1, t._3))
     val store = tempDir("bm25-store-") + "/idx"
     Search.writePostingsStore(wide, "doc_id", "text", store, buckets = 16)
-    val stored = Search.bm25TopKFromStore(spark, store, queries,
-      "doc_id", "text", k = 5)
+    val (stored, ran) = executed(Search.bm25TopKFromStore(spark, store, queries,
+      "doc_id", "text", k = 5))
     stored.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .sortBy(t => (t._1, t._3)) shouldBe direct
     // the query terms' bucket union reaches the file index as a
     // partition filter and the term set as a pushed string predicate
-    val plan = stored.queryExecution.executedPlan.toString
+    val plan = ran.planString
     plan should include("PartitionFilters")
     plan should include regex "bucket#\\d+ IN \\("
     plan should include("PushedFilters")
@@ -84,13 +85,13 @@ class SearchSpec extends SparkSpec with graft.TempDirs {
     val store = tempDir("bm25-segs-") + "/idx"
     (0 to 2).foreach(i => Search.writeIndexSegment(
       wide.filter($"doc_id" % 3 === i), "doc_id", "text", store, buckets = 16))
-    val seg = Search.bm25TopKSegmented(spark, store, queries,
-      "doc_id", "text", k = 5)
+    val (seg, ran) = executed(Search.bm25TopKSegmented(spark, store, queries,
+      "doc_id", "text", k = 5))
     seg.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .sortBy(t => (t._1, t._3)) shouldBe direct
     // bucket pruning still reaches the file index through the
     // (segment, bucket) partition tree
-    val plan = seg.queryExecution.executedPlan.toString
+    val plan = ran.planString
     plan should include regex "bucket#\\d+ IN \\("
     graft.core.CacheScope.releaseAll()
   }

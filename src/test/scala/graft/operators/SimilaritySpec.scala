@@ -3,7 +3,8 @@ package graft.operators
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-class SimilaritySpec extends SparkSpec with graft.TempDirs {
+class SimilaritySpec extends SparkSpec with graft.TempDirs
+    with graft.ExecutedPlans {
   import spark.implicits._
 
   private val vecs = Seq(
@@ -304,13 +305,14 @@ class SimilaritySpec extends SparkSpec with graft.TempDirs {
       .sortBy(t => (t._1, t._3))
     val store = tempDir("ivf-store-") + "/idx"
     Similarity.writeIvfAssignments(corpus, "vec_id", "embedding", cents, store)
-    val stored = Similarity.ivfTopKFromStore(spark, store, queries,
-      "vec_id", "embedding", k = 5, centroids = cents, nprobe = 2)
+    val (stored, ran) = executed(
+      Similarity.ivfTopKFromStore(spark, store, queries,
+        "vec_id", "embedding", k = 5, centroids = cents, nprobe = 2))
     stored.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
       .sortBy(t => (t._1, t._3)) shouldBe direct
     // the probed-list union reaches the file index as a partition filter
     // — the store scan never lists the unprobed list= directories
-    val plan = stored.queryExecution.executedPlan.toString
+    val plan = ran.planString
     plan should include("PartitionFilters")
     plan should include regex "list#\\d+ IN \\("
   }
@@ -337,13 +339,14 @@ class SimilaritySpec extends SparkSpec with graft.TempDirs {
     // is IN the store, not just in flight
     val storedSchema = spark.read.parquet(store).schema.fieldNames.toSet
     storedSchema shouldBe Set("id", "codes", "list")
-    val stored = Similarity.ivfPqTopKFromStore(spark, store, queries,
-      "vec_id", "embedding", k = 5, centroids = cents, nprobe = 2,
-      codebook = cb, m = 2, numCodes = 4, dsub = 4)
+    val (stored, ran) = executed(
+      Similarity.ivfPqTopKFromStore(spark, store, queries,
+        "vec_id", "embedding", k = 5, centroids = cents, nprobe = 2,
+        codebook = cb, m = 2, numCodes = 4, dsub = 4))
     stored.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
       .sortBy(t => (t._1, t._3)) shouldBe direct
     // probed-list pruning reaches the file index, like the raw store
-    val plan = stored.queryExecution.executedPlan.toString
+    val plan = ran.planString
     plan should include("PartitionFilters")
     plan should include regex "list#\\d+ IN \\("
   }
@@ -363,14 +366,15 @@ class SimilaritySpec extends SparkSpec with graft.TempDirs {
       "vec_id", "embedding", k = 5, planes = 4, dim = 8)) shouldBe
       rows(Similarity.lshTopK(corpus, queries,
         "vec_id", "embedding", k = 5, planes = 4, dim = 8))
-    val stored = Similarity.lshTopKFromStore(spark, store, queries,
-      "vec_id", "embedding", k = 5, planes = 4, dim = 8, probes = 3)
+    val (stored, ran) = executed(
+      Similarity.lshTopKFromStore(spark, store, queries,
+        "vec_id", "embedding", k = 5, planes = 4, dim = 8, probes = 3))
     rows(stored) shouldBe
       rows(Similarity.lshTopK(corpus, queries,
         "vec_id", "embedding", k = 5, planes = 4, dim = 8, probes = 3))
     // the probed-bucket union reaches the file index as a partition
     // filter — unprobed bucket= directories are never listed
-    val plan = stored.queryExecution.executedPlan.toString
+    val plan = ran.planString
     plan should include("PartitionFilters")
     plan should include regex "bucket#\\d+ IN \\("
     // a probe under a different geometry refuses via the _meta sidecar
@@ -486,14 +490,15 @@ class SimilaritySpec extends SparkSpec with graft.TempDirs {
     val store = tempDir("ivfsq-store-") + "/idx"
     Similarity.writeIvfSqCodes(corpus, "vec_id", "embedding", cents,
       store, mins, maxs)
-    val stored = Similarity.ivfSqTopKFromStore(spark, store, queries,
-      "vec_id", "embedding", k = 5, centroids = cents, nprobe = 2,
-      mins = mins, maxs = maxs)
+    val (stored, ran) = executed(
+      Similarity.ivfSqTopKFromStore(spark, store, queries,
+        "vec_id", "embedding", k = 5, centroids = cents, nprobe = 2,
+        mins = mins, maxs = maxs))
     rows(stored) shouldBe
       rows(Similarity.ivfSqTopK(corpus, queries, "vec_id", "embedding",
         k = 5, centroids = cents, nprobe = 2, mins = mins, maxs = maxs))
     // the probed-list union reaches the file index as a partition filter
-    val plan = stored.queryExecution.executedPlan.toString
+    val plan = ran.planString
     plan should include("PartitionFilters")
     plan should include regex "list#\\d+ IN \\("
     // wrong grid params refuse via _meta
@@ -641,17 +646,19 @@ class SimilaritySpec extends SparkSpec with graft.TempDirs {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("query_id", "neighbor_id", "rank", "dist")
         .as[(Long, Long, Long, Double)].collect().sortBy(t => (t._1, t._3))
-    val stored = Similarity.ivfPqRerankTopKFromStores(spark, pqStore,
-      rawStore, queries, "vec_id", "embedding", k = 3, centroids = cents,
-      nprobe = 2, codebook = cb, m = 2, numCodes = 4, dsub = 4, factor = 3)
+    val (stored, ran) = executed(
+      Similarity.ivfPqRerankTopKFromStores(spark, pqStore,
+        rawStore, queries, "vec_id", "embedding", k = 3, centroids = cents,
+        nprobe = 2, codebook = cb, m = 2, numCodes = 4, dsub = 4, factor = 3))
     rows(stored) shouldBe
       rows(Similarity.ivfPqRerankTopK(corpus, queries, "vec_id",
         "embedding", k = 3, centroids = cents, nprobe = 2, codebook = cb,
         m = 2, numCodes = 4, dsub = 4, factor = 3))
     // both stores' scans carry a probed-list partition filter — the
     // compressed shortlist scan AND the raw refine scan
-    val plan = stored.queryExecution.executedPlan.toString
+    val plan = ran.planString
     "list#\\d+ IN \\(".r.findAllIn(plan).length should be >= 2
+    ran.scans should have size 2
     // a raw store built under different centroids refuses via _meta
     val otherRaw = tempDir("2stage-raw2-") + "/idx"
     Similarity.writeIvfAssignments(corpus, "vec_id", "embedding",
@@ -677,17 +684,19 @@ class SimilaritySpec extends SparkSpec with graft.TempDirs {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("query_id", "neighbor_id", "rank", "dist")
         .as[(Long, Long, Long, Double)].collect().sortBy(t => (t._1, t._3))
-    val stored = Similarity.ivfSqRerankTopKFromStores(spark, sqStore,
-      rawStore, queries, "vec_id", "embedding", k = 3, centroids = cents,
-      nprobe = 2, mins = mins, maxs = maxs, factor = 3)
+    val (stored, ran) = executed(
+      Similarity.ivfSqRerankTopKFromStores(spark, sqStore,
+        rawStore, queries, "vec_id", "embedding", k = 3, centroids = cents,
+        nprobe = 2, mins = mins, maxs = maxs, factor = 3))
     rows(stored) shouldBe
       rows(Similarity.ivfSqRerankTopK(corpus, queries, "vec_id",
         "embedding", k = 3, centroids = cents, nprobe = 2,
         mins = mins, maxs = maxs, factor = 3))
     // both stores' scans carry a probed-list partition filter — the
     // compressed shortlist scan AND the raw refine scan
-    val plan = stored.queryExecution.executedPlan.toString
+    val plan = ran.planString
     "list#\\d+ IN \\(".r.findAllIn(plan).length should be >= 2
+    ran.scans should have size 2
     // a factor big enough to shortlist EVERY probed-list member makes
     // the refine output the exact L2² ranking restricted to probed
     // lists — driver-replayed (probe assignment = max-cosine argmin,
@@ -818,11 +827,12 @@ class SimilaritySpec extends SparkSpec with graft.TempDirs {
     val store = tempDir("ivfbinary-store-") + "/idx"
     Similarity.writeIvfBinary(corpus, "vec_id", "embedding", cents,
       store, dim = 8)
-    val stored = Similarity.ivfBinaryTopKFromStore(spark, store, queries,
-      "vec_id", "embedding", k = 5, centroids = cents, nprobe = 2, dim = 8)
+    val (stored, ran) = executed(
+      Similarity.ivfBinaryTopKFromStore(spark, store, queries,
+        "vec_id", "embedding", k = 5, centroids = cents, nprobe = 2, dim = 8))
     rows(stored) shouldBe mem
     // the store scan carries a probed-list partition filter
-    stored.queryExecution.executedPlan.toString should include regex
+    ran.planString should include regex
       "list#\\d+ IN \\("
     // append-only maintenance ≡ one-shot build
     val appended = tempDir("ivfbinary-append-") + "/idx"
@@ -853,9 +863,9 @@ class SimilaritySpec extends SparkSpec with graft.TempDirs {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("query_id", "neighbor_id", "rank", "dist")
         .as[(Long, Long, Long, Double)].collect().sortBy(t => (t._1, t._3))
-    val stored = Similarity.ivfBinaryRerankTopKFromStores(spark,
+    val (stored, ran) = executed(Similarity.ivfBinaryRerankTopKFromStores(spark,
       binStore, rawStore, queries, "vec_id", "embedding", k = 3,
-      centroids = cents, nprobe = 2, dim = 8, factor = 3)
+      centroids = cents, nprobe = 2, dim = 8, factor = 3))
     // the persisted pair must equal the in-flight composition: Hamming
     // shortlist at k·factor over the same probe set, exact refine over
     // the raw corpus
@@ -864,8 +874,9 @@ class SimilaritySpec extends SparkSpec with graft.TempDirs {
         k = 9, centroids = cents, nprobe = 2, dim = 8),
       corpus, queries, "vec_id", "embedding", k = 3))
     // both stores' scans carry a probed-list partition filter
-    val plan = stored.queryExecution.executedPlan.toString
+    val plan = ran.planString
     "list#\\d+ IN \\(".r.findAllIn(plan).length should be >= 2
+    ran.scans should have size 2
   }
 
   test("prefixRerankTopK: whole-corpus factor ≡ exact; prefix stage ranks by sliced cosine; short vectors rank last") {

@@ -12,10 +12,14 @@ import org.apache.spark.sql.functions._
   *      read under the same filter, with the same schema;
   *  (b) no Spark job without an SQL execution id starts during a probe
   *      call — partition listing and schema inference jobs carry none;
-  *  (c) every scan's root paths are probed partition directories only;
+  *  (c) every scan's root paths are probed partition directories only,
+  *      read from the plans the probe executed (it answers when called);
+  *      a vector probe runs one map-only job per store scan (no exchange,
+  *      broadcast or window) and bm25 one sum shuffle and no window;
   *  (d) probed ids with no directory answer the typed empty result.
   */
-class StoreProbeReadSpec extends SparkSpec with graft.TempDirs {
+class StoreProbeReadSpec extends SparkSpec with graft.TempDirs
+    with graft.ExecutedPlans {
   import spark.implicits._
 
   private val rng = new scala.util.Random(41L)
@@ -58,20 +62,15 @@ class StoreProbeReadSpec extends SparkSpec with graft.TempDirs {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
-  /** Root directories of every parquet scan in `df`, cached inputs too. */
-  private def scanRoots(df: DataFrame): Seq[org.apache.hadoop.fs.Path] = {
-    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
-      LogicalRelation}
-    def roots(p: LogicalPlan): Seq[org.apache.hadoop.fs.Path] = p.collect {
-      case l: LogicalRelation => l.relation match {
-        case h: HadoopFsRelation => h.location.rootPaths
-        case _ => Nil
-      }
-      case m: org.apache.spark.sql.execution.columnar.InMemoryRelation =>
-        roots(m.cacheBuilder.logicalPlan)
-    }.flatten
-    roots(df.queryExecution.optimizedPlan)
+  /** A map-only probe: one job per store scan, no exchange (broadcast
+    * or shuffle) and no window in any plan it executed.
+    */
+  private def mapOnly(ran: graft.Executed, storeScans: Int): Unit = {
+    ran.jobs shouldBe storeScans
+    ran.scans should have size storeScans
+    ran.count("Exchange") shouldBe 0
+    ran.count("BroadcastExchange") shouldBe 0
+    ran.count("Window") shouldBe 0
   }
 
   private def sorted(rows: Array[Row]): Seq[String] =
@@ -110,15 +109,20 @@ class StoreProbeReadSpec extends SparkSpec with graft.TempDirs {
     val queries = docs.filter($"doc_id" < 3)
     val probed = bucketsOf(queries, 64)
     probed.size should be > 32
-    val (got, bare) = unattributedJobs {
-      val out = Search.bm25TopKFromStore(spark, store, queries, "doc_id",
-        "text", k = 5)
-      (out, rows(out))
-    }
+    val ((got, ran), bare) = unattributedJobs(executed {
+      rows(Search.bm25TopKFromStore(spark, store, queries, "doc_id",
+        "text", k = 5))
+    })
     bare shouldBe 0
-    got._2 shouldBe rows(Search.bm25TopK(docs, queries, "doc_id", "text", 5))
-    val roots = scanRoots(got._1).filter(_.toString.contains("/postings"))
+    got shouldBe rows(Search.bm25TopK(docs, queries, "doc_id", "text", 5))
+    val roots = ran.scanRoots.filter(_.toString.contains("/postings"))
     roots.map(_.getName).toSet shouldBe probed.map(b => s"bucket=$b").toSet
+    // one (query, doc) sum shuffle — its map and result stages are the
+    // probe's only jobs — and the top-k gathered without a window
+    ran.count("Exchange") shouldBe 1
+    ran.count("BroadcastExchange") shouldBe 0
+    ran.count("Window") shouldBe 0
+    ran.jobs shouldBe 2
     sameAsSparkRead(s"$store/postings", "bucket", probed,
       "bucket" -> probed)
   }
@@ -133,14 +137,15 @@ class StoreProbeReadSpec extends SparkSpec with graft.TempDirs {
     val segs = spark.read.parquet(s"$store/_meta").as[(String, Long, Long, Int)]
       .collect().map(_._1).toSeq
     segs should have size 2
-    val (got, bare) = unattributedJobs {
-      val out = Search.bm25TopKSegmented(spark, store, queries, "doc_id",
-        "text", k = 5)
-      (out, rows(out))
-    }
+    val ((got, ran), bare) = unattributedJobs(executed {
+      rows(Search.bm25TopKSegmented(spark, store, queries, "doc_id",
+        "text", k = 5))
+    })
     bare shouldBe 0
-    got._2 shouldBe rows(Search.bm25TopK(docs, queries, "doc_id", "text", 5))
-    val roots = scanRoots(got._1).filter(_.toString.contains("/postings"))
+    got shouldBe rows(Search.bm25TopK(docs, queries, "doc_id", "text", 5))
+    ran.count("Window") shouldBe 0
+    ran.count("BroadcastExchange") shouldBe 0
+    val roots = ran.scanRoots.filter(_.toString.contains("/postings"))
     roots should not be empty
     roots.foreach { r =>
       segs.map(s => s"segment=$s") should contain(r.getParent.getName)
@@ -183,18 +188,18 @@ class StoreProbeReadSpec extends SparkSpec with graft.TempDirs {
       mins, maxs)
     Similarity.writeIvfAssignments(vecs, "vec_id", "embedding", cents, rawStore)
     new java.io.File(rawStore).list().count(_.startsWith("list=")) should be > 32
-    val probed = vq.select(Coarse.Ivf(cents, 3).probe($"embedding").as("p"))
-      .select($"p.l").distinct().as[Int].collect().sorted.toSeq
-    val (got, bare) = unattributedJobs {
-      val out = Similarity.ivfSqRerankTopKFromStores(spark, sqStore, rawStore,
+    val probed = vq.select(Coarse.Ivf(cents, 3).probe($"embedding").as("l"))
+      .distinct().as[Int].collect().sorted.toSeq
+    val ((got, ran), bare) = unattributedJobs(executed {
+      rows(Similarity.ivfSqRerankTopKFromStores(spark, sqStore, rawStore,
         vq, "vec_id", "embedding", k = 5, cents, nprobe = 3, mins, maxs,
-        factor = 2)
-      (out, rows(out))
-    }
+        factor = 2))
+    })
     bare shouldBe 0
-    got._2 shouldBe rows(Similarity.ivfSqRerankTopK(vecs, vq, "vec_id",
+    got shouldBe rows(Similarity.ivfSqRerankTopK(vecs, vq, "vec_id",
       "embedding", k = 5, cents, nprobe = 3, mins, maxs, factor = 2))
-    val roots = scanRoots(got._1)
+    mapOnly(ran, storeScans = 2)
+    val roots = ran.scanRoots
     roots.map(_.getParent.getName).toSet shouldBe Set("idx")
     roots.map(_.getName).toSet shouldBe probed.map(l => s"list=$l").toSet
     roots.map(_.getParent.getParent.getName).toSet.size shouldBe 2 // both stores
@@ -236,15 +241,15 @@ class StoreProbeReadSpec extends SparkSpec with graft.TempDirs {
     val lsh = Coarse.Lsh(6, 8, 2)
     val probed = vq.select(lsh.probe($"embedding").as("b")).distinct()
       .as[Long].collect().sorted.toSeq
-    val (got, bare) = unattributedJobs {
-      val out = Similarity.lshTopKFromStore(spark, store, vq, "vec_id",
-        "embedding", k = 5, planes = 6, dim = 8, probes = 2)
-      (out, rows(out))
-    }
+    val ((got, ran), bare) = unattributedJobs(executed {
+      rows(Similarity.lshTopKFromStore(spark, store, vq, "vec_id",
+        "embedding", k = 5, planes = 6, dim = 8, probes = 2))
+    })
     bare shouldBe 0
-    got._2 shouldBe rows(Similarity.lshTopK(vecs, vq, "vec_id", "embedding",
+    got shouldBe rows(Similarity.lshTopK(vecs, vq, "vec_id", "embedding",
       k = 5, planes = 6, dim = 8, probes = 2))
-    scanRoots(got._1).map(_.getName).toSet shouldBe
+    mapOnly(ran, storeScans = 1)
+    ran.scanRoots.map(_.getName).toSet shouldBe
       probed.map(b => s"bucket=$b").toSet
     sameAsSparkRead(store, "bucket", probed, "bucket" -> probed)
   }
@@ -253,15 +258,15 @@ class StoreProbeReadSpec extends SparkSpec with graft.TempDirs {
     val (mins, maxs) = Similarity.trainSqParams(vecs, "embedding", 8)
     val store = tempDir("probe-sq-") + "/idx"
     Similarity.writeSqCodes(vecs, "vec_id", "embedding", store, mins, maxs)
-    val (got, bare) = unattributedJobs {
-      val out = Similarity.sqTopKFromStore(spark, store, vq, "vec_id",
-        "embedding", k = 5, mins, maxs)
-      (out, rows(out))
-    }
+    val ((got, ran), bare) = unattributedJobs(executed {
+      rows(Similarity.sqTopKFromStore(spark, store, vq, "vec_id",
+        "embedding", k = 5, mins, maxs))
+    })
     bare shouldBe 0
-    got._2 shouldBe rows(Similarity.sqTopK(vecs, vq, "vec_id", "embedding",
+    got shouldBe rows(Similarity.sqTopK(vecs, vq, "vec_id", "embedding",
       k = 5, mins, maxs))
-    scanRoots(got._1).map(_.getName) shouldBe Seq("idx")
+    mapOnly(ran, storeScans = 1)
+    ran.scanRoots.map(_.getName) shouldBe Seq("idx")
     val ours = StoreScan.read(spark, store)
     ours.schema shouldBe spark.read.parquet(store).schema
     sorted(ours.collect()) shouldBe sorted(spark.read.parquet(store).collect())
