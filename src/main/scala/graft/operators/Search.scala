@@ -42,9 +42,11 @@ import graft.core.StoreScan
   *    term) rows once — the term set, the probed buckets and the query
   *    literal the scan explodes (no broadcast join) all come from them;
   *  - top-k per query is a bounded row_number window over the few
-  *    surviving (query, doc) groups in memory; a store probe gathers it
-  *    instead — per-task bounded heaps over the (query, doc) sum
-  *    shuffle's output, merged on the driver, no window shuffle.
+  *    surviving (query, doc) groups in memory; a store probe keeps it
+  *    without a window ([[StoreProbe.sumTopK]]) — on the driver, with no
+  *    Spark job, when the probed files are small, else per-task bounded
+  *    heaps over the (query, doc) sum shuffle's output, merged on the
+  *    driver.
   */
 object Search {
 
@@ -267,11 +269,14 @@ object Search {
     * and the (query, term) rows collect once ([[probedTerms]]); their
     * bucket union names the only directories [[graft.core.StoreScan]]
     * lists (on the driver, one footer for the schema), stays a literal
-    * partition filter, and the term set a pushed string predicate, so
-    * the scan is O(probed buckets). The scoring is [[storeTopK]]: one
-    * (query, doc) sum shuffle, the per-query top-k gathered on the
-    * driver. Scores are bit-identical to the in-flight path: tf/len/df
-    * are longs and the token strings round-trip parquet exactly.
+    * partition filter, and the term set a string predicate (pushed into
+    * the parquet scan on the Spark path), so the scan is O(probed
+    * buckets). The scoring is [[storeTopK]]: the (query, doc) sum and
+    * the per-query top-k, on the driver with no Spark job when the
+    * probed files fit [[StoreProbe.driverByteBudget]], else one sum
+    * shuffle and a driver gather. Scores are bit-identical to the
+    * in-flight path: tf/len/df are longs and the token strings
+    * round-trip parquet exactly.
     */
   def bm25TopKFromStore(spark: SparkSession, storePath: String,
       queries: DataFrame, idCol: String, textCol: String, k: Int,
@@ -289,12 +294,13 @@ object Search {
     // before any scoring work
     val dfPred =
       if (maxDf > 0) col("df") <= maxDf else lit(true)
-    val postings = StoreScan.read(spark, s"$storePath/postings",
-        "bucket" -> probedBuckets)
+    def postings(stored: DataFrame): DataFrame = stored
       .filter(col("bucket").isInCollection(probedBuckets) &&
         col("tok").isInCollection(terms) && dfPred)
       .select("tok", "doc_id", "tf", "len", "df")
-    storeTopK(postings, qType, termRows, (nDocs, totalLen), k, k1, b)
+    storeTopK(StoreProbe.stored(StoreScan.scan(spark, s"$storePath/postings",
+        "bucket" -> probedBuckets)), postings, qType, termRows,
+      (nDocs, totalLen), k, k1, b)
   }
 
   /** The query side of a store probe, evaluated once on the driver:
@@ -324,34 +330,34 @@ object Search {
       buckets.toLong)).distinct.sorted)
   }
 
-  /** The store probes' scoring: each posting row meets its query rows
-    * through the probe literal ([[StoreProbe.queryLiteral]]: tok →
-    * [query row], exploded map-side — no broadcast join), one sum
-    * shuffle on (query, doc) totals the micro-nat contributions, and
-    * the per-query top-k is gathered on the driver from the aggregate's
-    * output partitions ([[StoreProbe.gatherTopK]] — no window). The
-    * query rows carry `query_id` and any column `postings` lacks
-    * (the segmented index's probe-time df).
+  /** The store probes' scoring, over `postings(stored)`: each posting
+    * row meets its query rows through the probe literal
+    * ([[StoreProbe.queryLiteral]]: tok → [query row], exploded next to
+    * it — no broadcast join), the (query, doc) totals sum the micro-nat
+    * contributions, and the per-query top-k is kept without a window
+    * ([[StoreProbe.sumTopK]]: on the driver, or one sum shuffle and a
+    * gather from the aggregate's output partitions). The query rows
+    * carry `query_id` and any column the postings lack (the segmented
+    * index's probe-time df).
     */
-  private def storeTopK(postings: DataFrame, qType: StructType,
+  private def storeTopK(stored: StoreProbe.Stored,
+      postings: DataFrame => DataFrame, qType: StructType,
       termRows: Seq[(Any, Row)], stats: (Long, Long), k: Int, k1: Double,
       b: Double): DataFrame = {
     val (nDocs, totalLen) = stats
     val avgdl = totalLen.toDouble / nDocs.toDouble
     val q = StoreProbe.queryLiteral(Some(col("tok")), StringType, qType,
       termRows)
-    val scored = postings
-      .select(postings.columns.map(col) :+ q.as("__q"): _*)
-      .select(postings.columns.map(col) ++
-        qType.fieldNames.map(f => col(s"__q.$f").as(f)): _*)
-      .filter(col("query_id") =!= col("doc_id"))
-      .withColumn("__w", termScore(col("tf"), col("df"), col("len"),
-        nDocs, avgdl, k1, b))
-      .groupBy(col("query_id"), col("doc_id").as("neighbor_id"))
-      .agg(sum("__w").as("score"))
-    val top = StoreProbe.gatherTopK(scored, "score", ascending = false, k,
-      dropNull = false)
-    top.answer(top.tasks.collect())
+    def weights(stored: DataFrame): DataFrame = {
+      val p = postings(stored)
+      p.select(p.columns.map(col) :+ q.as("__q"): _*)
+        .select(p.columns.map(col) ++
+          qType.fieldNames.map(f => col(s"__q.$f").as(f)): _*)
+        .filter(col("query_id") =!= col("doc_id"))
+        .withColumn("__w", termScore(col("tf"), col("df"), col("len"),
+          nDocs, avgdl, k1, b))
+    }
+    StoreProbe.sumTopK(stored, weights, k).answer(_.collect())
   }
 
   // ------------------------------------------------- exact phrase match
@@ -793,10 +799,14 @@ object Search {
     * segments × the query terms' bucket directories
     * ([[graft.core.StoreScan]]), and the (query, term) rows collect once
     * as in [[bm25TopKFromStore]]; corpus stats are the sum of the
-    * per-segment `_meta` rows; df comes from a probe-time aggregate over
-    * the pruned postings (≤ |terms| rows, collected), and rides the probe
-    * literal with each query row into [[storeTopK]]. Results are
-    * identical to a monolithic index over the same documents.
+    * per-segment `_meta` rows; df is a probe-time count over the pruned
+    * postings (≤ |terms| rows), which rides the probe literal with each
+    * query row into [[storeTopK]]. When the probed files fit
+    * [[StoreProbe.driverByteBudget]] the pruned rows, the df count and
+    * the scoring are all on the driver with no Spark job; above it the
+    * pruned scan is persisted for the df aggregate and the scoring.
+    * Results are identical to a monolithic index over the same
+    * documents.
     */
   def bm25TopKSegmented(spark: SparkSession, storePath: String,
       queries: DataFrame, idCol: String, textCol: String, k: Int,
@@ -810,59 +820,66 @@ object Search {
     val buckets = bucketSizes.head
     val nDocs = metas.map(_.getAs[Long]("n_docs")).sum
     val totalLen = metas.map(_.getAs[Long]("total_len")).sum
+    val (qType, termRows) = probedTerms(queries, idCol, textCol)
+    // segments recompute df at probe time (it can't be denormalized
+    // across immutable segments), so the df-ceiling (see bm25TopK)
+    // filters the counted terms; a term without a df row (no posting,
+    // or over the ceiling) leaves the probe literal, so its postings
+    // meet no query row
+    def score(pruned: StoreProbe.Stored, df: Map[String, Long]) = {
+      val withDf = termRows.flatMap { case (t, r) =>
+        df.get(t.asInstanceOf[String]).filter(n => maxDf <= 0 || n <= maxDf)
+          .map(n => t -> Row(r.get(0), n)) }
+      storeTopK(pruned, identity,
+        qType.add(StructField("df", LongType, nullable = false)), withDf,
+        (nDocs, totalLen), k, k1, b)
+    }
     // An index whose every segment indexed ZERO documents (all-empty-
     // text batches, or a compaction of such segments) has a postings
-    // tree with no parquet files at all — the scan below would die on
-    // schema inference with an opaque error while the _meta looks
-    // healthy. Answer the probe honestly instead: no documents, no
-    // hits. neighbor_id is long by the same contract every store
-    // probe's doc ids follow (there are no postings rows to carry the
-    // writer's actual id type); score is the BIGINT micro-nat type
-    // storeTopK emits, so a union of probes across stores (or any
-    // LongType-expecting consumer) sees ONE schema regardless of
-    // store state.
-    if (nDocs == 0L) {
-      val qidType = queries.schema(idCol).dataType
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("query_id", qidType),
-          StructField("neighbor_id", LongType),
-          StructField("rank", LongType),
-          StructField("score", LongType))))
-    }
+    // tree with no parquet files at all — a scan would die on schema
+    // inference while the _meta looks healthy. Answer the probe
+    // honestly instead: the same scoring over no postings rows, so the
+    // answer has the one schema every probe has. doc_id is long by the
+    // contract every store probe's doc ids follow (there are no
+    // postings rows to carry the writer's actual id type).
+    if (nDocs == 0L)
+      return score(new StoreProbe.OnDriver(spark, StructType(Seq(
+        StructField("tok", StringType), StructField("doc_id", LongType),
+        StructField("tf", LongType), StructField("len", LongType))),
+        () => Iterator.empty), Map.empty)
     // only the segments the meta view lists: a half-merged compaction
     // segment (or an orphan a crashed flip left behind) must not
     // double-count df/stats — `segment` is a partition column, so this
     // prunes directories, it does not scan them
     val liveSegs = metas.map(_.getAs[String]("segment"))
-    val (qType, termRows) = probedTerms(queries, idCol, textCol)
     val (terms, probedBuckets) = termsAndBuckets(termRows, buckets)
-    // pruned feeds both the df aggregate and the scoring — persisted so
-    // the store scan runs once, and released when the probe returns
     // bucket before segment: both prune partitions, but the rendered
     // PartitionFilters string truncates after ~100 chars and the
     // segment list is UUIDs — bucket-first keeps the pruning visible
     // to plan audits
-    graft.core.CacheScope.scoped {
-      val pruned = graft.core.CacheScope.persist(
-        StoreScan.read(spark, s"$storePath/postings",
-            "segment" -> liveSegs, "bucket" -> probedBuckets)
-          .filter(col("bucket").isInCollection(probedBuckets) &&
-            col("segment").isInCollection(liveSegs) &&
-            col("tok").isInCollection(terms))
-          .select("tok", "doc_id", "tf", "len"))
-      // segments recompute df at probe time (it can't be denormalized
-      // across immutable segments), so the df-ceiling (see bm25TopK)
-      // filters the collected counts; a term without a df row (no
-      // posting, or over the ceiling) leaves the probe literal, so its
-      // postings meet no query row
-      val df = pruned.groupBy("tok").agg(count(lit(1)).as("df")).collect()
-        .map(r => r.getString(0) -> r.getLong(1))
-        .filter { case (_, n) => maxDf <= 0 || n <= maxDf }.toMap
-      val withDf = termRows.flatMap { case (t, r) =>
-        df.get(t.asInstanceOf[String]).map(n => t -> Row(r.get(0), n)) }
-      storeTopK(pruned, qType.add(StructField("df", LongType, nullable = false)),
-        withDf, (nDocs, totalLen), k, k1, b)
+    def prune(stored: DataFrame): DataFrame = stored
+      .filter(col("bucket").isInCollection(probedBuckets) &&
+        col("segment").isInCollection(liveSegs) &&
+        col("tok").isInCollection(terms))
+      .select("tok", "doc_id", "tf", "len")
+    StoreProbe.stored(StoreScan.scan(spark, s"$storePath/postings",
+        "segment" -> liveSegs, "bucket" -> probedBuckets)) match {
+      case d: StoreProbe.OnDriver =>
+        val pruned = prune(d.frame)
+        val kept = StoreProbe.evaluate(d, pruned).map(_.copy()).toArray
+        score(new StoreProbe.OnDriver(spark, pruned.schema,
+            () => kept.iterator),
+          kept.groupMapReduce(_.getUTF8String(0).toString)(_ => 1L)(_ + _))
+      case StoreProbe.InSpark(frame) =>
+        // pruned feeds both the df aggregate and the scoring — persisted
+        // so the store scan runs once, and released when the probe
+        // returns
+        graft.core.CacheScope.scoped {
+          val pruned = graft.core.CacheScope.persist(prune(frame))
+          score(StoreProbe.InSpark(pruned),
+            pruned.groupBy("tok").agg(count(lit(1)).as("df")).collect()
+              .map(r => r.getString(0) -> r.getLong(1)).toMap)
+        }
     }
   }
 }

@@ -89,7 +89,7 @@ object Similarity {
     codecTopK(corpus, queries, idCol, vecCol, k, Codec.Flat, Coarse.Scan)
 
   /** The per-query top-k every in-memory ranked path here ends in (a
-    * store probe gathers instead: [[StoreProbe.gatherTopK]]): `score`
+    * store probe gathers instead: [[StoreProbe.topK]]): `score`
     * in the given direction, ties to the lower `neighbor_id`; returns
     * (query_id, neighbor_id, rank, score). `dropNull` ranks null scores
     * last and drops them AFTER the window — the same rows and ranks as
@@ -686,20 +686,24 @@ object Similarity {
     graft.core.StoreMeta.requireIfPresent(spark, storePath, kind, keys)
   }
 
-  /** A store's rows under the core's column names: the probed lists'
-    * partitions only under a coarse stage ([[graft.core.StoreScan]] —
-    * no listing or schema job), the whole store for a flat scan.
+  /** A store's probed partitions ([[graft.core.StoreScan]] — no listing
+    * or schema job): the probed lists' directories under a coarse stage,
+    * the whole store for a flat scan, on the path their bytes choose
+    * ([[StoreProbe.stored]]).
     */
-  private def readStore(spark: org.apache.spark.sql.SparkSession,
-      storePath: String, coarse: Coarse, probedLists: Seq[Any]): DataFrame = {
-    val stored = coarse match {
-      case Coarse.Scan => graft.core.StoreScan.read(spark, storePath)
-      case _ => graft.core.StoreScan.read(spark, storePath,
+  private def probedStore(spark: org.apache.spark.sql.SparkSession,
+      storePath: String, coarse: Coarse,
+      probedLists: Seq[Any]): StoreProbe.Stored = StoreProbe.stored(
+    coarse match {
+      case Coarse.Scan => graft.core.StoreScan.scan(spark, storePath)
+      case _ => graft.core.StoreScan.scan(spark, storePath,
         coarse.storedNames.getOrElse("list", "list") -> probedLists)
-    }
+    })
+
+  /** Stored rows under the core's column names. */
+  private def coreNames(stored: DataFrame, coarse: Coarse): DataFrame =
     coarse.storedNames.foldLeft(stored) {
       case (d, (core, stored)) => d.withColumnRenamed(stored, core) }
-  }
 
   /** Encoded corpus rows: (`idAs`, list, payload…) under a coarse
     * stage, else (`idAs`, payload…). Assignment and encode are
@@ -831,17 +835,19 @@ object Similarity {
     * a flat store), so a two-stage refine reads the raw store's SAME
     * partition union. The query side is evaluated once on the driver
     * ([[storeProbes]]), and its rows ride the plan as one literal
-    * ([[StoreProbe.queryLiteral]]: list → [query rows], exploded
-    * map-side next to each stored row — no broadcast join). The store
-    * read is [[graft.core.StoreScan]] over the probed lists' directories
-    * only — on a 10k-list index a 10-query probe lists ~40 partition
-    * directories on the driver, reads one footer for the schema and runs
-    * no listing or schema-inference job; the literal IN on the list
-    * column still prunes inside them. Scoring and the per-task top-k run
-    * in ONE map-only Spark job, and the driver merges the per-task lists
-    * ([[StoreProbe.gatherTopK]] — no shuffle, no window). Codes, floats
-    * and norms round-trip parquet exactly, so a store probe is
-    * bit-identical to the in-memory path.
+    * ([[StoreProbe.queryLiteral]]: list → [query rows], exploded next to
+    * each stored row — no broadcast join). The store read is
+    * [[graft.core.StoreScan]] over the probed lists' directories only —
+    * on a 10k-list index a 10-query probe lists ~40 partition directories
+    * on the driver, reads one footer for the schema and runs no listing
+    * or schema-inference job; the literal IN on the list column still
+    * prunes inside them. The scoring is written once, as a function of
+    * the stored frame, and [[StoreProbe.topK]] answers it: probed files
+    * within the driver budget are decoded and scored on the driver with
+    * no Spark job, larger ones in ONE map-only Spark job whose per-task
+    * top-k lists the driver merges — no shuffle, no window either way.
+    * Codes, floats and norms round-trip parquet exactly, so a store probe
+    * is bit-identical to the in-memory path.
     */
   private[operators] def stageFromStore(
       spark: org.apache.spark.sql.SparkSession, storePath: String,
@@ -856,23 +862,25 @@ object Similarity {
       else probes.map(_._1).distinct
         .sortBy(_.asInstanceOf[Number].longValue)
     val payload = codec.payload.map(col)
-    val stored = readStore(spark, storePath, coarse, probedLists)
-    val enc =
-      if (listed) stored.filter(col("list").isInCollection(probedLists))
-      else stored
     val q = StoreProbe.queryLiteral(if (listed) Some(col("list")) else None,
       keyType, qType, probes)
-    val pairs = enc
-      .select((col("id").as("neighbor_id") +: payload) :+ q.as("__q"): _*)
-      .select((col("neighbor_id") +: payload) ++
-        qType.fieldNames.map(f => col(s"__q.$f").as(f)): _*)
-      .filter(col("query_id") =!= col("neighbor_id"))
-    val scored = codec.pairFilter.fold(pairs)(c => pairs.filter(c))
-      .select(col("query_id"), col("neighbor_id"),
-        codec.scoreExpr.as(codec.score))
-    val top = StoreProbe.gatherTopK(scored, codec.score, codec.ascending, k,
-      codec.dropNullScore)
-    (top.answer(top.tasks.collect()), probedLists)
+    def score(stored: DataFrame): DataFrame = {
+      val named = coreNames(stored, coarse)
+      val enc =
+        if (listed) named.filter(col("list").isInCollection(probedLists))
+        else named
+      val pairs = enc
+        .select((col("id").as("neighbor_id") +: payload) :+ q.as("__q"): _*)
+        .select((col("neighbor_id") +: payload) ++
+          qType.fieldNames.map(f => col(s"__q.$f").as(f)): _*)
+        .filter(col("query_id") =!= col("neighbor_id"))
+      codec.pairFilter.fold(pairs)(c => pairs.filter(c))
+        .select(col("query_id"), col("neighbor_id"),
+          codec.scoreExpr.as(codec.score))
+    }
+    val top = StoreProbe.topK(probedStore(spark, storePath, coarse,
+      probedLists), score, codec.score, codec.ascending, k, codec.dropNullScore)
+    (top.answer(_.collect()), probedLists)
   }
 
   /** A store probe's query side, evaluated once on the driver: the row
@@ -932,15 +940,17 @@ object Similarity {
     * ([[stageFromStore]]) and the raw-vector store
     * ([[writeIvfAssignments]]) the exact refine, BOTH scans pruned to the
     * probed lists — every shortlist member came from a probed list, so
-    * neither store is read beyond the probed partitions. The refine is a
-    * second map-only job: the driver builds neighbor_id → [(query_id,
-    * query vector)] from the gathered shortlist ([[StoreProbe
-    * .queryLiteral]]), the shortlist ids reach the raw scan as a pushed
-    * `In` filter, each raw row's distances are computed once, and the
-    * top-k is gathered ([[StoreProbe.gatherTopK]], null distances
-    * skipped). The answer equals [[rerankExact]] over the shortlist. One
-    * definition, so the raw-store contract (meta keys, list pruning)
-    * cannot drift between the PQ / SQ / binary compositions.
+    * neither store is read beyond the probed partitions. The driver
+    * builds neighbor_id → [(query_id, query vector)] from the gathered
+    * shortlist ([[StoreProbe.queryLiteral]]), the shortlist ids reach
+    * the raw scan as a literal `In` filter (pushed into the parquet scan
+    * on the Spark path), each raw row's distances are computed once,
+    * and [[StoreProbe.topK]] keeps the top-k (null distances skipped) —
+    * on the driver when the probed raw files fit its budget, else in a
+    * second map-only Spark job. The answer equals [[rerankExact]] over
+    * the shortlist. One definition, so the raw-store contract (meta
+    * keys, list pruning) cannot drift between the PQ / SQ / binary
+    * compositions.
     */
   private def rerankFromStores(spark: org.apache.spark.sql.SparkSession,
       storePath: String, rawStorePath: String, queries: DataFrame,
@@ -958,7 +968,7 @@ object Similarity {
     val q = StoreProbe.queryLiteral(Some(col("id")),
       shortlist.schema("neighbor_id").dataType,
       StructType(Seq(shortlist.schema("query_id"), qv.schema("qv"))), pairs)
-    val scored = readStore(spark, rawStorePath, coarse, probedLists)
+    def score(stored: DataFrame): DataFrame = coreNames(stored, coarse)
       .filter(col("list").isInCollection(probedLists) &&
         col("id").isInCollection(pairs.map(_._1).distinct))
       .select(col("id").as("neighbor_id"),
@@ -968,9 +978,9 @@ object Similarity {
       // delta projected ONCE, then self-dotted (see rerankExact)
       .withColumn("__d", zip_with(col("qv"), col("cv"), (a, b) => a - b))
       .withColumn("dist", dotDouble(col("__d"), col("__d")))
-    val top = StoreProbe.gatherTopK(scored, "dist", ascending = true, k,
-      dropNull = true)
-    top.answer(top.tasks.collect())
+    StoreProbe.topK(probedStore(spark, rawStorePath, coarse, probedLists),
+      score, "dist", ascending = true, k, dropNull = true)
+      .answer(_.collect())
   }
 
   /** IVF (inverted-file) ANN — the centroid-partitioned scale path that

@@ -39,15 +39,17 @@ object GraftExpressionBridge {
     * `leaves` maps each root directory to every data file under it.
     * Spark's own file index would list the roots again (as a Spark job
     * above 32 of them); here it reads the given listing instead, so
-    * building the frame touches no file. Partition columns are inferred
-    * from the directory names under `basePath`, and the schema is
-    * `dataSchema` (made nullable, as every file source makes it) plus
+    * building the relation touches no file. Partition columns are
+    * inferred from the directory names under `basePath`, and the schema
+    * is `dataSchema` (made nullable, as every file source makes it) plus
     * those columns — what `spark.read.parquet` would build over the same
-    * files. The listing is a snapshot: a refresh does not re-list.
+    * files; its file format is the parquet reader a scan of it runs. The
+    * listing is a snapshot: a refresh does not re-list.
     */
-  def parquetOverListing(spark: SparkSession, basePath: String,
+  def parquetRelation(spark: SparkSession, basePath: String,
       leaves: Seq[(org.apache.hadoop.fs.Path, Array[org.apache.hadoop.fs.FileStatus])],
-      dataSchema: org.apache.spark.sql.types.StructType): DataFrame = {
+      dataSchema: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.execution.datasources.HadoopFsRelation = {
     import org.apache.spark.sql.execution.datasources.{FileStatusCache,
       HadoopFsRelation, InMemoryFileIndex}
     val listed = leaves.toMap
@@ -60,10 +62,9 @@ object GraftExpressionBridge {
     val opts = Map("basePath" -> basePath)
     val index = new InMemoryFileIndex(spark, leaves.map(_._1), opts,
       Some(dataSchema), cache)
-    spark.baseRelationToDataFrame(HadoopFsRelation(index,
-      index.partitionSchema, dataSchema.asNullable, None,
-      new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat,
-      opts)(spark))
+    HadoopFsRelation(index, index.partitionSchema, dataSchema.asNullable,
+      None, new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat,
+      opts)(spark)
   }
 
   /** Spark's file-listing rule for names that are not data: `_…` and

@@ -61,19 +61,32 @@ object Executed {
   */
 trait ExecutedPlans { self: SparkSpec =>
 
+  /** `body` with every store probe scored in Spark (the gather path),
+    * whatever its probed bytes — where the executed-plan pins hold.
+    */
+  def onSpark[T](body: => T): T =
+    graft.operators.StoreProbe.withDriverByteBudget(-1L)(body)
+
+  /** `body` with every store probe decoded and scored on the driver. */
+  def onDriver[T](body: => T): T =
+    graft.operators.StoreProbe.withDriverByteBudget(Long.MaxValue)(body)
+
   def executed[T](body: => T): (T, Executed) = {
     val sc = spark.sparkContext
-    val marker = s"executed_marker_${java.util.UUID.randomUUID().toString
-      .replace("-", "")}"
+    def name(tag: String) = s"executed_${tag}_${java.util.UUID.randomUUID()
+      .toString.replace("-", "")}"
+    val (begin, end) = (name("begin"), name("end"))
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
     val jobs, bare = new java.util.concurrent.atomic.AtomicInteger()
     val done = new java.util.concurrent.CountDownLatch(1)
-    @volatile var markerStarted = false
+    @volatile var plansBegun, jobsBegun, endStarted = false
+    def marks(qe: QueryExecution, m: String) = qe.analyzed.output.exists(_.name == m)
     val queries = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution,
           durationNs: Long): Unit =
-        if (qe.analyzed.output.exists(_.name == marker)) done.countDown()
-        else plans.add(qe.executedPlan)
+        if (marks(qe, begin)) plansBegun = true
+        else if (marks(qe, end)) done.countDown()
+        else if (plansBegun) plans.add(qe.executedPlan)
       override def onFailure(funcName: String, qe: QueryExecution,
           exception: Exception): Unit = ()
     }
@@ -81,28 +94,34 @@ trait ExecutedPlans { self: SparkSpec =>
       override def onJobStart(
           e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
         val props = Option(e.properties)
-        if (props.exists(_.getProperty(marker) != null)) markerStarted = true
-        else if (!markerStarted) {
+        if (props.exists(_.getProperty(begin) != null)) jobsBegun = true
+        else if (props.exists(_.getProperty(end) != null)) endStarted = true
+        else if (jobsBegun && !endStarted) {
           jobs.incrementAndGet()
           if (props.forall(_.getProperty("spark.sql.execution.id") == null))
             bare.incrementAndGet()
         }
       }
     }
+    def marker(m: String): Unit = {
+      sc.setLocalProperty(m, "1")
+      try spark.range(1).selectExpr(s"id AS $m").collect()
+      finally sc.setLocalProperty(m, null)
+    }
     spark.listenerManager.register(queries)
     sc.addSparkListener(jobStarts)
     try {
+      // marker queries around the call: listener queues are ordered, so
+      // what a listener sees between the two markers' events is exactly
+      // what the call ran — not an earlier call's events still queued
+      // when the listeners were added
+      marker(begin)
       val r = body
-      // a marker query after the call: once its end and its job start
-      // are seen, every earlier execution end and job start has been
-      // delivered (listener queues are ordered)
-      sc.setLocalProperty(marker, "1")
-      try spark.range(1).selectExpr(s"id AS $marker").collect()
-      finally sc.setLocalProperty(marker, null)
+      marker(end)
       done.await(30, java.util.concurrent.TimeUnit.SECONDS) shouldBe true
       val until = System.nanoTime() + 30000000000L
-      while (!markerStarted && System.nanoTime() < until) Thread.sleep(5)
-      markerStarted shouldBe true
+      while (!endStarted && System.nanoTime() < until) Thread.sleep(5)
+      endStarted shouldBe true
       import scala.jdk.CollectionConverters._
       (r, Executed(plans.asScala.toSeq, jobs.get(), bare.get()))
     } finally {

@@ -43,7 +43,7 @@ class PlanAuditSpec extends SparkSpec with ExecutedPlans {
     // sf0.001 term passes the ceiling, and adaptive execution replaces
     // the empty aggregate, scan included, in the final plan).
     def postingsFilters(name: String): String =
-      executed(Queries.all(name)(spark, dir))._2.initial.scans
+      executed(onSpark(Queries.all(name)(spark, dir)))._2.initial.scans
         .filter(_.metadata.get("Location").exists(_.contains("postings")))
         .flatMap(_.dataFilters).map(_.sql).mkString(" ")
     val ceiled = postingsFilters("search_bm25_store_maxdf")
@@ -293,7 +293,7 @@ class PlanAuditSpec extends SparkSpec with ExecutedPlans {
     // in the in-memory plan only.
     for (name <- Seq("ann_binary_store_topk", "ann_ivfbinary_store_topk")) {
       withClue(s"$name: ") {
-        val ran = executed(Queries.all(name)(spark, dir))._2
+        val ran = executed(onSpark(Queries.all(name)(spark, dir)))._2
         val probe = ran.plans.filter(_.toString.contains("bit_count"))
         probe should have size 1 // pair score on packed words, one scan
         val p = probe.head.toString
@@ -303,6 +303,10 @@ class PlanAuditSpec extends SparkSpec with ExecutedPlans {
         p should not include "Exchange" // corpus never moved
         p should not include "Window" // top-k gathered per task
         p should include("Generate explode") // query words, encoded once
+        // under the driver budget the same probe scores its decoded files
+        // on the driver: no plan that scores the pairs runs in Spark
+        executed(onDriver(Queries.all(name)(spark, dir)))._2.plans
+          .filter(_.toString.contains("bit_count")) shouldBe empty
       }
     }
     plan("ann_binary_rerank_topk") should include("hyperplanebits") // map-side
@@ -355,7 +359,7 @@ class PlanAuditSpec extends SparkSpec with ExecutedPlans {
     }
     for (name <- Seq("ann_sq_rerank_topk", "ann_ivfsq_rerank_store_topk"))
       withClue(s"$name: ") {
-        scores(executed(Queries.all(name)(spark, dir).collect())._2) shouldBe
+        scores(executed(onSpark(Queries.all(name)(spark, dir).collect()))._2) shouldBe
           Seq(1, 1, 1)
       }
   }

@@ -14,9 +14,12 @@ import org.apache.spark.sql.functions._
   *      (a seeded property over random corpora);
   *  (c) appending a batch to a store probes the same as building the
   *      store from both batches at once;
-  *  (d) a store probe's gathered top-k (per-task heaps merged on the
-  *      driver) equals the in-memory window's, ties included, with the
-  *      parent schema; the per-task heap keeps at most k rows per query.
+  *  (d) a store probe's top-k is the same on the driver (files decoded
+  *      and scored there), gathered from Spark tasks (per-task heaps
+  *      merged on the driver) and from the in-memory window, ties
+  *      included, with one schema — for every codec × coarse value and
+  *      for bm25, monolithic and segmented; the per-task heap keeps at
+  *      most k rows per query.
   */
 class IvfCoreInvariantSpec extends SparkSpec with graft.TempDirs {
   import spark.implicits._
@@ -183,66 +186,159 @@ class IvfCoreInvariantSpec extends SparkSpec with graft.TempDirs {
     }
   }
 
-  test("(d) store gather ≡ in-memory window: ties across rank k and tasks, k past the candidates, an empty probe") {
+  /** An answer as comparable values: rows as strings (binary ids by
+    * their bytes), sorted — rank is a column, so order is compared too.
+    */
+  private def answer(df: DataFrame): Seq[String] =
+    df.collect().map(_.toSeq.map {
+      case b: Array[Byte] => b.toSeq
+      case x => x
+    }.mkString("|")).sorted.toSeq
+
+  /** The three answers of one store probe — on the driver, gathered
+    * from Spark tasks, and the in-memory `window` — agree in rows; the
+    * two store paths in full schema (names, types, nullability), the
+    * window in names and types (a parquet read makes every stored
+    * column nullable). Returns the driver's answer.
+    */
+  private def threeWay(window: DataFrame)(probe: => DataFrame): DataFrame = {
+    val driver = StoreProbe.withDriverByteBudget(Long.MaxValue)(probe)
+    val gather = StoreProbe.withDriverByteBudget(-1L)(probe)
+    withClue("driver vs gather: ") {
+      driver.schema shouldBe gather.schema
+      answer(driver) shouldBe answer(gather)
+    }
+    withClue("gather vs window: ") {
+      gather.schema.map(f => f.name -> f.dataType) shouldBe
+        window.schema.map(f => f.name -> f.dataType)
+      answer(gather) shouldBe answer(window)
+    }
+    driver
+  }
+
+  test("(d) driver ≡ gather ≡ window, every codec × coarse: ties across rank k and tasks, k past the candidates, absent lists, null vectors, binary ids") {
     import org.apache.spark.sql.types._
     // seeded Gaussian vectors, each planted four times under the ids
     // i, i+40, i+80, i+120: copies score identically in every codec, so
     // each query's three copies tie and k = 2 cuts through them; the
     // second half is an appended batch, so tied copies sit in different
     // files, and one file per scan task makes them meet only in the
-    // driver merge
+    // driver merge. Row 160 has a null vector, and so has query 998.
     val rng = new scala.util.Random(17L)
     val base = Array.fill(40)(Array.fill(8)(rng.nextGaussian().toFloat))
-    val tied = (0L until 160L).map(i => (i, base((i % 40).toInt)))
-      .toDF(id, vec)
-    val cs = Similarity.seedCentroids(tied, id, vec, 4)
+    val tied = ((0L until 160L).map(i => (i, base((i % 40).toInt))) :+
+      ((160L, null: Array[Float]))).toDF(id, vec)
+    val cs = Similarity.seedCentroids(tied.filter(col(vec).isNotNull), id,
+      vec, 4)
     val lists = tied.withColumn("l", Similarity.listAssignment(col(vec), cs))
     // no row of list 3 is stored, and the query at centroid 3 probes
     // only list 3: its answer is empty
-    val kept = lists.filter(col("l") =!= 3).drop("l")
+    val kept = lists.filter(col("l").isNull || col("l") =!= 3).drop("l")
     val qs = kept.filter(col(id) < 5).union(
-      Seq((999L, cs(3).map(_.toFloat))).toDF(id, vec))
-    val (sqMins, sqMaxs) = Similarity.trainSqParams(tied, vec, 8)
+      Seq((999L, cs(3).map(_.toFloat)), (998L, null: Array[Float]))
+        .toDF(id, vec))
+    val nonNull = tied.filter(col(vec).isNotNull)
+    val (sqMins, sqMaxs) = Similarity.trainSqParams(nonNull, vec, 8)
     val codecs = Seq("raw" -> Codec.Flat, "sq8" -> Codec.Sq8(sqMins, sqMaxs),
-      "pq" -> Codec.Pq(Similarity.seedPqCodebooks(tied, id, vec, m = 2,
+      "pq" -> Codec.Pq(Similarity.seedPqCodebooks(nonNull, id, vec, m = 2,
         k = 8, dsub = 4), 2, 8, 4),
       "pq-residual" -> Codec.Pq(Similarity.seedPqCodebooks(
-        Similarity.residualFrame(tied, id, vec, cs), "id", "res", m = 2,
+        Similarity.residualFrame(nonNull, id, vec, cs), "id", "res", m = 2,
         k = 8, dsub = 4), 2, 8, 4, residual = true),
       "sign" -> Codec.Sign(8))
+    // binary ids: the same vectors under their decimal strings' bytes,
+    // so id order ("10" < "2") differs from the long order
+    def binary(df: DataFrame) =
+      df.withColumn(id, col(id).cast("string").cast("binary"))
     val conf = "spark.sql.files.openCostInBytes"
     val prevConf = spark.conf.getOption(conf)
     spark.conf.set(conf, 128L * 1024 * 1024)
     try for ((name, codec) <- codecs;
-         coarse <- Seq[Coarse](Coarse.Scan, Coarse.Ivf(cs, 1), Coarse.Ivf(cs, 2))
-         if !(codec.residual && coarse == Coarse.Scan)) {
+         coarse <- Seq[Coarse](Coarse.Scan, Coarse.Ivf(cs, 1),
+           Coarse.Ivf(cs, 2), Coarse.Lsh(4, 8, 1), Coarse.Lsh(4, 8, 2))
+         if !(codec.residual && !coarse.isInstanceOf[Coarse.Ivf]);
+         ids <- Seq("long", "binary")
+         if ids == "long" || (coarse == Coarse.Ivf(cs, 2) && !codec.residual)) {
       val (label, write) = coarse match {
         case Coarse.Ivf(c, p) => (s"ivf$p", Coarse.Ivf(c, 1))
+        case Coarse.Lsh(pl, d, p) => (s"lsh$p", Coarse.Lsh(pl, d, 1))
         case other => ("flat", other)
       }
-      val store = tmp(s"gather-$name-$label")
-      Similarity.writeStore(kept.filter(col(id) < 80), id, vec, codec, write,
-        store)
-      Similarity.writeStore(kept.filter(col(id) >= 80), id, vec, codec, write,
-        store, append = true)
-      for (kk <- Seq(1, 2, 3, 1000)) withClue(s"$name $coarse k=$kk: ") {
-        val stored = Similarity.stageFromStore(spark, store, qs, id, vec, kk,
-          codec, coarse)._1
-        val inMemory = rows(Similarity.codecTopK(kept, qs, id, vec, kk, codec,
-          coarse))
-        rows(stored) shouldBe inMemory
-        stored.schema shouldBe StructType(Seq(
-          StructField("query_id", LongType, nullable = false),
-          StructField("neighbor_id", LongType, nullable = true),
-          StructField("rank", LongType, nullable = false),
-          StructField(codec.score, if (codec.score == "hamming") LongType
-            else DoubleType, nullable = true)))
-        if (label == "ivf1") inMemory.filter(_.head == 999L) shouldBe empty
-        // of the three tied copies, the two ranked are the lower ids
-        if (kk == 2 && name == "raw")
-          inMemory.filter(_.head == 0L).map(_(1)) shouldBe Seq(40L, 80L)
+      val as = if (ids == "long") identity[DataFrame] _ else binary _
+      val (corpus, queries) = (as(kept), as(qs))
+      val store = tmp(s"gather-$name-$label-$ids")
+      Similarity.writeStore(as(kept.filter(col(id) < 80 || col(id) === 160L)),
+        id, vec, codec, write, store)
+      Similarity.writeStore(as(kept.filter(col(id) >= 80 && col(id) =!= 160L)),
+        id, vec, codec, write, store, append = true)
+      for (kk <- Seq(1, 2, 3, 1000)) withClue(s"$name $coarse $ids k=$kk: ") {
+        val window = Similarity.codecTopK(corpus, queries, id, vec, kk, codec,
+          coarse)
+        val got = threeWay(window) {
+          Similarity.stageFromStore(spark, store, queries, id, vec, kk, codec,
+            coarse)._1
+        }
+        answer(got) should not be empty
+        if (ids == "long") {
+          got.schema shouldBe StructType(Seq(
+            StructField("query_id", LongType, nullable = false),
+            StructField("neighbor_id", LongType, nullable = true),
+            StructField("rank", LongType, nullable = false),
+            StructField(codec.score, if (codec.score == "hamming") LongType
+              else DoubleType, nullable = true)))
+          val byQuery = rows(window).groupBy(_.head)
+          // the query at the unstored list's centroid, and the null query
+          if (label == "ivf1") byQuery.get(999L) shouldBe None
+          byQuery.get(998L) shouldBe None
+          // of the three tied copies, the two ranked are the lower ids
+          if (kk == 2 && name == "raw")
+            byQuery(0L).map(_(1)) shouldBe Seq(40L, 80L)
+        }
       }
     } finally prevConf.fold(spark.conf.unset(conf))(spark.conf.set(conf, _))
+  }
+
+  test("(d) bm25 driver ≡ gather ≡ window, monolithic and segmented: summed terms, ties across rank k, k past the candidates, absent buckets, binary ids") {
+    // every document is planted twice (ids i and i+30) so each query's
+    // copies tie; queries share terms, so two queries meet the same
+    // posting rows; a query of only unseen terms probes buckets with no
+    // directory and answers nothing
+    val rng = new scala.util.Random(29L)
+    val vocab = Array.tabulate(40)(i => s"t$i")
+    val texts = Array.fill(30)(Seq.fill(6)(vocab(rng.nextInt(vocab.length)))
+      .mkString(" "))
+    val docs = (0L until 60L).map(i => (i, texts((i % 30).toInt)))
+      .toDF("doc_id", "text")
+    val present = vocab.toSet
+    val unseen = Iterator.from(0).map(i => s"zz$i").filterNot(present)
+      .take(2).mkString(" ")
+    val queries = docs.filter(col("doc_id") < 4).union(
+      Seq((998L, unseen)).toDF("doc_id", "text"))
+    def binary(df: DataFrame) =
+      df.withColumn("doc_id", col("doc_id").cast("string").cast("binary"))
+    for (ids <- Seq("long", "binary")) {
+      val as = if (ids == "long") identity[DataFrame] _ else binary _
+      val (d, q) = (as(docs), as(queries))
+      val mono = tmp(s"bm25-mono-$ids")
+      Search.writePostingsStore(d, "doc_id", "text", mono, buckets = 32)
+      // two segments, each holding one copy of some documents
+      val segs = tmp(s"bm25-segs-$ids")
+      Search.writeIndexSegments(Seq(0, 1).map(r =>
+        as(docs.filter(col("doc_id") % 2 === r))), "doc_id", "text", segs,
+        buckets = 32)
+      for (kk <- Seq(1, 2, 3, 1000)) withClue(s"$ids k=$kk: ") {
+        val window = Search.bm25TopK(d, q, "doc_id", "text", kk)
+        val got = threeWay(window) {
+          Search.bm25TopKFromStore(spark, mono, q, "doc_id", "text", kk)
+        }
+        answer(threeWay(window) {
+          Search.bm25TopKSegmented(spark, segs, q, "doc_id", "text", kk)
+        }) shouldBe answer(got)
+        answer(got) should not be empty
+        if (ids == "long") rows(window).map(_.head).toSet should not contain 998L
+      }
+    }
+    graft.core.CacheScope.releaseAll()
   }
 
   test("(d) the per-task heap keeps at most k rows per query, and merged task lists equal one sort") {

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class SearchSpec extends SparkSpec with graft.TempDirs
@@ -61,8 +62,8 @@ class SearchSpec extends SparkSpec with graft.TempDirs
       .sortBy(t => (t._1, t._3))
     val store = tempDir("bm25-store-") + "/idx"
     Search.writePostingsStore(wide, "doc_id", "text", store, buckets = 16)
-    val (stored, ran) = executed(Search.bm25TopKFromStore(spark, store, queries,
-      "doc_id", "text", k = 5))
+    val (stored, ran) = executed(onSpark(Search.bm25TopKFromStore(spark,
+      store, queries, "doc_id", "text", k = 5)))
     stored.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .sortBy(t => (t._1, t._3)) shouldBe direct
     // the query terms' bucket union reaches the file index as a
@@ -72,6 +73,13 @@ class SearchSpec extends SparkSpec with graft.TempDirs
     plan should include regex "bucket#\\d+ IN \\("
     plan should include("PushedFilters")
     plan should include regex "In\\(tok"
+    // under the driver budget: the same answer and schema, no Spark job
+    val (local, drv) = executed(onDriver(Search.bm25TopKFromStore(spark,
+      store, queries, "doc_id", "text", k = 5)))
+    drv.jobs shouldBe 0
+    local.schema shouldBe stored.schema
+    local.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+      .sortBy(t => (t._1, t._3)) shouldBe direct
   }
 
   test("segmented index: three appended segments score like one monolith") {
@@ -85,14 +93,22 @@ class SearchSpec extends SparkSpec with graft.TempDirs
     val store = tempDir("bm25-segs-") + "/idx"
     (0 to 2).foreach(i => Search.writeIndexSegment(
       wide.filter($"doc_id" % 3 === i), "doc_id", "text", store, buckets = 16))
-    val (seg, ran) = executed(Search.bm25TopKSegmented(spark, store, queries,
-      "doc_id", "text", k = 5))
+    val (seg, ran) = executed(onSpark(Search.bm25TopKSegmented(spark, store,
+      queries, "doc_id", "text", k = 5)))
     seg.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .sortBy(t => (t._1, t._3)) shouldBe direct
     // bucket pruning still reaches the file index through the
     // (segment, bucket) partition tree
     val plan = ran.planString
     plan should include regex "bucket#\\d+ IN \\("
+    // under the driver budget: the df count and the scoring on the
+    // driver, the same answer and schema, no Spark job
+    val (local, drv) = executed(onDriver(Search.bm25TopKSegmented(spark,
+      store, queries, "doc_id", "text", k = 5)))
+    drv.jobs shouldBe 0
+    local.schema shouldBe seg.schema
+    local.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+      .sortBy(t => (t._1, t._3)) shouldBe direct
     graft.core.CacheScope.releaseAll()
   }
 
@@ -329,18 +345,25 @@ class SearchSpec extends SparkSpec with graft.TempDirs
     // correct schema) instead of dying on schema inference over a
     // postings tree with no parquet files — the _meta looks healthy
     // (one row), so the probe must not trust it blindly
-    val hits = Search.bm25TopKSegmented(spark, store,
-      Seq((9L, "alpha")).toDF("doc_id", "text"), "doc_id", "text", k = 3)
+    val q = Seq((9L, "alpha")).toDF("doc_id", "text")
+    val hits = Search.bm25TopKSegmented(spark, store, q, "doc_id", "text",
+      k = 3)
     hits.columns.toSeq shouldBe
       Seq("query_id", "neighbor_id", "rank", "score")
-    hits.schema("query_id").dataType shouldBe
-      org.apache.spark.sql.types.LongType
-    // score is the BIGINT micro-nat type scoreTopK emits on the normal
-    // path — the empty-store probe must not fork the schema by store
-    // state (a union of probes across stores would break on it)
-    hits.schema("score").dataType shouldBe
-      org.apache.spark.sql.types.LongType
+    // the empty-store probe must not fork the schema by store state (a
+    // union of probes across stores would break on it): names, types
+    // and nullability equal a non-empty store's probe, on either path
+    val full = tempDir("bm25-full-") + "/idx"
+    Search.writeIndexSegment(Seq((0L, "alpha beta"), (1L, "beta")).toDF(
+      "doc_id", "text"), "doc_id", "text", full, buckets = 4)
+    for (path <- Seq[(=> DataFrame) => DataFrame](onSpark(_), onDriver(_))) {
+      val nonEmpty = path(Search.bm25TopKSegmented(spark, full, q, "doc_id",
+        "text", k = 3))
+      nonEmpty.count() shouldBe 1L
+      hits.schema shouldBe nonEmpty.schema
+    }
     hits.count() shouldBe 0L
+    graft.core.CacheScope.releaseAll()
   }
 
   test("maxDf ceiling: stopword terms contribute nothing, kept-term scores bit-identical, 0 = exact") {

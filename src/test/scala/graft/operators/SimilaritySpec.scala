@@ -305,9 +305,9 @@ class SimilaritySpec extends SparkSpec with graft.TempDirs
       .sortBy(t => (t._1, t._3))
     val store = tempDir("ivf-store-") + "/idx"
     Similarity.writeIvfAssignments(corpus, "vec_id", "embedding", cents, store)
-    val (stored, ran) = executed(
+    val (stored, ran) = executed(onSpark(
       Similarity.ivfTopKFromStore(spark, store, queries,
-        "vec_id", "embedding", k = 5, centroids = cents, nprobe = 2))
+        "vec_id", "embedding", k = 5, centroids = cents, nprobe = 2)))
     stored.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
       .sortBy(t => (t._1, t._3)) shouldBe direct
     // the probed-list union reaches the file index as a partition filter
@@ -315,6 +315,14 @@ class SimilaritySpec extends SparkSpec with graft.TempDirs
     val plan = ran.planString
     plan should include("PartitionFilters")
     plan should include regex "list#\\d+ IN \\("
+    // under the driver budget: the same answer and schema, no Spark job
+    val (local, drv) = executed(onDriver(
+      Similarity.ivfTopKFromStore(spark, store, queries,
+        "vec_id", "embedding", k = 5, centroids = cents, nprobe = 2)))
+    drv.jobs shouldBe 0
+    local.schema shouldBe stored.schema
+    local.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
+      .sortBy(t => (t._1, t._3)) shouldBe direct
   }
 
   test("ivfPqTopKFromStore: bit-identical to ivfPqTopK, compressed store pruned") {
@@ -339,10 +347,10 @@ class SimilaritySpec extends SparkSpec with graft.TempDirs
     // is IN the store, not just in flight
     val storedSchema = spark.read.parquet(store).schema.fieldNames.toSet
     storedSchema shouldBe Set("id", "codes", "list")
-    val (stored, ran) = executed(
+    val (stored, ran) = executed(onSpark(
       Similarity.ivfPqTopKFromStore(spark, store, queries,
         "vec_id", "embedding", k = 5, centroids = cents, nprobe = 2,
-        codebook = cb, m = 2, numCodes = 4, dsub = 4))
+        codebook = cb, m = 2, numCodes = 4, dsub = 4)))
     stored.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
       .sortBy(t => (t._1, t._3)) shouldBe direct
     // probed-list pruning reaches the file index, like the raw store
@@ -366,9 +374,9 @@ class SimilaritySpec extends SparkSpec with graft.TempDirs
       "vec_id", "embedding", k = 5, planes = 4, dim = 8)) shouldBe
       rows(Similarity.lshTopK(corpus, queries,
         "vec_id", "embedding", k = 5, planes = 4, dim = 8))
-    val (stored, ran) = executed(
+    val (stored, ran) = executed(onSpark(
       Similarity.lshTopKFromStore(spark, store, queries,
-        "vec_id", "embedding", k = 5, planes = 4, dim = 8, probes = 3))
+        "vec_id", "embedding", k = 5, planes = 4, dim = 8, probes = 3)))
     rows(stored) shouldBe
       rows(Similarity.lshTopK(corpus, queries,
         "vec_id", "embedding", k = 5, planes = 4, dim = 8, probes = 3))
@@ -490,10 +498,10 @@ class SimilaritySpec extends SparkSpec with graft.TempDirs
     val store = tempDir("ivfsq-store-") + "/idx"
     Similarity.writeIvfSqCodes(corpus, "vec_id", "embedding", cents,
       store, mins, maxs)
-    val (stored, ran) = executed(
+    val (stored, ran) = executed(onSpark(
       Similarity.ivfSqTopKFromStore(spark, store, queries,
         "vec_id", "embedding", k = 5, centroids = cents, nprobe = 2,
-        mins = mins, maxs = maxs))
+        mins = mins, maxs = maxs)))
     rows(stored) shouldBe
       rows(Similarity.ivfSqTopK(corpus, queries, "vec_id", "embedding",
         k = 5, centroids = cents, nprobe = 2, mins = mins, maxs = maxs))
@@ -646,10 +654,10 @@ class SimilaritySpec extends SparkSpec with graft.TempDirs
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("query_id", "neighbor_id", "rank", "dist")
         .as[(Long, Long, Long, Double)].collect().sortBy(t => (t._1, t._3))
-    val (stored, ran) = executed(
+    val (stored, ran) = executed(onSpark(
       Similarity.ivfPqRerankTopKFromStores(spark, pqStore,
         rawStore, queries, "vec_id", "embedding", k = 3, centroids = cents,
-        nprobe = 2, codebook = cb, m = 2, numCodes = 4, dsub = 4, factor = 3))
+        nprobe = 2, codebook = cb, m = 2, numCodes = 4, dsub = 4, factor = 3)))
     rows(stored) shouldBe
       rows(Similarity.ivfPqRerankTopK(corpus, queries, "vec_id",
         "embedding", k = 3, centroids = cents, nprobe = 2, codebook = cb,
@@ -684,10 +692,10 @@ class SimilaritySpec extends SparkSpec with graft.TempDirs
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("query_id", "neighbor_id", "rank", "dist")
         .as[(Long, Long, Long, Double)].collect().sortBy(t => (t._1, t._3))
-    val (stored, ran) = executed(
+    val (stored, ran) = executed(onSpark(
       Similarity.ivfSqRerankTopKFromStores(spark, sqStore,
         rawStore, queries, "vec_id", "embedding", k = 3, centroids = cents,
-        nprobe = 2, mins = mins, maxs = maxs, factor = 3))
+        nprobe = 2, mins = mins, maxs = maxs, factor = 3)))
     rows(stored) shouldBe
       rows(Similarity.ivfSqRerankTopK(corpus, queries, "vec_id",
         "embedding", k = 3, centroids = cents, nprobe = 2,
@@ -697,6 +705,15 @@ class SimilaritySpec extends SparkSpec with graft.TempDirs
     val plan = ran.planString
     "list#\\d+ IN \\(".r.findAllIn(plan).length should be >= 2
     ran.scans should have size 2
+    // under the driver budget both stages score on the driver: the same
+    // answer and schema, no Spark job
+    val (local, drv) = executed(onDriver(
+      Similarity.ivfSqRerankTopKFromStores(spark, sqStore,
+        rawStore, queries, "vec_id", "embedding", k = 3, centroids = cents,
+        nprobe = 2, mins = mins, maxs = maxs, factor = 3)))
+    drv.jobs shouldBe 0
+    local.schema shouldBe stored.schema
+    rows(local) shouldBe rows(stored)
     // a factor big enough to shortlist EVERY probed-list member makes
     // the refine output the exact L2² ranking restricted to probed
     // lists — driver-replayed (probe assignment = max-cosine argmin,
@@ -827,9 +844,9 @@ class SimilaritySpec extends SparkSpec with graft.TempDirs
     val store = tempDir("ivfbinary-store-") + "/idx"
     Similarity.writeIvfBinary(corpus, "vec_id", "embedding", cents,
       store, dim = 8)
-    val (stored, ran) = executed(
+    val (stored, ran) = executed(onSpark(
       Similarity.ivfBinaryTopKFromStore(spark, store, queries,
-        "vec_id", "embedding", k = 5, centroids = cents, nprobe = 2, dim = 8))
+        "vec_id", "embedding", k = 5, centroids = cents, nprobe = 2, dim = 8)))
     rows(stored) shouldBe mem
     // the store scan carries a probed-list partition filter
     ran.planString should include regex
@@ -863,9 +880,9 @@ class SimilaritySpec extends SparkSpec with graft.TempDirs
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("query_id", "neighbor_id", "rank", "dist")
         .as[(Long, Long, Long, Double)].collect().sortBy(t => (t._1, t._3))
-    val (stored, ran) = executed(Similarity.ivfBinaryRerankTopKFromStores(spark,
+    val (stored, ran) = executed(onSpark(Similarity.ivfBinaryRerankTopKFromStores(spark,
       binStore, rawStore, queries, "vec_id", "embedding", k = 3,
-      centroids = cents, nprobe = 2, dim = 8, factor = 3))
+      centroids = cents, nprobe = 2, dim = 8, factor = 3)))
     // the persisted pair must equal the in-flight composition: Hamming
     // shortlist at k·factor over the same probe set, exact refine over
     // the raw corpus

@@ -3,6 +3,7 @@ package graft.operators
 import graft.SparkSpec
 import graft.core.StoreScan
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.functions._
 
 /** The store probe read path ([[graft.core.StoreScan]]), one store kind
@@ -16,7 +17,11 @@ import org.apache.spark.sql.functions._
   *      read from the plans the probe executed (it answers when called);
   *      a vector probe runs one map-only job per store scan (no exchange,
   *      broadcast or window) and bm25 one sum shuffle and no window;
-  *  (d) probed ids with no directory answer the typed empty result.
+  *  (d) probed ids with no directory answer the typed empty result;
+  *  (e) under the driver byte budget the same probe runs no Spark job,
+  *      answers the Spark path's rows with its schema, and decodes
+  *      exactly the data files of the probed directories, once each.
+  * (a)–(d) pin the Spark path, forced with [[onSpark]].
   */
 class StoreProbeReadSpec extends SparkSpec with graft.TempDirs
     with graft.ExecutedPlans {
@@ -80,15 +85,49 @@ class StoreProbeReadSpec extends SparkSpec with graft.TempDirs
     }.toString).sorted.toSeq
 
   /** (a) for the read itself: rows and schema equal Spark's own read of
-    * the root under the same partition filter.
+    * the root under the same partition filter, and the driver decode of
+    * the listed files equals the scan.
     */
   private def sameAsSparkRead(root: String, partCol: String,
       ids: Seq[Any], levels: (String, Seq[Any])*): Unit = {
-    val ours = StoreScan.read(spark, root, levels: _*)
+    val scan = StoreScan.scan(spark, root, levels: _*)
+    val ours = scan.frame
     val theirs = spark.read.parquet(root)
     ours.schema shouldBe theirs.schema
     sorted(ours.filter(col(partCol).isInCollection(ids)).collect()) shouldBe
       sorted(theirs.filter(col(partCol).isInCollection(ids)).collect())
+    val toRow = CatalystTypeConverters.createToScalaConverter(ours.schema)
+    sorted(scan.decode().map(r => toRow(r).asInstanceOf[Row]).toArray) shouldBe
+      sorted(ours.collect())
+  }
+
+  private def canonical(p: org.apache.hadoop.fs.Path): String =
+    new java.io.File(p.toUri).getCanonicalPath
+
+  /** The data files directly in each directory of `dirs` that exists. */
+  private def dataFilesIn(dirs: Seq[String]): Set[String] =
+    dirs.map(new java.io.File(_)).filter(_.isDirectory)
+      .flatMap(_.listFiles().filter(f => f.isFile &&
+        !f.getName.startsWith(".") && !f.getName.startsWith("_")))
+      .map(_.getCanonicalPath).toSet
+
+  /** (e): `probe` under the driver budget runs no Spark job, answers the
+    * rows and schema it answers on the Spark path, and decodes, under
+    * the store `roots`, exactly the data files of the probed `dirs`,
+    * each once (other decoded files are `_meta` sidecars).
+    */
+  private def drivenAsInSpark(roots: Seq[String], dirs: Seq[String])(
+      probe: => DataFrame): Unit = {
+    val inSpark = onSpark(probe)
+    val ((out, files), ran) = executed(onDriver(StoreScan.decodedFiles(probe)))
+    ran.jobs shouldBe 0
+    out.schema shouldBe inSpark.schema
+    sorted(out.collect()) shouldBe sorted(inSpark.collect())
+    val under = files.map(canonical).filterNot(_.contains("/_meta/"))
+    under.foreach(f => roots.exists(r =>
+      f.startsWith(new java.io.File(r).getCanonicalPath + "/")) shouldBe true)
+    under.toSet shouldBe dataFilesIn(dirs)
+    under.size shouldBe under.distinct.size
   }
 
   private def bucketsOf(text: DataFrame, buckets: Int): Seq[Long] =
@@ -109,10 +148,10 @@ class StoreProbeReadSpec extends SparkSpec with graft.TempDirs
     val queries = docs.filter($"doc_id" < 3)
     val probed = bucketsOf(queries, 64)
     probed.size should be > 32
-    val ((got, ran), bare) = unattributedJobs(executed {
+    val ((got, ran), bare) = unattributedJobs(executed(onSpark {
       rows(Search.bm25TopKFromStore(spark, store, queries, "doc_id",
         "text", k = 5))
-    })
+    }))
     bare shouldBe 0
     got shouldBe rows(Search.bm25TopK(docs, queries, "doc_id", "text", 5))
     val roots = ran.scanRoots.filter(_.toString.contains("/postings"))
@@ -125,6 +164,9 @@ class StoreProbeReadSpec extends SparkSpec with graft.TempDirs
     ran.jobs shouldBe 2
     sameAsSparkRead(s"$store/postings", "bucket", probed,
       "bucket" -> probed)
+    drivenAsInSpark(Seq(store), probed.map(b => s"$store/postings/bucket=$b")) {
+      Search.bm25TopKFromStore(spark, store, queries, "doc_id", "text", k = 5)
+    }
   }
 
   test("segmented bm25, 2 segments: live segments × probed buckets only") {
@@ -137,10 +179,10 @@ class StoreProbeReadSpec extends SparkSpec with graft.TempDirs
     val segs = spark.read.parquet(s"$store/_meta").as[(String, Long, Long, Int)]
       .collect().map(_._1).toSeq
     segs should have size 2
-    val ((got, ran), bare) = unattributedJobs(executed {
+    val ((got, ran), bare) = unattributedJobs(executed(onSpark {
       rows(Search.bm25TopKSegmented(spark, store, queries, "doc_id",
         "text", k = 5))
-    })
+    }))
     bare shouldBe 0
     got shouldBe rows(Search.bm25TopK(docs, queries, "doc_id", "text", 5))
     ran.count("Window") shouldBe 0
@@ -153,6 +195,10 @@ class StoreProbeReadSpec extends SparkSpec with graft.TempDirs
     }
     sameAsSparkRead(s"$store/postings", "bucket", probed,
       "segment" -> segs, "bucket" -> probed)
+    drivenAsInSpark(Seq(store), for (sg <- segs; b <- probed)
+        yield s"$store/postings/segment=$sg/bucket=$b") {
+      Search.bm25TopKSegmented(spark, store, queries, "doc_id", "text", k = 5)
+    }
     graft.core.CacheScope.releaseAll()
   }
 
@@ -164,19 +210,22 @@ class StoreProbeReadSpec extends SparkSpec with graft.TempDirs
     val unseen = Iterator.from(0).map(i => s"zz$i")
       .find(t => !present(math.floorMod(MurmurFree.md5Long60(t), 64L))).get
     val q = Seq((9L, unseen)).toDF("doc_id", "text")
-    val (out, bare) = unattributedJobs {
+    val (out, bare) = unattributedJobs(onSpark {
       val o = Search.bm25TopKFromStore(spark, store, q, "doc_id", "text", 5)
       o.collect() shouldBe empty
       o
-    }
+    })
     bare shouldBe 0
     out.schema shouldBe Search.bm25TopKFromStore(spark, store,
       tiny.filter($"doc_id" === 1L), "doc_id", "text", 5).schema
+    drivenAsInSpark(Seq(store), Seq(s"$store/postings/bucket=64")) {
+      Search.bm25TopKFromStore(spark, store, q, "doc_id", "text", 5)
+    }
     // the read itself: empty, with the full store schema
     val absent = Seq[Any](64L)
-    StoreScan.read(spark, s"$store/postings", "bucket" -> absent).schema shouldBe
+    StoreScan.scan(spark, s"$store/postings", "bucket" -> absent).frame.schema shouldBe
       spark.read.parquet(s"$store/postings").schema
-    StoreScan.read(spark, s"$store/postings", "bucket" -> absent).count() shouldBe 0L
+    StoreScan.scan(spark, s"$store/postings", "bucket" -> absent).frame.count() shouldBe 0L
   }
 
   test("IVF-SQ8 + raw refine, 64 lists: both scans read probed lists only") {
@@ -190,11 +239,11 @@ class StoreProbeReadSpec extends SparkSpec with graft.TempDirs
     new java.io.File(rawStore).list().count(_.startsWith("list=")) should be > 32
     val probed = vq.select(Coarse.Ivf(cents, 3).probe($"embedding").as("l"))
       .distinct().as[Int].collect().sorted.toSeq
-    val ((got, ran), bare) = unattributedJobs(executed {
+    val ((got, ran), bare) = unattributedJobs(executed(onSpark {
       rows(Similarity.ivfSqRerankTopKFromStores(spark, sqStore, rawStore,
         vq, "vec_id", "embedding", k = 5, cents, nprobe = 3, mins, maxs,
         factor = 2))
-    })
+    }))
     bare shouldBe 0
     got shouldBe rows(Similarity.ivfSqRerankTopK(vecs, vq, "vec_id",
       "embedding", k = 5, cents, nprobe = 3, mins, maxs, factor = 2))
@@ -205,6 +254,12 @@ class StoreProbeReadSpec extends SparkSpec with graft.TempDirs
     roots.map(_.getParent.getParent.getName).toSet.size shouldBe 2 // both stores
     sameAsSparkRead(sqStore, "list", probed, "list" -> probed)
     sameAsSparkRead(rawStore, "list", probed, "list" -> probed)
+    drivenAsInSpark(Seq(sqStore, rawStore), for (st <- Seq(sqStore, rawStore);
+        l <- probed) yield s"$st/list=$l") {
+      Similarity.ivfSqRerankTopKFromStores(spark, sqStore, rawStore, vq,
+        "vec_id", "embedding", k = 5, cents, nprobe = 3, mins, maxs,
+        factor = 2)
+    }
   }
 
   test("IVF probe whose lists have no directory: the typed empty answer") {
@@ -220,18 +275,22 @@ class StoreProbeReadSpec extends SparkSpec with graft.TempDirs
     Similarity.writeIvfAssignments(near, "vec_id", "embedding", axes, store)
     new java.io.File(s"$store/list=3").exists() shouldBe false
     val q = Seq((900L, axes(3).map(_.toFloat))).toDF("vec_id", "embedding")
-    val (out, bare) = unattributedJobs {
+    val (out, bare) = unattributedJobs(onSpark {
       val o = Similarity.ivfTopKFromStore(spark, store, q, "vec_id",
         "embedding", k = 5, centroids = axes, nprobe = 1)
       o.collect() shouldBe empty
       o
-    }
+    })
     bare shouldBe 0
     out.schema shouldBe Similarity.ivfTopKFromStore(spark, store,
       near.filter($"vec_id" < 2), "vec_id", "embedding", k = 5,
       centroids = axes, nprobe = 1).schema
-    StoreScan.read(spark, store, "list" -> Seq(3)).schema shouldBe
+    StoreScan.scan(spark, store, "list" -> Seq(3)).frame.schema shouldBe
       spark.read.parquet(store).schema
+    drivenAsInSpark(Seq(store), Seq(s"$store/list=3")) {
+      Similarity.ivfTopKFromStore(spark, store, q, "vec_id", "embedding",
+        k = 5, centroids = axes, nprobe = 1)
+    }
   }
 
   test("LSH store: probed bucket directories only, answers ≡ in-memory") {
@@ -241,10 +300,10 @@ class StoreProbeReadSpec extends SparkSpec with graft.TempDirs
     val lsh = Coarse.Lsh(6, 8, 2)
     val probed = vq.select(lsh.probe($"embedding").as("b")).distinct()
       .as[Long].collect().sorted.toSeq
-    val ((got, ran), bare) = unattributedJobs(executed {
+    val ((got, ran), bare) = unattributedJobs(executed(onSpark {
       rows(Similarity.lshTopKFromStore(spark, store, vq, "vec_id",
         "embedding", k = 5, planes = 6, dim = 8, probes = 2))
-    })
+    }))
     bare shouldBe 0
     got shouldBe rows(Similarity.lshTopK(vecs, vq, "vec_id", "embedding",
       k = 5, planes = 6, dim = 8, probes = 2))
@@ -252,30 +311,42 @@ class StoreProbeReadSpec extends SparkSpec with graft.TempDirs
     ran.scanRoots.map(_.getName).toSet shouldBe
       probed.map(b => s"bucket=$b").toSet
     sameAsSparkRead(store, "bucket", probed, "bucket" -> probed)
+    drivenAsInSpark(Seq(store), probed.map(b => s"$store/bucket=$b")) {
+      Similarity.lshTopKFromStore(spark, store, vq, "vec_id", "embedding",
+        k = 5, planes = 6, dim = 8, probes = 2)
+    }
   }
 
   test("flat SQ8 store: one root, no listing or schema job") {
     val (mins, maxs) = Similarity.trainSqParams(vecs, "embedding", 8)
     val store = tempDir("probe-sq-") + "/idx"
     Similarity.writeSqCodes(vecs, "vec_id", "embedding", store, mins, maxs)
-    val ((got, ran), bare) = unattributedJobs(executed {
+    val ((got, ran), bare) = unattributedJobs(executed(onSpark {
       rows(Similarity.sqTopKFromStore(spark, store, vq, "vec_id",
         "embedding", k = 5, mins, maxs))
-    })
+    }))
     bare shouldBe 0
     got shouldBe rows(Similarity.sqTopK(vecs, vq, "vec_id", "embedding",
       k = 5, mins, maxs))
     mapOnly(ran, storeScans = 1)
     ran.scanRoots.map(_.getName) shouldBe Seq("idx")
-    val ours = StoreScan.read(spark, store)
+    val ours = StoreScan.scan(spark, store).frame
     ours.schema shouldBe spark.read.parquet(store).schema
     sorted(ours.collect()) shouldBe sorted(spark.read.parquet(store).collect())
+    def probe() = Similarity.sqTopKFromStore(spark, store, vq, "vec_id",
+      "embedding", k = 5, mins, maxs)
+    drivenAsInSpark(Seq(store), Seq(store))(probe())
+    // the budget is inclusive: probed bytes equal to it score on the
+    // driver, one byte over runs the Spark job
+    val bytes = StoreScan.scan(spark, store).bytes
+    executed(StoreProbe.withDriverByteBudget(bytes)(probe()))._2.jobs shouldBe 0
+    executed(StoreProbe.withDriverByteBudget(bytes - 1)(probe()))._2.jobs shouldBe 1
   }
 
   test("a store with no data file fails as Spark's own read does") {
     val empty = tempDir("probe-nodata-")
     val e1 = intercept[Exception](spark.read.parquet(empty).schema)
-    val e2 = intercept[Exception](StoreScan.read(spark, empty).schema)
+    val e2 = intercept[Exception](StoreScan.scan(spark, empty).frame.schema)
     e2.getClass shouldBe e1.getClass
   }
 }
