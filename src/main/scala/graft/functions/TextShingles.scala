@@ -15,12 +15,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * Drop-in equivalent of the Column formulation
   * `when(size(t) >= n, array_distinct(transform(sequence(0, size(t)-n),
   * i => array_join(slice(t, i+1, n), " ")))).otherwise(array())` with
-  * `t = split(lower(trim(text)), "\\s+")` — same tokens (UTF8String
-  * trim/toLowerCase, Java regex split), same first-occurrence distinct
-  * order, same null contract (null text → EMPTY array, because the HOF's
-  * `when` falls through to `otherwise` on null). The HOF version is
-  * interpreted per shingle (a boxed lambda dispatch per slice, plus an
-  * O(k²) array_distinct); this runs one static call per row inside
+  * `t = split(lower(trim(text)), "\\s+")` — same tokens (Spark's
+  * trim/lower via [[SparkLower]], Java regex split), same
+  * first-occurrence distinct order, same null contract (null text →
+  * EMPTY array, because the HOF's `when` falls through to `otherwise`
+  * on null). The HOF version is interpreted per shingle (a boxed
+  * lambda dispatch per slice, plus an O(k²) array_distinct); this
+  * runs one static call per row inside
   * whole-stage codegen and was the dominant cost of every shingling
   * pipeline at bench scale.
   */
@@ -149,9 +150,9 @@ object TextShingles {
   private val Empty = new GenericArrayData(Array.empty[Any])
 
   private def tokensOf(text: UTF8String): Array[String] =
-    // UTF8String.trim/toLowerCase are exactly what Spark's trim()/lower()
-    // expressions call, so tokens match the Column formulation bit-for-bit
-    text.trim().toLowerCase.toString.split("\\s+")
+    // Spark's own trim()/lower() case mapping, so tokens match the Column
+    // formulation bit-for-bit
+    SparkLower.lowerTrimmed(text).split("\\s+")
 
   private def gram(toks: Array[String], i: Int, n: Int,
       sb: java.lang.StringBuilder): String = {

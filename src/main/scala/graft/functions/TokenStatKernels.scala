@@ -3,7 +3,8 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftExpressionBridge
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression,
+  GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -25,8 +26,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * 10× leg from aggregation/spill pressure).
   *
   * Exactness contract (oracle rows stay hash-identical):
-  *  - tokenizer = `UTF8String.trim().toLowerCase.toString.split("\\s+")`
-  *    with empty tokens dropped — byte-for-byte the Column formulation
+  *  - tokenizer = `SparkLower.lowerTrimmed(text).split("\\s+")` (Spark's
+  *    own `lower(trim(text))`) with empty tokens dropped — byte-for-byte the Column formulation
   *    `filter(split(lower(trim(text)), "\\s+"), t => t <> '')`;
   *  - counts group by the exact token/gram STRING (word stats) or by
   *    `xxhash64` of the gram bytes (n-gram stats) — the same keys the
@@ -70,7 +71,7 @@ object TokenStatKernels {
     * non-space whitespace — drop it, matching the `t <> ''` filters).
     */
   private def nonEmptyTokens(text: UTF8String): Array[String] = {
-    val toks = text.trim().toLowerCase.toString.split("\\s+")
+    val toks = SparkLower.lowerTrimmed(text).split("\\s+")
     if (toks.length > 0 && toks(0).isEmpty) java.util.Arrays.copyOfRange(toks, 1, toks.length)
     else toks
   }
@@ -84,16 +85,59 @@ object TokenStatKernels {
 
   // ------------------------------------------------------- word stats
 
-  /** [[WordRepetitionStats]] row kernel. Null `text` or a tokenless
-    * document returns the all-null row (the replaced aggregation had no
-    * row for those documents — callers filter on `n_words IS NOT NULL`
-    * where the old plan dropped them).
+  /** [[WordRepetitionStats]] row kernel, one pass over `lowered` =
+    * Spark's `lower(trim(text))` (the caller evaluates it, so the case
+    * mapping is Spark's) plus one byte scan of the raw `text`.
+    *
+    * The word fields count the tokens — the maximal runs of
+    * non-whitespace in `lowered`, exactly the non-empty pieces of
+    * `split(lowered, "\\s+")`. A tokenless document gets null word
+    * fields (the replaced aggregation had no row for it — callers filter
+    * on `n_words IS NOT NULL` where the old plan dropped it).
+    *
+    * The Gopher gate's other three signals come from the same pass:
+    * `n_pieces` = `size(split(lowered, "\\s+"))` (split keeps empty
+    * pieces, so one more than the number of whitespace runs, and 1 for
+    * ""); `n_nonspace` = `length(regexp_replace(lowered, "\\s+", ""))`;
+    * `n_punct` = the ASCII `\p{Punct}` characters of `text` and
+    * `n_chars` = `length(text)`. Null `lowered` (null text) returns the
+    * all-null row.
     */
-  def wordStats(text: UTF8String): InternalRow = {
-    if (text == null) return WordNullRow
-    val toks = nonEmptyTokens(text)
+  def wordStats(lowered: UTF8String, text: UTF8String): InternalRow = {
+    if (lowered == null) return WordNullRow
+    val s = lowered.toString
+    val toks = new java.util.ArrayList[String]()
+    var runs = 0L
+    var spaces = 0L
+    var start = -1
+    var i = 0
+    while (i < s.length) {
+      // whitespace is ASCII, so no surrogate half ever matches
+      if (isJavaSpace(s.charAt(i))) {
+        if (start >= 0) { toks.add(s.substring(start, i)); start = -1 }
+        if (i == 0 || !isJavaSpace(s.charAt(i - 1))) runs += 1
+        spaces += 1
+      } else if (start < 0) start = i
+      i += 1
+    }
+    if (start >= 0) toks.add(s.substring(start))
+    val out = new Array[Any](10)
+    if (!toks.isEmpty) wordFields(toks.toArray(new Array[String](0)), out)
+    out(6) = runs + 1
+    out(7) = lowered.numChars.toLong - spaces
+    if (text != null) {
+      out(8) = asciiPunct(text)
+      out(9) = text.numChars.toLong
+    }
+    new GenericInternalRow(out)
+  }
+
+  /** n_words, n_distinct, max word count, entropy sum, bigram total and
+    * max bigram count (both null below 2 tokens) of `toks` into
+    * `out(0..5)`.
+    */
+  private def wordFields(toks: Array[String], out: Array[Any]): Unit = {
     val m = toks.length
-    if (m == 0) return WordNullRow
     val counts = new java.util.HashMap[String, Long](m * 2)
     var i = 0
     while (i < m) {
@@ -108,8 +152,6 @@ object TokenStatKernels {
       if (c > maxWc) maxWc = c
       entS += entTerm(c)
     }
-    var nBigrams: Any = null
-    var maxBc: Any = null
     if (m >= 2) {
       val bg = new java.util.HashMap[String, Long](m * 2)
       val sb = new java.lang.StringBuilder(64)
@@ -123,15 +165,32 @@ object TokenStatKernels {
       var mb = 0L
       val bit = bg.values().iterator()
       while (bit.hasNext) { val c = bit.next(); if (c > mb) mb = c }
-      nBigrams = (m - 1).toLong
-      maxBc = mb
+      out(4) = (m - 1).toLong
+      out(5) = mb
     }
-    new GenericInternalRow(Array[Any](m.toLong, counts.size.toLong, maxWc,
-      entS, nBigrams, maxBc))
+    out(0) = m.toLong
+    out(1) = counts.size.toLong
+    out(2) = maxWc
+    out(3) = entS
   }
 
-  private val WordNullRow =
-    new GenericInternalRow(Array[Any](null, null, null, null, null, null))
+  /** Characters of `text` in Java regex's ASCII `\p{Punct}` class. Every
+    * byte of a multi-byte UTF-8 character is ≥ 0x80, so a byte scan
+    * counts exactly the ASCII ones.
+    */
+  private def asciiPunct(text: UTF8String): Long = {
+    var n = 0L
+    var i = 0
+    while (i < text.numBytes) {
+      val b = text.getByte(i)
+      if ((b >= 0x21 && b <= 0x2f) || (b >= 0x3a && b <= 0x40) ||
+        (b >= 0x5b && b <= 0x60) || (b >= 0x7b && b <= 0x7e)) n += 1
+      i += 1
+    }
+    n
+  }
+
+  private val WordNullRow = new GenericInternalRow(new Array[Any](10))
 
   // ---------------------------------------------------- n-gram stats
 
@@ -173,7 +232,7 @@ object TokenStatKernels {
     */
   def ngramStats(text: UTF8String): InternalRow = {
     if (text == null) return NgramNullRow
-    val lowered = text.trim().toLowerCase.toString
+    val lowered = SparkLower.lowerTrimmed(text)
     val toks0 = lowered.split("\\s+")
     val off = if (toks0.length > 0 && toks0(0).isEmpty) 1 else 0
     val m = toks0.length - off
@@ -430,46 +489,59 @@ object OptimizerBarrier {
       OptimizerBarrier(GraftExpressionBridge.expression(c)))
 }
 
-/** Per-document word/bigram repetition + entropy statistics as ONE
+/** Per-document word/bigram repetition + entropy statistics and the
+  * Gopher gate's token-count, mean-length and punctuation inputs as ONE
   * codegen'd struct: n_words, n_distinct, max word count, the entropy
   * micro-nat numerator sum Σ floor(c·ln c·1e6 + 0.5), bigram total and
-  * max bigram count (null for sub-2-token docs). Tokenless documents
-  * yield all-null fields. Replaces two explode → groupBy(id, token) →
-  * groupBy(id) chains and their join — see [[TokenStatKernels]].
+  * max bigram count (null for sub-2-token docs), then n_pieces,
+  * n_nonspace, n_punct and n_chars (see [[TokenStatKernels.wordStats]]).
+  * Tokenless documents yield null word fields. `lowered` is Spark's
+  * `lower(trim(text))`, `text` the raw text. Replaces two explode →
+  * groupBy(id, token) → groupBy(id) chains and their join, and the
+  * gate's two regex splits and two `regexp_replace` passes — see
+  * [[TokenStatKernels]].
   */
-case class WordRepetitionStats(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_words", LongType),
-    StructField("n_distinct", LongType),
-    StructField("max_wc", LongType),
-    StructField("ent_s", LongType),
-    StructField("n_bigrams", LongType),
-    StructField("max_bc", LongType)))
+case class WordRepetitionStats(lowered: Expression, text: Expression)
+    extends BinaryExpression {
+  override def left: Expression = lowered
+  override def right: Expression = text
+  override def dataType: DataType = StructType(
+    Seq("n_words", "n_distinct", "max_wc", "ent_s", "n_bigrams", "max_bc",
+      "n_pieces", "n_nonspace", "n_punct", "n_chars")
+      .map(StructField(_, LongType)))
   override def nullable: Boolean = false
 
   override def eval(input: InternalRow): Any =
-    TokenStatKernels.wordStats(child.eval(input).asInstanceOf[UTF8String])
+    TokenStatKernels.wordStats(lowered.eval(input).asInstanceOf[UTF8String],
+      text.eval(input).asInstanceOf[UTF8String])
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val childGen = child.genCode(ctx)
+    val l = lowered.genCode(ctx)
+    val t = text.genCode(ctx)
     val cls = TokenStatKernels.getClass.getName.stripSuffix("$") + "$.MODULE$"
     ev.copy(
       code = code"""
-        ${childGen.code}
+        ${l.code}
+        ${t.code}
         org.apache.spark.sql.catalyst.InternalRow ${ev.value} =
-          $cls.wordStats(${childGen.isNull} ? null : ${childGen.value});
+          $cls.wordStats(${l.isNull} ? null : ${l.value},
+            ${t.isNull} ? null : ${t.value});
       """,
       isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
   }
 
-  override protected def withNewChildInternal(
-      newChild: Expression): WordRepetitionStats = copy(child = newChild)
+  override protected def withNewChildrenInternal(newLeft: Expression,
+      newRight: Expression): WordRepetitionStats =
+    copy(lowered = newLeft, text = newRight)
 }
 
 object WordRepetitionStats {
+  /** The stats of `text`, fed Spark's own `lower(trim(text))`. */
   def apply(text: Column): Column =
-    GraftExpressionBridge.column(
-      WordRepetitionStats(GraftExpressionBridge.expression(text)))
+    GraftExpressionBridge.column(WordRepetitionStats(
+      GraftExpressionBridge.expression(
+        org.apache.spark.sql.functions.lower(org.apache.spark.sql.functions.trim(text))),
+      GraftExpressionBridge.expression(text)))
 }
 
 /** Per-document Gopher n-gram repetition fractions as ONE codegen'd

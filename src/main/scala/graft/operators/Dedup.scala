@@ -423,19 +423,156 @@ object Dedup {
     minhashPairSet(df, idCol, textCol, shingleN, bands, rowsPerBand,
       threshold, maxBandDf).pairs
 
+  /** The verified pairs of [[minhashNearDupPairs]], on one of two paths.
+    *
+    * DRIVER path, for a batch whose shingles fit [[nearDupDriverBytes]]:
+    * one map-only gather ([[gatherBands]]) brings every (id, shingles,
+    * band keys) row to the driver, which pairs the rows that share a band
+    * key, verifies exact Jaccard and returns the pairs as a local
+    * relation, with the candidate count as the [[PairSet]] bound and the
+    * rows themselves for the cluster tail. One Spark job in all: no
+    * guard count, no band-key join, no verify joins.
+    *
+    * DISTRIBUTED path otherwise — a task past its share of the budget,
+    * more candidates than `driverMaxPairs`, `driverMaxPairs = 0` (how
+    * ScaleFallbackSpec forces the 100 TB plans), or an id type with no
+    * driver ordering: the band-key self-join and the exact-Jaccard verify
+    * joins, the plans the driver path reproduces row for row.
+    */
   private def minhashPairSet(df: DataFrame, idCol: String, textCol: String,
       shingleN: Int, bands: Int, rowsPerBand: Int, threshold: Double,
       maxBandDf: Int): PairSet = {
-    val sh = CacheScope.persist(shingleTable(df, idCol, textCol, shingleN))
-      // reused by the band explode and both verify joins
-    val banded = CacheScope.persist(capHotKeys(
-      bandKeysFromShingles(sh, bands, rowsPerBand), "bk", maxBandDf))
-      // self-joined below: without this the k hashes run twice
-    val cands = banded.as("x")
-      .join(banded.as("y"), col("x.bk") === col("y.bk") && col("x.id") < col("y.id"))
-      .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
-      .distinct()
-    verifyJaccard(cands, sh, threshold)
+    val table = shingleTable(df, idCol, textCol, shingleN)
+    val maxPairs = defaultDriverMaxPairs
+    val onDriver = for {
+      ord <- driverOrdering(table.schema("id").dataType)
+      if maxPairs > 0
+      rows <- gatherBands(table, bands, rowsPerBand)
+      pairs <- driverPairSet(table, rows, ord, threshold, maxBandDf, maxPairs)
+    } yield pairs
+    onDriver.getOrElse {
+      val sh = CacheScope.persist(table)
+        // reused by the band explode and both verify joins
+      val banded = CacheScope.persist(capHotKeys(
+        bandKeysFromShingles(sh, bands, rowsPerBand), "bk", maxBandDf))
+        // self-joined below: without this the k hashes run twice
+      val cands = banded.as("x")
+        .join(banded.as("y"), col("x.bk") === col("y.bk") && col("x.id") < col("y.id"))
+        .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
+        .distinct()
+      verifyJaccard(cands, sh, threshold)
+    }
+  }
+
+  /** Every (id, sh, bk) row of a shingle table on the driver, or None
+    * when the table is too big for it. ONE Dataset action: each of the P
+    * tasks returns its rows while their size stays within
+    * [[nearDupDriverBytes]] / P, and one overflow marker (a null `sh`;
+    * a shingle table has none) once it passes that. The action scans the
+    * table's input, so a persisted input is filled here, as the guard
+    * count filled it on the distributed path.
+    */
+  private def gatherBands(table: DataFrame, bands: Int,
+      rowsPerBand: Int): Option[Array[org.apache.spark.sql.Row]] = {
+    val budget = nearDupDriverBytes
+    if (budget < 0) return None
+    val in = table.select(col("id"), col("sh"),
+      graft.functions.MinhashBands(col("sh"), bands, rowsPerBand).as("bk"))
+    val rows = in.mapPartitions { it =>
+      val cap = budget / org.apache.spark.TaskContext.get().numPartitions()
+      val kept = scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.Row]()
+      var bytes = 0L
+      while (it.hasNext && bytes <= cap) {
+        val r = it.next()
+        bytes += gatheredBytes(r)
+        kept += r
+      }
+      if (bytes > cap) Iterator.single(org.apache.spark.sql.Row(null, null, null))
+      else kept.iterator
+    }(org.apache.spark.sql.Encoders.row(org.apache.spark.sql.types.StructType(
+      in.schema.fields.map(_.copy(nullable = true))))).collect()
+    if (rows.exists(_.isNullAt(1))) None else Some(rows)
+  }
+
+  /** Size of a gathered (id, sh, bk) row in Spark's binary row format,
+    * counting a byte per shingle character: fixed slots, then each
+    * shingle's offset word and its 8-byte-padded characters, then the
+    * band keys.
+    */
+  private[graft] def gatheredBytes(r: org.apache.spark.sql.Row): Long = {
+    var b = 64L + 8L * r.getSeq[Any](2).length
+    r.getSeq[String](1).foreach(s => b += 8L + ((s.length + 7) & ~7))
+    b
+  }
+
+  /** The distributed path's pairs, computed on the driver from gathered
+    * (id, sh, bk) rows, or None past `maxPairs` candidates:
+    *  - candidates: the pairs of rows sharing a band key, after
+    *    [[capHotKeys]]' rule (a key of more than `maxBandDf` rows pairs
+    *    nothing when `maxBandDf > 0`), as (id_a, id_b) with
+    *    `id_a < id_b` under `ord` (Spark's order of the id type; null
+    *    ids pair with nothing), distinct;
+    *  - verify: for each candidate, every row of `id_a` against every
+    *    row of `id_b` (the verify joins' multiplicity when ids repeat),
+    *    `|A∩B| / |A∪B|` over distinct shingles — `array_intersect` /
+    *    `array_union` set semantics — as a double division, kept
+    *    at `>= threshold`.
+    * The pairs frame has the distributed frame's schema; the candidate
+    * count is the bound, as on that path.
+    */
+  private def driverPairSet(table: DataFrame,
+      rows: Array[org.apache.spark.sql.Row], ord: Ordering[Any],
+      threshold: Double, maxBandDf: Int, maxPairs: Long): Option[PairSet] = {
+    import scala.jdk.CollectionConverters._
+    val byKey = new java.util.HashMap[Long, scala.collection.mutable.ArrayBuffer[Int]]()
+    rows.indices.foreach(i => rows(i).getSeq[Long](2).foreach(k =>
+      byKey.computeIfAbsent(k, _ => scala.collection.mutable.ArrayBuffer[Int]()) += i))
+    val cands = new java.util.HashSet[(Any, Any)]()
+    val it = byKey.values().iterator()
+    while (it.hasNext && cands.size <= maxPairs) {
+      val members = it.next()
+      if (maxBandDf <= 0 || members.length <= maxBandDf) {
+        var x = 0
+        while (x < members.length && cands.size <= maxPairs) {
+          val a = rows(members(x)).get(0)
+          var y = x + 1
+          while (a != null && y < members.length) {
+            val b = rows(members(y)).get(0)
+            if (b != null) {
+              if (ord.lt(a, b)) cands.add((a, b))
+              else if (ord.lt(b, a)) cands.add((b, a))
+            }
+            y += 1
+          }
+          x += 1
+        }
+      }
+    }
+    if (cands.size > maxPairs) return None
+    val rowsOf = rows.indices.filter(i => !rows(i).isNullAt(0))
+      .groupBy(i => rows(i).get(0))
+    val sets = new java.util.HashMap[Int, java.util.HashSet[String]]()
+    def shingles(i: Int): java.util.HashSet[String] = sets.computeIfAbsent(i,
+      _ => new java.util.HashSet[String](rows(i).getSeq[String](1).asJava))
+    val verified = cands.asScala.toSeq.sortWith { case ((a1, b1), (a2, b2)) =>
+      ord.lt(a1, a2) || (a1 == a2 && ord.lt(b1, b2)) }.flatMap { case (a, b) =>
+      for {
+        i <- rowsOf(a)
+        j <- rowsOf(b)
+        (sa, sb) = (shingles(i), shingles(j))
+        inter = sb.asScala.count(sa.contains)
+        jaccard = inter.toDouble / (sa.size + sb.size - inter).toDouble
+        if jaccard >= threshold
+      } yield org.apache.spark.sql.Row(a, b, jaccard)
+    }
+    import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
+    val id = table.schema("id")
+    val schema = StructType(Seq(id.copy(name = "id_a"), id.copy(name = "id_b"),
+      StructField("jaccard", DoubleType)))
+    val local = verified.toArray
+    Some(PairSet(table.sparkSession.createDataFrame(
+      java.util.Arrays.asList(local: _*), schema),
+      Some(cands.size.toLong), Some(local)))
   }
 
   /** Drop LSH keys shared by more than `maxDf` documents — the bucket
@@ -539,6 +676,34 @@ object Dedup {
       .orElse(sys.props.get("graft.dedup.driverMaxPairs").map(_.toLong))
       .getOrElse(4000000L)
 
+  /** Near-dup batches whose gathered (id, shingles, band keys) rows take
+    * at most this many bytes are paired and verified on the driver (see
+    * [[minhashPairSet]]). Below it one gather job and driver work cost
+    * less than the band-key join, the guard count and the verify joins;
+    * SCALE.md has the measured crossover.
+    */
+  val NearDupDriverBytes: Long = 64L * 1024 * 1024
+
+  /** The driver-path ceiling in force: [[NearDupDriverBytes]], or the
+    * [[withNearDupDriverBytes]] override on this thread.
+    */
+  private[graft] def nearDupDriverBytes: Long =
+    nearDupBytesOverride.get().getOrElse(NearDupDriverBytes)
+
+  private val nearDupBytesOverride = new ThreadLocal[Option[Long]] {
+    override def initialValue: Option[Long] = None
+  }
+
+  /** Run `body` with a thread-scoped near-dup driver ceiling — how specs
+    * and the crossover tool force either path: −1 runs every near-dup
+    * step distributed, `Long.MaxValue` gathers every batch.
+    */
+  private[graft] def withNearDupDriverBytes[T](maxBytes: Long)(body: => T): T = {
+    val prev = nearDupBytesOverride.get()
+    nearDupBytesOverride.set(Some(maxBytes))
+    try body finally nearDupBytesOverride.set(prev)
+  }
+
   // Plain ThreadLocal, NOT scala.util.DynamicVariable: DynamicVariable
   // is backed by InheritableThreadLocal, so any thread SPAWNED while an
   // override was active (e.g. a lazily-created Spark driver pool
@@ -629,10 +794,13 @@ object Dedup {
     * subset of those distinct candidates (ids are keys), so the count
     * bounds them and the cluster tail decides driver vs distributed
     * without counting the pairs again. `bound = None`: the tail
-    * guard-counts the pairs itself.
+    * guard-counts the pairs itself. `rows`: the pairs themselves, when
+    * the driver built them ([[driverPairSet]]) — the cluster tail reads
+    * them instead of collecting the frame.
     */
   private[operators] final case class PairSet(pairs: DataFrame,
-      bound: Option[Long] = None)
+      bound: Option[Long] = None,
+      rows: Option[Array[org.apache.spark.sql.Row]] = None)
 
   /** Connected components over a near-dup pair set. Returns
     * (id, component = min id of the cluster).
@@ -664,8 +832,12 @@ object Dedup {
     * codegen'd limit, so no new class per round).
     *
     * Both paths produce the identical min-label result; the driver path
-    * requires an orderable id type (numeric/string) and falls through to
-    * the distributed loop otherwise.
+    * requires an orderable id type (long/int/short/string) and falls
+    * through to the distributed loop otherwise. "Min" is Spark's order of
+    * the id type on both paths ([[driverOrdering]]: strings by UTF-8
+    * bytes), so a cluster keeps the same root either way. The removal
+    * tails also take pairs the driver built itself ([[minhashPairSet]]'s
+    * driver path) without collecting them.
     */
   def connectedComponents(pairs: DataFrame, maxIterations: Int = 20,
       driverMaxPairs: Long = defaultDriverMaxPairs): DataFrame =
@@ -687,7 +859,7 @@ object Dedup {
     val ord = driverOrdering(ids.schema("id_a").dataType)
     ord match {
       case Some(o) if pairs.bound.exists(_ <= driverMaxPairs) =>
-        Left(unionFind(ids.collect(), o))
+        Left(unionFind(pairs.rows.getOrElse(ids.collect()), o))
       case _ =>
         // one scope-released materialization; both paths reuse it
         val pe = CacheScope.persist(ids)
@@ -746,17 +918,25 @@ object Dedup {
     labels
   }
 
-  /** Orderings matching Spark's `least`/`min` semantics for the id types
-    * a dedup key realistically has; None ⇒ no driver fast path.
+  /** Orderings matching Spark's `least`/`min`/`<` semantics for the id
+    * types a dedup key realistically has; None ⇒ no driver fast path.
+    * Strings compare as Spark compares them, by UTF-8 bytes
+    * (`UTF8String.compareTo`), not by Java's UTF-16 `String` order: the
+    * two disagree when a supplementary character meets one in
+    * U+E000–U+FFFF, and the driver union-find would then keep a
+    * different survivor than the distributed min-label loop.
     */
   private def driverOrdering(
       dt: org.apache.spark.sql.types.DataType): Option[Ordering[Any]] = {
     import org.apache.spark.sql.types._
+    import org.apache.spark.unsafe.types.UTF8String
     dt match {
       case LongType    => Some(Ordering.by[Any, Long](_.asInstanceOf[Long]))
       case IntegerType => Some(Ordering.by[Any, Int](_.asInstanceOf[Int]))
       case ShortType   => Some(Ordering.by[Any, Short](_.asInstanceOf[Short]))
-      case StringType  => Some(Ordering.by[Any, String](_.asInstanceOf[String]))
+      case StringType  => Some((a: Any, b: Any) =>
+        UTF8String.fromString(a.asInstanceOf[String])
+          .compareTo(UTF8String.fromString(b.asInstanceOf[String])))
       case _           => None
     }
   }
@@ -845,14 +1025,27 @@ object Dedup {
     * without a Spark job. Without a bound it guard-counts the persisted
     * pairs once; above the ceiling it runs the distributed loop and
     * guard-counts the persisted losers.
+    *
+    * Pairs the driver built ([[minhashPairSet]]'s driver path) need no
+    * collect, and their losers — a subset of a batch the driver already
+    * held — leave `df` through one filter, `NOT coalesce(id IN losers,
+    * false)`: no broadcast job, and a null id stays, as under
+    * `left_anti`. The set is one `InSet` referenced from generated
+    * code, not written into it (int-like ids are compared as longs: an
+    * int `InSet` compiles to a `switch` over its values), so a batch
+    * with other losers compiles no new class.
     */
   private[operators] def dropClusterLosers(df: DataFrame, idCol: String,
       pairs: PairSet, losersBroadcastMax: Long): DataFrame = {
     val (losers, nLosers) = clusters(pairs) match {
       case Left(roots) =>
-        val rows = new java.util.ArrayList[org.apache.spark.sql.Row]()
-        roots.forEach((id, root) =>
-          if (id != root) rows.add(org.apache.spark.sql.Row(id)))
+        val ids = Seq.newBuilder[Any]
+        roots.forEach((id, root) => if (id != root) ids += id)
+        val losers = ids.result()
+        if (pairs.rows.nonEmpty && losers.size <= losersBroadcastMax)
+          return df.filter(not(coalesce(idAmong(df, idCol, losers), lit(false))))
+        val rows = new java.util.ArrayList[org.apache.spark.sql.Row](losers.size)
+        losers.foreach(id => rows.add(org.apache.spark.sql.Row(id)))
         (idFrame(pairs.pairs, Seq(idCol), rows), rows.size.toLong)
       case Right(comps) =>
         val persisted = CacheScope.persist(
@@ -872,6 +1065,26 @@ object Dedup {
         broadcast(losers)
       else losers
     df.join(pinned, Seq(idCol), "left_anti")
+  }
+
+  /** `df(idCol) IN ids` as one `InSet` of the ids' internal values
+    * (see [[dropClusterLosers]]); int and short ids are compared as
+    * longs.
+    */
+  private def idAmong(df: DataFrame, idCol: String, ids: Seq[Any]): Column = {
+    import org.apache.spark.sql.types._
+    val c = df(idCol)
+    val (key, values) = df.schema(idCol).dataType match {
+      case IntegerType | ShortType =>
+        (c.cast(LongType), ids.map(_.asInstanceOf[Number].longValue: Any))
+      case dt =>
+        val toInternal = org.apache.spark.sql.catalyst.CatalystTypeConverters
+          .createToCatalystConverter(dt)
+        (c, ids.map(toInternal))
+    }
+    org.apache.spark.sql.GraftExpressionBridge.column(
+      org.apache.spark.sql.catalyst.expressions.InSet(
+        org.apache.spark.sql.GraftExpressionBridge.expression(key), values.toSet))
   }
 
   /** Cluster removal keeping the BEST-scoring member (score descending,

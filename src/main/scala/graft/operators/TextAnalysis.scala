@@ -325,14 +325,26 @@ object TextAnalysis {
     * the former keep set; `__r` materializes in its own projection so
     * the kernel runs once per row (CollapseProject keeps multi-use
     * non-cheap aliases; pinned by PlanAuditSpec).
+    *
+    * ONE token pass: the word-count, mean-length and punctuation rules
+    * read the kernel's `n_pieces`, `n_nonspace`, `n_punct` and `n_chars`
+    * — the integers [[tokenCount]], [[meanTokenLen]] and [[punctRatio]]
+    * compute with two regex splits and two `regexp_replace` passes —
+    * through the same casts and divisions, so every double and every
+    * verdict is bit-equal. Null text gives null fields, as those
+    * expressions give null, so the filter's three-valued logic is
+    * unchanged.
     */
   private def filterByGopherKeep(df: DataFrame, textCol: String,
       t: GopherThresholds, entropyMinNats: Option[Double]): DataFrame = {
     val c = col(textCol)
-    val failWordCount = !tokenCount(c).between(t.minWords, t.maxWords)
-    val failMeanLen = !meanTokenLen(c)
+    val failWordCount = !col("__r.n_pieces").between(t.minWords, t.maxWords)
+    val failMeanLen = !(col("__r.n_nonspace").cast("double") /
+      col("__r.n_pieces").cast("double"))
       .between(t.minMeanTokenLen, t.maxMeanTokenLen)
-    val failPunct = coalesce(punctRatio(c) > t.maxPunctRatio, lit(false))
+    val chars = col("__r.n_chars")
+    val failPunct = coalesce(col("__r.n_punct").cast("double") /
+      when(chars > 0, chars.cast("double")) > t.maxPunctRatio, lit(false))
     val dupWord = lit(1.0) - col("__r.n_distinct").cast("double") /
       col("__r.n_words").cast("double")
     val topWord = col("__r.max_wc").cast("double") /

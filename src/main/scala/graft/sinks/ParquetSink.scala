@@ -121,27 +121,31 @@ object ParquetSink {
 
   /** Data files under `location` modified at/after `sinceMs` — the
     * files_written / bytes_written completion metrics (reference
-    * metrics.py:86-98 `record_writing`). A recursive Hadoop-FS listing
-    * (driver-side, proportional to file count, not data); metadata files
-    * (`_SUCCESS`, sidecars, hidden dirs) excluded.
+    * metrics.py:86-98 `record_writing`). A recursive walk of the whole
+    * tree (driver-side, proportional to file count, not data); files
+    * named `_…` or `.…` (`_SUCCESS`, checksums, sidecars) excluded.
+    *
+    * The walk is `listStatus` per directory, not `listFiles(base,
+    * true)`: that builds a `LocatedFileStatus` per file, which reads the
+    * file's permission, and without the native Hadoop library the local
+    * filesystem reads a permission by forking `ls -ld` — one process per
+    * output file, serially on the driver. `listStatus` reads none, and
+    * visits the same files in the same order.
     */
   def writtenFiles(spark: org.apache.spark.sql.SparkSession, location: String,
       sinceMs: Long): Seq[(String, Long)] = {
     val base = new Path(location)
     val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(base)) Nil
-    else {
-      val it = fs.listFiles(base, true)
-      val out = Seq.newBuilder[(String, Long)]
-      while (it.hasNext) {
-        val f = it.next()
-        val name = f.getPath.getName
-        if (!name.startsWith("_") && !name.startsWith(".") &&
-          f.getModificationTime >= sinceMs)
-          out += f.getPath.toString -> f.getLen
-      }
-      out.result()
+    val out = Seq.newBuilder[(String, Long)]
+    def walk(dir: Path): Unit = fs.listStatus(dir).foreach { f =>
+      val name = f.getPath.getName
+      if (f.isDirectory) walk(f.getPath)
+      else if (!name.startsWith("_") && !name.startsWith(".") &&
+        f.getModificationTime >= sinceMs)
+        out += f.getPath.toString -> f.getLen
     }
+    if (fs.exists(base)) walk(base)
+    out.result()
   }
 
   final case class WriteReport(path: String, partitionCols: Seq[String], maxRecordsPerFile: Long)

@@ -9,7 +9,7 @@ import java.nio.file.{Files, Path}
   * (tests/fixtures/jobs/csv_employee_to_iceberg.yaml + exit contract
   * cli.py:960-983,1123-1129).
   */
-class JobRunnerSpec extends SparkSpec {
+class JobRunnerSpec extends SparkSpec with ExecutedPlans {
 
   private def write(dir: Path, name: String, content: String): String = {
     val p = dir.resolve(name)
@@ -1345,6 +1345,53 @@ class JobRunnerSpec extends SparkSpec {
       (spark.sparkContext.getPersistentRDDs.keySet.toSet -- before) shouldBe empty
       spark.sparkContext.getRDDStorageInfo.length shouldBe memBefore
     }
+  }
+
+  test("a small curated batch: four Spark jobs, no exchange, near-dups gone") {
+    // the ingest_curate shape: nfc, PII, near dedupe, gopher + entropy,
+    // a partitioned parquet target. The gather fills the rewritten-text
+    // cache, the losers leave through a set filter, and the write reads
+    // the cache: gather, two sizing jobs, one write job
+    val rnd = new scala.util.Random(3)
+    val docs = (1 to 60).map(i =>
+      (i, Seq.fill(40 + rnd.nextInt(20))(s"w${rnd.nextInt(400)}").mkString(" ")))
+    val copies = docs.take(5).map { case (i, t) => (100 + i, t) } ++
+      docs.slice(5, 10).map { case (i, t) => (200 + i, t.replaceFirst("w", "v")) }
+    val (dir, _) = fixture((docs ++ copies).map { case (i, t) =>
+      s"$i,$t,${i % 7}.0" }, "strict")
+    def run(name: String) = {
+      val out = dir.resolve(s"out_$name").toString
+      val job = write(dir, s"job_$name.yaml",
+        s"""tenant_id: t1
+           |source_connector_path: recipe_csv.yaml
+           |target_connector_path: recipe_parquet.yaml
+           |asset_path: asset.yaml
+           |schema_validation_mode: strict
+           |curation:
+           |  id_field: id
+           |  text_field: name
+           |  normalize: nfc
+           |  redact_pii: true
+           |  dedupe: near
+           |  quality_filter: [gopher, entropy]
+           |source:
+           |  files:
+           |    - {path: data.csv}
+           |target:
+           |  connection: {path: $out}
+           |  partitioning: [score]
+           |""".stripMargin)
+      executed(JobRunner.run(spark, job))
+    }
+    run("cold")
+    val (r, ran) = run("warm")
+    r.exitCode shouldBe ExitCodes.Success
+    ran.jobs shouldBe 4
+    ran.count("Exchange") shouldBe 0 // BroadcastExchange included
+    val ids = spark.read.parquet(r.outputPath).select("id")
+      .collect().map(_.getAs[Number](0).intValue).toSet
+    ids should not be empty
+    ids.intersect(copies.map(_._1).toSet) shouldBe empty
   }
 
   test("env-var expansion incl. ${VAR:-default}") {

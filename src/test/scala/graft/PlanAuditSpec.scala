@@ -126,13 +126,31 @@ class PlanAuditSpec extends SparkSpec with ExecutedPlans {
     // the executedPlan printed before execution is the INITIAL plan — a
     // BroadcastHashJoin here proves the explicit broadcast() hint, not a
     // runtime AQE conversion that could mispredict at 100 TB. Two verify
-    // hops per query → at least two broadcast joins in each plan.
+    // hops per query → at least two broadcast joins in each plan. The
+    // minhash pairs are the distributed ones: a batch within the driver
+    // near-dup budget is verified on the driver (pinned below).
     for (name <- Seq("dedup_minhash", "dedup_simhash", "ann_cosine_neardup")) {
       withClue(s"$name: ") {
-        val p = plan(name)
+        val p = graft.operators.Dedup.withNearDupDriverBytes(-1L)(plan(name))
         "BroadcastHashJoin".r.findAllIn(p).length should be >= 2
       }
     }
+  }
+
+  test("a near-dup batch within the driver budget is one job, no exchange") {
+    // the gather is the only Spark job; pairs, clusters and losers are
+    // driver work, and the losers leave the batch through a filter
+    val docs = spark.read.parquet(s"$dir/documents.parquet")
+      .select("doc_id", "text")
+    val (out, ran) = executed(
+      graft.operators.Dedup.dropNearDuplicates(docs, "doc_id", "text"))
+    ran.jobs shouldBe 1
+    ran.bareJobs shouldBe 0 // a Dataset action, with an SQL execution id
+    ran.count("Exchange") shouldBe 0 // BroadcastExchange included
+    val p = out.queryExecution.executedPlan.toString
+    p should not include "Exchange"
+    p should not include "Join"
+    p should include("INSET")
   }
 
   test("n-gram repetition is ONE map-side kernel projection — zero shuffles") {

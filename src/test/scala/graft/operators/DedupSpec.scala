@@ -483,15 +483,8 @@ class DedupSpec extends SparkSpec {
       .select("doc_id").as[Long].collect().sorted shouldBe Array(1L, 4L)
   }
 
-  test("driver-regime removal: candidate count, one pair collect, final count") {
-    // the verify's candidate guard count bounds the verified pairs, so
-    // the cluster tail runs no pair count and no loser count of its own
-    val chain = Seq(
-      (1L, "alpha beta gamma delta epsilon zeta eta theta iota"),
-      (2L, "alpha beta gamma delta epsilon zeta eta theta kappa"),
-      (3L, "omega beta gamma delta epsilon zeta eta theta kappa"),
-      (9L, "completely unrelated words appear in this document here")
-    ).toDF("id", "text")
+  /** The Dataset actions `body` runs, in order. */
+  private def actionsOf(body: => Unit): Seq[String] = {
     val tag = s"marker-${java.util.UUID.randomUUID()}"
     val actions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val markers = new java.util.concurrent.atomic.AtomicInteger()
@@ -506,24 +499,74 @@ class DedupSpec extends SparkSpec {
           exception: Exception): Unit = ()
     }
     // listener delivery is asynchronous but ordered: only actions seen
-    // between the two marker queries are this removal's
+    // between the two marker queries are the body's
     def marker(n: Int): Unit = {
       spark.range(1).select(lit(tag).as("m")).collect()
       val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
       while (markers.get() < n && System.nanoTime() < deadline) Thread.sleep(20)
     }
     spark.listenerManager.register(listener)
-    val survivors =
-      try {
-        marker(1)
-        val n = Dedup.dropNearDuplicates(chain, "id", "text",
-          shingleN = 2, bands = 16, rowsPerBand = 2, threshold = 0.6).count()
-        marker(2)
-        n
-      } finally spark.listenerManager.unregister(listener)
-    survivors shouldBe 2L
+    try {
+      marker(1)
+      body
+      marker(2)
+    } finally spark.listenerManager.unregister(listener)
     import scala.jdk.CollectionConverters._
-    actions.asScala.toSeq shouldBe Seq("count", "collect", "count")
+    actions.asScala.toSeq
+  }
+
+  test("driver near-dup removal: one gather collect, then the final count") {
+    // a batch within the driver budget is gathered once; pairs, clusters
+    // and losers are driver work, and the losers leave by a filter
+    val chain = Seq(
+      (1L, "alpha beta gamma delta epsilon zeta eta theta iota"),
+      (2L, "alpha beta gamma delta epsilon zeta eta theta kappa"),
+      (3L, "omega beta gamma delta epsilon zeta eta theta kappa"),
+      (9L, "completely unrelated words appear in this document here")
+    ).toDF("id", "text")
+    var survivors = 0L
+    actionsOf {
+      survivors = Dedup.dropNearDuplicates(chain, "id", "text",
+        shingleN = 2, bands = 16, rowsPerBand = 2, threshold = 0.6).count()
+    } shouldBe Seq("collect", "count")
+    survivors shouldBe 2L
+  }
+
+  test("string ids: driver and distributed survivors agree in UTF-8 order") {
+    // Java orders "\uFFFD-a" after "😀-b" (UTF-16 units 0xFFFD > 0xD83D);
+    // Spark orders it first (UTF-8 bytes EF < F0), so the min-id survivor
+    // is "\uFFFD-a" on every path
+    val text = "alpha beta gamma delta epsilon zeta eta theta iota"
+    val pair = Seq(("\uFFFD-a", text), ("\uD83D\uDE00-b", text)).toDF("id", "text")
+    def survivors(): Seq[String] = Dedup.dropNearDuplicates(pair, "id", "text")
+      .select("id").as[String].collect().toSeq
+    val driver = Dedup.withNearDupDriverBytes(Long.MaxValue)(survivors())
+    val distributed = Dedup.withGuardThresholds(0L, 0L)(survivors())
+    driver shouldBe distributed
+    driver shouldBe Seq("\uFFFD-a")
+    // the driver union-find over distributed pairs agrees too
+    Dedup.withNearDupDriverBytes(-1L)(survivors()) shouldBe driver
+    graft.core.CacheScope.releaseAll()
+  }
+
+  test("driver-regime removal: candidate count, one pair collect, final count") {
+    // the verify's candidate guard count bounds the verified pairs, so
+    // the cluster tail runs no pair count and no loser count of its own
+    // (the distributed pair path: the driver near-dup budget is off)
+    val chain = Seq(
+      (1L, "alpha beta gamma delta epsilon zeta eta theta iota"),
+      (2L, "alpha beta gamma delta epsilon zeta eta theta kappa"),
+      (3L, "omega beta gamma delta epsilon zeta eta theta kappa"),
+      (9L, "completely unrelated words appear in this document here")
+    ).toDF("id", "text")
+    var survivors = 0L
+    actionsOf {
+      survivors = Dedup.withNearDupDriverBytes(-1L) {
+        Dedup.dropNearDuplicates(chain, "id", "text",
+          shingleN = 2, bands = 16, rowsPerBand = 2, threshold = 0.6).count()
+      }
+    } shouldBe Seq("count", "collect", "count")
+    survivors shouldBe 2L
     graft.core.CacheScope.releaseAll()
   }
 }

@@ -98,6 +98,41 @@ class ParquetSinkSpec extends SparkSpec {
     est shouldBe 150L * 1024L * 1024L / bytesPerRow
   }
 
+  test("writtenFiles: a partitioned append lists its own data files, as listFiles did") {
+    val out = Files.createTempDirectory("sink-written-").toString + "/t"
+    def batch(from: Int) = (from until from + 40)
+      .map(i => (i.toLong, if (i % 2 == 0) "en" else "de")).toDF("id", "lang")
+    ParquetSink.write(batch(0), out, Seq("lang"))
+    val before = ParquetSink.writtenFiles(spark, out, 0L).map(_._1).toSet
+    Thread.sleep(1100) // local file times can have whole-second resolution
+    val t0 = System.currentTimeMillis()
+    ParquetSink.write(batch(100), out, Seq("lang"))
+    // the reference listing: a recursive listFiles, filtered the same way
+    val fs = new org.apache.hadoop.fs.Path(out)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    def listed(since: Long): Set[(String, Long)] = {
+      val it = fs.listFiles(new org.apache.hadoop.fs.Path(out), true)
+      val b = Set.newBuilder[(String, Long)]
+      while (it.hasNext) {
+        val f = it.next()
+        val n = f.getPath.getName
+        if (!n.startsWith("_") && !n.startsWith(".") &&
+          f.getModificationTime >= since) b += f.getPath.toString -> f.getLen
+      }
+      b.result()
+    }
+    val mine = ParquetSink.writtenFiles(spark, out, t0)
+    mine.toSet shouldBe listed(t0)
+    mine should not be empty
+    mine.map(_._1).toSet.intersect(before) shouldBe empty // earlier run's
+    all(mine.map(f => new org.apache.hadoop.fs.Path(f._1).getName)) should
+      (not startWith "_" and not startWith ".")
+    // the tree holds _SUCCESS and .crc files the walk passes over
+    listed(0L).size shouldBe ParquetSink.writtenFiles(spark, out, 0L).size
+    new java.io.File(out, "_SUCCESS").exists shouldBe true
+    new java.io.File(out, "lang=en").list().exists(_.startsWith(".")) shouldBe true
+  }
+
   test("empty frame: estimate 0 = unlimited, write still succeeds") {
     val df = Seq.empty[(Long, String)].toDF("id", "pad")
     val out = Files.createTempDirectory("sink-empty-").toString + "/t"

@@ -14,10 +14,11 @@ metric's `better` direction), and whether the gap between the medians
 exceeds the parent's interquartile range; failed operations are summed
 per side.
 
-With `--keep` on `index_probe`, each pair's runs keep their work
-directories, `tools/diff_probe_answers.py` compares the two runs'
-answers, and the work directories are removed again. Exit status: 0, or
-1 when a run failed or a pair's answers differ.
+With `--keep`, each pair's runs keep their work directories, the two
+runs' outputs are compared — `tools/diff_probe_answers.py` for
+`index_probe`, `tools/diff_curate_outputs.py` for `ingest_curate` — and
+the work directories are removed again. Exit status: 0, or 1 when a run
+failed or a pair's outputs differ.
 """
 import argparse
 import glob
@@ -29,6 +30,10 @@ import subprocess
 import sys
 
 HERE = os.path.dirname(os.path.abspath(__file__))
+
+# workload -> the tool that compares two `--keep` runs' outputs
+DIFF_TOOLS = {"index_probe": "diff_probe_answers.py",
+              "ingest_curate": "diff_curate_outputs.py"}
 
 
 def run(checkout, workload, seed, seconds, keep):
@@ -69,11 +74,12 @@ def main(argv=None):
     ap.add_argument("--seeds", type=int, nargs="+", required=True)
     ap.add_argument("--seconds", type=float, default=8)
     ap.add_argument("--keep", action="store_true",
-                    help="compare each pair's probe answers (index_probe)")
+                    help="compare each pair's outputs (%s)"
+                    % ", ".join(sorted(DIFF_TOOLS)))
     args = ap.parse_args(argv)
     with open(os.path.join(args.change, "BENCHMARK.json")) as f:
         better = {m["name"]: m["better"] for m in json.load(f)["end_to_end"]}
-    keep = args.keep and args.workload == "index_probe"
+    keep = args.keep and args.workload in DIFF_TOOLS
 
     sides = {"parent": args.parent, "change": args.change}
     values = {s: [] for s in sides}  # per pair: metric -> value
@@ -100,10 +106,10 @@ def main(argv=None):
                      for s in ("parent", "change")]
             if all(found):
                 d = subprocess.run(
-                    [sys.executable, os.path.join(HERE, "diff_probe_answers.py"),
+                    [sys.executable, os.path.join(HERE, DIFF_TOOLS[args.workload]),
                      found[0][-1], found[1][-1]],
                     stdout=subprocess.PIPE, text=True)
-                print("  answers: " + d.stdout.strip().splitlines()[-1], flush=True)
+                print("  outputs: " + d.stdout.strip().splitlines()[-1], flush=True)
                 if d.returncode != 0:
                     status = 1
             for w in works.values():
