@@ -608,7 +608,7 @@ object JobRunner {
   }
 
   // plain ThreadLocal, not DynamicVariable — same child-thread
-  // inheritance reasoning as Dedup.guardOverride
+  // inheritance reasoning as Dedup.guardRecord
   private val curationAttribution = new ThreadLocal[Boolean] {
     override def initialValue: Boolean = false
   }

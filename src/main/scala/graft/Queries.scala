@@ -2253,14 +2253,15 @@ object Queries {
     * plans — distributed pointer-jumping connected components, unhinted
     * verify joins, the loser shuffle-anti-join — so the scale tail is
     * priced every round, not just compiled. The thresholds are forced
-    * THREAD-scoped via [[graft.operators.Dedup.withGuardThresholds]]
+    * THREAD-scoped via [[graft.operators.Dedup.withGuards]]
     * during plan construction (all pin decisions and the CC loop run
     * eagerly inside the call) — unlike the earlier JVM-global sys.props
     * toggle, concurrent jobs in the same session are unaffected.
     * ScaleFallbackSpec pins bit-identity of this path to the fast one.
     */
   def dedupMinhashForced(spark: SparkSession, dir: String): DataFrame =
-    graft.operators.Dedup.withGuardThresholds(0L, 0L) {
+    graft.operators.Dedup.withGuards(
+        _.copy(broadcastMaxPairs = 0L, driverMaxPairs = 0L)) {
       graft.operators.Dedup.dropNearDuplicates(
         t(spark, dir, "documents").select("doc_id", "text"), "doc_id", "text",
         shingleN = 3, bands = 16, rowsPerBand = 4, threshold = 0.9)
@@ -2280,8 +2281,7 @@ object Queries {
     * one.
     */
   def annNearDupForced(spark: SparkSession, dir: String): DataFrame =
-    graft.operators.Dedup.withGuardThresholds(0L,
-      graft.operators.Dedup.defaultDriverMaxPairs) {
+    graft.operators.Dedup.withGuards(_.copy(broadcastMaxPairs = 0L)) {
       annNearDupIncremental(spark, dir)
     }
 
@@ -2451,7 +2451,8 @@ object Queries {
     * ScaleFallbackSpec pins bit-identity to the fast path.
     */
   def dedupTfidfForced(spark: SparkSession, dir: String): DataFrame =
-    graft.operators.Dedup.withGuardThresholds(0L, 0L) {
+    graft.operators.Dedup.withGuards(
+        _.copy(broadcastMaxPairs = 0L, driverMaxPairs = 0L)) {
       dedupTfidfIncremental(spark, dir)
     }
 

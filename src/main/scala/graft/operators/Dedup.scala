@@ -304,14 +304,13 @@ object Dedup {
     val clean = inBatch.filter(!might)
     val cands = CacheScope.persist(inBatch.filter(might))
     val nCands = guardCount(cands)
-    def pin(d: DataFrame): DataFrame =
-      if (nCands <= broadcastMaxPairs) broadcast(d) else d
     val fpName = corpusFingerprints.columns.head
     val hits = corpusFingerprints.select(col(fpName).as("__fp"))
-      .join(pin(cands.select("__fp").distinct()), Seq("__fp"), "left_semi")
+      .join(pin(cands.select("__fp").distinct(), nCands), Seq("__fp"),
+        "left_semi")
     // unionByName: the USING-style anti-join moved __fp to the front of
     // `kept`, and positional union would splice text into the id column
-    val kept = cands.join(pin(hits), Seq("__fp"), "left_anti")
+    val kept = cands.join(pin(hits, nCands), Seq("__fp"), "left_anti")
     clean.unionByName(kept).drop("__fp")
   }
 
@@ -420,61 +419,54 @@ object Dedup {
       threshold: Double = 0.9,
       maxBandDf: Int = 0
   ): DataFrame =
-    minhashPairSet(df, idCol, textCol, shingleN, bands, rowsPerBand,
-      threshold, maxBandDf).pairs
+    minhash(shingleN, bands, rowsPerBand, threshold, maxBandDf)
+      .pairsOf(df, idCol, textCol).pairs
 
-  /** The verified pairs of [[minhashNearDupPairs]], on one of two paths.
+  /** The MinHash family of the near-dup core: (id, sh) shingle tables,
+    * band keys, exact Jaccard over distinct shingles.
     *
-    * DRIVER path, for a batch whose shingles fit [[nearDupDriverBytes]]:
-    * one map-only gather ([[gatherBands]]) brings every (id, shingles,
-    * band keys) row to the driver, which pairs the rows that share a band
-    * key, verifies exact Jaccard and returns the pairs as a local
-    * relation, with the candidate count as the [[PairSet]] bound and the
-    * rows themselves for the cluster tail. One Spark job in all: no
-    * guard count, no band-key join, no verify joins.
+    * Its pairs take one of two paths. DRIVER path, for a table whose
+    * (id, shingles, band keys) rows fit the guards' `nearDupDriverBytes`:
+    * one map-only gather ([[gatherBands]]) brings every row to the
+    * driver, which pairs the rows that share a band key, verifies exact
+    * Jaccard and returns the pairs as a local relation, with the
+    * candidate count as the [[PairSet]] bound and the rows themselves
+    * for the cluster tail. One Spark job in all: no guard count, no
+    * band-key join, no verify joins.
     *
     * DISTRIBUTED path otherwise — a task past its share of the budget,
     * more candidates than `driverMaxPairs`, `driverMaxPairs = 0` (how
     * ScaleFallbackSpec forces the 100 TB plans), or an id type with no
-    * driver ordering: the band-key self-join and the exact-Jaccard verify
-    * joins, the plans the driver path reproduces row for row.
+    * driver ordering: the core's band-key self-join and exact-Jaccard
+    * verify joins, the plans the driver path reproduces row for row.
     */
-  private def minhashPairSet(df: DataFrame, idCol: String, textCol: String,
-      shingleN: Int, bands: Int, rowsPerBand: Int, threshold: Double,
-      maxBandDf: Int): PairSet = {
-    val table = shingleTable(df, idCol, textCol, shingleN)
-    val maxPairs = defaultDriverMaxPairs
-    val onDriver = for {
-      ord <- driverOrdering(table.schema("id").dataType)
-      if maxPairs > 0
-      rows <- gatherBands(table, bands, rowsPerBand)
-      pairs <- driverPairSet(table, rows, ord, threshold, maxBandDf, maxPairs)
-    } yield pairs
-    onDriver.getOrElse {
-      val sh = CacheScope.persist(table)
-        // reused by the band explode and both verify joins
-      val banded = CacheScope.persist(capHotKeys(
-        bandKeysFromShingles(sh, bands, rowsPerBand), "bk", maxBandDf))
-        // self-joined below: without this the k hashes run twice
-      val cands = banded.as("x")
-        .join(banded.as("y"), col("x.bk") === col("y.bk") && col("x.id") < col("y.id"))
-        .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
-        .distinct()
-      verifyJaccard(cands, sh, threshold)
-    }
-  }
+  private[operators] def minhash(shingleN: Int, bands: Int, rowsPerBand: Int,
+      threshold: Double, maxBandDf: Int): NearDup =
+    NearDup((df, id, text) => shingleTable(df, id, text, shingleN),
+      Keys(bandKeysFromShingles(_, bands, rowsPerBand), bands, maxBandDf),
+      Verify(Seq("sh"), "jaccard", (a, b) =>
+        size(array_intersect(a("sh"), b("sh"))).cast("double") /
+          size(array_union(a("sh"), b("sh"))).cast("double"),
+        _ >= threshold),
+      driver = t => for {
+        ord <- driverOrdering(t.schema("id").dataType)
+        maxPairs = guards.driverMaxPairs
+        if maxPairs > 0
+        rows <- gatherBands(t, bands, rowsPerBand)
+        pairs <- driverPairSet(t, rows, ord, threshold, maxBandDf, maxPairs)
+      } yield pairs)
 
   /** Every (id, sh, bk) row of a shingle table on the driver, or None
     * when the table is too big for it. ONE Dataset action: each of the P
-    * tasks returns its rows while their size stays within
-    * [[nearDupDriverBytes]] / P, and one overflow marker (a null `sh`;
+    * tasks returns its rows while their size stays within the guards'
+    * `nearDupDriverBytes` / P, and one overflow marker (a null `sh`;
     * a shingle table has none) once it passes that. The action scans the
     * table's input, so a persisted input is filled here, as the guard
     * count filled it on the distributed path.
     */
   private def gatherBands(table: DataFrame, bands: Int,
       rowsPerBand: Int): Option[Array[org.apache.spark.sql.Row]] = {
-    val budget = nearDupDriverBytes
+    val budget = guards.nearDupDriverBytes
     if (budget < 0) return None
     val in = table.select(col("id"), col("sh"),
       graft.functions.MinhashBands(col("sh"), bands, rowsPerBand).as("bk"))
@@ -598,111 +590,50 @@ object Dedup {
       keyed.join(broadcast(hot), Seq(keyCol), "left_anti")
     }
 
-  /** Pairs at or below this count get the pinned-broadcast verify plan;
-    * above it the verify joins run unhinted (sort-merge), because the
-    * broadcast payload of the second hop is O(|pairs| × avg doc shingles)
-    * and a dup-catastrophic corpus — the same regime the distributed CC
-    * path exists for — can push that past Spark's 8 GB broadcast ceiling
-    * and driver memory. Same candidate-bounded reasoning (and the same
-    * default) as [[connectedComponents]]' `driverMaxPairs`.
+  // ------------------------------------------------------- near-dup core
+
+  /** The thresholds of every near-dup guard, one record per thread:
+    *  - `broadcastMaxPairs`: a candidate, verify or hit join pins a side
+    *    for broadcast only when its measured row bound is at or below
+    *    this; above it the join runs unhinted (sort-merge), because the
+    *    second verify hop ships O(|pairs| × payload) and a
+    *    dup-catastrophic corpus — the regime the distributed CC path
+    *    exists for — can push that past Spark's 8 GB broadcast ceiling
+    *    and driver memory.
+    *  - `broadcastMaxVecBytes`: a VECTOR payload is also pinned only
+    *    when its estimated bytes fit. The row guard alone is byte-blind:
+    *    a guard-passing 4M-row batch is ~2 GB at dim 64 but ~131 GB at
+    *    dim 4096, so the byte gate (`rows × (dim + 2) × 8`, see
+    *    [[vecBroadcastBytes]]) routes high-dim batches to the fallback
+    *    shape. Default 2 GiB: both verify hops may broadcast the table,
+    *    so the worst case stays under the 8 GB ceiling.
+    *  - `driverMaxPairs`: [[connectedComponents]]' driver union-find
+    *    ceiling, and the MinHash driver path's candidate ceiling.
+    *  - `nearDupDriverBytes`: MinHash tables whose gathered rows take at
+    *    most this many bytes are paired on the driver (see [[minhash]]).
+    *  - `losersBroadcastMax`: the cluster tail's loser / component pin
+    *    ceiling; None follows `broadcastMaxPairs`.
     *
-    * Overridable two ways, checked in order:
-    *  1. [[withGuardThresholds]] — THREAD-scoped, for in-process callers
-    *     (bench forced entries, specs). The earlier JVM-global
-    *     `sys.props` toggle silently re-planned CONCURRENT jobs in the
-    *     same session (BatchRunner runs jobs on a thread pool) down the
-    *     forced 100 TB fallback path for the duration of the bench
-    *     window; the thread-local confines the override to exactly the
-    *     calling thread.
-    *  2. `-Dgraft.dedup.broadcastMaxPairs=N` — process launch
-    *     configuration (re-read per call), for CLI tuning.
-    * Setting 0 forces every guard to the unhinted/shuffle tail — how
-    * ScaleFallbackSpec and the `dedup_minhash_forced` bench entry
-    * exercise the 100 TB fallback plans on small data.
+    * Zero thresholds (−1 for the gather budget) force each guard's
+    * 100 TB fallback plan on small data — how ScaleFallbackSpec and the
+    * `*_forced` bench entries exercise it. No config key or system
+    * property sets them: only [[withGuards]], on the calling thread.
     */
-  def broadcastMaxPairs: Long =
-    guardOverride.get().map(_._1)
-      .orElse(sys.props.get("graft.dedup.broadcastMaxPairs").map(_.toLong))
-      .getOrElse(4000000L)
-
-  /** Byte ceiling for VECTOR broadcasts (the near-dup verify's
-    * vector+norm tables). The row-count guard alone is byte-blind: a
-    * broadcast fails in BYTES, and a guard-passing 4M-row batch is
-    * ~2 GB at dim 64 but ~24 GB at dim 768 and ~131 GB at dim 4096 —
-    * far past Spark's 8 GB broadcast ceiling, so a pure row guard
-    * would kill at production embedding dims exactly the jobs it
-    * green-lights at testdata dims. Every vector-broadcast decision
-    * therefore ANDs the row guard with `rows × (dim + 2) × 8` against
-    * this ceiling (8 B/element is deliberately conservative for
-    * float32 payloads — it absorbs per-row object/offset overhead in
-    * the hashed relation). Default 2 GiB: both verify hops broadcast
-    * the table, so the worst case is ~2× this, still under the 8 GB
-    * hard ceiling with headroom for the driver copy.
-    *
-    * Same override ladder as [[broadcastMaxPairs]]:
-    * [[withVecByteBudget]] thread-scoped, then
-    * `-Dgraft.dedup.broadcastMaxVecBytes=N`.
-    */
-  def broadcastMaxVecBytes: Long =
-    vecBytesOverride.get()
-      .orElse(sys.props.get("graft.dedup.broadcastMaxVecBytes").map(_.toLong))
-      .getOrElse(2L * 1024 * 1024 * 1024)
-
-  /** Estimated hashed-relation bytes for `rows` vectors of `dim`
-    * elements plus id + norm (the `(dim + 2) × 8` in the guard).
-    */
-  private[operators] def vecBroadcastBytes(rows: Long, dim: Int): Long =
-    rows * (dim.toLong + 2L) * 8L
-
-  private val vecBytesOverride = new ThreadLocal[Option[Long]] {
-    override def initialValue: Option[Long] = None
+  final case class Guards(
+      broadcastMaxPairs: Long = 4000000L,
+      broadcastMaxVecBytes: Long = 2L * 1024 * 1024 * 1024,
+      driverMaxPairs: Long = 4000000L,
+      nearDupDriverBytes: Long = NearDupDriverBytes,
+      losersBroadcastMax: Option[Long] = None) {
+    def losersMax: Long = losersBroadcastMax.getOrElse(broadcastMaxPairs)
   }
 
-  /** Run `body` with a thread-scoped vector-broadcast byte ceiling —
-    * how specs exercise the high-dim fallback on small data.
-    */
-  def withVecByteBudget[T](maxBytes: Long)(body: => T): T = {
-    val prev = vecBytesOverride.get()
-    vecBytesOverride.set(Some(maxBytes))
-    try body finally vecBytesOverride.set(prev)
-  }
-
-  /** [[connectedComponents]]' driver-union-find ceiling; 0 (via
-    * [[withGuardThresholds]] or `-Dgraft.dedup.driverMaxPairs=0`) forces
-    * the distributed pointer-jumping loop.
-    */
-  def defaultDriverMaxPairs: Long =
-    guardOverride.get().map(_._2)
-      .orElse(sys.props.get("graft.dedup.driverMaxPairs").map(_.toLong))
-      .getOrElse(4000000L)
-
-  /** Near-dup batches whose gathered (id, shingles, band keys) rows take
-    * at most this many bytes are paired and verified on the driver (see
-    * [[minhashPairSet]]). Below it one gather job and driver work cost
-    * less than the band-key join, the guard count and the verify joins;
-    * SCALE.md has the measured crossover.
+  /** The default gather budget of the MinHash driver path. Below it one
+    * gather job and driver work cost less than the band-key join, the
+    * guard count and the verify joins; SCALE.md has the measured
+    * crossover.
     */
   val NearDupDriverBytes: Long = 64L * 1024 * 1024
-
-  /** The driver-path ceiling in force: [[NearDupDriverBytes]], or the
-    * [[withNearDupDriverBytes]] override on this thread.
-    */
-  private[graft] def nearDupDriverBytes: Long =
-    nearDupBytesOverride.get().getOrElse(NearDupDriverBytes)
-
-  private val nearDupBytesOverride = new ThreadLocal[Option[Long]] {
-    override def initialValue: Option[Long] = None
-  }
-
-  /** Run `body` with a thread-scoped near-dup driver ceiling — how specs
-    * and the crossover tool force either path: −1 runs every near-dup
-    * step distributed, `Long.MaxValue` gathers every batch.
-    */
-  private[graft] def withNearDupDriverBytes[T](maxBytes: Long)(body: => T): T = {
-    val prev = nearDupBytesOverride.get()
-    nearDupBytesOverride.set(Some(maxBytes))
-    try body finally nearDupBytesOverride.set(prev)
-  }
 
   // Plain ThreadLocal, NOT scala.util.DynamicVariable: DynamicVariable
   // is backed by InheritableThreadLocal, so any thread SPAWNED while an
@@ -711,26 +642,45 @@ object Dedup {
   // withValue only restores the calling thread. Nothing here needs
   // child-thread inheritance: the thresholds are read during plan
   // construction and guard counts, both on the calling thread.
-  private val guardOverride =
-    new ThreadLocal[Option[(Long, Long)]] {
-      override def initialValue: Option[(Long, Long)] = None
-    }
+  private val guardRecord = ThreadLocal.withInitial[Guards](() => Guards())
 
-  /** Run `body` with thread-scoped guard thresholds
-    * (broadcastMaxPairs, driverMaxPairs). Safe to use while other jobs
-    * run in the same session — ONLY the calling thread sees the
-    * override (threads it spawns do not inherit it).
+  /** The guards in force on this thread. */
+  def guards: Guards = guardRecord.get()
+
+  /** Run `body` with this thread's guards changed by `f`, e.g.
+    * `withGuards(_.copy(broadcastMaxPairs = 0L))`. Safe while other jobs
+    * run in the same session (BatchRunner runs jobs on a thread pool):
+    * only the calling thread sees the change, and threads it spawns do
+    * not inherit it.
     */
-  def withGuardThresholds[T](broadcastMax: Long, driverMax: Long)
-      (body: => T): T = {
-    val prev = guardOverride.get()
-    guardOverride.set(Some((broadcastMax, driverMax)))
-    try body finally guardOverride.set(prev)
+  def withGuards[T](f: Guards => Guards)(body: => T): T = {
+    val prev = guardRecord.get()
+    guardRecord.set(f(prev))
+    try body finally guardRecord.set(prev)
   }
 
-  /** Broadcast-pin `df` only when the measured candidate count allows it. */
-  private def pinIfSmall(df: DataFrame, pairCount: Long): DataFrame =
-    if (pairCount <= broadcastMaxPairs) broadcast(df) else df
+  /** Estimated hashed-relation bytes for `rows` vectors of `dim`
+    * elements plus id + norm (8 B/element is deliberately conservative
+    * for float32 payloads — it absorbs per-row object/offset overhead).
+    */
+  private[operators] def vecBroadcastBytes(rows: Long, dim: Int): Long =
+    rows * (dim.toLong + 2L) * 8L
+
+  /** Whether a side of at most `rows` rows and `bytes` estimated bytes
+    * passes the broadcast guards.
+    */
+  private def fits(rows: Long, bytes: Long): Boolean = {
+    val g = guards
+    rows <= g.broadcastMaxPairs && bytes <= g.broadcastMaxVecBytes
+  }
+
+  /** The one broadcast decision of the near-dup joins: pin `df` when its
+    * measured row bound (and, for a vector payload, its byte estimate)
+    * [[fits]]; otherwise leave the join to the planner.
+    */
+  private[operators] def pin(df: DataFrame, rows: Long,
+      bytes: Long = 0L): DataFrame =
+    if (fits(rows, bytes)) broadcast(df) else df
 
   /** Broadcast-pin guard count. Deliberately a FULL `count()` even
     * though the pin decision only needs `n <= bound`: every call site
@@ -743,7 +693,7 @@ object Dedup {
     * `toRdd.mapPartitions` variant was benchmarked and lost ~2× on the
     * incremental-dedup family at sf0.1 for exactly these reasons. What
     * DOES bound the per-batch action overhead is count REUSE: each
-    * incremental path runs ONE guard count per shared input and derives
+    * near-dup plan runs ONE guard count per shared input and derives
     * every dependent pin decision from it. The same reuse reaches the
     * cluster tail: the verify's candidate count is handed on as the
     * [[PairSet]] bound, so [[dropClusterLosers]] picks its driver path
@@ -751,43 +701,6 @@ object Dedup {
     */
   private[graft] def guardCount(df: DataFrame): Long =
     df.count()
-
-  /** Exact-Jaccard verification of a candidate-pair set. Both joins
-    * BROADCAST the candidate side explicitly when the candidate count is
-    * broadcast-safe: the corpus shingle table is then streamed in place
-    * (zero shuffle of shingle arrays) regardless of what the optimizer's
-    * stats say. Without the hint, AQE usually picks broadcast anyway at
-    * test scale — but a stats misprediction at 100 TB would fall back to
-    * sort-merge and shuffle every shingle array in the corpus to verify a
-    * candidate set of a few thousand rows. Broadcast payload is
-    * O(|pairs|) for the first hop and O(|pairs| × avg doc shingles) for
-    * the second — candidate-bounded, not corpus-bounded, and guarded by
-    * [[broadcastMaxPairs]] for the dup-catastrophic tail where even the
-    * candidate set is too big to ship.
-    */
-  private def verifyJaccard(pairs: DataFrame, sh: DataFrame, threshold: Double): PairSet =
-    verifyJaccardBetween(pairs, sh, sh, threshold)
-
-  /** Two-table variant: `id_a` resolves shingles in `shA`, `id_b` in
-    * `shB` — the incremental path verifies batch docs against corpus
-    * docs, the self-dedup path passes the same table twice. The verified
-    * pairs are a filtered subset of the candidates, so the candidate
-    * guard count rides along as their bound.
-    */
-  private def verifyJaccardBetween(pairs: DataFrame, shA: DataFrame,
-      shB: DataFrame, threshold: Double): PairSet = {
-    val p = CacheScope.persist(pairs) // guard-counted for the broadcast pin, then joined
-    val nPairs = guardCount(p)
-    val withA = shA.select(col("id").as("id_a"), col("sh").as("sh_a"))
-      .join(pinIfSmall(p, nPairs), "id_a")
-    PairSet(shB.select(col("id").as("id_b"), col("sh").as("sh_b"))
-      .join(pinIfSmall(withA, nPairs), "id_b")
-      .withColumn("jaccard",
-        size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-          size(array_union(col("sh_a"), col("sh_b"))).cast("double"))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard"), Some(nPairs))
-  }
 
   /** A near-dup pair set (`id_a`, `id_b`, …) plus, when its producer ran
     * one, the candidate guard count: the verified pairs are a filtered
@@ -801,6 +714,191 @@ object Dedup {
   private[operators] final case class PairSet(pairs: DataFrame,
       bound: Option[Long] = None,
       rows: Option[Array[org.apache.spark.sql.Row]] = None)
+
+  /** The key half of a near-dup family: `of` maps a family table to
+    * (id, bk) candidate keys; two rows sharing a key are a candidate
+    * pair. Keys with more than `maxDf` rows are dropped first
+    * ([[capHotKeys]]; 0 = off). `probe` keys the batch side of a store
+    * check when it differs from `of` (multi-probe), at most `perRow`
+    * keys per row — the bound the batch-key pin multiplies the row
+    * count by.
+    */
+  private[operators] final case class Keys(of: DataFrame => DataFrame,
+      perRow: Int, maxDf: Int = 0,
+      probe: Option[DataFrame => DataFrame] = None)
+
+  /** The verify half: a pair's `score` is `measure` over the `payload`
+    * columns of both rows (`a(c)` / `b(c)` read column `c` of each side),
+    * and the pair is kept where `keep(score)` holds. `rowBytes` > 0
+    * marks a VECTOR payload of that many estimated bytes per row; see
+    * [[NearDup.joined]] for the two join shapes.
+    */
+  private[operators] final case class Verify(payload: Seq[String],
+      score: String, measure: (String => Column, String => Column) => Column,
+      keep: Column => Column, rowBytes: Long = 0L)
+
+  /** One near-dup family — MinHash, SimHash, embedding buckets or
+    * SemDeDup clusters — on the shared candidate → verify → store-check
+    * plan. `table` turns (id, source) rows into the family table
+    * (id, payload…); `driver` is the family's driver path, tried before
+    * the joins (MinHash only).
+    *
+    * Every broadcast of the plan goes through [[pin]], sized by ONE
+    * guard count per shared input: the distinct candidates (self pairs
+    * and store candidates alike), the batch table for the batch-key pin
+    * and a vector batch's byte gate.
+    */
+  private[operators] final case class NearDup(
+      table: (DataFrame, String, String) => DataFrame,
+      keys: Keys, verify: Verify,
+      driver: DataFrame => Option[PairSet] = _ => None) {
+    import verify._
+
+    def pairsOf(df: DataFrame, idCol: String, srcCol: String): PairSet =
+      pairs(table(df, idCol, srcCol))
+
+    /** Verified pairs (`id_a` < `id_b`, score) within a family table:
+      * the driver path if it answers, else the key self-join — one
+      * shuffle on the compact key, never an all-pairs comparison — and
+      * the verify joins. The raw key table is persisted (the self-join
+      * reads it twice, and [[capHotKeys]] reads its input twice too).
+      *
+      * A VECTOR payload picks its verify shape by the table's size:
+      *  - the whole table [[fits]] the pins (incremental BATCHES, up to
+      *    ~4M vectors): FUSED verify. The vector table broadcasts into
+      *    both lookup hops, so candidates are verified AS THE KEY JOIN
+      *    EMITS them and the distinct runs AFTER the threshold filter,
+      *    on the near-dup pairs themselves, never on the candidate
+      *    multiset — which at recall-aggressive configs (few planes,
+      *    many tables) is a large fraction of all pairs and was
+      *    measured as the 4.02× at-10×-data outlier in r18's
+      *    BENCH_SCALE. Duplicate verification is bounded by ×tables,
+      *    and equal cosines collapse bit-exactly. This branch has no
+      *    candidate count, so its pairs carry no bound.
+      *  - otherwise (whole-corpus self-dedup at 100 TB): the narrow
+      *    shape below, with the table first pruned to the candidate ids
+      *    (one broadcast semi-join stream) and persisted.
+      * The size decision counts `t` UNPERSISTED when the caller did not
+      * persist it: persisting first would write a whole corpus to cache
+      * just to learn it is the whole-corpus regime; a parquet-backed
+      * count is footer-cheap, and the incremental callers pass a
+      * batch-bounded, persisted table.
+      */
+    def pairs(t: DataFrame): PairSet = driver(t).getOrElse {
+      val raw = CacheScope.persist(
+        Similarity.obsCount(keys.of(t), "graft.neardup.batch_bucket_rows"))
+      val keyed =
+        if (keys.maxDf <= 0) raw
+        else CacheScope.persist(capHotKeys(raw, "bk", keys.maxDf))
+      val cands = Similarity.obsCount(keyed.as("x")
+        .join(keyed.as("y"),
+          col("x.bk") === col("y.bk") && col("x.id") < col("y.id"))
+        .select(col("x.id").as("id_a"), col("y.id").as("id_b")),
+        "graft.neardup.candidate_pairs")
+      lazy val nRows = guardCount(t)
+      if (rowBytes > 0 && fits(nRows, nRows * rowBytes)) {
+        val vecs = CacheScope.persist(t)
+        PairSet(Similarity.obsCount(joined(cands, nRows, vecs, nRows,
+          Some(vecs), nRows), "graft.neardup.verified_pairs").distinct())
+      } else {
+        val cp = CacheScope.persist(cands.distinct())
+        val n = guardCount(cp)
+        val side =
+          if (rowBytes == 0) t
+          else CacheScope.persist(t.join(pin(cp.select(col("id_a").as("id"))
+            .union(cp.select(col("id_b").as("id"))).distinct(), n),
+            Seq("id"), "left_semi"))
+        // a pruned side holds at most min(2·pairs, |t|) rows
+        lazy val bound = math.min(2L * n, nRows)
+        PairSet(Similarity.obsCount(joined(cp, n, side, bound, Some(side),
+          bound), "graft.neardup.verified_pairs"), Some(n))
+      }
+    }
+
+    /** Verified pairs of batch rows against a store: `st` is the batch's
+      * family table (persisted, `n` rows), `storeKeys`' first two columns
+      * the store id and key, whatever their names. The batch's keys are
+      * pinned for broadcast when
+      * `n × perRow` is within the guard, so the store streams in place
+      * (a store bucketed on its key reads with no Exchange when the pin
+      * drops); the distinct (batch id, store id) candidates are
+      * guard-counted once. `storeDocs`: the store's (`idCol`, `srcCol`)
+      * documents, read ONLY for candidate ids (a semi-join pushed down to
+      * the scan) and turned into the store side's table; None: the store
+      * id is its own payload (a stored simhash).
+      */
+    def pairsAgainst(st: DataFrame, n: Long, storeKeys: DataFrame,
+        storeDocs: Option[DataFrame], idCol: String,
+        srcCol: String): PairSet = {
+      val bk = capHotKeys(keys.probe.getOrElse(keys.of)(st), "bk", keys.maxDf)
+      val c = storeKeys.columns
+      val sk = storeKeys.select(col(c(0)).as("cid"), col(c(1)).as("cbk"))
+      val cands = CacheScope.persist(Similarity.obsCount(
+        capHotKeys(sk, "cbk", keys.maxDf)
+          .join(pin(bk, n * keys.perRow), col("bk") === col("cbk"))
+          .select(col("id").as("id_a"), col("cid").as("id_b"))
+          .distinct(), "graft.neardup.store_candidates"))
+      val nC = guardCount(cands)
+      val docs = storeDocs.map(d => table(d.join(pin(cands
+        .select(col("id_b").as(idCol)).distinct(), nC), Seq(idCol), "left_semi"),
+        idCol, srcCol))
+      PairSet(joined(cands, nC, st, n, docs, nC), Some(nC))
+    }
+
+    /** Incremental near-dup removal: keep the batch rows that survive
+      * in-batch clustering ([[pairs]] → [[dropClusterLosers]], min-id
+      * survivor per transitive cluster) and are within the threshold of
+      * NO store row ([[pairsAgainst]] on the survivors' slice of the
+      * ONE persisted batch table — an id semi-join, not a second pass of
+      * the family's hashing).
+      */
+    def dropIncremental(batch: DataFrame, idCol: String, srcCol: String,
+        storeKeys: DataFrame, storeDocs: Option[DataFrame]): DataFrame = {
+      val t = CacheScope.persist(table(batch, idCol, srcCol))
+      val survivors = CacheScope.persist(
+        dropClusterLosers(batch, idCol, pairs(t)))
+      val st = CacheScope.persist(
+        t.join(survivors.select(col(idCol).as("id")), Seq("id"), "left_semi"))
+      val against = pairsAgainst(st, guardCount(st), storeKeys, storeDocs,
+        idCol, srcCol)
+      val hits = Similarity.obsCount(against.pairs
+        .select(col("id_a").as(idCol)).distinct(), "graft.neardup.store_hits")
+      survivors.join(pin(hits, against.bound.get), Seq(idCol), "left_anti")
+    }
+
+    /** Verify joins of candidate pairs (`id_a`, `id_b`; `n` of them) with
+      * side `a`'s table on `id_a` and side `b`'s on `id_b` (None: `id_b`
+      * is its own payload), kept where the score passes. Two shapes,
+      * both broadcast-pinned explicitly under the guards, so a stats
+      * misprediction at 100 TB cannot fall back to shuffling every
+      * payload in the corpus to verify a few thousand candidates:
+      *  - NARROW payloads (shingle arrays, hashes): the candidate side
+      *    is pinned into the first hop and the candidates with a's
+      *    payload into the second; the tables stream in place.
+      *    Broadcast payload is O(|pairs|) for the first hop and
+      *    O(|pairs| × payload) for the second — candidate-bounded.
+      *  - VECTOR payloads: each table side is pinned (row guard on the
+      *    candidates, byte gate on `aRows` / `bRows` vectors) and the
+      *    candidates stream through both hops.
+      */
+    private def joined(cands: DataFrame, n: Long, a: DataFrame,
+        aRows: => Long, b: Option[DataFrame], bRows: => Long): DataFrame = {
+      def side(t: DataFrame, s: String): DataFrame = t.select(
+        col("id").as(s"id_$s") +: payload.map(c => col(c).as(s"${c}_$s")): _*)
+      val both =
+        if (rowBytes == 0) {
+          val withA = side(a, "a").join(pin(cands, n), "id_a")
+          b.fold(payload.foldLeft(withA)(
+            (d, c) => d.withColumn(s"${c}_b", col("id_b"))))(
+            t => side(t, "b").join(pin(withA, n), "id_b"))
+        } else cands
+          .join(pin(side(a, "a"), n, aRows * rowBytes), "id_a")
+          .join(pin(side(b.get, "b"), n, bRows * rowBytes), "id_b")
+      both.withColumn(score, measure(c => col(s"${c}_a"), c => col(s"${c}_b")))
+        .filter(keep(col(score)))
+        .select("id_a", "id_b", score)
+    }
+  }
 
   /** Connected components over a near-dup pair set. Returns
     * (id, component = min id of the cluster).
@@ -836,11 +934,11 @@ object Dedup {
     * through to the distributed loop otherwise. "Min" is Spark's order of
     * the id type on both paths ([[driverOrdering]]: strings by UTF-8
     * bytes), so a cluster keeps the same root either way. The removal
-    * tails also take pairs the driver built itself ([[minhashPairSet]]'s
+    * tails also take pairs the driver built itself ([[minhash]]'s
     * driver path) without collecting them.
     */
   def connectedComponents(pairs: DataFrame, maxIterations: Int = 20,
-      driverMaxPairs: Long = defaultDriverMaxPairs): DataFrame =
+      driverMaxPairs: Long = guards.driverMaxPairs): DataFrame =
     clusters(PairSet(pairs), maxIterations, driverMaxPairs) match {
       case Left(roots) => componentFrame(pairs, roots)
       case Right(comps) => comps
@@ -854,7 +952,7 @@ object Dedup {
     * the path.
     */
   private def clusters(pairs: PairSet, maxIterations: Int = 20,
-      driverMaxPairs: Long = defaultDriverMaxPairs): Either[java.util.HashMap[Any, Any], DataFrame] = {
+      driverMaxPairs: Long = guards.driverMaxPairs): Either[java.util.HashMap[Any, Any], DataFrame] = {
     val ids = pairs.pairs.select(col("id_a"), col("id_b"))
     val ord = driverOrdering(ids.schema("id_a").dataType)
     ord match {
@@ -1004,13 +1102,10 @@ object Dedup {
       bands: Int = 16,
       rowsPerBand: Int = 4,
       threshold: Double = 0.9,
-      losersBroadcastMax: Long = broadcastMaxPairs,
       maxBandDf: Int = 0
-  ): DataFrame = {
-    val pairs = minhashPairSet(df, idCol, textCol, shingleN, bands,
-      rowsPerBand, threshold, maxBandDf)
-    dropClusterLosers(df, idCol, pairs, losersBroadcastMax)
-  }
+  ): DataFrame =
+    dropClusterLosers(df, idCol, minhash(shingleN, bands, rowsPerBand,
+      threshold, maxBandDf).pairsOf(df, idCol, textCol))
 
   /** pairs → connected components → anti-join the non-survivors (everyone
     * but the min-id member of each transitive cluster) out of `df`.
@@ -1026,7 +1121,7 @@ object Dedup {
     * pairs once; above the ceiling it runs the distributed loop and
     * guard-counts the persisted losers.
     *
-    * Pairs the driver built ([[minhashPairSet]]'s driver path) need no
+    * Pairs the driver built ([[minhash]]'s driver path) need no
     * collect, and their losers — a subset of a batch the driver already
     * held — leave `df` through one filter, `NOT coalesce(id IN losers,
     * false)`: no broadcast job, and a null id stays, as under
@@ -1036,7 +1131,8 @@ object Dedup {
     * with other losers compiles no new class.
     */
   private[operators] def dropClusterLosers(df: DataFrame, idCol: String,
-      pairs: PairSet, losersBroadcastMax: Long): DataFrame = {
+      pairs: PairSet): DataFrame = {
+    val losersBroadcastMax = guards.losersMax
     val (losers, nLosers) = clusters(pairs) match {
       case Left(roots) =>
         val ids = Seq.newBuilder[Any]
@@ -1098,9 +1194,9 @@ object Dedup {
     * over component-sized groups.
     */
   private[operators] def dropClusterLosersKeepBest(df: DataFrame,
-      idCol: String, scoreCol: String, pairs: PairSet,
-      losersBroadcastMax: Long): DataFrame = {
+      idCol: String, scoreCol: String, pairs: PairSet): DataFrame = {
     import org.apache.spark.sql.expressions.Window
+    val losersBroadcastMax = guards.losersMax
     val (comps, nComp) = clusters(pairs) match {
       case Left(roots) => (componentFrame(pairs.pairs, roots), roots.size.toLong)
       case Right(c) =>
@@ -1138,13 +1234,10 @@ object Dedup {
       bands: Int = 16,
       rowsPerBand: Int = 4,
       threshold: Double = 0.9,
-      losersBroadcastMax: Long = broadcastMaxPairs,
       maxBandDf: Int = 0
-  ): DataFrame = {
-    val pairs = minhashPairSet(df, idCol, textCol, shingleN, bands,
-      rowsPerBand, threshold, maxBandDf)
-    dropClusterLosersKeepBest(df, idCol, scoreCol, pairs, losersBroadcastMax)
-  }
+  ): DataFrame =
+    dropClusterLosersKeepBest(df, idCol, scoreCol, minhash(shingleN, bands,
+      rowsPerBand, threshold, maxBandDf).pairsOf(df, idCol, textCol))
 
   /** SimHash near-dup REMOVAL: [[simhashNearDupPairs]] → transitive
     * clusters → min-id survivor per cluster (the simhash twin of
@@ -1156,12 +1249,10 @@ object Dedup {
       textCol: String,
       maxHamming: Int = 3,
       bits: Int = 64,
-      hasher: SimhashHasher = SimhashHasher.Xx,
-      losersBroadcastMax: Long = broadcastMaxPairs
-  ): DataFrame = {
-    val pairs = simhashPairSet(df, idCol, textCol, maxHamming, bits, hasher)
-    dropClusterLosers(df, idCol, pairs, losersBroadcastMax)
-  }
+      hasher: SimhashHasher = SimhashHasher.Xx
+  ): DataFrame =
+    dropClusterLosers(df, idCol,
+      simhash(maxHamming, bits, hasher).pairsOf(df, idCol, textCol))
 
   /** Incremental SIMHASH dedup — the Hamming-distance twin of
     * [[dropNearDuplicatesIncremental]]: dedup a new batch against an
@@ -1177,9 +1268,9 @@ object Dedup {
     * corpus text bytes); both sides explode their 4 pigeonhole chunk
     * keys MAP-SIDE, the candidate join shuffles rows sized by the BATCH
     * (batch side pinned broadcast when small, so the corpus store
-    * streams in place), and the Hamming verify is an inline bit_count
-    * filter on the joined row — no second join, no corpus-sized shuffle
-    * anywhere.
+    * streams in place), and the Hamming verify reads the stored hash
+    * from the candidate itself — no corpus-sized shuffle anywhere. The
+    * plan is the near-dup core's ([[NearDup.dropIncremental]]).
     */
   def dropSimhashDuplicatesIncremental(
       batch: DataFrame,
@@ -1191,11 +1282,9 @@ object Dedup {
       hasher: SimhashHasher = SimhashHasher.Xx
   ): DataFrame = {
     val cname = corpusHashes.columns // accept any column names: (id, sh)
-    dropSimhashIncrementalFromChunks(batch, idCol, textCol,
-      corpusHashes
-        .select(col(cname(1)).as("csh"))
-        .select(col("csh"),
-          explode(simhashChunkKeys(col("csh"), bits)).as("cck")),
+    dropSimhashDuplicatesIncrementalChunked(batch, idCol, textCol,
+      corpusHashes.select(col(cname(1)).as("sh"))
+        .select(col("sh"), explode(simhashChunkKeys(col("sh"), bits)).as("ck")),
       maxHamming, bits, hasher)
   }
 
@@ -1205,7 +1294,7 @@ object Dedup {
     * join's fallback regime (batch too big to broadcast — exactly the
     * 100 TB tail) reads the store with ZERO Exchange; the (id, sh)
     * store above must re-explode and re-shuffle its chunks every batch
-    * in that regime.
+    * in that regime. A stored hash is its own store id and payload.
     */
   def dropSimhashDuplicatesIncrementalChunked(
       batch: DataFrame,
@@ -1215,43 +1304,9 @@ object Dedup {
       maxHamming: Int = 3,
       bits: Int = 64,
       hasher: SimhashHasher = SimhashHasher.Xx
-  ): DataFrame = {
-    val cname = corpusChunks.columns // accept any column names: (sh, ck)
-    dropSimhashIncrementalFromChunks(batch, idCol, textCol,
-      corpusChunks.select(col(cname(0)).as("csh"), col(cname(1)).as("cck")),
-      maxHamming, bits, hasher)
-  }
-
-  private def dropSimhashIncrementalFromChunks(
-      batch: DataFrame,
-      idCol: String,
-      textCol: String,
-      cChunks: DataFrame, // (csh, cck)
-      maxHamming: Int,
-      bits: Int,
-      hasher: SimhashHasher
-  ): DataFrame = {
-    // ONE hash pass over the batch: the in-batch pair detection and the
-    // corpus check both read this table (the survivor slice is a semi-join
-    // on ids, not a re-tokenize of the surviving text)
-    val bhAll = CacheScope.persist(
-      simhashTable(batch, idCol, textCol, bits, hasher))
-    val pairs = simhashPairsFromTable(bhAll, maxHamming, bits)
-    val survivors = CacheScope.persist(
-      dropClusterLosers(batch, idCol, pairs, broadcastMaxPairs))
-    val bh = CacheScope.persist(bhAll
-      .join(survivors.select(col(idCol).as("id")), Seq("id"), "left_semi"))
-      // guard-counted for the broadcast guard, then chunk-joined
-    val nBatch = guardCount(bh)
-    val bChunks = bh.select(col("id"), col("sh"),
-      explode(simhashChunkKeys(col("sh"), bits)).as("ck"))
-    val hits = cChunks
-      .join(pinIfSmall(bChunks, nBatch * 4), col("ck") === col("cck"))
-      .filter(bit_count(col("sh").bitwiseXOR(col("csh"))) <= maxHamming)
-      .select(col("id").as(idCol))
-      .distinct()
-    survivors.join(pinIfSmall(hits, nBatch), Seq(idCol), "left_anti")
-  }
+  ): DataFrame =
+    simhash(maxHamming, bits, hasher)
+      .dropIncremental(batch, idCol, textCol, corpusChunks, None)
 
   private def simhashMeta(bits: Int, hasher: SimhashHasher): Map[String, Any] =
     Map("bits" -> bits, "hasher" -> hasher.toString)
@@ -1336,7 +1391,11 @@ object Dedup {
     * Semantics mirror [[dropDuplicatesIncremental]]: keep batch rows that
     * (a) survive within-batch near-dup clustering ([[dropNearDuplicates]]
     * — min-id survivor per transitive cluster) and (b) are not within
-    * `threshold` Jaccard of ANY corpus document.
+    * `threshold` Jaccard of ANY corpus document. The plan is the near-dup
+    * core's ([[NearDup.dropIncremental]]) over ONE persisted shingle
+    * table; its in-batch half is the pair set [[dropNearDuplicates]]
+    * builds, so a batch within the driver budget is gathered once and
+    * paired on the driver.
     */
   def dropNearDuplicatesIncremental(
       batch: DataFrame,
@@ -1348,46 +1407,9 @@ object Dedup {
       bands: Int = 16,
       rowsPerBand: Int = 4,
       threshold: Double = 0.9
-  ): DataFrame = {
-    // ONE shingle + band-key pass over the batch: in-batch clustering and
-    // the corpus LSH join both read these tables (the survivor slices are
-    // id semi-joins, not a re-shingle of the surviving text)
-    val shAll = CacheScope.persist(shingleTable(batch, idCol, textCol, shingleN))
-    val bandsAll = CacheScope.persist(bandKeysFromShingles(shAll, bands, rowsPerBand))
-    val inBatchCands = bandsAll.as("x")
-      .join(bandsAll.as("y"),
-        col("x.bk") === col("y.bk") && col("x.id") < col("y.id"))
-      .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
-      .distinct()
-    val pairs = verifyJaccard(inBatchCands, shAll, threshold)
-    val survivors = CacheScope.persist(
-      dropClusterLosers(batch, idCol, pairs, broadcastMaxPairs))
-    val survIds = survivors.select(col(idCol).as("id"))
-    val shBatch = CacheScope.persist(shAll.join(survIds, Seq("id"), "left_semi"))
-    val batchBands = CacheScope.persist(
-      bandsAll.join(survIds, Seq("id"), "left_semi"))
-      // guard-counted for the broadcast guard, then LSH-joined
-    val nBatchKeys = guardCount(batchBands)
-    val bandsName = corpusBands.columns // accept any column names: (id, bk)
-    val corpusKeys = corpusBands.select(
-      col(bandsName(0)).as("cid"), col(bandsName(1)).as("cbk"))
-    // LSH candidates: batch keys × corpus store on the 8-byte band key.
-    // Batch side pinned broadcast when small — the corpus store streams.
-    val cands = CacheScope.persist(corpusKeys
-      .join(pinIfSmall(batchBands, nBatchKeys), col("bk") === col("cbk"))
-      .select(col("id").as("id_a"), col("cid").as("id_b"))
-      .distinct())
-    // one guard count shared by every downstream pin decision
-    val nCands = guardCount(cands)
-    // shingle ONLY the candidate corpus docs (semi-join prune)
-    val candCorpusIds = cands.select(col("id_b").as(idCol)).distinct()
-    val candDocs = corpusDocs
-      .join(pinIfSmall(candCorpusIds, nCands), Seq(idCol), "left_semi")
-    val shCorpus = shingleTable(candDocs, idCol, textCol, shingleN)
-    val losers = verifyJaccardBetween(cands, shBatch, shCorpus, threshold)
-      .pairs.select(col("id_a").as(idCol)).distinct()
-    survivors.join(pinIfSmall(losers, nCands), Seq(idCol), "left_anti")
-  }
+  ): DataFrame =
+    minhash(shingleN, bands, rowsPerBand, threshold, maxBandDf = 0)
+      .dropIncremental(batch, idCol, textCol, corpusBands, Some(corpusDocs))
 
   /** (id, bk) rows of [[minhashBandKeys]] — the incremental near-dup
     * store, bucketed on `bk` in the table layout.
@@ -1717,45 +1739,19 @@ object Dedup {
       hasher: SimhashHasher = SimhashHasher.Xx,
       maxChunkDf: Int = 0
   ): DataFrame =
-    simhashPairSet(df, idCol, textCol, maxHamming, bits, hasher, maxChunkDf).pairs
+    simhash(maxHamming, bits, hasher, maxChunkDf)
+      .pairsOf(df, idCol, textCol).pairs
 
-  private def simhashPairSet(df: DataFrame, idCol: String, textCol: String,
-      maxHamming: Int, bits: Int, hasher: SimhashHasher,
-      maxChunkDf: Int = 0): PairSet =
-    simhashPairsFromTable(
-      // reused by the chunk explode (×2 self-join) + verify
-      CacheScope.persist(simhashTable(df, idCol, textCol, bits, hasher)),
-      maxHamming, bits, maxChunkDf)
-
-  /** Pair detection over an already-built (id, sh) table — shared by the
-    * self-dedup path above and the incremental path (which reuses the
-    * batch table for the corpus check instead of rehashing). The
-    * candidate guard count bounds the verified pairs (see [[PairSet]]).
+  /** The SimHash family of the near-dup core: (id, sh) simhash tables,
+    * the 4 pigeonhole chunk keys, exact Hamming distance.
     */
-  private def simhashPairsFromTable(hashed: DataFrame, maxHamming: Int,
-      bits: Int, maxChunkDf: Int = 0): PairSet = {
-    val chunked = capHotKeys(
-      hashed.select(col("id"),
-        explode(simhashChunkKeys(col("sh"), bits)).as("ck")),
-      "ck", maxChunkDf)
-    val cands = chunked.as("x")
-      .join(chunked.as("y"), col("x.ck") === col("y.ck") && col("x.id") < col("y.id"))
-      .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
-      .distinct()
-    // explicit broadcast of the candidate side (see verifyJaccard): the
-    // full simhash table streams, never shuffles, even if stats mispredict.
-    // Same broadcastMaxPairs guard — unhinted join on dup-catastrophic
-    // candidate sets that would blow the broadcast ceiling.
-    val cp = CacheScope.persist(cands)
-    val nPairs = guardCount(cp)
-    val withA = hashed.select(col("id").as("id_a"), col("sh").as("sh_a"))
-      .join(pinIfSmall(cp, nPairs), "id_a")
-    PairSet(hashed.select(col("id").as("id_b"), col("sh").as("sh_b"))
-      .join(pinIfSmall(withA, nPairs), "id_b")
-      .withColumn("hamming", bit_count(col("sh_a").bitwiseXOR(col("sh_b"))))
-      .filter(col("hamming") <= maxHamming)
-      .select("id_a", "id_b", "hamming"), Some(nPairs))
-  }
+  private[operators] def simhash(maxHamming: Int, bits: Int,
+      hasher: SimhashHasher, maxChunkDf: Int = 0): NearDup =
+    NearDup((df, id, text) => simhashTable(df, id, text, bits, hasher),
+      Keys(_.select(col("id"),
+        explode(simhashChunkKeys(col("sh"), bits)).as("bk")), 4, maxChunkDf),
+      Verify(Seq("sh"), "hamming",
+        (a, b) => bit_count(a("sh").bitwiseXOR(b("sh"))), _ <= maxHamming))
 
   // ------------------------------------------------------ blocked Jaccard
 

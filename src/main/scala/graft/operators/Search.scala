@@ -770,10 +770,10 @@ object Search {
 
   /** Minimum time (ms) a merged-away or orphaned segment directory must
     * have been debris before [[compactIndexSegments]]' step-0 sweep
-    * reclaims it (default 10 min). Same override ladder as
-    * [[Dedup.broadcastMaxPairs]]: [[withDebrisRetention]] thread-scoped
-    * for in-process callers (specs), `-Dgraft.search.debrisMinAgeMs=N`
-    * for launch configuration. 0 restores eager one-cycle reclamation.
+    * reclaims it (default 10 min). Overrides, checked in order:
+    * [[withDebrisRetention]] thread-scoped for in-process callers
+    * (specs), `-Dgraft.search.debrisMinAgeMs=N` for launch
+    * configuration. 0 restores eager one-cycle reclamation.
     */
   def debrisMinAgeMs: Long =
     debrisOverride.get()
@@ -781,7 +781,7 @@ object Search {
       .getOrElse(600000L)
 
   // plain ThreadLocal, not DynamicVariable — same child-thread
-  // inheritance reasoning as Dedup.guardOverride
+  // inheritance reasoning as Dedup.guardRecord
   private val debrisOverride = new ThreadLocal[Option[Long]] {
     override def initialValue: Option[Long] = None
   }

@@ -153,26 +153,16 @@ object Similarity {
       tables: Int = 8,
       dim: Int = 64,
       maxBucketDf: Int = 0
-  ): DataFrame = {
-    val base = df.select(col(idCol).as("id"), col(vecCol).as("v"))
-    // Hot-bucket cap (default OFF, the oracle-checked configuration):
-    // the bucket self-join below is Σdf² over bucket keys, and a
-    // degenerate embedding distribution — mass-duplicated vectors,
-    // all-zero rows, exactly what a crawl corpus contains — piles one
-    // bucket high enough that the CANDIDATE join (not the guarded
-    // verify) is the scale-killer. Same mechanism and recall trade as
-    // the minhash band cap: see Dedup.capHotKeys. The RAW bucket table
-    // is what gets persisted — capHotKeys reads its input twice (df
-    // count + anti-join probe), so persisting only the capped output
-    // would run the HyperplaneBits kernel pass twice.
-    val raw = CacheScope.persist(
-      bucketKeys(base, "v", Seq("id"), planes, tables, dim))
-    val bucketed =
-      if (maxBucketDf > 0)
-        CacheScope.persist(Dedup.capHotKeys(raw, "bk", maxBucketDf))
-      else raw // both sides of the self-join
-    nearDupPairsFromBuckets(base, bucketed, threshold, dim).pairs
-  }
+  ): DataFrame =
+    // Hot-bucket cap (default OFF, the oracle-checked configuration): the
+    // bucket self-join is Σdf² over bucket keys, and a degenerate
+    // embedding distribution — mass-duplicated vectors, all-zero rows,
+    // exactly what a crawl corpus contains — piles one bucket high enough
+    // that the CANDIDATE join (not the guarded verify) is the
+    // scale-killer. Same mechanism and recall trade as the minhash band
+    // cap: see Dedup.capHotKeys.
+    embeddingNearDup(lshKeys(planes, tables, dim, maxBucketDf), threshold,
+      dim).pairsOf(df, idCol, vecCol).pairs
 
   /** Collision probability of two vectors with cosine `c` in ONE
     * `planes`-bit random-hyperplane bucket: (1 − θ/π)^planes with
@@ -307,7 +297,7 @@ object Similarity {
     * hottest edge of the plan (the candidate join's output), which is
     * exactly where a benchmark must not pay an observer tax. Enabled
     * thread-locally (same confinement reasoning as
-    * [[Dedup.withGuardThresholds]]); harvest via a
+    * [[Dedup.withGuards]]); harvest via a
     * `QueryExecutionListener` reading `observedMetrics` — see
     * NearDupAttributionSpec.
     */
@@ -321,117 +311,33 @@ object Similarity {
     override def initialValue: Boolean = false
   }
 
-  private def obsCount(df: DataFrame, name: String): DataFrame =
+  private[operators] def obsCount(df: DataFrame, name: String): DataFrame =
     if (planAttribution.get()) df.observe(name, count(lit(1)).as("n"))
     else df
 
-  /** Candidate self-join + exact-cosine verify over an already-built
-    * (persisted) bucket table — shared by the self-dedup path above,
-    * SemDeDup, and the incremental path, which reuses the SAME bucket
-    * table for the store join instead of re-hashing the batch.
-    *
-    * ADAPTIVE verify shape, decided by |base| against the shared
-    * [[Dedup.broadcastMaxPairs]] guard (so the forced bench entries and
-    * `withGuardThresholds(0, …)` exercise the fallback) AND by the
-    * estimated broadcast payload against [[Dedup.broadcastMaxVecBytes]]
-    * — the row guard alone is byte-blind, and at production embedding
-    * dims (768–4096) a row-guard-passing batch is a tens-of-GB
-    * broadcast that fails past Spark's 8 GB ceiling; the byte gate
-    * routes exactly those batches to the fallback shape that already
-    * handles them (`dim` is in hand at every caller):
-    *
-    *  - |base| broadcast-safe (incremental BATCHES, up to ~4M vectors):
-    *    FUSED verify. The vector+norm table broadcasts into both lookup
-    *    hops, so candidate pairs are cosine-verified AS THE BUCKET JOIN
-    *    EMITS them, and dedup happens AFTER the threshold filter —
-    *    where the survivors are the near-dup pairs themselves — never
-    *    on the candidate multiset. At recall-aggressive configs (few
-    *    planes, many tables) the candidate set is a large FRACTION of
-    *    all-pairs (4 planes on random vectors: ~40% of n²/2), and the
-    *    previous distinct-then-lookup shape shuffled it three times
-    *    (the distinct, then two sort-merge verify joins once the pair
-    *    count blew past the broadcast guard) — measured as the 4.02×
-    *    at-10×-data outlier in r18's BENCH_SCALE. The fused shape's
-    *    only per-candidate cost is two broadcast-hash probes and one
-    *    codegen'd dot product; duplicate verification across tables is
-    *    bounded by ×tables and skipped for the distinct-shuffle it
-    *    replaces. Verified cosine is the same expression on the same
-    *    float inputs, so duplicates collapse bit-exactly.
-    *
-    *  - |base| too big to broadcast (whole-corpus self-dedup at 100 TB):
-    *    the candidate-bounded shape — distinct first, ONE stream over
-    *    the corpus keeps only candidate vectors (broadcast semi-join on
-    *    the id set), both lookups broadcast that slim slice while the
-    *    pair count allows (see Dedup.verifyJaccard; past the guard the
-    *    joins run unhinted instead of risking the 8 GB ceiling). That
-    *    distinct-candidate count bounds the verified pairs, so it rides
-    *    along for the cluster tail; the fused branch has no such count.
+  /** The embedding families of the near-dup core ([[Dedup.NearDup]]):
+    * (id, v, nrm) tables, any blocking `keys`, exact cosine
+    * ([[cosineOrNull]]) — a VECTOR payload, so every vector pin ANDs the
+    * row guard with the byte gate and the in-batch verify is the fused
+    * shape whenever the whole table fits the pins.
     */
-  private def nearDupPairsFromBuckets(base: DataFrame, bucketed: DataFrame,
-      threshold: Double, dim: Int): Dedup.PairSet = {
-    val rawCands = obsCount(
-      bucketed.as("x")
-        .join(bucketed.as("y"),
-          col("x.bk") === col("y.bk") && col("x.id") < col("y.id"))
-        .select(col("x.id").as("id_a"), col("y.id").as("id_b")),
-      "graft.neardup.candidate_pairs")
-    // Decision count on the UNPERSISTED base — a documented deviation
-    // from guardCount's persist-first contract: this count decides
-    // whether base is cache-and-broadcast-sized at all, so persisting
-    // first would defeat the fallback's no-cache contract (the
-    // whole-corpus regime must never write 100 TB of cache blocks just
-    // to learn it is the whole-corpus regime). For parquet-backed
-    // inputs the count is footer-cheap (empty projection); for the
-    // incremental callers base is batch-bounded by construction.
-    val nBase = Dedup.guardCount(base)
-    if (nBase <= Dedup.broadcastMaxPairs &&
-        Dedup.vecBroadcastBytes(nBase, dim) <= Dedup.broadcastMaxVecBytes) {
-      val vecs = CacheScope.persist(base.withColumn("nrm", norm(col("v"))))
-      Dedup.PairSet(obsCount(
-        rawCands
-          .join(broadcast(vecs.select(col("id").as("id_a"),
-            col("v").as("va"), col("nrm").as("na"))), "id_a")
-          .join(broadcast(vecs.select(col("id").as("id_b"),
-            col("v").as("vb"), col("nrm").as("nb"))), "id_b")
-          .withColumn("cosine", cosineOrNull(
-            dotDouble(col("va"), col("vb")), col("na"), col("nb")))
-          .filter(col("cosine") >= threshold)
-          .select("id_a", "id_b", "cosine"),
-        "graft.neardup.verified_pairs")
-        .distinct())
-    } else {
-      val cp = CacheScope.persist(rawCands.distinct())
-      val nPairs = Dedup.guardCount(cp)
-      def pin(d: DataFrame): DataFrame =
-        if (nPairs <= Dedup.broadcastMaxPairs) broadcast(d) else d
-      val candIds = cp.select(col("id_a").as("id"))
-        .union(cp.select(col("id_b").as("id"))).distinct()
-      val candVecs = CacheScope.persist(
-        base.join(pin(candIds), Seq("id"), "left_semi")
-          .withColumn("nrm", norm(col("v"))))
-      // the candidate-VECTOR pins get the byte gate too (same
-      // blindness as the fused gate): |candVecs| ≤ min(2·pairs, |base|)
-      // without any extra count, so gate on that bound — ids-only pins
-      // above stay row-guarded (16 B/row is never the broadcast risk)
-      val candRowBound = math.min(2L * nPairs, nBase)
-      def pinVec(d: DataFrame): DataFrame =
-        if (nPairs <= Dedup.broadcastMaxPairs &&
-            Dedup.vecBroadcastBytes(candRowBound, dim) <=
-              Dedup.broadcastMaxVecBytes) broadcast(d)
-        else d
-      Dedup.PairSet(obsCount(
-        cp
-          .join(pinVec(candVecs.select(col("id").as("id_a"),
-            col("v").as("va"), col("nrm").as("na"))), "id_a")
-          .join(pinVec(candVecs.select(col("id").as("id_b"),
-            col("v").as("vb"), col("nrm").as("nb"))), "id_b")
-          .withColumn("cosine", cosineOrNull(
-            dotDouble(col("va"), col("vb")), col("na"), col("nb")))
-          .filter(col("cosine") >= threshold)
-          .select("id_a", "id_b", "cosine"),
-        "graft.neardup.verified_pairs"), Some(nPairs))
-    }
-  }
+  private[operators] def embeddingNearDup(keys: Dedup.Keys, threshold: Double,
+      dim: Int): Dedup.NearDup =
+    Dedup.NearDup((df, id, vec) => df.select(col(id).as("id"),
+        col(vec).as("v")).withColumn("nrm", norm(col("v"))),
+      keys,
+      Dedup.Verify(Seq("v", "nrm"), "cosine", (a, b) =>
+        cosineOrNull(dotDouble(a("v"), b("v")), a("nrm"), b("nrm")),
+        _ >= threshold, rowBytes = Dedup.vecBroadcastBytes(1L, dim)))
+
+  /** Multi-table hyperplane keys ([[bucketKeys]]); a store check probes
+    * `probes` buckets per table on the batch side.
+    */
+  private[operators] def lshKeys(planes: Int, tables: Int, dim: Int, maxDf: Int,
+      probes: Int = 1): Dedup.Keys =
+    Dedup.Keys(bucketKeys(_, "v", Seq("id"), planes, tables, dim),
+      tables * probes, maxDf,
+      probe = Some(bucketKeys(_, "v", Seq("id"), planes, tables, dim, probes)))
 
   /** Collect the first `numLists` vectors (in id order) as IVF coarse
     * centroids — an index-BUILD step, run once per index. Sampled data
@@ -648,16 +554,10 @@ object Similarity {
       maxListDf: Int = 0
   ): DataFrame = {
     require(centroids.nonEmpty, "semDedupPairs needs at least one centroid")
-    val base = df.select(col(idCol).as("id"), col(vecCol).as("v"))
-    val assigned = CacheScope.persist(base.select(col("id"),
-      bestListStruct(scoredListStructs(col("v"), centroids)).getField("l")
-        .as("bk")))
-    val blocked =
-      if (maxListDf > 0)
-        CacheScope.persist(Dedup.capHotKeys(assigned, "bk", maxListDf))
-      else assigned
-    nearDupPairsFromBuckets(base, blocked, threshold,
-      dim = centroids.head.length).pairs
+    embeddingNearDup(Dedup.Keys(
+        _.select(col("id"), listAssignment(col("v"), centroids).as("bk")),
+        1, maxListDf), threshold, dim = centroids.head.length)
+      .pairsOf(df, idCol, vecCol).pairs
   }
 
   // ---------------------------------------------------------- vector core
@@ -1731,97 +1631,20 @@ object Similarity {
       dim: Int = 64,
       maxBucketDf: Int = 0,
       probes: Int = 1
-  ): DataFrame = {
-    // ONE HyperplaneBits pass over the batch: in-batch clustering and the
-    // store join both read this bucket table (the survivor slice is an id
-    // semi-join, not a re-hash of the surviving vectors) — the same
-    // shared-first-stage shape as Dedup.dropNearDuplicatesIncremental's
-    // shAll/bandsAll.
+  ): DataFrame =
     // `probes > 1` multi-probes the STORE join only (the batch probes
     // its smallest-margin flip buckets per table, so the PERSISTED store
     // can run ~probes× fewer tables at equal recall — the store side
     // stays one key per (vector, table) and its plan is unchanged); the
     // within-batch self-join is symmetric and keeps single-probe keys.
-    // The probe path runs a second HyperplaneBits+margin pass over the
-    // SURVIVORS (margins aren't in the shared bucket table): one extra
-    // batch-bounded kernel scan, traded for a probes×-smaller persistent
-    // store — the store is per-corpus-vector, the scan per-batch-row.
-    // Hot-bucket cap (default OFF): capping here bounds BOTH the in-batch
-    // self-join and the batch side of the store join; the corpus side is
-    // capped independently below — a key hot on either side would
-    // otherwise make the candidate join Σ(df_batch × df_corpus) on that
-    // key. Recall trade documented at Dedup.capHotKeys. Persist the RAW
-    // table, then the capped view of it, so the kernel runs once even
-    // though capHotKeys reads its input twice.
-    val base = batch.select(col(idCol).as("id"), col(vecCol).as("v"))
-    val rawBuckets = CacheScope.persist(obsCount(
-      bucketKeys(base, "v", Seq("id"), planes, tables, dim),
-      "graft.neardup.batch_bucket_rows"))
-    val allBuckets =
-      if (maxBucketDf > 0)
-        CacheScope.persist(Dedup.capHotKeys(rawBuckets, "bk", maxBucketDf))
-      else rawBuckets
-    val pairs = nearDupPairsFromBuckets(base, allBuckets, threshold, dim)
-    val survivors = CacheScope.persist(
-      Dedup.dropClusterLosers(batch, idCol, pairs, Dedup.broadcastMaxPairs))
-    val bBuckets =
-      if (probes <= 1)
-        allBuckets
-          .join(survivors.select(col(idCol).as("id")), Seq("id"), "left_semi")
-      else {
-        val pk = bucketKeys(
-          survivors.select(col(idCol).as("id"), col(vecCol).as("v")), "v",
-          Seq("id"), planes, tables, dim, probes)
-        if (maxBucketDf > 0) Dedup.capHotKeys(pk, "bk", maxBucketDf) else pk
-      }
-    val cname = corpusBuckets.columns // accept any column names: (id, bk)
-    // Corpus-side hot-bucket cap: a partial-aggregated count over the
-    // store (one narrow row per distinct key — cheap even at 100 TB
-    // store scale) finds keys with df > cap; they are dropped by
-    // broadcast anti-join before the candidate join, so a boilerplate
-    // bucket in the CORPUS can't multiply against every batch row.
-    val corpusKeyed = Dedup.capHotKeys(corpusBuckets
-      .select(col(cname(0)).as("cid"), col(cname(1)).as("cbk")),
-      "cbk", maxBucketDf)
-    val cands = CacheScope.persist(obsCount(
-      corpusKeyed
-        .join(broadcast(bBuckets), col("bk") === col("cbk"))
-        .select(col("id").as("bid"), col("cid"))
-        .distinct(),
-      "graft.neardup.store_candidates"))
-    // one guard count shared by every downstream pin decision
-    val nCands = Dedup.guardCount(cands)
-    def pin(d: DataFrame): DataFrame =
-      if (nCands <= Dedup.broadcastMaxPairs) broadcast(d) else d
-    // vector-bearing pins AND the byte gate with the row guard (the
-    // row count alone is byte-blind at production dims — see
-    // Dedup.broadcastMaxVecBytes); candVecs rows ≤ nCands by
-    // construction, bVecs rows = |survivors| (persisted above, so this
-    // count materializes a cache the downstream joins reuse)
-    val nSurv = Dedup.guardCount(survivors)
-    def pinVec(d: DataFrame, rowBound: Long): DataFrame =
-      if (nCands <= Dedup.broadcastMaxPairs &&
-          Dedup.vecBroadcastBytes(rowBound, dim) <=
-            Dedup.broadcastMaxVecBytes) broadcast(d)
-      else d
-    val candIds = cands.select(col("cid").as(idCol)).distinct()
-    val candVecs = corpusVecs.join(pin(candIds), Seq(idCol), "left_semi")
-      .select(col(idCol).as("cid"), col(vecCol).as("cv"))
-      .withColumn("cn", norm(col("cv")))
-    val bVecs = survivors
-      .select(col(idCol).as("bid"), col(vecCol).as("bv"))
-      .withColumn("bn", norm(col("bv")))
-    val hits = obsCount(
-      cands
-        .join(pinVec(bVecs, nSurv), "bid")
-        .join(pinVec(candVecs, nCands), "cid")
-        .filter(cosineOrNull(dotDouble(col("bv"), col("cv")),
-          col("bn"), col("cn")) >= threshold)
-        .select(col("bid").as(idCol))
-        .distinct(),
-      "graft.neardup.store_hits")
-    survivors.join(pin(hits), Seq(idCol), "left_anti")
-  }
+    // Hot-bucket cap (default OFF): it bounds the in-batch self-join, the
+    // survivors' side of the store join and, independently, the store
+    // side — a key hot on either side would otherwise make the candidate
+    // join Σ(df_batch × df_corpus) on that key. Recall trade documented
+    // at Dedup.capHotKeys.
+    embeddingNearDup(lshKeys(planes, tables, dim, maxBucketDf, probes),
+      threshold, dim)
+      .dropIncremental(batch, idCol, vecCol, corpusBuckets, Some(corpusVecs))
 
   /** Approximate top-k over random-hyperplane LSH buckets — the
     * [[Codec.Flat]] codec under the [[Coarse.Lsh]] stage: every corpus

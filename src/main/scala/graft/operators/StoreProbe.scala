@@ -71,7 +71,7 @@ private[graft] object StoreProbe {
     budgetOverride.get().getOrElse(DriverByteBudget)
 
   // plain ThreadLocal, not DynamicVariable — same child-thread
-  // inheritance reasoning as Dedup.guardOverride
+  // inheritance reasoning as Dedup.guardRecord
   private val budgetOverride = new ThreadLocal[Option[Long]] {
     override def initialValue: Option[Long] = None
   }

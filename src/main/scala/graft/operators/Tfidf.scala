@@ -211,18 +211,19 @@ object Tfidf {
     */
   def cosinePairs(docs: DataFrame, idCol: String, textCol: String,
       buckets: Int = 64, maxTokenDf: Int = 50,
-      tauNum: Int = 4, tauDen: Int = 5): DataFrame =
-    cosinePairsWithIdf(docs, idCol, textCol,
-      idfMilli(docs, idCol, textCol, buckets), buckets, maxTokenDf,
-      tauNum, tauDen)
+      tauNum: Int = 4, tauDen: Int = 5): DataFrame = {
+    val vecs = hashedVectors(docs, idCol, textCol, buckets)
+    cosinePairsWithIdf(distinctTokenHashes(docs, idCol, textCol), vecs,
+      squaredNorms(vecs), maxTokenDf, tauNum, tauDen)
+  }
 
-  /** [[cosinePairs]] against a FIXED fit — the form the incremental path
-    * uses so batch and corpus vectors live in the same space.
+  /** [[cosinePairs]] over prebuilt (id, t) token hashes, (id, bucket, w)
+    * vectors and (id, n2) norms — the incremental path passes its
+    * persisted batch tables, vectorized under the STORE's frozen fit, so
+    * batch and corpus vectors live in the same space.
     */
-  def cosinePairsWithIdf(docs: DataFrame, idCol: String, textCol: String,
-      idf: Map[Long, Long], buckets: Int, maxTokenDf: Int,
-      tauNum: Int, tauDen: Int): DataFrame = {
-    val toks = distinctTokenHashes(docs, idCol, textCol)
+  private def cosinePairsWithIdf(toks: DataFrame, vecs: DataFrame,
+      n2: DataFrame, maxTokenDf: Int, tauNum: Int, tauDen: Int): DataFrame = {
     // Hot tokens (df > cap) are removed via broadcast ANTI-join — the hot
     // set is small BY DEFINITION (each member needs > maxTokenDf docs),
     // so the broadcast is bounded at any corpus size. The inverse —
@@ -240,9 +241,6 @@ object Tfidf {
       .join(posted.select(col("t"), col("id").as("id_b")), Seq("t"))
       .filter(col("id_a") < col("id_b"))
       .select("id_a", "id_b").distinct()
-
-    val vecs = hashedVectorsWithIdf(docs, idCol, textCol, idf, buckets)
-    val n2 = squaredNorms(vecs)
     val dots = cands
       .join(vecs.select(col("id").as("id_a"), col("bucket"), col("w").as("w_a")), Seq("id_a"))
       .join(vecs.select(col("id").as("id_b"), col("bucket"), col("w").as("w_b")), Seq("id_b", "bucket"))
@@ -384,30 +382,12 @@ object Tfidf {
       .filter(cosineAtLeast(col("dot"), col("n2_b"), col("n2_c"), tauNum, tauDen))
       .select(col("id_b").as(idCol)).distinct())
 
-    // within-batch pairs over the SAME persisted toks/vecs/norms; hot
-    // tokens anti-joined out (kept-set broadcast would be vocabulary-
-    // scale — see cosinePairsWithIdf; df=1 tokens pair with nothing)
-    val wHot = bToks.groupBy("t").agg(count(lit(1)).as("df"))
-      .filter(col("df") > maxTokenDf).select("t")
-    val wPosted = bToks.join(broadcast(wHot), Seq("t"), "left_anti")
-    val wCands = wPosted.select(col("t"), col("id").as("id_a"))
-      .join(wPosted.select(col("t"), col("id").as("id_b")), Seq("t"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
-    val wPairs = wCands
-      .join(bVec.select(col("id").as("id_a"), col("bucket"), col("w").as("w_a")), Seq("id_a"))
-      .join(bVec.select(col("id").as("id_b"), col("bucket"), col("w").as("w_b")), Seq("id_b", "bucket"))
-      .groupBy("id_a", "id_b").agg(sum(col("w_a") * col("w_b")).as("dot"))
-      .join(bN2.select(col("id").as("id_a"), col("n2").as("n2_a")), Seq("id_a"))
-      .join(bN2.select(col("id").as("id_b"), col("n2").as("n2_b")), Seq("id_b"))
-      .filter(cosineAtLeast(col("dot"), col("n2_a"), col("n2_b"), tauNum, tauDen))
-      .select("id_a", "id_b")
-
-    val withinSurvivors = Dedup.dropClusterLosers(batch, idCol,
-      Dedup.PairSet(wPairs), Dedup.broadcastMaxPairs)
-    val pinned =
-      if (hits.count() <= Dedup.broadcastMaxPairs) broadcast(hits) else hits
-    withinSurvivors.join(pinned, Seq(idCol), "left_anti")
+    // within-batch pairs over the SAME persisted toks/vecs/norms
+    val withinSurvivors = Dedup.dropClusterLosers(batch, idCol, Dedup.PairSet(
+      cosinePairsWithIdf(bToks, bVec, bN2, maxTokenDf, tauNum, tauDen)
+        .select("id_a", "id_b")))
+    withinSurvivors.join(Dedup.pin(hits, Dedup.guardCount(hits)),
+      Seq(idCol), "left_anti")
   }
 
   /** Near-duplicate REMOVAL over the TF-IDF cosine pairs: transitive
@@ -424,7 +404,6 @@ object Tfidf {
       tauNum: Int = 4, tauDen: Int = 5): DataFrame = {
     val pairs = cosinePairs(df, idCol, textCol, buckets, maxTokenDf,
       tauNum, tauDen).select("id_a", "id_b")
-    Dedup.dropClusterLosers(df, idCol, Dedup.PairSet(pairs),
-      Dedup.broadcastMaxPairs)
+    Dedup.dropClusterLosers(df, idCol, Dedup.PairSet(pairs))
   }
 }

@@ -131,7 +131,8 @@ class PlanAuditSpec extends SparkSpec with ExecutedPlans {
     // near-dup budget is verified on the driver (pinned below).
     for (name <- Seq("dedup_minhash", "dedup_simhash", "ann_cosine_neardup")) {
       withClue(s"$name: ") {
-        val p = graft.operators.Dedup.withNearDupDriverBytes(-1L)(plan(name))
+        val p = graft.operators.Dedup.withGuards(
+          _.copy(nearDupDriverBytes = -1L))(plan(name))
         "BroadcastHashJoin".r.findAllIn(p).length should be >= 2
       }
     }
@@ -446,7 +447,6 @@ class PlanAuditSpec extends SparkSpec with ExecutedPlans {
       ("operators/Decontaminate.scala", "broadcast(benchSh), \"gh\")") -> (1, "QUERY benchmark shingles"),
       ("operators/Decontaminate.scala", "broadcast(bmk), Seq(\"bk\"))") -> (1, "QUERY benchmark bucket keys"),
       ("operators/Dedup.scala", "broadcast(comps) else comps") -> (1, "GATED losersBroadcastMax"),
-      ("operators/Dedup.scala", "broadcast(d) else d") -> (1, "GATED broadcastMaxPairs"),
       ("operators/Dedup.scala", "broadcast(df) else df") -> (1, "GATED broadcastMaxPairs"),
       ("operators/Dedup.scala", "broadcast(hot), Seq(\"blk\", \"s\"), \"left_anti\")") -> (1, "CAPPED hot band keys"),
       ("operators/Dedup.scala", "broadcast(hot), Seq(keyCol), \"left_anti\")") -> (1, "CAPPED hot keys <= N/cap"),
@@ -456,22 +456,15 @@ class PlanAuditSpec extends SparkSpec with ExecutedPlans {
       ("operators/Search.scala", "broadcast(pt), \"tok\")") -> (2, "QUERY phrase/benchmark rows"),
       ("operators/Search.scala", "broadcast(qt), \"tok\")") -> (1, "QUERY seed-set terms"),
       ("operators/Search.scala", "broadcast(qt.select(\"tok\").distinct()), Seq(\"tok\"), \"left_semi\"))") -> (1, "QUERY seed-set terms"),
-      ("operators/Similarity.scala", "broadcast(bBuckets), col(\"bk\") === col(\"cbk\"))") -> (1, "QUERY batch bucket keys (ingest-batch bounded)"),
-      ("operators/Similarity.scala", "broadcast(d)") -> (2, "GATED pinVec row+byte gate"),
-      ("operators/Similarity.scala", "broadcast(d) else d") -> (2, "GATED broadcastMaxPairs"),
       ("operators/Similarity.scala", "broadcast(probes), Seq(\"list\"))") -> (1, "QUERY probed-list union"),
       ("operators/Similarity.scala", "broadcast(q), col(\"query_id\") =!= col(\"neighbor_id\"))") -> (1, "QUERY seed vectors"),
-      ("operators/Similarity.scala", "broadcast(vecs.select(col(\"id\").as(\"id_a\"),") -> (1, "GATED fused-branch row+byte gate"),
-      ("operators/Similarity.scala", "broadcast(vecs.select(col(\"id\").as(\"id_b\"),") -> (1, "GATED fused-branch row+byte gate"),
       ("operators/Similarity.scala", "broadcast(withQ), Seq(\"neighbor_id\"))") -> (1, "QUERY shortlist x query vectors (k-bounded)"),
       ("operators/Search.scala", "StoreProbe.queryLiteral(Some(col(\"tok\")), StringType, qType,") -> (1, "QUERY seed-set (query, term) rows"),
       ("operators/Similarity.scala", "StoreProbe.queryLiteral(if (listed) Some(col(\"list\")) else None,") -> (1, "QUERY probed (list, query) rows"),
       ("operators/Similarity.scala", "StoreProbe.queryLiteral(Some(col(\"id\")),") -> (1, "QUERY shortlist x query vectors (k-bounded)"),
       ("operators/TextAnalysis.scala", "broadcast(sizes.select(col(\"source\").as(\"source_a\"), col(\"n_a\"))),") -> (1, "MODEL per-source counts (low cardinality)"),
-      ("operators/Tfidf.scala", "broadcast(hits) else hits") -> (1, "GATED broadcastMaxPairs"),
       ("operators/Tfidf.scala", "broadcast(hot), Seq(\"t\"), \"left_anti\")") -> (2, "CAPPED hot tokens <= N/cap"),
       ("operators/Tfidf.scala", "broadcast(hot), Seq(\"t\"), \"left_anti\").select(\"t\", \"id\")") -> (2, "CAPPED hot tokens <= N/cap"),
-      ("operators/Tfidf.scala", "broadcast(wHot), Seq(\"t\"), \"left_anti\")") -> (1, "CAPPED hot tokens <= N/cap"),
       ("tools/ScaleCorpus.scala", "broadcast(reps))") -> (2, "LITERAL factor-many replica rows")
     )
     val siteRe = new scala.util.matching.Regex(

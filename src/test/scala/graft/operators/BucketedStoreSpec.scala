@@ -96,7 +96,7 @@ class BucketedStoreSpec extends SparkSpec {
       shuffles(Dedup.dropNearDuplicatesIncremental(
         batch, "doc_id", "text", store, corpus))
     }
-    Dedup.withGuardThresholds(0L, Dedup.defaultDriverMaxPairs) {
+    Dedup.withGuards(_.copy(broadcastMaxPairs = 0L)) {
       val b = forcedShuffles(spark.table(table))
       val p = forcedShuffles(Dedup.minhashBandKeys(corpus, "doc_id", "text"))
       b should be < p
@@ -123,7 +123,7 @@ class BucketedStoreSpec extends SparkSpec {
       spark.catalog.clearCache()
       shuffles(body)
     }
-    Dedup.withGuardThresholds(0L, Dedup.defaultDriverMaxPairs) {
+    Dedup.withGuards(_.copy(broadcastMaxPairs = 0L)) {
       val b = forcedShuffles(Dedup.dropSimhashDuplicatesIncrementalChunked(
         batch, "doc_id", "text", spark.table(table)))
       val p = forcedShuffles(Dedup.dropSimhashDuplicatesIncremental(

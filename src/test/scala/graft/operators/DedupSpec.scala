@@ -147,7 +147,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("dropNearDuplicates: broadcast and shuffle anti-join paths agree") {
-    // losersBroadcastMax=0 forces the over-ceiling shuffle path; the
+    // a zero loser ceiling forces the over-ceiling shuffle path; the
     // survivor set must be identical to the default broadcast path
     val docs = Seq(
       (1L, "alpha beta gamma delta epsilon zeta eta theta iota"),
@@ -158,10 +158,10 @@ class DedupSpec extends SparkSpec {
     val bcast = Dedup.dropNearDuplicates(docs, "id", "text",
       shingleN = 2, bands = 16, rowsPerBand = 2, threshold = 0.6)
       .select("id").as[Long].collect().sorted
-    val shuffle = Dedup.dropNearDuplicates(docs, "id", "text",
-      shingleN = 2, bands = 16, rowsPerBand = 2, threshold = 0.6,
-      losersBroadcastMax = 0L)
-      .select("id").as[Long].collect().sorted
+    val shuffle = Dedup.withGuards(_.copy(losersBroadcastMax = Some(0L)))(
+      Dedup.dropNearDuplicates(docs, "id", "text",
+        shingleN = 2, bands = 16, rowsPerBand = 2, threshold = 0.6)
+        .select("id").as[Long].collect().sorted)
     bcast shouldBe shuffle
     bcast shouldBe Array(1L, 9L)
   }
@@ -282,9 +282,9 @@ class DedupSpec extends SparkSpec {
     val out = Dedup.dropSimhashNearDuplicates(docs, "id", "text", maxHamming = 3)
     out.select("id").as[Long].collect().sorted shouldBe Array(1L, 4L)
     // path parity: forcing the shuffle anti-join gives the same survivors
-    Dedup.dropSimhashNearDuplicates(docs, "id", "text", maxHamming = 3,
-      losersBroadcastMax = 0L)
-      .select("id").as[Long].collect().sorted shouldBe Array(1L, 4L)
+    Dedup.withGuards(_.copy(losersBroadcastMax = Some(0L)))(
+      Dedup.dropSimhashNearDuplicates(docs, "id", "text", maxHamming = 3)
+        .select("id").as[Long].collect().sorted) shouldBe Array(1L, 4L)
   }
 
   test("dropSimhashDuplicatesIncremental: store Hamming check + in-batch clustering") {
@@ -540,12 +540,13 @@ class DedupSpec extends SparkSpec {
     val pair = Seq(("\uFFFD-a", text), ("\uD83D\uDE00-b", text)).toDF("id", "text")
     def survivors(): Seq[String] = Dedup.dropNearDuplicates(pair, "id", "text")
       .select("id").as[String].collect().toSeq
-    val driver = Dedup.withNearDupDriverBytes(Long.MaxValue)(survivors())
-    val distributed = Dedup.withGuardThresholds(0L, 0L)(survivors())
+    val driver = Dedup.withGuards(
+      _.copy(nearDupDriverBytes = Long.MaxValue))(survivors())
+    val distributed = Dedup.withGuards(_.copy(broadcastMaxPairs = 0L, driverMaxPairs = 0L))(survivors())
     driver shouldBe distributed
     driver shouldBe Seq("\uFFFD-a")
     // the driver union-find over distributed pairs agrees too
-    Dedup.withNearDupDriverBytes(-1L)(survivors()) shouldBe driver
+    Dedup.withGuards(_.copy(nearDupDriverBytes = -1L))(survivors()) shouldBe driver
     graft.core.CacheScope.releaseAll()
   }
 
@@ -561,7 +562,7 @@ class DedupSpec extends SparkSpec {
     ).toDF("id", "text")
     var survivors = 0L
     actionsOf {
-      survivors = Dedup.withNearDupDriverBytes(-1L) {
+      survivors = Dedup.withGuards(_.copy(nearDupDriverBytes = -1L)) {
         Dedup.dropNearDuplicates(chain, "id", "text",
           shingleN = 2, bands = 16, rowsPerBand = 2, threshold = 0.6).count()
       }

@@ -131,7 +131,8 @@ class NearDupAttributionSpec extends SparkSpec {
     val fused = run()
     // broadcastMaxPairs = 0 forces the candidate-bounded 100 TB shape
     // on the same data (the forced bench entries' switch)
-    val fallback = graft.operators.Dedup.withGuardThresholds(0L, 0L)(run())
+    val fallback = Dedup.withGuards(
+      _.copy(broadcastMaxPairs = 0L, driverMaxPairs = 0L))(run())
     fused shouldBe fallback
     fused should contain (201L)
     fused should not contain 700L // in-batch dup of 200
@@ -163,10 +164,10 @@ class NearDupAttributionSpec extends SparkSpec {
     // the 8 GB broadcast ceiling. The gate now ANDs a byte estimate:
     // at the DEFAULT budget a guard-passing batch at high dim routes
     // to the fallback...
-    graft.operators.Dedup.vecBroadcastBytes(4000000L, 4096) should be >
-      graft.operators.Dedup.broadcastMaxVecBytes
-    graft.operators.Dedup.vecBroadcastBytes(4000000L, 64) should be <=
-      graft.operators.Dedup.broadcastMaxVecBytes
+    Dedup.vecBroadcastBytes(4000000L, 4096) should be >
+      Dedup.guards.broadcastMaxVecBytes
+    Dedup.vecBroadcastBytes(4000000L, 64) should be <=
+      Dedup.guards.broadcastMaxVecBytes
     // ...and the two shapes stay bit-identical. Shape witness: the
     // fused verify counts work PRE-dedup (an exact copy colliding in
     // all `tables` buckets verifies `tables` times), the fallback
@@ -209,7 +210,7 @@ class NearDupAttributionSpec extends SparkSpec {
     // 41 rows pass the 4M row guard; a 1-byte budget forces the
     // byte-gated fallback on the same data
     val (gatedPairs, gatedVerified) =
-      graft.operators.Dedup.withVecByteBudget(1L)(run())
+      Dedup.withGuards(_.copy(broadcastMaxVecBytes = 1L))(run())
     gatedPairs shouldBe fusedPairs // results bit-identical
     gatedVerified shouldBe 1L // fallback: post-distinct, once per pair
     graft.core.CacheScope.releaseAll()
@@ -233,7 +234,8 @@ class NearDupAttributionSpec extends SparkSpec {
         run.select("id_a", "id_b").as[(Long, Long)].collect().toSet
       val fused = pairsOf(Similarity.cosineNearDupPairs(
         d, "vec_id", "embedding", threshold, planes, tables, dim))
-      val forced = graft.operators.Dedup.withGuardThresholds(0L, 0L)(
+      val forced = Dedup.withGuards(
+        _.copy(broadcastMaxPairs = 0L, driverMaxPairs = 0L))(
         pairsOf(Similarity.cosineNearDupPairs(
           d, "vec_id", "embedding", threshold, planes, tables, dim)))
       withClue(s"seed=$seed planes=$planes tables=$tables thr=$threshold: ") {

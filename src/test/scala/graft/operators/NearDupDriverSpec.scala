@@ -16,13 +16,13 @@ class NearDupDriverSpec extends SparkSpec {
   import spark.implicits._
 
   private def onDriver[T](body: => T): T =
-    Dedup.withNearDupDriverBytes(Long.MaxValue)(body)
+    Dedup.withGuards(_.copy(nearDupDriverBytes = Long.MaxValue))(body)
 
   /** `driverMaxPairs = 0` forces the distributed path; the broadcast
     * ceiling stays at its default, so the plans are the default ones.
     */
   private def distributed[T](body: => T): T =
-    Dedup.withGuardThresholds(Dedup.broadcastMaxPairs, 0L)(body)
+    Dedup.withGuards(_.copy(driverMaxPairs = 0L))(body)
 
   private val base = Seq[(Long, String)](
     // chain: 1 ≈ 2 (last word), 2 ≈ 3 (first two words), 1 ≉ 3
@@ -135,7 +135,7 @@ class NearDupDriverSpec extends SparkSpec {
   test("a batch past the budget takes the distributed path") {
     // budget 0: every task overflows, so the pairs are the joined plan's
     val df = corpus(LongType)
-    val pairs = Dedup.withNearDupDriverBytes(0L)(Dedup.minhashNearDupPairs(
+    val pairs = Dedup.withGuards(_.copy(nearDupDriverBytes = 0L))(Dedup.minhashNearDupPairs(
       df, "id", "text", shingleN = 2, bands = 16, rowsPerBand = 2,
       threshold = 0.6))
     pairs.queryExecution.executedPlan.toString should include("Join")

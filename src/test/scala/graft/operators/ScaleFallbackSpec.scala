@@ -8,7 +8,7 @@ import org.apache.spark.sql.DataFrame
   * pointer-jumping connected components, unhinted verify joins, the
   * loser shuffle-anti-join) that small-data runs never take because the
   * driver/broadcast fast paths always win. Forcing the thresholds to 0
-  * via the THREAD-scoped `Dedup.withGuardThresholds` routes the SAME
+  * via the THREAD-scoped `Dedup.withGuards` routes the SAME
   * public calls down the scale plans on sf-test data (without the JVM-
   * global sys.props side channel that could leak into concurrently
   * running suites); the results must be bit-identical to the fast
@@ -19,7 +19,7 @@ class ScaleFallbackSpec extends SparkSpec {
   import spark.implicits._
 
   private def withForcedFallbacks[T](body: => T): T =
-    Dedup.withGuardThresholds(0L, 0L)(body)
+    Dedup.withGuards(_.copy(broadcastMaxPairs = 0L, driverMaxPairs = 0L))(body)
 
   private def docs: DataFrame =
     spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
@@ -72,6 +72,55 @@ class ScaleFallbackSpec extends SparkSpec {
     forced shouldBe fast
   }
 
+  test("forced fallback incremental simhash matches the fast path") {
+    val corpus = docs.filter($"doc_id" < 100)
+    val batch = docs.filter($"doc_id" >= 100 && $"doc_id" < 300)
+      .union(corpus.filter($"doc_id" < 20)
+        .select(($"doc_id" + 10000).as("doc_id"), $"text"))
+    val table = "fallback_sc"
+    spark.sql(s"DROP TABLE IF EXISTS $table")
+    Dedup.saveBucketedSimhashChunks(corpus, "doc_id", "text", table)
+    def run(): (Array[Long], Array[Long]) = (
+      Dedup.dropSimhashDuplicatesIncremental(batch, "doc_id", "text",
+        Dedup.simhashTable(corpus, "doc_id", "text"))
+        .select("doc_id").as[Long].collect().sorted,
+      Dedup.dropSimhashDuplicatesIncrementalChunked(batch, "doc_id", "text",
+        spark.table(table)).select("doc_id").as[Long].collect().sorted)
+    val (fast, fastChunked) = run()
+    val (forced, forcedChunked) = withForcedFallbacks(run())
+    forced shouldBe fast
+    forcedChunked shouldBe fast
+    fastChunked shouldBe fast
+    fast.exists(_ >= 10000L) shouldBe false // every corpus copy dropped
+    spark.sql(s"DROP TABLE $table")
+  }
+
+  test("forced fallback incremental embeddings match the fast path") {
+    val rnd = new scala.util.Random(7)
+    val dim = 16
+    val corpusRows = (0L until 60L)
+      .map(i => i -> Array.fill(dim)(rnd.nextGaussian().toFloat))
+    val corpus = corpusRows.toDF("vec_id", "embedding")
+    val batch = ((100L until 220L)
+      .map(i => i -> Array.fill(dim)(rnd.nextGaussian().toFloat)) ++
+      corpusRows.take(15).map { case (i, v) => (1000L + i) -> v.map(_ + 0.001f) } ++
+      (100L until 110L).map(i => (2000L + i) -> Array.fill(dim)(0.5f)))
+      .toDF("vec_id", "embedding")
+    for (probes <- Seq(1, 2)) withClue(s"probes=$probes: ") {
+      val store = Similarity.embeddingBucketKeys(corpus, "vec_id",
+        "embedding", planes = 4, tables = 8 / probes, dim = dim)
+      def run(): Array[Long] = Similarity.dropNearCorpusEmbeddings(
+        batch, "vec_id", "embedding", store, corpus, threshold = 0.99,
+        planes = 4, tables = 8 / probes, dim = dim, probes = probes)
+        .select("vec_id").as[Long].collect().sorted
+      val fast = run()
+      withForcedFallbacks(run()) shouldBe fast
+      Dedup.withGuards(_.copy(broadcastMaxVecBytes = 1L))(run()) shouldBe fast
+      fast.count(i => i >= 1000L && i < 2000L) should be < 15 // copies dropped
+      fast.count(_ >= 2000L) shouldBe 1 // one survivor of the identical rows
+    }
+  }
+
   test("forced fallback incremental tfidf matches the fast path") {
     val store = java.nio.file.Files
       .createTempDirectory("fallback-tfidf-").toString + "/tfidf"
@@ -101,20 +150,19 @@ class ScaleFallbackSpec extends SparkSpec {
   // with a zero broadcast ceiling (shuffle loser anti-join) keep the
   // same survivors
 
-  /** Broadcast ceiling 0 with the default driver ceiling, for flavors
-    * whose loser ceiling is the thread's broadcastMaxPairs.
+  /** Broadcast ceiling 0 with the default driver ceiling: the loser
+    * ceiling follows the broadcast ceiling.
     */
   private def withShuffleLosers[T](body: => T): T =
-    Dedup.withGuardThresholds(0L, Dedup.defaultDriverMaxPairs)(body)
+    Dedup.withGuards(_.copy(broadcastMaxPairs = 0L))(body)
 
   test("cluster tail regimes agree: simhash removal") {
-    def run(losersMax: Long = Dedup.broadcastMaxPairs): Array[Long] =
-      Dedup.dropSimhashNearDuplicates(docs, "doc_id", "text",
-        losersBroadcastMax = losersMax)
+    def run(): Array[Long] =
+      Dedup.dropSimhashNearDuplicates(docs, "doc_id", "text")
         .select("doc_id").as[Long].collect().sorted
     val fast = run()
     withForcedFallbacks(run()) shouldBe fast
-    run(losersMax = 0L) shouldBe fast
+    Dedup.withGuards(_.copy(losersBroadcastMax = Some(0L)))(run()) shouldBe fast
     fast.length should be < 500 // some near-dups actually dropped
   }
 

@@ -59,8 +59,10 @@ object NearDupCrossover {
         .select(col("doc_id"), col("sh"),
           graft.functions.MinhashBands(col("sh"), 16, 4).as("bk"))
         .collect().map(Dedup.gatheredBytes).sum
-      val driver = median(Dedup.withNearDupDriverBytes(Long.MaxValue)(removal(docs)))
-      val distributed = median(Dedup.withNearDupDriverBytes(-1L)(removal(docs)))
+      val driver = median(Dedup.withGuards(
+        _.copy(nearDupDriverBytes = Long.MaxValue))(removal(docs)))
+      val distributed = median(Dedup.withGuards(
+        _.copy(nearDupDriverBytes = -1L))(removal(docs)))
       println(f"[crossover] local[$cores] scale=$s%3d docs=${docs.count()}%6d " +
         f"bytes=$bytes%10d driver_ms=$driver%8.1f distributed_ms=$distributed%8.1f")
       docs.unpersist()
